@@ -5,7 +5,7 @@ driver testdata and has an exact DuckDB oracle in ``oracle_sql()``. The CDC
 operators run over a deterministic changelog *derived* from the `events`
 table with arithmetic that is bit-identical in Spark SQL and DuckDB
 (airbyte_spark/plans/derived.py), so the full pipeline — LWW dedup,
-tombstones, validation pandas UDF, metadata injection, checkpoint aggregate
+tombstones, native token validation, metadata injection, checkpoint aggregate
 — is value-hash-gated, not just row-counted.
 """
 
@@ -83,7 +83,7 @@ def q_cdc_lww_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_apply_final(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full replay pipeline in one plan: validate (pandas UDF) -> LWW dedup
+    """Full replay pipeline in one plan: validate (native projection) -> LWW dedup
     -> tombstone filter -> metadata injection. The flagship query."""
     ch = _changelog(spark, sf_dir)
     ch = apply_validation(ch, _VOCAB)  # repairs corrupted n_tok, flags errors
@@ -102,7 +102,7 @@ def q_cdc_apply_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_validate_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vectorized validation UDF alone: repair + flag, never drop."""
+    """Native token validation alone: repair + flag, never drop."""
     ch = _changelog(spark, sf_dir).filter(F.col("op") != "D")
     out = apply_validation(ch.withColumnRenamed("n_tok", "n_tok_raw").withColumn("n_tok", F.col("n_tok_raw")), _VOCAB)
     return out.select(

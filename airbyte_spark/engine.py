@@ -5,7 +5,7 @@ The reference's whole read->dedup->upsert pipeline
 TypeAndDedupeTransaction, SURVEY.md §3) collapses here to, per micro-batch:
 
     delta = changelog.filter(lsn > last AND lsn <= hi)      # pushdown scan
-    delta = validate(delta)                                  # pandas UDF
+    delta = validate(delta)                                  # native projection
     winners = lww_dedup(metadata(delta))                     # hash agg
     merge_upsert(table, winners)                             # bucket CoW
     checkpoint(hi)                                           # after commit
@@ -890,7 +890,7 @@ class CdcEngine:
         return batch.select(*out)
 
     def _prepare_batch(self, batch: DataFrame, table: LakeTable) -> DataFrame:
-        """Align to table schema -> validate (pandas UDF) -> inject CDC
+        """Align to table schema -> validate (native projection) -> inject CDC
         metadata. No dedup — raw enriched events."""
         batch = self._align_to_table(batch, table.snapshot().schema)
         if self.cfg.validate_tokens:
@@ -1070,18 +1070,25 @@ class CdcEngine:
         # (key, lsn) dedup below absorbs exact redeliveries — but when two
         # DIFFERENT payloads share a (key, lsn), one is silently lost. That
         # happens with tie-blind LSN packings (decode_dms without seq_col):
-        # count and surface it, never swallow it (module policy).
+        # count and surface it, never swallow it (module policy). The
+        # fingerprint covers every payload column, carry columns included.
+        # countDistinct skips NULLs, so NULL-key rows (which the dedup
+        # below also collapses per lsn) are counted on their own.
+        fp = F.md5(F.to_json(F.struct("op", *payload_cols)))
+        null_lsn = F.when(F.col(pk).isNull(), F.col("lsn"))
         cstats = fold_base.agg(
             F.countDistinct(pk, "lsn").alias("a"),
-            F.countDistinct(
-                pk, "lsn", F.md5(F.to_json(F.struct("op", "tokens")))
-            ).alias("b"),
+            F.countDistinct(pk, "lsn", fp).alias("b"),
+            F.countDistinct(null_lsn).alias("null_a"),
+            F.countDistinct(null_lsn, fp).alias("null_b"),
         ).collect()[0]
-        n_conflicts = int(cstats["b"] or 0) - int(cstats["a"] or 0)
-        if n_conflicts:
+        n_conflicts = cstats["b"] - cstats["a"]
+        n_null_conflicts = cstats["null_b"] - cstats["null_a"]
+        if n_conflicts or n_null_conflicts:
             log_metric(
                 "append_lsn_conflicts_dropped",
                 n=n_conflicts,
+                null_key=n_null_conflicts,
                 hint="distinct payloads shared (key, lsn); supply a "
                 "tie-breaking sequence (e.g. decode_dms seq_col)",
             )

@@ -1,7 +1,8 @@
-"""Vectorized payload functions (the only Python in the data path).
+"""Payload functions.
 
-North rule: no per-row Python. Everything here is an Arrow-batched pandas
-UDF (`pandas_udf`) or pure Spark column expressions.
+North rule: no per-row Python. Token validation (`apply_validation`) is a
+pure Catalyst projection; the rest are Arrow-batched pandas UDFs
+(`pandas_udf`) or Spark column expressions.
 """
 
 from airbyte_spark.functions.multimodal import (
@@ -10,10 +11,10 @@ from airbyte_spark.functions.multimodal import (
     synthesize_assets,
 )
 from airbyte_spark.functions.textnorm import clean_text, unicode_clean
-from airbyte_spark.functions.validate import make_token_validator
+from airbyte_spark.functions.validate import apply_validation
 
 __all__ = [
-    "make_token_validator",
+    "apply_validation",
     "clean_text",
     "unicode_clean",
     "extract_asset_features",

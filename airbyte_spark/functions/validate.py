@@ -1,4 +1,4 @@
-"""Token payload validation / normalization — Arrow-native vectorized.
+"""Token payload validation / normalization — one native Catalyst projection.
 
 The reference captures per-column typing errors into _airbyte_meta.errors
 instead of failing the row (BigQuerySqlGenerator.java:544-566 safe-cast CTE;
@@ -10,117 +10,45 @@ Rules (mirrored 1:1 by changelog.golden._validate_payload):
 - n_tok != len(tokens)                -> n_tok := len(tokens), flag "n_tok_mismatch"
 - tokens NULL (delete image)          -> passthrough, no flags
 
-Implementation notes: an ``arrow_udf`` (Spark 4) receives the column as a
-pyarrow ListArray and returns a StructArray — NO pandas boxing in either
-direction. All work is buffer math on the offsets/values arrays: lengths
-from np.diff(offsets), out-of-vocab via one vectorized compare over the
-flat values, per-row "any oov" via logical_or.reduceat, repair via one
-np.mod over the flat buffer (identity for in-range values, so no per-row
-slicing), and the output list array REUSES the input offsets + validity.
-Zero per-row Python anywhere, including flagged rows. At 100 TB this runs
-inside the scan-project stage, Arrow both ways, no shuffle.
+Implementation notes: built-in higher-order functions only (``exists`` for
+the OOV flag, ``transform`` + ``pmod`` for the repair, ``size`` for the
+length), so the check runs inside the scan's projection with no Python
+worker, no Arrow round trip and no ``ArrowEvalPython`` node in the plan.
+The expressions are SQL text, parsed once in the JVM: building the same
+lambdas through the Column API crosses py4j per node (~130 ms vs ~5 ms per
+call, measured on a 4-core x86 host).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pyarrow as pa
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
 
-_RESULT_TYPE = "struct<tokens: array<int>, n_tok: int, errors: array<string>>"
-
+# the schema the replay's full-merge read casts to: a nullable errors array
+_META_TYPE = "struct<errors: array<string>>"
 _ERR_OOV = "oov_tokens"
 _ERR_MISMATCH = "n_tok_mismatch"
 
 
-def _as_array(a: pa.Array | pa.ChunkedArray) -> pa.Array:
-    return a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a
-
-
-def make_token_validator(vocab_size: int):
-    """Return an arrow UDF: (tokens, n_tok) -> struct(tokens, n_tok, errors)."""
-
-    @arrow_udf(_RESULT_TYPE)
-    def validate(tokens: pa.Array, n_tok: pa.Array) -> pa.Array:
-        tokens = _as_array(tokens)
-        n_tok = _as_array(n_tok)
-        n = len(tokens)
-        null_mask = tokens.is_null().to_numpy(zero_copy_only=False)
-        offsets = tokens.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        off0 = offsets[0]  # a sliced batch's offsets need not start at 0
-        lens = np.diff(offsets)
-        flat = np.asarray(tokens.values)[off0 : offsets[-1]]
-        starts = offsets[:-1] - off0
-
-        # --- out-of-vocab detection + whole-buffer repair -----------------
-        has_oov = np.zeros(n, dtype=bool)
-        out_values = flat
-        if flat.size:
-            oov_flat = (flat < 0) | (flat >= vocab_size)
-            if oov_flat.any():
-                nonempty = lens > 0
-                has_oov[nonempty] = np.logical_or.reduceat(oov_flat, starts[nonempty])
-                # np.mod is the identity on in-range values, so one pass
-                # repairs the whole buffer with no per-row slicing
-                out_values = np.mod(flat, vocab_size)
-        out_tokens = pa.ListArray.from_arrays(
-            pa.array(offsets - off0, type=pa.int32()),
-            pa.array(out_values.astype(np.int32), type=pa.int32()),
-            mask=pa.array(null_mask) if null_mask.any() else None,
-        )
-
-        # --- n_tok repair --------------------------------------------------
-        n_tok_np = np.asarray(
-            n_tok.cast(pa.float64()).to_numpy(zero_copy_only=False), dtype=np.float64
-        )
-        mismatch = (~null_mask) & (np.isnan(n_tok_np) | (n_tok_np != lens))
-        out_n_tok_np = np.where(null_mask, n_tok_np, lens).astype(np.float64)
-        n_tok_null = np.isnan(out_n_tok_np)
-        out_n_tok = pa.array(
-            np.nan_to_num(out_n_tok_np).astype(np.int32),
-            type=pa.int32(),
-            mask=n_tok_null if n_tok_null.any() else None,
-        )
-
-        # --- errors array (list<string>), built from counts ----------------
-        err_counts = has_oov.astype(np.int64) + mismatch.astype(np.int64)
-        err_offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(err_counts, out=err_offsets[1:])
-        total = int(err_offsets[-1])
-        if total:
-            # values laid out per row: oov flag first, then mismatch flag
-            vals = np.empty(total, dtype=object)
-            pos_oov = err_offsets[:-1][has_oov]
-            vals[pos_oov] = _ERR_OOV
-            pos_mis = err_offsets[:-1][mismatch] + has_oov[mismatch].astype(np.int64)
-            vals[pos_mis] = _ERR_MISMATCH
-            err_values = pa.array(vals.tolist(), type=pa.string())
-        else:
-            err_values = pa.array([], type=pa.string())
-        errors = pa.ListArray.from_arrays(
-            pa.array(err_offsets, type=pa.int64()).cast(pa.int32()), err_values
-        )
-
-        return pa.StructArray.from_arrays(
-            [out_tokens, out_n_tok, errors], names=["tokens", "n_tok", "errors"]
-        )
-
-    return validate
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def apply_validation(df, vocab_size: int, tokens_col: str = "tokens", n_tok_col: str = "n_tok"):
     """Replace tokens/n_tok with repaired values; attach _ab_meta.errors."""
-    validate = make_token_validator(vocab_size)
-    v = validate(F.col(tokens_col), F.col(n_tok_col))
-    original_n_tok_type = dict(
-        (f.name, f.dataType.simpleString()) for f in df.schema.fields
-    )[n_tok_col]
-    return (
-        df.withColumn("_v", v)
-        .withColumn(tokens_col, F.col("_v.tokens"))
-        .withColumn(n_tok_col, F.col("_v.n_tok").cast(original_n_tok_type))
-        .withColumn("_ab_meta", F.struct(F.col("_v.errors").alias("errors")))
-        .drop("_v")
+    t, n, v = _quote(tokens_col), _quote(n_tok_col), int(vocab_size)
+    n_tok_type = df.schema[n_tok_col].dataType.simpleString()
+    oov = f"coalesce(exists({t}, x -> x < 0 OR x >= {v}), false)"
+    mismatch = f"{t} IS NOT NULL AND ({n} IS NULL OR {n} != size({t}))"
+    errors = (
+        f"filter(array(IF({oov}, '{_ERR_OOV}', NULL), IF({mismatch}, '{_ERR_MISMATCH}', NULL)),"
+        " e -> e IS NOT NULL)"
+    )
+    return df.withColumns(
+        {
+            tokens_col: F.expr(
+                f"CAST(IF({oov}, transform({t}, x -> pmod(x, {v})), {t}) AS array<int>)"
+            ),
+            n_tok_col: F.expr(f"CAST(IF({t} IS NULL, {n}, size({t})) AS {n_tok_type})"),
+            "_ab_meta": F.expr(f"CAST(named_struct('errors', {errors}) AS {_META_TYPE})"),
+        }
     )

@@ -50,6 +50,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import struct
 import uuid
 from dataclasses import dataclass, field
 from typing import Iterable
@@ -59,7 +60,7 @@ import time
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType
+from pyspark.sql.types import IntegerType, LongType, StringType, StructType
 
 from airbyte_spark.lineage import log_metric
 
@@ -89,6 +90,49 @@ MANIFEST_REF_CHAIN_MAX = 128
 # serialization and cold-load parse O(columnar-ms) instead of O(json-rows)
 # once tables reach ~10^4-10^6 files.
 MANIFEST_SPILL_MIN = 10_000
+
+
+# Key types whose Spark hash() the driver reproduces (see _spark_hash)
+_DRIVER_HASHED = (StringType(), IntegerType(), LongType())
+_M32 = 0xFFFFFFFF
+
+
+def _mix_k1(k: int) -> int:
+    k = (k * 0xCC9E2D51) & _M32
+    k = ((k << 15) | (k >> 17)) & _M32
+    return (k * 0x1B873593) & _M32
+
+
+def _mix_h1(h: int, k: int) -> int:
+    h ^= k
+    h = ((h << 13) | (h >> 19)) & _M32
+    return (h * 5 + 0xE6546B64) & _M32
+
+
+def _spark_hash(value, dtype) -> int:
+    """Spark's ``hash()`` of one string/int/long value: Murmur3_x86_32 with
+    seed 42, as a signed 32-bit int. Strings hash their UTF-8 bytes the way
+    ``hashUnsafeBytes`` does: little-endian 4-byte words, then each tail
+    byte mixed as a SIGNED int (not the reference Murmur3 tail)."""
+    h, length = 42, 4
+    if dtype == StringType():
+        data = value.encode("utf-8")
+        aligned, length = len(data) & ~3, len(data)
+        for (word,) in struct.iter_unpack("<I", data[:aligned]):
+            h = _mix_h1(h, _mix_k1(word))
+        for b in data[aligned:]:
+            h = _mix_h1(h, _mix_k1(b | 0xFFFFFF00 if b & 0x80 else b))
+    else:
+        h = _mix_h1(h, _mix_k1(value & _M32))
+        if dtype == LongType():
+            h, length = _mix_h1(h, _mix_k1((value >> 32) & _M32)), 8
+    h ^= length
+    h ^= h >> 16
+    h = (h * 0x85EBCA6B) & _M32
+    h ^= h >> 13
+    h = (h * 0xC2B2AE35) & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h & 0x80000000 else h
 
 
 class CommitConflict(RuntimeError):
@@ -591,6 +635,19 @@ class LakeTable:
         h = F.hash(F.col(pk)) if fn == "murmur3" else F.xxhash64(F.col(pk))
         return F.pmod(h, F.lit(spec["num_buckets"])).cast("int")
 
+    def _key_buckets(self, spec: dict, field, keys) -> list[int]:
+        """Sorted buckets a key set hashes to. ``keys`` is a list or a
+        one-column DataFrame named ``field.name``. A list hashes on the
+        driver when it can reproduce the table's bucket function (murmur3
+        over a string/int/long key) — no Spark job; everything else runs
+        the bucket expression as a Spark job."""
+        if isinstance(keys, list):
+            if spec.get("bucket_fn") == "murmur3" and field.dataType in _DRIVER_HASHED:
+                return sorted({_spark_hash(k, field.dataType) % spec["num_buckets"] for k in keys})
+            keys = self.spark.createDataFrame([(k,) for k in keys], StructType([field]))
+        bexpr = self._bucket_expr_for(spec, field.name)
+        return sorted(r["b"] for r in keys.select(bexpr.alias("b")).distinct().collect())
+
     def _read_files(self, snap: Snapshot, files: list[DataFile]) -> DataFrame:
         """Read a file list at ``snap``'s current schema (per-write-schema
         groups cast/padded to current — additive evolution)."""
@@ -619,7 +676,9 @@ class LakeTable:
         for sv, paths in sorted(by_sv.items()):
             write_schema = snap.schema_for(sv)
             df = self.spark.read.schema(write_schema).parquet(*paths)
-            parts.append(df.select(*[project(f, write_schema) for f in current.fields]))
+            if write_schema != current:
+                df = df.select(*[project(f, write_schema) for f in current.fields])
+            parts.append(df)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1279,11 +1338,12 @@ class LakeTable:
 
         The CDC-consumer "fetch these documents" read: at 100 TB a full
         ``scan()`` for a handful of keys is absurd — here the key set hashes
-        to its buckets (tiny Spark job, same dispatch as ``purge_keys``), the
-        manifest prunes the file list to those buckets, and the key predicate
-        lands in the parquet scan (literal IN → PushedFilters; DataFrame key
-        sets → broadcast semi-join). Cost ∝ affected buckets + delta bytes,
-        never the table.
+        to its buckets (``_key_buckets``, shared with ``purge_keys``: on the
+        driver for a key list, a Spark job for a DataFrame), the manifest
+        prunes the file list to those buckets, and the key predicate lands
+        in the parquet scan (literal IN → PushedFilters; DataFrame key sets
+        → broadcast semi-join). Cost ∝ affected buckets + delta bytes, never
+        the table.
 
         ``keys`` is a list of key values or a one-column DataFrame
         (``key_col`` names the column when it differs from the table pk).
@@ -1293,12 +1353,7 @@ class LakeTable:
         if isinstance(keys, DataFrame):
             kdf = keys.select(F.col(key_col or pk).alias(pk)).distinct().persist()
             try:
-                buckets = sorted(
-                    r["b"]
-                    for r in kdf.select(
-                        self._bucket_expr_for(snap.spec, pk).alias("b")
-                    ).distinct().collect()
-                )
+                buckets = self._key_buckets(snap.spec, snap.schema[pk], kdf)
                 if not buckets:
                     return self.spark.createDataFrame([], snap.schema)
                 out = self.scan(buckets=buckets, version=version)
@@ -1311,13 +1366,7 @@ class LakeTable:
         key_list = sorted(set(keys))
         if not key_list:
             return self.spark.createDataFrame([], snap.schema)
-        bexpr = self._bucket_expr_for(snap.spec, pk)
-        buckets = sorted(
-            r["b"]
-            for r in self.spark.createDataFrame(
-                [(k,) for k in key_list], StructType([snap.schema[pk]])
-            ).select(bexpr.alias("b")).distinct().collect()
-        )
+        buckets = self._key_buckets(snap.spec, snap.schema[pk], key_list)
         out = self.scan(buckets=buckets, version=version)
         # literal IN pushes below the LWW aggregate into the parquet scan
         # (grouping-key predicate), so even pruned files read only matching
@@ -1703,9 +1752,10 @@ class LakeTable:
         (``key_col`` names the column when it differs from the table pk).
 
         Write cost is ∝ the AFFECTED BUCKETS plus total delta bytes, never
-        the table: the key set hashes to its buckets (tiny Spark job), only
-        those buckets' base files are rewritten (broadcast anti-join — the
-        purge set is always the small side), and delta files are rewritten
+        the table: the key set hashes to its buckets (on the driver for a
+        key list, as in ``lookup``), only those buckets' base files are
+        rewritten (broadcast anti-join — the purge set is always the small
+        side), and delta files are rewritten
         in the same pass because a purged key's delta row would otherwise
         win scan-time LWW resolution as its only surviving version. Base
         and delta replacement land in ONE atomic snapshot commit. Multi-
@@ -1718,24 +1768,17 @@ class LakeTable:
         expiration (tests/test_purge.py pins bytes-on-disk absence)."""
         snap = self.snapshot()
         pk = snap.spec["bucket_by"]
+        field = snap.schema[pk]
         if isinstance(keys, DataFrame):
-            kdf = keys.select(F.col(key_col or pk).alias(pk)).distinct()
+            kdf = keys = keys.select(F.col(key_col or pk).alias(pk)).distinct()
         else:
-            key_list = sorted(set(keys))
-            if not key_list:
+            keys = sorted(set(keys))
+            if not keys:
                 return None
-            field = snap.schema[pk]
-            kdf = self.spark.createDataFrame(
-                [(k,) for k in key_list], StructType([field])
-            )
+            kdf = self.spark.createDataFrame([(k,) for k in keys], StructType([field]))
         kdf = kdf.persist()
         try:
-            buckets = sorted(
-                r["b"]
-                for r in kdf.select(self.bucket_expr(col_name=pk).alias("b"))
-                .distinct()
-                .collect()
-            )
+            buckets = self._key_buckets(snap.spec, field, keys)
             idx = self._file_index(snap)
             base_files = idx.base(buckets)
             delta_files = idx.delta()

@@ -196,6 +196,10 @@ def _exact_batch(
             if (x, y) != (a, b) and (y == a or x == b):
                 ceiling = max(ceiling, min(c, cnt))
         new_pair_ceiling = max(new_pair_ceiling, min(ceiling, cnt))
+        if a == b:
+            # a self-merge's created pairs (a·a, a) / (a, a·a) are bounded
+            # by (a, a)'s own count, which the neighbor scan skips
+            new_pair_ceiling = max(new_pair_ceiling, cnt)
     return accepted
 
 

@@ -12,7 +12,7 @@ whose semantics are bit-identical in Spark SQL and DuckDB:
   docs (hot via natural user_id distribution);
 - token payloads as list-comprehension arrays of the same formula the
   native generator uses; ~10% of rows get a corrupted n_tok to exercise the
-  validation pandas UDF inside the gate.
+  token validation inside the gate.
 
 The SQL text is generated once and specialized per dialect only where the
 function *name* differs (unix_millis/epoch_ms, transform/list_transform).

@@ -2,7 +2,7 @@
 
 One place to pin the configs that matter for correctness (UTC timestamps so
 DuckDB oracles compare bit-for-bit) and for scale (AQE on, Arrow batches for
-the pandas validation UDFs, shuffle partitions sized to cores rather than the
+the pandas UDF operators, shuffle partitions sized to cores rather than the
 200 default).
 """
 
@@ -42,7 +42,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow: the only Python in the data path is vectorized pandas UDFs.
+        # Arrow: the Python left in operators is vectorized pandas/Arrow UDFs.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Local-mode hygiene; harmless on a cluster (overridden by submit).

@@ -166,11 +166,16 @@ class SessionTokenAuth:
     _expires_at: float | None = field(default=None, repr=False)
 
     def _login(self) -> None:
+        creds = dict(self.login_body or {})
+        # a POST login carries the credentials in its body, never in the
+        # URL (which proxies and access logs record)
+        post = self.login_method.upper() == "POST"
         status, resp = self.transport(
             self.login_method,
             self.login_url,
-            params=dict(self.login_body or {}),
+            params=None if post else creds,
             headers=dict(self.login_headers or {}),
+            body=creds if post else None,
         )
         if status >= 400 or resp is None:
             raise RuntimeError(f"session login failed: HTTP {status}")

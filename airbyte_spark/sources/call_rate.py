@@ -172,6 +172,12 @@ class MovingWindowPolicy(_BasePolicy):
         self._log: deque[tuple[float, int]] = deque()  # (ts, weight)
 
     def try_acquire(self, request: dict, weight: int = 1) -> None:
+        for r in self.rates:
+            if weight > r.limit:
+                # no wait ever frees enough capacity for this call
+                raise ValueError(
+                    f"call weight {weight} exceeds rate limit {r.limit}/{r.interval_s}s"
+                )
         with self._lock:
             now = self._clock()
             horizon = max(r.interval_s for r in self.rates)

@@ -10,6 +10,7 @@ import pytest
 
 from airbyte_spark.operators.bpe import (
     END_OF_WORD,
+    _exact_batch,
     bpe_encode,
     train_bpe,
     word_counts,
@@ -43,18 +44,44 @@ def _ref_bpe(texts: list[str], n_merges: int, min_pair_count: int = 2):
             break
         merges.append((a, b, cnt))
         for w in words:
-            syms = words[w]
-            out = []
-            i = 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            words[w] = tuple(out)
+            words[w] = _merge_syms(words[w], a, b)
     return merges, words
+
+
+def _merge_syms(syms: tuple, a: str, b: str) -> tuple:
+    out = []
+    i = 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return tuple(out)
+
+
+def _batched_bpe(texts: list[str], n_merges: int, top_n: int, min_pair_count: int = 1):
+    """The distributed loop's rounds on the driver: count pairs, collect
+    the sorted top ``top_n``, accept ``_exact_batch``'s prefix, apply it."""
+    wc = Counter(w for t in texts for w in t.split() if w)
+    words = {w: tuple(list(w) + [END_OF_WORD]) for w in wc}
+    merges = []
+    while len(merges) < n_merges:
+        pc = Counter()
+        for w, n in wc.items():
+            for p in zip(words[w], words[w][1:]):
+                pc[p] += n
+        ranked = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))
+        top = [(a, b, c) for (a, b), c in ranked[:top_n]]
+        threshold = top[-1][2] if len(top) == top_n else 0
+        batch = _exact_batch(top, threshold, min_pair_count, n_merges - len(merges))
+        if not batch:
+            break
+        merges.extend(batch)
+        for a, b, _ in batch:
+            words = {w: _merge_syms(s, a, b) for w, s in words.items()}
+    return merges
 
 
 @pytest.fixture(scope="module")
@@ -107,6 +134,39 @@ def test_both_paths_match_on_fuzz_corpora(spark):
         m_dist, _ = train_bpe(d, n_merges=10, min_pair_count=1, driver_max_words=0)
         assert m_drv == ref_merges, f"driver path diverged (trial {trial})"
         assert m_dist == ref_merges, f"distributed path diverged (trial {trial})"
+
+
+# fuzz-found: the self-merge (i, i) creates (ii, i), which outranks (g, ▁)
+SELF_MERGE_CORPUS = [("igg", 7), ("iiiii", 8), ("iiing", 7), ("iingnn", 5)]
+
+
+@pytest.mark.parametrize("top_n", [4, 64])
+def test_batched_rounds_match_sequential_fuzz(top_n):
+    import random
+
+    rng = random.Random(11)
+    corpora = [[" ".join([w] * n) for w, n in SELF_MERGE_CORPUS]]
+    for _ in range(300):
+        corpora.append(
+            [
+                " ".join(
+                    "".join(rng.choice("ign") for _ in range(rng.randint(1, 7)))
+                    for _ in range(rng.randint(1, 10))
+                )
+                for _ in range(rng.randint(1, 6))
+            ]
+        )
+    for i, texts in enumerate(corpora):
+        ref, _ = _ref_bpe(texts, 12, min_pair_count=1)
+        assert _batched_bpe(texts, 12, top_n) == ref, f"corpus {i}: {texts}"
+
+
+def test_distributed_path_self_merge_corpus(spark):
+    texts = [" ".join([w] * n) for w, n in SELF_MERGE_CORPUS]
+    d = spark.createDataFrame([(f"d{i}", t) for i, t in enumerate(texts)], ["doc_id", "text"])
+    ref, _ = _ref_bpe(texts, 8, min_pair_count=1)
+    merges, _ = train_bpe(d, n_merges=8, min_pair_count=1, driver_max_words=0)
+    assert merges == ref
 
 
 def test_merges_partitioning_invariant(spark, docs):

@@ -54,6 +54,15 @@ def test_moving_window_multiple_rates_tightest_wins():
     assert ei.value.time_to_wait_s == pytest.approx(10.0)  # 1/10s binds first
 
 
+def test_moving_window_rejects_weight_above_any_limit():
+    p = MovingWindowPolicy([Rate(5, 10.0), Rate(2, 60.0)], clock=lambda: 0.0)
+    with pytest.raises(ValueError, match="weight 3"):
+        p.try_acquire(_req(), weight=3)
+    p.try_acquire(_req(), weight=2)  # the rejected call consumed nothing
+    with pytest.raises(ValueError):
+        MovingWindowPolicy([Rate(0, 10.0)]).try_acquire(_req())
+
+
 def test_fixed_window_rolls_and_accepts_server_updates():
     now = [0.0]
     p = FixedWindowPolicy(period_s=60, call_limit=2, clock=lambda: now[0])

@@ -233,6 +233,23 @@ def test_same_lsn_distinct_payloads_surfaced(spark, workdir, capfd):
     assert lines, err[-2000:]
     assert json.loads(lines[-1])["n"] == 1
 
+    # payloads differing only in a carry column conflict too; so do two
+    # NULL-key rows sharing an lsn, counted on their own
+    rows_carry = [
+        ("I", "a", 1, 1001, 0, [1], 1, "s"),
+        ("U", "a", 2, 1002, 0, [2], None, "x"),
+        ("U", "a", 2, 1002, 0, [2], None, "y"),
+        ("U", None, 3, 1003, 0, [4], None, "x"),
+        ("U", None, 3, 1003, 0, [4], None, "y"),
+    ]
+    capfd.readouterr()
+    _replay(spark, os.path.join(workdir, "carry"), rows_carry, 10_000)
+    err = capfd.readouterr().err
+    lines = [l for l in err.splitlines() if "append_lsn_conflicts_dropped" in l]
+    assert lines, err[-2000:]
+    m = json.loads(lines[-1])
+    assert (m["n"], m["null_key"]) == (1, 1)
+
     # exact redelivery: no conflict metric
     rows2 = [
         ("I", "a", 1, 1001, 0, [1], 1, "s"),

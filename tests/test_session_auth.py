@@ -30,7 +30,9 @@ class SessionApi:
     def __call__(self, method, url, params=None, headers=None, body=None):
         if url.endswith("/login"):
             assert method == "POST"
-            if (params or {}).get("user") != "u" or (params or {}).get("pass") != "p":
+            # credentials travel in the body, never in the query string
+            assert not params and "?" not in url
+            if (body or {}).get("user") != "u" or (body or {}).get("pass") != "p":
                 return 401, {"error": "bad credentials"}
             self.logins += 1
             return 200, {"session": {"token": f"S{self.logins}"}}

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from airbyte_spark.lake.table import LakeTable
+from airbyte_spark.lake.table import LakeTable, _spark_hash
 
 SCHEMA = StructType(
     [
@@ -96,6 +96,58 @@ def test_lookup_dataframe_keys_and_empty(spark, table):
     assert got == ["a", "c"]
     assert table.lookup([]).count() == 0
     assert table.lookup(["nope"]).count() == 0
+
+
+def test_driver_hash_equals_spark_hash(spark):
+    import random
+
+    rng = random.Random(5)
+    alphabet = "aZ09\x00\x7f\x80éÿ€😀"
+    strs = ["", "\x00", "\x00\x00\x00\x00\x00"] + [
+        "".join(rng.choice(alphabet) for _ in range(n)) for n in range(14) for _ in range(40)
+    ]
+    ints = [0, 1, -1, 2**31 - 1, -(2**31)] + [rng.randint(-(2**31), 2**31 - 1) for _ in range(300)]
+    longs = [2**32, -(2**63), 2**63 - 1] + [rng.randint(-(2**63), 2**63 - 1) for _ in range(300)]
+    for dtype, values in ((StringType(), strs), (IntegerType(), ints), (LongType(), longs)):
+        df = spark.createDataFrame([(v,) for v in values], StructType([StructField("k", dtype)]))
+        got = {r.k: r.h for r in df.select("k", F.hash("k").alias("h")).collect()}
+        bad = [v for v in values if _spark_hash(v, dtype) != got[v]]
+        assert not bad, f"{dtype}: {bad[:5]}"
+
+
+@pytest.mark.parametrize(
+    "dtype,keys",
+    [
+        (StringType(), ["", "a", "é€x", "doc00042"]),
+        (IntegerType(), [0, -7, 2**31 - 1, 12345]),
+        (LongType(), [-(2**63), 1, 2**40 + 3]),
+    ],
+)
+@pytest.mark.parametrize("bucket_fn", ["murmur3", None])
+def test_key_list_buckets_match_bucket_expr(spark, table, dtype, keys, bucket_fn):
+    # None: a legacy spec with no bucket_fn, laid out by xxhash64
+    spec = {"bucket_by": "k", "num_buckets": 7}
+    if bucket_fn:
+        spec["bucket_fn"] = bucket_fn
+    field = StructField("k", dtype)
+    kdf = spark.createDataFrame([(k,) for k in keys], StructType([field]))
+    assert table._key_buckets(spec, field, keys) == table._key_buckets(spec, field, kdf)
+
+
+def test_list_lookup_plans_without_spark_jobs(spark, table):
+    table.write_and_commit(
+        _df(spark, [(f"d{i}", i, i + 1) for i in range(20)]),
+        replace_buckets=None, summary={"operation": "append"},
+    )
+    table.append_delta(_df(spark, [("d3", 303, 100)]), summary={"operation": "merge-delta"})
+    sc = spark.sparkContext
+    sc.setJobGroup("lookup-plan", "list-form lookup planning")
+    try:
+        out = table.lookup(["d3", "d5", "zz"])
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("lookup-plan")) == []
+    assert sorted((r.doc_id, r.v) for r in out.collect()) == [("d3", 303), ("d5", 5)]
 
 
 # ------------------------------------------------------- metadata tables
