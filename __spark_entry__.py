@@ -2229,8 +2229,8 @@ def q_cdc_txn_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stats_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key skew diagnostics over the change stream: the top-20 busiest
     keys with event counts and integer basis-point share of total — the
-    numbers that decide salting (EngineConfig.salt_buckets) and AQE skew
-    thresholds before a 100 TB replay. ONE partial-combined count aggregate
+    numbers that decide bucket sizing and AQE skew thresholds before a
+    100 TB replay. ONE partial-combined count aggregate
     (a hot key ships <= 1 partial row per map task) + top-k via the dedup
     aggregate idiom on a single grand-total join; integer-exact oracle."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")

@@ -106,12 +106,6 @@ class EngineConfig:
     # _ab_meta.errors, never dropped (error-capture pattern of
     # BigQuerySqlGenerator.java:544-566).
     validate_tokens: bool = True
-    # Dedup strategy: "agg" = max_by hash aggregate (map-side partial combine,
-    # skew-immune — the default); "window" = reference-shaped row_number()
-    # window (kept for parity testing); "salted" = explicit two-phase
-    # salt + partial + global (demonstrates the manual skew answer).
-    dedup_strategy: str = "agg"
-    salt_buckets: int = 16
     # Write parallelism for the per-bucket CoW rewrite.
     write_partitions: int | None = None
     # Post-sync compaction (the reference rewrites data files after each

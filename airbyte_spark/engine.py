@@ -43,10 +43,22 @@ from airbyte_spark.functions.validate import apply_validation
 from airbyte_spark.lake.table import LakeTable
 from airbyte_spark.lineage import LineageLog, log_metric
 from airbyte_spark.operators.dedup import lww_dedup
-from airbyte_spark.operators.merge import merge_upsert, merge_upsert_mor
+from airbyte_spark.operators.merge import (
+    merge_upsert,
+    merge_upsert_full,
+    merge_upsert_mor,
+)
 from airbyte_spark.operators.metadata import inject_cdc_metadata
 
 _SOURCE_ONLY_COLS = {"op", "lsn", "ts_ms", "source_partition", "_ab_null_fields"}
+# snapshot-summary operation of a batch commit, per merge mode
+_MERGE_OPERATION = {
+    "full": "merge-full",
+    "cow": "merge",
+    "mor": "merge-delta",
+    "append": "merge",
+    "overwrite": "merge",
+}
 
 
 class SchemaEvolutionError(ValueError):
@@ -146,8 +158,8 @@ class CdcEngine:
         # non-delta commit and at replay end.
         self._fold_pool = None
         self._fold_future = None
-        # patch-mode scratch: persisted intermediates (the folded batch)
-        # released in the same finally that unpersists the batch's winners
+        # token-append scratch: persisted intermediates (the folded batch)
+        # released once the batch's commit has run
         self._scratch: list[DataFrame] = []
 
     # ------------------------------------------------------------- lifecycle
@@ -379,10 +391,7 @@ class CdcEngine:
         # full-row LWW regardless of update_mode: a snapshot row is a whole
         # image, never a patch
         winners = lww_dedup(
-            self._prepare_batch(df, table),
-            key=self.stream.primary_key,
-            strategy=self.cfg.dedup_strategy,
-            salt_buckets=self.cfg.salt_buckets,
+            self._prepare_batch(df, table), key=self.stream.primary_key
         ).persist()
         try:
             n = winners.count()
@@ -396,7 +405,7 @@ class CdcEngine:
                         "n_chunks": n_chunks,
                     }
                 ),
-                use_mor=self._use_mor(table, n),
+                mode="mor" if self._use_mor(table, n) else "cow",
                 n_events=n,
             )
         finally:
@@ -686,11 +695,11 @@ class CdcEngine:
         total_events = 0
         n_batches = 0
         lo = last
-        # prefetched = (enriched persisted DataFrame, exact event count) —
-        # the count doubles as the full-merge dispatch input and the
-        # empty-batch short-circuit, so no extra action is spent on it.
-        prefetched: tuple[DataFrame, int] | None = None
-        inflight: DataFrame | None = None  # nxt df whose count job is running
+        # prefetched = (enriched persisted DataFrame, its _batch_stats) —
+        # the stats action materializes the cache, and its rows are all the
+        # numbers the batch needs, so no extra action is spent on it.
+        prefetched: tuple[DataFrame, list] | None = None
+        inflight: DataFrame | None = None  # nxt df whose stats job is running
         prefetch_pool = None
         if self.cfg.prefetch_next_batch:
             from concurrent.futures import ThreadPoolExecutor
@@ -714,12 +723,15 @@ class CdcEngine:
                     and nxt_lo < nxt_hi
                     and (max_batches is None or n_batches + 1 < max_batches)
                 ):
+                    table = self.table
                     nxt = self._prepare_batch(
                         source.filter((F.col("lsn") > nxt_lo) & (F.col("lsn") <= nxt_hi)),
-                        self.table,
+                        table,
                     ).persist()
                     inflight = nxt
-                    next_f = prefetch_pool.submit(lambda df=nxt: (df, df.count()))
+                    next_f = prefetch_pool.submit(
+                        lambda df=nxt: (df, self._batch_stats(df, table))
+                    )
                 try:
                     total_events += self._apply_batch(source, lo, hi, prefetched=prefetched)
                 finally:
@@ -977,33 +989,29 @@ class CdcEngine:
         is on."""
         return LakeTable.load(self.spark, self.table_root + "_history").scan()
 
-    def _dedup_winners(self, batch: DataFrame, table: LakeTable) -> DataFrame:
-        """Shared batch prep + LWW dedup to one row per PK. In plain
+    def _winners(
+        self, enriched: DataFrame, table: LakeTable, buckets: list[int] | None
+    ) -> DataFrame:
+        """LWW dedup of a prepared batch to one row per PK. In plain
         ``append`` sync mode every record is kept (no dedup), matching the
-        reference's incremental|append semantics (airbyte-protocol.md:404-428)."""
-        enriched = self._prepare_batch(batch, table)
+        reference's incremental|append semantics (airbyte-protocol.md:404-428).
+        ``buckets``: the batch's touched-bucket set (_batch_stats), which
+        bounds the patch/append resolve scans."""
         if self.stream.sync_mode == SYNC_APPEND:
             return enriched
         if self.stream.update_mode == "patch":
-            return self._patch_winners(enriched, table)
+            return self._patch_winners(enriched, table, buckets)
         if self.stream.update_mode == "token_append":
-            return self._append_winners(enriched, table)
-        return lww_dedup(
-            enriched,
-            key=self.stream.primary_key,
-            strategy=self.cfg.dedup_strategy,
-            salt_buckets=self.cfg.salt_buckets,
-        )
+            return self._append_winners(enriched, table, buckets)
+        return lww_dedup(enriched, key=self.stream.primary_key)
 
-    def _patch_winners(self, enriched: DataFrame, table: LakeTable) -> DataFrame:
+    def _patch_winners(
+        self, enriched: DataFrame, table: LakeTable, buckets: list[int] | None
+    ) -> DataFrame:
         """Patch-mode batch -> full-row winners: column-wise fold to one
         patch row per key (operators/patch.py), then resolve against the
-        CURRENT state of only the touched buckets (manifest-pruned scan).
-        The folded batch is persisted (self._scratch — released with the
-        batch's winners) because both the bucket-set collect and the
-        downstream winners materialization read it; the bucket collect is
-        the one patch-specific extra driver action, and it aggregates
-        batch-sized data only."""
+        CURRENT state of only the touched ``buckets`` (manifest-pruned scan;
+        None reads every bucket)."""
         from airbyte_spark.operators.patch import fold_patches, resolve_patches
 
         pk = self.stream.primary_key
@@ -1021,27 +1029,25 @@ class CdcEngine:
             order_col="lsn",
             carry_cols=("source_partition",),
             errors_col="_errs",
-        ).persist()
-        self._scratch.append(folded)
-        affected = [
-            r[0]
-            for r in folded.select(table.bucket_expr(pk).alias("b"))
-            .where(F.col("b").isNotNull())
-            .distinct()
-            .collect()
-        ]
-        resolved = resolve_patches(table, folded, payload_cols, affected, key=pk)
+        )
+        resolved = resolve_patches(table, folded, payload_cols, buckets, key=pk)
         resolved = resolved.withColumn(
             S.COL_META, F.struct(F.col("_errs").alias("errors"))
         ).drop("_errs")
         return inject_cdc_metadata(resolved, key=self.stream.primary_key)
 
-    def _append_winners(self, enriched: DataFrame, table: LakeTable) -> DataFrame:
+    def _append_winners(
+        self,
+        enriched: DataFrame,
+        table: LakeTable,
+        buckets: list[int] | None = None,
+    ) -> DataFrame:
         """Token-append batch -> full-row winners (update_mode=
         "token_append": U events carry ONLY the appended token suffix —
         operators/append_fold.py). Fold to one mergeable summary per key,
-        then resolve against the CURRENT state of only the touched buckets
-        (manifest-pruned scan, same pruning as patch mode). Exact
+        then resolve against the CURRENT state of only the touched
+        ``buckets`` (manifest-pruned scan, same pruning as patch mode; None
+        reads every bucket). Exact
         redeliveries (same key+lsn) are dropped before the fold — appends
         are not idempotent, so at-least-once absorption must happen
         HERE, not in the downstream LWW. A key whose batch events reach at
@@ -1103,15 +1109,8 @@ class CdcEngine:
             errors_col="_errs",
         ).persist()
         self._scratch.append(folded)
-        affected = [
-            r[0]
-            for r in folded.select(table.bucket_expr(pk).alias("b"))
-            .where(F.col("b").isNotNull())
-            .distinct()
-            .collect()
-        ]
         winners, late, orphans = resolve_appends(
-            table, folded, affected, key=pk, carry_cols=carry
+            table, folded, buckets, key=pk, carry_cols=carry
         )
         n_late = late.count()
         if n_late:
@@ -1160,14 +1159,13 @@ class CdcEngine:
         bucket-pruned two-phase path. Bulk replay sits squarely in the
         first regime — bucket pruning cannot skip anything when a batch
         touches every bucket anyway. ``n_events`` is the ACTUAL event count
-        of the batch (from the prefetch count or a column-pruned count) —
-        never the LSN span, which overstates sparse ranges and would
-        trigger whole-table rewrites for near-empty batches."""
+        of the batch (from _batch_stats) — never the LSN span, which
+        overstates sparse ranges and would trigger whole-table rewrites for
+        near-empty batches."""
         frac = self.cfg.full_merge_min_fraction
         if (
             frac is None
             or self.stream.sync_mode != SYNC_APPEND_DEDUP
-            or self.cfg.dedup_strategy != "agg"
             # patch/append batches resolve against touched buckets before
             # commit (_patch_winners/_append_winners); the bucket-CoW / MoR
             # paths then apply as-is, the single-pass whole-table union-fold
@@ -1180,6 +1178,15 @@ class CdcEngine:
             return False
         table_rows = sum(f.rows for f in snap.files)
         return n_events >= frac * max(table_rows, 1)
+
+    def _merge_mode(self, table: LakeTable, n_events: int) -> str:
+        """How a batch commits: "full" | "cow" | "mor" in append_dedup sync
+        mode, else the sync mode itself ("append" | "overwrite")."""
+        if self.stream.sync_mode != SYNC_APPEND_DEDUP:
+            return self.stream.sync_mode
+        if self._use_full_merge(table, n_events):
+            return "full"
+        return "mor" if self._use_mor(table, n_events) else "cow"
 
     def _use_mor(self, table: LakeTable, n_events: int) -> bool:
         """Merge-on-read dispatch: a batch far smaller than the table (the
@@ -1225,22 +1232,25 @@ class CdcEngine:
         self,
         winners: DataFrame,
         summary: dict,
+        mode: str,
         affected_buckets: list[int] | None = None,
-        use_mor: bool = False,
         n_events: int | None = None,
     ) -> int | None:
         """Dispatch on destination sync mode (airbyte-protocol.md:404-417):
-        append_dedup -> delta append (merge-on-read, small batches) or
-        bucket-CoW MERGE; append -> pure file append; overwrite -> replace
-        the whole table with this batch (full-refresh overwrite,
+        append_dedup -> whole-table merge of the raw events (``mode``
+        "full", large batches), delta append (merge-on-read, small batches)
+        or bucket-CoW MERGE; append -> pure file append; overwrite ->
+        replace the whole table with this batch (full-refresh overwrite,
         BigQuerySqlGenerator.java:684-694 tmp-swap analog)."""
-        mode = self.stream.sync_mode
-        if not (mode == SYNC_APPEND_DEDUP and use_mor):
+        sync = self.stream.sync_mode
+        if mode != "mor":
             # any non-delta commit rewrites files and cannot rebase over a
             # concurrent fold (and vice versa): drain maintenance first
             self._join_fold()
-        if mode == SYNC_APPEND_DEDUP:
-            if use_mor:
+        if sync == SYNC_APPEND_DEDUP:
+            if mode == "full":
+                return merge_upsert_full(self.table, winners, summary=summary)
+            if mode == "mor":
                 table = self.table
                 if (
                     table.delta_file_count() >= self.cfg.mor_max_delta_files
@@ -1281,7 +1291,6 @@ class CdcEngine:
                 self.table,
                 winners,
                 summary=summary,
-                dedup_strategy=self.cfg.dedup_strategy,
                 write_partitions=self.cfg.write_partitions,
                 affected_buckets=affected_buckets,
             )
@@ -1291,7 +1300,7 @@ class CdcEngine:
         # replace range comes from the TABLE's spec, not stream config: after
         # a rebucket the table may hold more buckets than the config says
         replace = (
-            range(table.snapshot().spec["num_buckets"]) if mode == SYNC_OVERWRITE else None
+            range(table.snapshot().spec["num_buckets"]) if sync == SYNC_OVERWRITE else None
         )
         return table.write_and_commit(
             rows,
@@ -1547,7 +1556,9 @@ class CdcEngine:
         Streaming checkpointLocation tracks source offsets, and the
         epoch-stamped batch id makes a re-delivered epoch (crash between
         commit and SS offset write) a no-op — the same two-sided idempotence
-        the batch path gets from LSN-range batch ids."""
+        the batch path gets from LSN-range batch ids. Past that check an
+        epoch commits like any batch; its LSN range is the one its events
+        carry. Returns rows applied."""
         table = self.table
         eid = int(epoch_id)
         bid = _batch_id(f"{self.stream.name}:stream", eid, eid)
@@ -1556,88 +1567,31 @@ class CdcEngine:
             return 0
         self._maybe_evolve_schema(batch_df.schema)
         t0 = time.monotonic()
-        winners = self._dedup_winners(batch_df, table).persist()
-        try:
-            part_stats = (
-                winners.groupBy("source_partition")
-                .agg(
-                    F.min("lsn").alias("min_lsn"),
-                    F.max("lsn").alias("max_lsn"),
-                    F.count("*").alias("rows"),
-                )
-                .collect()
-            )
-            if not part_stats:
-                log_metric("stream_epoch_empty", batch_id=bid, epoch=eid)
-                return 0
-            n_rows = sum(int(r["rows"]) for r in part_stats)
-            version = self._commit_batch(
-                winners,
-                summary=self._summary(
-                    {"operation": "merge-stream", "batch_id": bid, "epoch": eid}
-                ),
-                use_mor=self._use_mor(table, n_rows),
-                n_events=n_rows,
-            )
-        finally:
-            winners.unpersist()
-            self._drop_scratch()
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        hi = max(int(r["max_lsn"]) for r in part_stats)
-        rows_applied = sum(int(r["rows"]) for r in part_stats)
-        self.lineage.append(
-            [
-                {
-                    "batch_id": bid,
-                    "source_partition": int(r["source_partition"]),
-                    "start_lsn": int(r["min_lsn"]),
-                    "end_lsn": int(r["max_lsn"]),
-                    "rows_applied": int(r["rows"]),
-                    "commit_snapshot_id": int(version),
-                    "wall_ms": wall_ms,
-                }
-                for r in part_stats
-            ]
-        )
-        ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
-        ckpt.max_committed_lsn = max(ckpt.max_committed_lsn, hi)
-        ckpt.table_schema_version = self.table.snapshot().schema_version
-        ckpt.note_batch(bid)
-        for r in part_stats:
-            p = str(int(r["source_partition"]))
-            cur = ckpt.per_partition.get(p, {"last_lsn": 0, "rows_applied": 0})
-            cur["last_lsn"] = max(cur["last_lsn"], int(r["max_lsn"]))
-            cur["rows_applied"] = cur["rows_applied"] + int(r["rows"])
-            ckpt.per_partition[p] = cur
-        save_checkpoint(self.checkpoint_path, ckpt)
-        log_metric(
-            "stream_epoch_committed",
-            batch_id=bid,
-            epoch=eid,
-            rows_applied=rows_applied,
-            snapshot=version,
-            wall_ms=wall_ms,
-        )
-        return rows_applied
+        enriched = self._prepare_batch(batch_df, table)
+        stats = self._batch_stats(enriched, table)
+        if not stats:
+            log_metric("batch_empty", batch_id=bid, epoch=eid)
+            return 0
+        lo = min(int(r["min_lsn"]) for r in stats)
+        hi = max(int(r["max_lsn"]) for r in stats)
+        return self._finish_batch(enriched, stats, table, bid, lo, hi, t0, epoch=eid)
 
     def _apply_batch(
         self,
         source: DataFrame,
         lo: int,
         hi: int,
-        prefetched: tuple[DataFrame, int] | None = None,
+        prefetched: tuple[DataFrame, list] | None = None,
     ) -> int:
         """Apply the (lo, hi] LSN range as one atomic commit. Returns events
         read. ``prefetched``: (already-validated+enriched persisted batch,
-        its exact row count) from the replay loop's read-ahead."""
+        its _batch_stats rows) from the replay loop's read-ahead."""
         table = self.table
         bid = _batch_id(self.stream.name, lo, hi)
-        ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
-
         existing = table.find_batch(bid)
         if existing is not None:
             # crash happened between commit and checkpoint — reconcile only.
+            ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
             if hi > ckpt.max_committed_lsn:
                 ckpt.max_committed_lsn = hi
                 ckpt.note_batch(bid)
@@ -1650,252 +1604,125 @@ class CdcEngine:
     # reference's `_airbyte_loaded_at IS NULL` work marker (SURVEY.md §4).
         t0 = time.monotonic()
         batch = source.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-
-        # Exact event count: free when prefetched (its count() already ran);
-        # otherwise one column-pruned count(*) over the pushed-down scan.
-        # Gates BOTH the empty short-circuit (a sparse/empty LSN range must
-        # never commit a whole-table rewrite) and the merge-path dispatch.
-        n_events = prefetched[1] if prefetched is not None else batch.count()
-        if n_events == 0:
-            log_metric("batch_empty", batch_id=bid, start_lsn=lo, end_lsn=hi)
-            ckpt.max_committed_lsn = hi
-            ckpt.table_schema_version = table.snapshot().schema_version
-            save_checkpoint(self.checkpoint_path, ckpt)
-            return 0
-
-        enriched = prefetched[0] if prefetched is not None else None
-        own_enriched = False  # we persisted it here (raw-table path)
-        if self.cfg.keep_raw_table:
-            if enriched is None:
-                enriched = self._prepare_batch(batch, table).persist()
-                own_enriched = True
-            self._append_raw(enriched, bid, lo, hi)
-
-        if self.cfg.scd2_history:
-            self._append_scd2(batch, bid, lo, hi)
-
-        if self._use_full_merge(table, n_events):
-            try:
-                return self._apply_batch_full(
-                    batch, table, bid, ckpt, lo, hi, t0, prefetched=enriched
-                )
-            finally:
-                if own_enriched:
-                    enriched.unpersist()
-        use_mor = self._use_mor(table, n_events)
-
-        if enriched is not None:
-            # the enriched df IS the prepared batch: in append mode it is
-            # the winners verbatim (no dedup in that mode), otherwise only
-            # the dedup/fold step remains.
-            if self.stream.sync_mode == SYNC_APPEND:
-                winners = enriched
-            elif self.stream.update_mode == "patch":
-                winners = self._patch_winners(enriched, table).persist()
-            elif self.stream.update_mode == "token_append":
-                winners = self._append_winners(enriched, table).persist()
-            else:
-                winners = lww_dedup(
-                    enriched,
-                    key=self.stream.primary_key,
-                    strategy=self.cfg.dedup_strategy,
-                    salt_buckets=self.cfg.salt_buckets,
-                ).persist()
-        else:
-            winners = self._dedup_winners(batch, table).persist()
+        enriched, stats = prefetched or (self._prepare_batch(batch, table), None)
+        # the raw append and the commit both read the batch: persist it
+        # unless the read-ahead already did
+        own_enriched = prefetched is None and self.cfg.keep_raw_table
+        if own_enriched:
+            enriched = enriched.persist()
         try:
-            # ONE driver action per batch: per-partition lineage stats AND
-            # (for the CoW merge only) the touched-bucket set in the same
-            # agg — plus null-PK detection (a NULL key cannot merge; it
-            # would land as a corrupt row). LWW collapses the null group to
-            # <= 1 winner per salt, so the count here is detection, not the
-            # delivered total; the raw/audit table retains every delivered
-            # record for forensics.
-            pk_col = F.col(self.stream.primary_key)
-            agg_cols = [
-                F.min("lsn").alias("min_lsn"),
-                F.max("lsn").alias("max_lsn"),
-                F.count("*").alias("rows"),
-                F.sum(pk_col.isNull().cast("long")).alias("null_pk"),
-            ]
-            if not use_mor:
-                # bucket_expr(NULL) is NULL and collect_set skips NULLs, so
-                # the bucket set is already null-clean
-                agg_cols.append(
-                    F.collect_set(
-                        table.bucket_expr(self.stream.primary_key)
-                    ).alias("buckets")
-                )
-            part_stats = (
-                winners.groupBy("source_partition").agg(*agg_cols).collect()
-            )
-            t_collect = time.monotonic()
-            if not part_stats:
+            if stats is None:
+                stats = self._batch_stats(enriched, table)
+            n_events = sum(int(r["rows"]) for r in stats)
+            if n_events == 0:
+                # a sparse/empty LSN range never commits (least of all a
+                # whole-table rewrite); only the checkpoint moves
                 log_metric("batch_empty", batch_id=bid, start_lsn=lo, end_lsn=hi)
+                ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
                 ckpt.max_committed_lsn = hi
+                ckpt.table_schema_version = table.snapshot().schema_version
                 save_checkpoint(self.checkpoint_path, ckpt)
                 return 0
-            drop_nulls = self.stream.sync_mode != SYNC_APPEND
-            null_pk = (
-                sum(int(r["null_pk"] or 0) for r in part_stats) if drop_nulls else 0
-            )
-            if null_pk:
-                # quarantine: never merge a NULL key (append mode has no PK
-                # semantics and keeps every record verbatim)
-                log_metric(
-                    "null_pk_quarantined",
-                    batch_id=bid,
-                    winner_rows=null_pk,
-                    raw_retained=bool(self.cfg.keep_raw_table),
-                )
-                winners = winners.filter(pk_col.isNotNull())
-            affected = (
-                None if use_mor
-                else sorted({int(b) for r in part_stats for b in r["buckets"]})
-            )
-
-            version = self._commit_batch(
-                winners,
-                summary=self._summary({
-                    "operation": "merge-delta" if use_mor else "merge",
-                    "batch_id": bid,
-                    "start_lsn": lo,
-                    "end_lsn": hi,
-                }),
-                affected_buckets=affected,
-                use_mor=use_mor,
-                n_events=n_events,
-            )
+            if self.cfg.keep_raw_table:
+                self._append_raw(enriched, bid, lo, hi)
+            if self.cfg.scd2_history:
+                self._append_scd2(batch, bid, lo, hi)
+            self._finish_batch(enriched, stats, table, bid, lo, hi, t0)
         finally:
-            winners.unpersist()
-            self._drop_scratch()
             if own_enriched:
                 enriched.unpersist()
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-
-        def _applied(r) -> int:  # quarantined null-PK winners never commit
-            n = int(r["rows"])
-            return n - int(r["null_pk"] or 0) if drop_nulls else n
-
-        rows_applied = sum(_applied(r) for r in part_stats)
-        self.lineage.append(
-            [
-                {
-                    "batch_id": bid,
-                    "source_partition": int(r["source_partition"]),
-                    "start_lsn": int(r["min_lsn"]),
-                    "end_lsn": int(r["max_lsn"]),
-                    "rows_applied": _applied(r),
-                    "commit_snapshot_id": int(version),
-                    "wall_ms": wall_ms,
-                }
-                for r in part_stats
-            ]
-        )
-
-        ckpt.max_committed_lsn = hi
-        ckpt.table_schema_version = self.table.snapshot().schema_version
-        ckpt.note_batch(bid)
-        for r in part_stats:
-            p = str(int(r["source_partition"]))
-            cur = ckpt.per_partition.get(p, {"last_lsn": 0, "rows_applied": 0})
-            cur["last_lsn"] = max(cur["last_lsn"], int(r["max_lsn"]))
-            cur["rows_applied"] = cur["rows_applied"] + _applied(r)
-            ckpt.per_partition[p] = cur
-        save_checkpoint(self.checkpoint_path, ckpt)
-
-        log_metric(
-            "batch_committed",
-            batch_id=bid,
-            start_lsn=lo,
-            end_lsn=hi,
-            rows_applied=rows_applied,
-            snapshot=version,
-            wall_ms=wall_ms,
-            dedup_ms=int((t_collect - t0) * 1000),
-            commit_ms=wall_ms - int((t_collect - t0) * 1000),
-            events_per_sec=round(n_events / (wall_ms / 1000.0), 1) if wall_ms else None,
-        )
         # exact delivered-event count, NOT the LSN span — sparse LSN spaces
         # (Mongo BsonTimestamps, PG byte offsets) make hi - lo meaningless
         return n_events
 
-    def _apply_batch_full(
-        self, batch: DataFrame, table: LakeTable, bid: str,
-        ckpt: Checkpoint, lo: int, hi: int, t0: float,
-        prefetched: DataFrame | None = None,
+    def _batch_stats(self, enriched: DataFrame, table: LakeTable) -> list:
+        """The batch's numbers from ONE aggregate over its DELIVERED events,
+        per source partition: min/max lsn, event count, NULL-key count and
+        the touched-bucket set. Every consumer reads them from here: the
+        empty check and merge dispatch (counts), quarantine, lineage and
+        the checkpoint, the CoW rewrite set and the patch/append resolve
+        scans (buckets — the winners' keys are a subset of the delivered
+        keys; a NULL key only adds the bucket of hash(NULL), a no-op
+        rewrite). On the replay read-ahead's persisted batch this action is
+        also the one that materializes the cache."""
+        pk = self.stream.primary_key
+        return (
+            enriched.groupBy("source_partition")
+            .agg(
+                F.min("lsn").alias("min_lsn"),
+                F.max("lsn").alias("max_lsn"),
+                F.count("*").alias("rows"),
+                F.sum(F.col(pk).isNull().cast("long")).alias("null_pk"),
+                F.collect_set(table.bucket_expr(pk)).alias("buckets"),
+            )
+            .collect()
+        )
+
+    def _finish_batch(
+        self,
+        enriched: DataFrame,
+        stats: list,
+        table: LakeTable,
+        bid: str,
+        lo: int,
+        hi: int,
+        t0: float,
+        epoch: int | None = None,
     ) -> int:
-        """Single-action whole-table merge (merge_upsert_full). Lineage
-        stats come from a column-pruned scan of just (source_partition, lsn)
-        — the parquet reader never touches the wide token column for it, so
-        the extra pass is ~free. rows_applied here counts the change events
-        delivered per source partition in (lo, hi] (what the source read —
-        the reference's per-state record counts, AsyncStreamConsumer
-        .java:199-221); the merged winners are not per-partition attributable
-        after the union."""
-        from concurrent.futures import ThreadPoolExecutor
+        """Commit a non-empty prepared batch and end it — the ONE place that
+        writes lineage rows, advances the checkpoint and emits
+        ``batch_committed``, for every merge mode and for replay windows and
+        stream epochs alike. ``stats`` are its :meth:`_batch_stats`.
+        rows_applied = delivered events minus quarantined NULL-key events,
+        per source partition (the reference's per-state record counts,
+        AsyncStreamConsumer.java:199-221). Returns it."""
+        t_commit = time.monotonic()
+        n_events = sum(int(r["rows"]) for r in stats)
+        mode = self._merge_mode(table, n_events)
+        buckets = sorted({int(b) for r in stats for b in r["buckets"]})
+        # the full merge folds the raw events into the whole table in one
+        # pass; every other mode commits the batch's winners
+        rows = enriched if mode == "full" else self._winners(enriched, table, buckets)
+        # quarantine: a NULL key cannot merge (it would land as a corrupt
+        # row); the raw table retains it. Append mode has no PK semantics
+        # and keeps every record verbatim.
+        quarantine = self.stream.sync_mode != SYNC_APPEND
 
-        from airbyte_spark.operators.merge import merge_upsert_full
+        def _nulls(r) -> int:
+            return int(r["null_pk"]) if quarantine else 0
 
-        # The lineage-stats job runs CONCURRENTLY with the merge: its few
-        # column-pruned tasks slot into the merge's scheduling gaps instead
-        # of serializing ~1s of near-idle cluster time per batch. The merge
-        # commit only proceeds to checkpoint once both complete.
-        pk_col = F.col(self.stream.primary_key)
-
-        def _stats():
-            return (
-                batch.groupBy("source_partition")
-                .agg(
-                    F.min("lsn").alias("min_lsn"),
-                    F.max("lsn").alias("max_lsn"),
-                    F.count("*").alias("rows"),
-                    # exact delivered null-PK count (pre-dedup here)
-                    F.sum(pk_col.isNull().cast("long")).alias("null_pk"),
-                )
-                .collect()
-            )
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            stats_f = pool.submit(_stats)
-            enriched = prefetched if prefetched is not None else self._prepare_batch(batch, table)
-            # NULL keys never merge (quarantine; raw table retains them) —
-            # a no-op filter when the stream is clean
-            version = merge_upsert_full(
-                table,
-                enriched.filter(pk_col.isNotNull()),
-                summary=self._summary({
-                    "operation": "merge-full",
-                    "batch_id": bid,
-                    "start_lsn": lo,
-                    "end_lsn": hi,
-                }),
-            )
-            part_stats = stats_f.result()
-        if not part_stats:
-            # an empty LSN range still commits above (no-op merge of the
-            # target with zero batch rows); just advance the checkpoint
-            log_metric("batch_empty", batch_id=bid, start_lsn=lo, end_lsn=hi)
-            ckpt.max_committed_lsn = hi
-            ckpt.note_batch(bid)
-            save_checkpoint(self.checkpoint_path, ckpt)
-            return 0
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        null_pk = sum(int(r["null_pk"] or 0) for r in part_stats)
-        if null_pk:
+        n_null = sum(_nulls(r) for r in stats)
+        if n_null:
             log_metric(
                 "null_pk_quarantined",
                 batch_id=bid,
-                delivered_rows=null_pk,
+                delivered_rows=n_null,
                 raw_retained=bool(self.cfg.keep_raw_table),
             )
+            rows = rows.filter(F.col(self.stream.primary_key).isNotNull())
+        summary = {
+            "operation": _MERGE_OPERATION[mode],
+            "batch_id": bid,
+            "start_lsn": lo,
+            "end_lsn": hi,
+        }
+        if epoch is not None:
+            summary["epoch"] = epoch
+        try:
+            version = self._commit_batch(
+                rows,
+                summary=self._summary(summary),
+                mode=mode,
+                affected_buckets=buckets,
+                n_events=n_events,
+            )
+        finally:
+            self._drop_scratch()
 
-        def _applied(r) -> int:
-            return int(r["rows"]) - int(r["null_pk"] or 0)
-
-        rows_applied = sum(_applied(r) for r in part_stats)
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        # prepare = validate + stats (+ raw/SCD2 side tables); commit = the
+        # dedup/merge write and this finish step
+        prepare_ms = int((t_commit - t0) * 1000)
         self.lineage.append(
             [
                 {
@@ -1903,36 +1730,43 @@ class CdcEngine:
                     "source_partition": int(r["source_partition"]),
                     "start_lsn": int(r["min_lsn"]),
                     "end_lsn": int(r["max_lsn"]),
-                    "rows_applied": _applied(r),
+                    "rows_applied": int(r["rows"]) - _nulls(r),
                     "commit_snapshot_id": int(version),
                     "wall_ms": wall_ms,
                 }
-                for r in part_stats
+                for r in stats
             ]
         )
-        ckpt.max_committed_lsn = hi
+        ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
+        # forward only: stream epochs are file-ordered, not LSN-windowed
+        ckpt.max_committed_lsn = max(ckpt.max_committed_lsn, hi)
         ckpt.table_schema_version = self.table.snapshot().schema_version
         ckpt.note_batch(bid)
-        for r in part_stats:
+        for r in stats:
             p = str(int(r["source_partition"]))
             cur = ckpt.per_partition.get(p, {"last_lsn": 0, "rows_applied": 0})
             cur["last_lsn"] = max(cur["last_lsn"], int(r["max_lsn"]))
-            cur["rows_applied"] = cur["rows_applied"] + _applied(r)
+            cur["rows_applied"] = cur["rows_applied"] + int(r["rows"]) - _nulls(r)
             ckpt.per_partition[p] = cur
         save_checkpoint(self.checkpoint_path, ckpt)
+
+        rows_applied = n_events - n_null
         log_metric(
             "batch_committed",
             batch_id=bid,
+            epoch=epoch,
             start_lsn=lo,
             end_lsn=hi,
+            merge_mode=mode,
+            events=n_events,
+            null_pk_quarantined=n_null,
             rows_applied=rows_applied,
             snapshot=version,
             wall_ms=wall_ms,
-            merge_mode="full",
-            events_per_sec=round(rows_applied / (wall_ms / 1000.0), 1) if wall_ms else None,
+            prepare_ms=prepare_ms,
+            commit_ms=wall_ms - prepare_ms,
+            events_per_sec=round(n_events / (wall_ms / 1000.0), 1) if wall_ms else None,
         )
-        # rows_applied == delivered events in (lo, hi] (per-partition sums),
-        # exact under sparse LSN spaces where hi - lo is meaningless
         return rows_applied
 
     # ----------------------------------------------------------------- read

@@ -2,7 +2,10 @@
 
 FIXTURES.md T4: every committed batch emits one row per source partition —
 (batch_id, source_partition, start_lsn, end_lsn, rows_applied,
-commit_snapshot_id, wall_ms). Stored as an append-only JSONL log (tiny:
+commit_snapshot_id, wall_ms). On every apply path (full / copy-on-write /
+merge-on-read merge, append, overwrite, stream epoch) ``rows_applied`` is
+the partition's delivered events minus its quarantined NULL-key events, and
+start/end_lsn are the min/max LSN of its delivered events. Stored as an append-only JSONL log (tiny:
 O(batches × partitions)) and queryable as a DataFrame. Metric events are
 also printed as single JSON lines on stdout, the analog of the reference's
 per-sync summary (AsyncStreamConsumer.java:199-221) and its Datadog-pushed

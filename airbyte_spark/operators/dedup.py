@@ -23,19 +23,15 @@ Ordering is made *total* with a deterministic content-hash tie-break so
 resumed replays are bit-identical even on pathological (same lsn, same
 ts_ms, different payload) inputs.
 
-Three strategies are kept for comparison/testing:
-- "agg"    (default): max_by hash aggregate, map-side partial combine.
-- "salted": explicit two-phase (doc_id, salt) partial then global — the
-  manual skew treatment SURVEY.md §7.2 step 3 describes; semantically
-  identical, useful to demonstrate/benchmark the technique.
-- "window": the reference-shaped row_number plan, for parity tests.
+The reference-shaped row_number plan lives on in the tests
+(tests/util.py ``lww_window_reference``) as the oracle this aggregate is
+checked against.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 ORDER_COLS = ("lsn", "ts_ms")
 
@@ -53,42 +49,17 @@ def _order_struct(df: DataFrame, order_cols: tuple[str, ...]):
 def lww_dedup(
     df: DataFrame,
     key: str = "doc_id",
-    strategy: str = "agg",
-    salt_buckets: int = 16,
     order_cols: tuple[str, ...] = ORDER_COLS,
 ) -> DataFrame:
-    """One row per ``key``: the max-(lsn, ts_ms) event. Keeps every column.
+    """One row per ``key``: the max-(lsn, ts_ms) event. Keeps every column,
+    ``key`` first.
 
     Tombstones participate like any event (delete-wins-if-newest —
     BaseSqlGeneratorIntegrationTest.java:863-919 ordering tests).
     """
     cols = [c for c in df.columns if c != key]
-
-    if strategy == "window":
-        w = Window.partitionBy(key).orderBy(F.col("_ord").desc())
-        return (
-            df.withColumn("_ord", _order_struct(df, order_cols))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(key, *cols)  # same column order as the agg strategies
-        )
     row = F.struct(*[F.col(c) for c in cols])
     ord_ = _order_struct(df, order_cols)
-
-    if strategy == "salted":
-        # Phase 1: partial winner per (key, salt) — salt from the event
-        # position so a hot key's events spread across salt_buckets groups.
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt_buckets))
-        partial = (
-            df.groupBy(F.col(key), salt.alias("_salt"))
-            .agg(F.max_by(row, ord_).alias("_row"), F.max(ord_).alias("_ord"))
-        )
-        winners = (
-            partial.groupBy(key)
-            .agg(F.max_by(F.col("_row"), F.col("_ord")).alias("_row"))
-        )
-        return winners.select(F.col(key), F.col("_row.*"))
-
-    # default: single hash aggregate; Catalyst inserts the map-side partial.
+    # single hash aggregate; Catalyst inserts the map-side partial
     winners = df.groupBy(key).agg(F.max_by(row, ord_).alias("_row"))
     return winners.select(F.col(key), F.col("_row.*"))

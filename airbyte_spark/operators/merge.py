@@ -60,7 +60,6 @@ def merge_upsert(
     table: LakeTable,
     winners: DataFrame,
     summary: dict,
-    dedup_strategy: str = "agg",
     write_partitions: int | None = None,
     affected_buckets: list[int] | None = None,
 ) -> int | None:
@@ -69,7 +68,8 @@ def merge_upsert(
     for an empty batch.
 
     ``affected_buckets``: pass the bucket set if already known (the engine
-    folds it into the lineage aggregate) to avoid a second driver action.
+    takes it from its one batch-stats aggregate) to avoid a second driver
+    action.
     """
     snap = table.snapshot()
     schema = snap.schema
@@ -93,7 +93,7 @@ def merge_upsert(
 
     combined = target.unionByName(batch)
     num_buckets = snap.spec["num_buckets"]
-    aligned = dedup_strategy == "agg" and snap.spec.get("bucket_fn") == "murmur3"
+    aligned = snap.spec.get("bucket_fn") == "murmur3"
     if aligned:
         # Both sides are already one-row-per-key (no skew possible), so the
         # map-side partial combine buys nothing here — instead shuffle ONCE
@@ -102,12 +102,8 @@ def merge_upsert(
         # hashpartitioning hash, its output is physically bucket-aligned and
         # the write needs no further shuffle or cross-bucket sort.
         combined = combined.repartition(num_buckets, F.col(pk))
-    merged = lww_dedup(
-        combined,
-        key=pk,
-        strategy=dedup_strategy,
-        order_cols=(S.COL_LSN, _TS_TMP),
-    ).drop(_TS_TMP)
+    merged = lww_dedup(combined, key=pk, order_cols=(S.COL_LSN, _TS_TMP))
+    merged = merged.drop(_TS_TMP)
 
     return table.write_and_commit(
         merged.select(*cols),
@@ -128,9 +124,9 @@ def merge_upsert_full(
     skew-crushing LWW aggregate resolve everything, writing bucket-aligned
     with no further shuffle.
 
-    Compared with the two-phase path (dedup batch -> persist -> stats
-    collect -> union -> re-dedup -> repartition -> write) this runs ONE
-    heavy pass: scan+validate -> partial_max_by (map-side, hot keys crushed
+    Compared with the two-phase path (dedup batch -> union -> re-dedup ->
+    repartition -> write) this runs ONE heavy pass, without the batch-side
+    dedup: scan+validate -> partial_max_by (map-side, hot keys crushed
     before the wire) -> one exchange at exactly num_buckets partitions
     (shuffle partitions pinned, AQE coalescing disabled so partition index
     == bucket) -> final max_by -> parquet write, no sort, no persist churn.
@@ -151,9 +147,10 @@ def merge_upsert_full(
             f"(table spec has {snap.spec.get('bucket_fn', 'xxhash64')!r})"
         )
     # NOTE: _conf mutates session-wide confs for the duration of this
-    # action; concurrent jobs on sibling threads (lineage stats, prefetch)
-    # see them too. Both are small aggregations for which the pinned
-    # shuffle-partition count is harmless; revisit if that changes.
+    # action; a concurrent job on a sibling thread (the replay read-ahead's
+    # batch-stats aggregate) sees them too. It is a small aggregation for
+    # which the pinned shuffle-partition count is harmless; revisit if
+    # that changes.
 
     batch = enriched_batch.select(*cols, F.col("ts_ms").alias(_TS_TMP))
     target = table.scan().withColumn(_TS_TMP, F.unix_millis(F.col(S.COL_EXTRACTED_AT)))
@@ -164,10 +161,7 @@ def merge_upsert_full(
         spark__sql__adaptive__coalescePartitions__enabled="false",
     ):
         merged = lww_dedup(
-            combined,
-            key=snap.spec["bucket_by"],
-            strategy="agg",
-            order_cols=(S.COL_LSN, _TS_TMP),
+            combined, key=snap.spec["bucket_by"], order_cols=(S.COL_LSN, _TS_TMP)
         ).drop(_TS_TMP)
         return table.write_and_commit(
             merged.select(*cols),

@@ -3,10 +3,11 @@
 Maps the reference's Debezium engine-thread -> BlockingQueue -> iterator
 pipeline (AirbyteDebeziumHandler.java:113-164, queue cap 10,000) onto
 ``spark.readStream`` with ``maxFilesPerTrigger`` as the backpressure knob.
-Each micro-batch flows through the exact same validate -> LWW dedup ->
-merge_upsert path as bounded replay (CdcEngine.apply_stream_epoch), so
-batch and streaming modes are semantically interchangeable; out-of-order
-arrival across micro-batches is absorbed by LWW + retained tombstones.
+Each micro-batch flows through the exact same validate -> batch stats ->
+LWW dedup -> merge path and finish step (lineage, checkpoint, NULL-key
+quarantine) as bounded replay (CdcEngine.apply_stream_epoch), so batch and
+streaming modes are semantically interchangeable; out-of-order arrival
+across micro-batches is absorbed by LWW + retained tombstones.
 
 Exactly-once composition:
 - Spark's checkpointLocation tracks which source files each epoch consumed

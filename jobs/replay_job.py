@@ -35,7 +35,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--num-buckets", type=int, default=32)
     p.add_argument("--sync-mode", default="append_dedup",
                    choices=["append_dedup", "append", "overwrite"])
-    p.add_argument("--dedup-strategy", default="agg", choices=["agg", "salted", "window"])
     p.add_argument("--write-partitions", type=int, default=None)
     p.add_argument("--vocab-size", type=int, default=50_257)
     p.add_argument("--mor-max-fraction", type=float, default=0.05,
@@ -73,7 +72,6 @@ def main(argv: list[str] | None = None) -> int:
         StreamConfig(num_buckets=args.num_buckets, sync_mode=args.sync_mode),
         EngineConfig(
             batch_events=args.batch_events,
-            dedup_strategy=args.dedup_strategy,
             write_partitions=args.write_partitions,
             vocab_size=args.vocab_size,
             mor_max_fraction=args.mor_max_fraction or None,

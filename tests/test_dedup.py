@@ -1,14 +1,15 @@
-"""LWW dedup: the three strategies agree and implement the tie-break chain
-of BigQuerySqlGenerator.java:456-477 / the row_number window semantics."""
+"""LWW dedup: the max_by aggregate matches the reference-shaped row_number
+window plan and implements the tie-break chain of
+BigQuerySqlGenerator.java:456-477."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from airbyte_spark.changelog import ChangelogConfig, changelog_df
 from airbyte_spark.operators.dedup import lww_dedup
 from airbyte_spark.schemas import changelog_schema
+from tests.util import lww_window_reference
 
 
 def _mk(spark, rows):
@@ -57,12 +58,13 @@ def test_tombstone_wins_if_newest(spark):
     assert out[0].op == "D" and out[0].lsn == 10
 
 
-@pytest.mark.parametrize("strategy", ["agg", "salted", "window"])
-def test_strategies_agree(spark, strategy):
+def test_lww_matches_window_reference(spark):
+    """Hot keys (60% of events on 4 keys) and redeliveries: the aggregate
+    picks the same winner row, column for column, as the window plan."""
     cfg = ChangelogConfig(n_events=4000, n_seed_docs=200, dup_pct=5.0, hot_pct=60, hot_keys=4)
     df = changelog_df(spark, cfg)
-    out = lww_dedup(df, strategy=strategy).orderBy("doc_id").collect()
-    ref = lww_dedup(df, strategy="agg").orderBy("doc_id").collect()
+    out = lww_dedup(df).orderBy("doc_id").collect()
+    ref = lww_window_reference(df).orderBy("doc_id").collect()
     assert out == ref
     # exactly one row per key, and it is the max (lsn, ts_ms) of that key
     keys = df.select("doc_id").distinct().count()
@@ -82,24 +84,19 @@ def test_winner_is_max_order(spark):
 
 
 def test_strategies_agree_with_null_cursor(spark):
-    """All three LWW strategies produce the identical winner when the
-    primary order column is NULLABLE (null loses to non-null; all-null ties
-    fall to the secondary column) — the NULL-cursor rules of
-    BigQuerySqlGenerator.java:456-477 hold strategy-independently."""
-    from airbyte_spark.operators.dedup import lww_dedup
-
+    """The aggregate and the window reference produce the identical winner
+    when the primary order column is NULLABLE (null loses to non-null;
+    all-null ties fall to the secondary column) — the NULL-cursor rules of
+    BigQuerySqlGenerator.java:456-477 hold for both plans."""
     rows = [
         ("a", None, 5, "x1"), ("a", 100, 1, "x2"), ("a", None, 9, "x3"),
         ("b", None, 3, "y1"), ("b", None, 9, "y2"),
         ("c", 7, 1, "z1"), ("c", 7, 2, "z2"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, lsn bigint, ts_ms bigint, v string")
-    outs = {}
-    for s in ("agg", "salted", "window"):
-        out = lww_dedup(df, key="doc_id", strategy=s)
-        outs[s] = {r["doc_id"]: r["v"] for r in out.collect()}
-    assert outs["agg"] == {"a": "x2", "b": "y2", "c": "z2"}
-    assert outs["agg"] == outs["salted"] == outs["window"]
+    out = {r["doc_id"]: r["v"] for r in lww_dedup(df, key="doc_id").collect()}
+    ref = {r["doc_id"]: r["v"] for r in lww_window_reference(df).collect()}
+    assert out == ref == {"a": "x2", "b": "y2", "c": "z2"}
 
 
 def test_connected_components_nonconvergence_raises(spark):

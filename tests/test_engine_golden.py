@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from airbyte_spark.changelog import (
@@ -167,12 +166,6 @@ def test_hot_key_skew_golden(spark, workdir):
         hot_keys=4, hot_pct=80,
     )
     _run_golden(spark, workdir, cfg)
-
-
-@pytest.mark.parametrize("strategy", ["salted", "window"])
-def test_strategy_parity_golden(spark, workdir, strategy):
-    cfg = ChangelogConfig(n_events=800, n_seed_docs=100, dup_pct=3.0)
-    _run_golden(spark, workdir, cfg, dedup_strategy=strategy)
 
 
 def test_lineage_and_checkpoint(spark, workdir):

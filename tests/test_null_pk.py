@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from airbyte_spark.changelog import (
@@ -82,3 +83,27 @@ def test_null_pk_quarantined_full_merge(spark, workdir):
         eng.read_raw_log().filter(F.col("doc_id").isNull()).count()
     )
     assert raw_nulls == 12  # lsn 50,100,...,600 all retained for forensics
+
+
+@pytest.mark.parametrize("mor_max_fraction", [None, 2.0], ids=["cow", "mor"])
+def test_null_pk_quarantined_stream_epochs(spark, workdir, mor_max_fraction):
+    """Structured Streaming epochs quarantine NULL keys exactly like replay
+    batches: three one-file epochs over the poisoned changelog, on the
+    bucket-CoW path and on the merge-on-read path, land on golden."""
+    from airbyte_spark.streaming import stream_replay
+
+    eng = CdcEngine(
+        spark,
+        os.path.join(workdir, "e"),
+        StreamConfig(num_buckets=4),
+        EngineConfig(full_merge_min_fraction=None, mor_max_fraction=mor_max_fraction),
+    )
+    eng.create_table()
+    eng.bootstrap(seed_df(spark, CFG))
+    p = os.path.join(workdir, "cl")
+    _poisoned(spark).repartitionByRange(3, "lsn").write.parquet(p)
+    stats = stream_replay(eng, p, os.path.join(workdir, "ss"), max_files_per_trigger=1)
+    assert stats["epochs"] == 3
+    final = eng.read_final()
+    assert final.filter(F.col("doc_id").isNull()).count() == 0
+    assert_frames_equal(final_as_pandas(final), _expected(spark))

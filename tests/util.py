@@ -4,6 +4,10 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from airbyte_spark.operators.dedup import ORDER_COLS, _order_struct
 
 
 def final_as_pandas(df: DataFrame) -> pd.DataFrame:
@@ -21,6 +25,22 @@ def golden_normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     out["n_tok"] = out["n_tok"].astype("Int64")
     out["_ab_lsn"] = out["_ab_lsn"].astype("int64")
     return out.sort_values("doc_id").reset_index(drop=True)
+
+
+def lww_window_reference(
+    df: DataFrame, key: str = "doc_id", order_cols: tuple[str, ...] = ORDER_COLS
+) -> DataFrame:
+    """The reference-shaped LWW plan, ``row_number() OVER (PARTITION BY key
+    ORDER BY <total order> DESC) = 1`` (BigQuerySqlGenerator.java:572-631),
+    over the same total order as ``lww_dedup`` and with its column order:
+    the oracle the max_by aggregate is checked against."""
+    w = Window.partitionBy(key).orderBy(F.col("_ord").desc())
+    return (
+        df.withColumn("_ord", _order_struct(df, order_cols))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select(key, *[c for c in df.columns if c != key])
+    )
 
 
 def assert_frames_equal(actual: pd.DataFrame, expected: pd.DataFrame) -> None:
