@@ -76,97 +76,85 @@ class StreamConfig:
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """Replay-loop tuning knobs.
+    """Replay-loop settings.
+
+    Every field is set by a non-test caller or serves a behavioural
+    contract, named in its comment; ``tests/test_config.py`` pins the set.
 
     ``batch_events`` is the micro-batch size — the analog of the reference's
     checkpoint cadence (state every 10,000 records, DebeziumIteratorConstants
     .java:11-15) and flush batch (FormatConfig.java:22). We checkpoint once
-    per committed batch: commit and checkpoint are one atomic unit.
+    per committed batch: commit and checkpoint are one atomic unit. Every
+    job sets it (``--batch-events``), as do ``bench.py`` and perfbench.
     """
 
     batch_events: int = 1_000_000
-    # Replay windows are normally arithmetic LSN ranges (lo, lo+batch_events]
-    # — correct and action-free when LSNs are dense (event ids). Sparse LSN
-    # spaces (Postgres byte-offset LSNs, Mongo BsonTimestamp sec*2^32+ord)
-    # would make that loop iterate billions of empty windows; when the
-    # arithmetic split would exceed this many windows, replay switches to
-    # event-count quantile windowing (one count + one approxQuantile pass
-    # over the pruned lsn column) so each batch still carries
-    # ~batch_events EVENTS regardless of how the positions are spaced.
-    max_arithmetic_windows: int = 4096
     # Transactional batching: when the LSN packs (commit_lsn << bits |
     # statement_index) — sources/wal2json.py — align every replay-window
     # bound DOWN to a commit boundary so no transaction is ever split across
     # two commits of the destination table (atomicity of source txns under
     # batched replay). None = positions are not sub-ordered; no alignment.
+    # Set by cdc_tail_job (wal2json/maxwell/canal, --lsn-align-bits) and
+    # demux_job (canal wire).
     lsn_align_bits: int | None = None
+    # Token-id range checked by validation: replay_job and cdc_tail_job
+    # --vocab-size.
     vocab_size: int = 50_257
-    max_tokens: int = 2_048
     # Validation policy: rows with bad payloads are repaired + flagged in
     # _ab_meta.errors, never dropped (error-capture pattern of
-    # BigQuerySqlGenerator.java:544-566).
+    # BigQuerySqlGenerator.java:544-566). cdc_tail_job turns it off for
+    # streams that carry no token payload (--validate-tokens opts in).
     validate_tokens: bool = True
-    # Write parallelism for the per-bucket CoW rewrite.
+    # Write parallelism for the per-bucket CoW rewrite: bench.py and
+    # replay_job --write-partitions.
     write_partitions: int | None = None
     # Post-sync compaction (the reference rewrites data files after each
     # sync, IcebergConsumer.java:210-224): after replay, rewrite any bucket
-    # fragmented beyond this many files into one. None disables.
+    # fragmented beyond this many files into one. None disables (bench.py,
+    # perfbench and tools/sf_point.py time replay without it).
     compact_after_replay_max_files: int | None = 4
-    # When a batch's event count >= this fraction of the table's rows, use
-    # the single-action whole-table merge (merge_upsert_full) instead of the
-    # bucket-pruned two-phase path. None = always two-phase.
-    full_merge_min_fraction: float | None = 0.5
     # Merge-on-read: when a batch's event count is BELOW this fraction of
     # the table's base rows, commit the deduped winners as delta files
     # (append-only, write bytes ~ batch size) and resolve LWW at scan time
     # instead of rewriting buckets. None disables (always copy-on-write).
     # This is what keeps small-batch tailing viable on a table that is
     # orders of magnitude larger than each batch (the 100 TB regime).
+    # replay_job --mor-max-fraction.
     mor_max_fraction: float | None = 0.05
-    # Fold deltas back into base (compact) once this many delta files
-    # accumulate — bounds scan-side read amplification.
+    # Fold deltas back into base (compact, inline in the batch that hits
+    # the threshold) once this many delta files accumulate — bounds
+    # scan-side read amplification. perfbench sets 3 so its tail steps
+    # include a fold.
     mor_max_delta_files: int = 64
-    # Run that fold ASYNCHRONOUSLY (one background thread) while replay
-    # keeps appending delta batches — maintenance off the ingest critical
-    # path, the way a real deployment schedules rewrite_data_files. Safe
-    # because delta appends rebase over the fold's commit and the fold
-    # commits through the rewrite-rebase path (concurrent appends'
-    # files are preserved; a fold whose inputs got rewritten re-plans on
-    # the next trigger). False keeps the fold inline (counted in replay
-    # wall time — simpler ops story for tests/small jobs).
-    mor_async_fold: bool = False
     # Union / oneOf type fallback (supported-data-types.md:74-113): when an
     # incoming column's type conflicts non-additively with the table's, the
     # reference's destinations degrade the column to a JSON-string
     # serialization rather than failing. When True, such a conflict evolves
     # the column to string (old values cast, complex values to_json) instead
     # of raising SchemaEvolutionError (soft-reset territory).
+    # replay_job --union-type-fallback.
     union_type_fallback: bool = False
     # Destinations-V2 raw/audit layer (BigQuerySqlGenerator.java:717-731
     # raw schema; the reference's replay/debug story): when True, every
     # batch's enriched pre-dedup events are ALSO appended to a side table
     # `<stream>_raw` (append-only, batch-id idempotent). Off by default —
     # it doubles write volume; the changelog itself usually serves as the
-    # replay log in this engine.
+    # replay log in this engine. replay_job --keep-raw-table.
     keep_raw_table: bool = False
     # SCD-type-2 history write mode (generate_scd_type_2_model,
     # normalization stream_processor.py:742-900): when True, every batch
     # ALSO maintains `<stream>_history` — one row per record version with
     # (valid_from_ms, valid_to_ms, is_active), intervals closed
-    # incrementally as later batches supersede them. N-batch replay and
-    # 1-batch replay produce bit-identical history tables.
+    # incrementally as later batches supersede them. Contract: N-batch
+    # replay and 1-batch replay produce bit-identical history tables.
     scd2_history: bool = False
     # Tombstone retention horizon (in LSNs): during compaction, drop
     # tombstone rows older than max_committed_lsn - this value. A tombstone
     # is only needed to suppress late out-of-order updates, so once the
     # source's reordering window has passed it is dead weight (the table
     # otherwise accretes deleted keys forever on delete-heavy streams).
-    # None = retain forever.
+    # None = retain forever. replay_job --tombstone-retention-lsns.
     tombstone_retention_lsns: int | None = None
-    # Read-ahead: validate+enrich micro-batch k+1 concurrently with batch
-    # k's merge (bounded to one batch in flight — the Spark shape of the
-    # reference's source-reads-ahead BlockingQueue pipeline).
-    prefetch_next_batch: bool = True
     # Write-audit-publish (Iceberg WAP; no Airbyte analog — its platform
     # trusts each sync): when True, every replay-path commit (batch merges,
     # raw/SCD2 appends, mid-replay schema evolution) lands STAGED — visible
@@ -178,6 +166,7 @@ class EngineConfig:
     # post-replay compaction) is deferred while staging so a maintenance
     # commit can never implicitly publish staged data. Bootstrap is never
     # staged (there is no published baseline to audit against yet).
+    # CatalogEngine.sync_transaction stages every stream this way.
     # CAVEAT (streaming): Structured-Streaming epochs stage+publish fine,
     # but abandon_staged() cannot roll back the SS offset log — after an
     # abandon, discard the checkpointLocation (or replay the range in

@@ -164,7 +164,7 @@ class DemuxEngine:
         # commit<<bits packings) would turn the arithmetic lo+batch_events
         # loop into millions of empty windows — the same fix the
         # single-engine replay carries (CdcEngine._lsn_windows: event-count
-        # quantile boundaries past cfg.max_arithmetic_windows). Any
+        # quantile boundaries past engine._MAX_ARITHMETIC_WINDOWS). Any
         # ascending bounds ending at target are correct; resume recomputes
         # over remaining events only.
         bounds, _ = next(iter(self.engines.values()))._lsn_windows(

@@ -25,6 +25,7 @@ import dataclasses
 import hashlib
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +60,15 @@ _MERGE_OPERATION = {
     "append": "merge",
     "overwrite": "merge",
 }
+# Replay windows are arithmetic LSN ranges (lo, lo+batch_events] — correct
+# and action-free when LSNs are dense (event ids). Past this many windows
+# (sparse LSN spaces: Postgres byte offsets, Mongo BsonTimestamps) replay
+# switches to event-count quantile windows instead (_lsn_windows).
+_MAX_ARITHMETIC_WINDOWS = 4096
+# A batch whose event count reaches this fraction of the table's rows takes
+# the single-action whole-table merge (merge_upsert_full) instead of the
+# bucket-pruned paths (_use_full_merge).
+_FULL_MERGE_MIN_FRACTION = 0.5
 
 
 class SchemaEvolutionError(ValueError):
@@ -153,11 +163,6 @@ class CdcEngine:
         self.lineage = LineageLog(root)
         self._table: LakeTable | None = None
         self._table_gen: int | None = None
-        # async MoR fold (cfg.mor_async_fold): at most ONE maintenance
-        # rewrite in flight; replay joins it at batch barriers that need a
-        # non-delta commit and at replay end.
-        self._fold_pool = None
-        self._fold_future = None
         # token-append scratch: persisted intermediates (the folded batch)
         # released once the batch's commit has run
         self._scratch: list[DataFrame] = []
@@ -700,11 +705,7 @@ class CdcEngine:
         # numbers the batch needs, so no extra action is spent on it.
         prefetched: tuple[DataFrame, list] | None = None
         inflight: DataFrame | None = None  # nxt df whose stats job is running
-        prefetch_pool = None
-        if self.cfg.prefetch_next_batch:
-            from concurrent.futures import ThreadPoolExecutor
-
-            prefetch_pool = ThreadPoolExecutor(max_workers=1)
+        prefetch_pool = ThreadPoolExecutor(max_workers=1)
         try:
             idx = 0
             while idx < len(bounds):
@@ -718,10 +719,8 @@ class CdcEngine:
                 next_f = None
                 nxt_lo = hi
                 nxt_hi = bounds[idx + 1] if idx + 1 < len(bounds) else hi
-                if (
-                    prefetch_pool is not None
-                    and nxt_lo < nxt_hi
-                    and (max_batches is None or n_batches + 1 < max_batches)
+                if nxt_lo < nxt_hi and (
+                    max_batches is None or n_batches + 1 < max_batches
                 ):
                     table = self.table
                     nxt = self._prepare_batch(
@@ -751,12 +750,7 @@ class CdcEngine:
                 prefetched[0].unpersist()
             if inflight is not None:
                 inflight.unpersist()
-            if prefetch_pool is not None:
-                prefetch_pool.shutdown(wait=False)
-            # drain any in-flight async fold: replay never returns with a
-            # maintenance rewrite still running (its tail rides wall time,
-            # same accounting as the inline fold)
-            self._join_fold()
+            prefetch_pool.shutdown(wait=False)
         wall = time.monotonic() - t0
         stats = {
             "batches": n_batches,
@@ -805,7 +799,7 @@ class CdcEngine:
         historical behavior. Sparse LSN spaces (Postgres byte-offset LSNs,
         Mongo BsonTimestamp ``sec*2^32+ord`` — sources/mongo.py) would turn
         that into billions of empty windows, so when the arithmetic split
-        exceeds ``cfg.max_arithmetic_windows`` the boundaries come from
+        exceeds ``_MAX_ARITHMETIC_WINDOWS`` the boundaries come from
         event-count quantiles instead: one count + one approxQuantile pass
         over the column-pruned lsn scan, then every batch carries
         ~batch_events EVENTS regardless of position spacing. Correctness
@@ -815,7 +809,7 @@ class CdcEngine:
         (lo, hi] ranges are never revisited (checkpoint + batch ids)."""
         span = target - last
         n_windows = -(-span // batch_events)
-        if n_windows <= self.cfg.max_arithmetic_windows:
+        if n_windows <= _MAX_ARITHMETIC_WINDOWS:
             return (
                 self._align_bounds(
                     [
@@ -1162,10 +1156,8 @@ class CdcEngine:
         of the batch (from _batch_stats) — never the LSN span, which
         overstates sparse ranges and would trigger whole-table rewrites for
         near-empty batches."""
-        frac = self.cfg.full_merge_min_fraction
         if (
-            frac is None
-            or self.stream.sync_mode != SYNC_APPEND_DEDUP
+            self.stream.sync_mode != SYNC_APPEND_DEDUP
             # patch/append batches resolve against touched buckets before
             # commit (_patch_winners/_append_winners); the bucket-CoW / MoR
             # paths then apply as-is, the single-pass whole-table union-fold
@@ -1177,7 +1169,7 @@ class CdcEngine:
         if snap.spec.get("bucket_fn") != "murmur3":
             return False
         table_rows = sum(f.rows for f in snap.files)
-        return n_events >= frac * max(table_rows, 1)
+        return n_events >= _FULL_MERGE_MIN_FRACTION * max(table_rows, 1)
 
     def _merge_mode(self, table: LakeTable, n_events: int) -> str:
         """How a batch commits: "full" | "cow" | "mor" in append_dedup sync
@@ -1201,33 +1193,6 @@ class CdcEngine:
         base_rows = sum(f.rows for f in snap.files if f.kind != "delta")
         return base_rows > 0 and n_events < frac * base_rows
 
-    def close(self) -> None:
-        """Release engine-held resources: drain any in-flight async fold
-        and shut the maintenance pool down. Replay already drains folds at
-        its end, so this is only needed by long-lived callers that want
-        deterministic thread teardown before process exit."""
-        self._join_fold()
-        if self._fold_pool is not None:
-            self._fold_pool.shutdown(wait=True)
-            self._fold_pool = None
-
-    def _join_fold(self) -> None:
-        """Wait for an in-flight async fold and surface its outcome. A
-        CommitConflict is NON-fatal: the fold's inputs were rewritten under
-        it (stale plan) — the deltas are still live and the next threshold
-        trigger re-plans. Anything else propagates like an inline fold."""
-        fut = self._fold_future
-        if fut is None:
-            return
-        self._fold_future = None
-        from airbyte_spark.lake.table import CommitConflict
-
-        try:
-            v = fut.result()
-            log_metric("mor_fold_async_done", snapshot=v)
-        except CommitConflict as e:
-            log_metric("mor_fold_async_replan", error=str(e))
-
     def _commit_batch(
         self,
         winners: DataFrame,
@@ -1243,10 +1208,6 @@ class CdcEngine:
         replace the whole table with this batch (full-refresh overwrite,
         BigQuerySqlGenerator.java:684-694 tmp-swap analog)."""
         sync = self.stream.sync_mode
-        if mode != "mor":
-            # any non-delta commit rewrites files and cannot rebase over a
-            # concurrent fold (and vice versa): drain maintenance first
-            self._join_fold()
         if sync == SYNC_APPEND_DEDUP:
             if mode == "full":
                 return merge_upsert_full(self.table, winners, summary=summary)
@@ -1261,26 +1222,8 @@ class CdcEngine:
                     # staging: the fold's commit is not staged and folding
                     # staged deltas into base files would implicitly
                     # publish them.
-                    if self.cfg.mor_async_fold:
-                        # off the critical path: one fold in flight max;
-                        # this batch's delta append rebases over its commit
-                        if self._fold_future is not None and self._fold_future.done():
-                            self._join_fold()
-                        if self._fold_future is None:
-                            if self._fold_pool is None:
-                                from concurrent.futures import ThreadPoolExecutor
-
-                                self._fold_pool = ThreadPoolExecutor(
-                                    max_workers=1, thread_name_prefix="mor-fold"
-                                )
-                            self._fold_future = self._fold_pool.submit(table.compact)
-                            log_metric(
-                                "mor_fold_async_submitted",
-                                deltas=table.delta_file_count(),
-                            )
-                    else:
-                        v = table.compact()
-                        log_metric("mor_fold", snapshot=v)
+                    v = table.compact()
+                    log_metric("mor_fold", snapshot=v)
                 n_files = max(
                     1, min(self.cfg.write_partitions or 8, 1 + (n_events or 0) // 250_000)
                 )
@@ -1619,7 +1562,7 @@ class CdcEngine:
                 # whole-table rewrite); only the checkpoint moves
                 log_metric("batch_empty", batch_id=bid, start_lsn=lo, end_lsn=hi)
                 ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
-                ckpt.max_committed_lsn = hi
+                ckpt.max_committed_lsn = max(ckpt.max_committed_lsn, hi)
                 ckpt.table_schema_version = table.snapshot().schema_version
                 save_checkpoint(self.checkpoint_path, ckpt)
                 return 0

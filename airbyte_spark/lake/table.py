@@ -1019,56 +1019,7 @@ class LakeTable:
     )
     REBASE_MAX_RETRIES = 5
 
-    def _append_with_rebase(
-        self, base: "Snapshot", new_files: list, summary: dict, mode: str
-    ) -> int:
-        """Commit ``base.files + new_files``; on :class:`CommitConflict`
-        rebase onto the race winner and retry — Iceberg's fast-append retry
-        semantics (appends add files that overlap nothing, so re-planning is
-        re-attaching the same files to the new current snapshot). Refuses
-        (re-raises the conflict) when any intervening commit is in
-        :data:`REBASE_UNSAFE_OPS` or changed schema/spec — those need the
-        caller to re-plan against the new table state. Intended concurrency:
-        ingest append racing a compactor or another stream's maintenance;
-        per-table batch ingest itself stays single-writer (engine contract).
-        """
-        attempt = base
-        for _ in range(self.REBASE_MAX_RETRIES + 1):
-            snap = Snapshot(
-                version=attempt.version + 1,
-                parent=attempt.version,
-                schema_version=attempt.schema_version,
-                schemas=dict(attempt.schemas),
-                spec=attempt.spec,
-                files=attempt.files + new_files,
-                summary=summary,
-            )
-            try:
-                self._write_snapshot(snap, parent=attempt)
-                return snap.version
-            except CommitConflict:
-                latest = self.snapshot(self.current_version())
-                if (
-                    latest.schema_version != base.schema_version
-                    or latest.spec != base.spec
-                ):
-                    raise
-                for v in range(attempt.version + 1, latest.version + 1):
-                    if (
-                        self.snapshot(v).summary.get("operation")
-                        in self.REBASE_UNSAFE_OPS
-                    ):
-                        raise
-                log_metric(
-                    "commit_rebased", mode=mode, onto=latest.version,
-                    lost_to=latest.summary.get("operation"),
-                )
-                attempt = latest
-        raise CommitConflict(
-            f"append lost {self.REBASE_MAX_RETRIES + 1} commit races in a row"
-        )
-
-    def _rewrite_with_rebase(
+    def _commit_with_rebase(
         self,
         base: "Snapshot",
         replaced_paths: set,
@@ -1076,18 +1027,26 @@ class LakeTable:
         summary: dict,
         mode: str,
     ) -> int:
-        """Commit ``latest.files - replaced + new_files`` — Iceberg's
-        RewriteFiles validation: a rewrite (delta fold, compaction) planned
-        against ``base`` may commit onto a NEWER snapshot as long as (a)
-        every file it replaced is still live there (nobody else rewrote our
-        inputs) and (b) no intervening commit is rebase-unsafe or changed
-        schema/spec. Files added since planning — e.g. delta appends from a
-        replay batch racing an async fold — are preserved untouched, which
-        is semantically exact because scan-time LWW resolution is an
-        associative per-key max: resolving (base ∪ deltas_at_plan) first and
-        late deltas on top equals resolving everything at once. Raises
-        :class:`CommitConflict` when the replaced set was itself rewritten
-        (the caller re-plans on its next maintenance tick)."""
+        """Commit ``base.files - replaced + new_files``; on
+        :class:`CommitConflict` rebase onto the race winner and retry.
+
+        An append is the empty ``replaced_paths`` case — Iceberg's
+        fast-append retry (appended files overlap nothing, so re-planning is
+        re-attaching them to the new current snapshot). A rewrite (delta
+        fold, compaction) follows Iceberg's RewriteFiles validation: it may
+        commit onto a NEWER snapshot as long as every file it replaced is
+        still live there. Files added since planning — e.g. delta appends
+        from a replay racing a compactor in another process — are preserved
+        untouched, which is semantically exact because scan-time LWW
+        resolution is an associative per-key max: resolving (base ∪
+        deltas_at_plan) first and late deltas on top equals resolving
+        everything at once.
+
+        Refuses (re-raises the conflict, the caller re-plans) when any
+        intervening commit is in :data:`REBASE_UNSAFE_OPS` or changed
+        schema/spec, or when the replaced set was itself rewritten.
+        Per-table batch ingest itself stays single-writer (engine
+        contract)."""
         attempt = base
         for _ in range(self.REBASE_MAX_RETRIES + 1):
             files = [
@@ -1122,12 +1081,12 @@ class LakeTable:
                 if not replaced_paths <= live:
                     raise  # our inputs were rewritten: stale plan, re-plan
                 log_metric(
-                    "rewrite_rebased", mode=mode, onto=latest.version,
+                    "commit_rebased", mode=mode, onto=latest.version,
                     lost_to=latest.summary.get("operation"),
                 )
                 attempt = latest
         raise CommitConflict(
-            f"rewrite lost {self.REBASE_MAX_RETRIES + 1} commit races in a row"
+            f"{mode} lost {self.REBASE_MAX_RETRIES + 1} commit races in a row"
         )
 
     def append_delta(
@@ -1162,7 +1121,9 @@ class LakeTable:
         if expected_version is None:
             # no explicit CAS expectation: losing a race to a compactor /
             # another stream's maintenance rebases automatically
-            return self._append_with_rebase(base, new_files, summary, "delta-append")
+            return self._commit_with_rebase(
+                base, set(), new_files, summary, "delta-append"
+            )
         snap = Snapshot(
             version=new_version,
             parent=base.version,
@@ -1194,9 +1155,10 @@ class LakeTable:
         """Write ``df`` as new data files and commit a snapshot.
 
         ``rebase_rewrite=True`` (maintenance rewrites only — folds,
-        compaction) commits through :meth:`_rewrite_with_rebase`: losing a
+        compaction) commits through :meth:`_commit_with_rebase`: losing a
         race to concurrent APPENDS preserves their files instead of
-        conflicting, so maintenance can run off the ingest critical path.
+        conflicting, so a compactor in another process can run beside
+        ingest.
         Ignored when the commit changes schema/spec or pins a version —
         those must re-plan on any race.
 
@@ -1274,7 +1236,7 @@ class LakeTable:
             # pure append with no CAS expectation — rebase-retry on races
             # (CoW merges are NOT retried here: their content depends on the
             # base they were planned against; callers must re-plan)
-            return self._append_with_rebase(base, new_files, summary, "append")
+            return self._commit_with_rebase(base, set(), new_files, summary, "append")
 
         kept = base.files
         if replace_buckets is not None:
@@ -1290,7 +1252,7 @@ class LakeTable:
             # freshness the strict-CAS path gets from expected_version
             kept_paths = {f.path for f in kept}
             replaced_paths = {f.path for f in base.files if f.path not in kept_paths}
-            return self._rewrite_with_rebase(
+            return self._commit_with_rebase(
                 base, replaced_paths, new_files, summary,
                 summary.get("operation", "rewrite"),
             )
@@ -1659,7 +1621,7 @@ class LakeTable:
 
         The ENTIRE rewrite is pinned to one plan version: the scan, the
         replaced-file set, and the commit base all come from the same
-        snapshot, so a delta append landing at ANY point during an async
+        snapshot, so a delta append landing at ANY point during a concurrent
         fold is provably outside the replaced set and preserved by the
         rewrite-rebase (an unpinned plan had a window between the scan's
         snapshot read and the commit's base read where a racer's file

@@ -185,7 +185,7 @@ def merge_upsert_mor(
     which copy-on-write degenerates to once a batch touches most buckets).
     Readers resolve LWW at scan time (LakeTable.scan/_resolve_lww, same
     total order as the CoW paths -> bit-identical state); compaction folds
-    deltas back into bucket-pure base files asynchronously.
+    deltas back into bucket-pure base files later.
 
     This is the Spark shape of the reference's raw-table + incremental
     typing-and-dedup split: cheap durable append first, expensive

@@ -1,12 +1,13 @@
-"""Rewrite-rebase for maintenance commits + async MoR folds.
+"""Rewrite-rebase for maintenance commits + MoR folds during replay.
 
 A fold (compact) planned against snapshot S may lose the commit CAS to a
-concurrent delta append; the rewrite-rebase path (Iceberg RewriteFiles
-validation) re-commits latest.files - replaced + fold output, preserving
-the racer's files — exact because scan-time LWW resolution is an
-associative per-key max. A fold whose INPUTS were rewritten refuses
-(CommitConflict) and re-plans. cfg.mor_async_fold moves the fold onto a
-background thread while replay keeps appending delta batches."""
+concurrent delta append — e.g. a compactor in another process racing
+ingest; the rewrite-rebase path (Iceberg RewriteFiles validation)
+re-commits latest.files - replaced + fold output, preserving the racer's
+files — exact because scan-time LWW resolution is an associative per-key
+max. A fold whose INPUTS were rewritten refuses (CommitConflict) and
+re-plans. Replay folds inline once ``mor_max_delta_files`` deltas pile up;
+the replay tests force several such folds and resume across them."""
 
 from __future__ import annotations
 
@@ -157,9 +158,9 @@ def test_fold_refuses_when_inputs_rewritten(spark, workdir, monkeypatch):
 
 
 def test_async_fold_replay_golden_and_resume(spark, workdir):
-    """Full replay with async folds (threshold forces several): golden
+    """Full replay with inline folds (threshold forces several): golden
     equality and a fresh-engine re-replay is an idempotent no-op."""
-    eng = _engine(spark, workdir, mor_max_delta_files=3, mor_async_fold=True)
+    eng = _engine(spark, workdir, mor_max_delta_files=3)
     eng.create_table()
     eng.bootstrap(seed_df(spark, CFG))
     p = os.path.join(workdir, "cl")
@@ -167,7 +168,7 @@ def test_async_fold_replay_golden_and_resume(spark, workdir):
     eng.replay(p)
     assert_frames_equal(final_as_pandas(eng.read_final()), _golden(spark))
 
-    eng2 = _engine(spark, workdir, mor_max_delta_files=3, mor_async_fold=True)
+    eng2 = _engine(spark, workdir, mor_max_delta_files=3)
     v = eng2.table.current_version()
     eng2.replay(p)  # all batch ids known -> no new commits
     assert eng2.table.current_version() == v
@@ -175,27 +176,15 @@ def test_async_fold_replay_golden_and_resume(spark, workdir):
 
 
 def test_async_fold_interrupted_resume(spark, workdir):
-    """Kill mid-replay (max_batches) with async folds on; a fresh engine
+    """Kill mid-replay (max_batches) between inline folds; a fresh engine
     resumes to exactly golden."""
-    eng = _engine(spark, workdir, mor_max_delta_files=2, mor_async_fold=True)
+    eng = _engine(spark, workdir, mor_max_delta_files=2)
     eng.create_table()
     eng.bootstrap(seed_df(spark, CFG))
     p = os.path.join(workdir, "cl")
     write_changelog(spark, CFG, p)
     eng.replay(p, max_batches=3)
-    eng2 = _engine(spark, workdir, mor_max_delta_files=2, mor_async_fold=True)
+    eng2 = _engine(spark, workdir, mor_max_delta_files=2)
     eng2.replay(p)
     assert_frames_equal(final_as_pandas(eng2.read_final()), _golden(spark))
 
-
-def test_engine_close_drains_maintenance(spark, workdir):
-    """close() is idempotent, drains any fold, and shuts the pool down."""
-    eng = _engine(spark, workdir, mor_max_delta_files=3, mor_async_fold=True)
-    eng.create_table()
-    eng.bootstrap(seed_df(spark, CFG))
-    p = os.path.join(workdir, "cl")
-    write_changelog(spark, CFG, p)
-    eng.replay(p, max_batches=4)
-    eng.close()
-    assert eng._fold_pool is None and eng._fold_future is None
-    eng.close()  # idempotent

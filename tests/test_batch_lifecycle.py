@@ -59,8 +59,9 @@ def test_every_apply_path_reports_the_same_numbers(spark, workdir, capsys):
 
     runs = {
         "full": dict(batch_events=600),
-        "cow": dict(batch_events=300, full_merge_min_fraction=None, mor_max_fraction=None),
-        "mor": dict(batch_events=300, full_merge_min_fraction=None, mor_max_fraction=1.5),
+        # 120-event batches stay under half the 300-row seed: no full merge
+        "cow": dict(batch_events=120, mor_max_fraction=None),
+        "mor": dict(batch_events=120, mor_max_fraction=1.5),
         "stream": dict(),
     }
     records = {}
@@ -101,7 +102,6 @@ def test_mor_tail_batch_job_count(spark, workdir):
     eng = _engine(
         spark,
         os.path.join(workdir, "lake"),
-        prefetch_next_batch=False,
         compact_after_replay_max_files=None,
     )
     cl = os.path.join(workdir, "cl")

@@ -145,8 +145,8 @@ def test_full_merge_files_are_bucket_pure(spark, workdir):
         spark,
         os.path.join(workdir, "lake"),
         StreamConfig(num_buckets=8),
-        # force the single-action full-merge path
-        EngineConfig(batch_events=800, full_merge_min_fraction=0.0),
+        # one 800-event batch on 150 rows takes the single-action full merge
+        EngineConfig(batch_events=800),
     )
     eng.create_table()
     eng.bootstrap(seed_df(spark, cfg))
@@ -231,8 +231,9 @@ def test_append_rebase_on_commit_race(spark, table):
     )
     # loser: files written against the stale base, then rebase-commit
     files, _ = table._write_delta_files(_df(spark, [("b", 2, 2)]), base.version + 1, base)
-    v = table._append_with_rebase(
-        base, files, {"operation": "merge-delta", "batch_id": "race-loser"}, "delta-append"
+    v = table._commit_with_rebase(
+        base, set(), files, {"operation": "merge-delta", "batch_id": "race-loser"},
+        "delta-append",
     )
     assert v == 3  # rebased onto the winner (v2), committed as v3
     rows = {r.doc_id: r.v for r in table.scan().collect()}
@@ -251,8 +252,9 @@ def test_append_rebase_refused_across_purge(spark, table):
     table.purge_keys(["a"])
     files, _ = table._write_delta_files(_df(spark, [("c", 3, 3)]), base.version + 1, base)
     with pytest.raises(CommitConflict):
-        table._append_with_rebase(
-            base, files, {"operation": "merge-delta", "batch_id": "x"}, "delta-append"
+        table._commit_with_rebase(
+            base, set(), files, {"operation": "merge-delta", "batch_id": "x"},
+            "delta-append",
         )
 
 

@@ -86,17 +86,23 @@ def test_null_pk_quarantined_full_merge(spark, workdir):
 
 
 @pytest.mark.parametrize("mor_max_fraction", [None, 2.0], ids=["cow", "mor"])
-def test_null_pk_quarantined_stream_epochs(spark, workdir, mor_max_fraction):
+def test_null_pk_quarantined_stream_epochs(
+    spark, workdir, mor_max_fraction, monkeypatch
+):
     """Structured Streaming epochs quarantine NULL keys exactly like replay
     batches: three one-file epochs over the poisoned changelog, on the
     bucket-CoW path and on the merge-on-read path, land on golden."""
+    from airbyte_spark import engine
     from airbyte_spark.streaming import stream_replay
+
+    # 200-event epochs on 150 rows would take the full merge
+    monkeypatch.setattr(engine, "_FULL_MERGE_MIN_FRACTION", float("inf"))
 
     eng = CdcEngine(
         spark,
         os.path.join(workdir, "e"),
         StreamConfig(num_buckets=4),
-        EngineConfig(full_merge_min_fraction=None, mor_max_fraction=mor_max_fraction),
+        EngineConfig(mor_max_fraction=mor_max_fraction),
     )
     eng.create_table()
     eng.bootstrap(seed_df(spark, CFG))

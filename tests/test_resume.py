@@ -134,3 +134,27 @@ def test_resume_sweep_mor_path(spark, workdir):
         e2 = mk(root)
         e2.replay(clpath)
         pd.testing.assert_frame_equal(_full_table_pdf(e2), expected, check_dtype=False)
+
+
+def test_empty_window_never_rewinds_checkpoint(spark, workdir):
+    """An empty (lo, hi] window below the checkpoint moves nothing: a
+    rewind to ``hi`` would make the next replay re-apply committed events."""
+    from airbyte_spark.changelog import changelog_df
+    from airbyte_spark.checkpoint import load_checkpoint
+    from pyspark.sql import functions as F
+
+    cfg = ChangelogConfig(n_events=200, n_seed_docs=150)
+    root = os.path.join(workdir, "lake")
+    e = _mk_engine(spark, root)
+    e.create_table()
+    e.bootstrap(seed_df(spark, cfg))
+    clpath = os.path.join(workdir, "changelog")
+    write_changelog(spark, cfg, clpath)
+    cl = changelog_df(spark, cfg)
+
+    e.apply_range(cl, 0, 100)
+    assert load_checkpoint(e.checkpoint_path).max_committed_lsn == 100
+    assert e.apply_range(cl.filter(F.col("lsn") > 150), 0, 50) == 0
+    assert load_checkpoint(e.checkpoint_path).max_committed_lsn == 100
+    stats = e.replay(clpath)
+    assert stats["events"] == cl.filter(F.col("lsn") > 100).count()
