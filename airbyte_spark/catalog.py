@@ -40,11 +40,11 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from airbyte_spark.config import EngineConfig, StreamConfig
+from airbyte_spark.durable import write_json
 from airbyte_spark.engine import CdcEngine
 from airbyte_spark.lineage import log_metric
 
@@ -86,11 +86,7 @@ class CatalogSnapshotStore:
             "op": op,
             "streams": pins,
         }
-        path = os.path.join(self.dir, f"c{version}.json")
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh, indent=1)
-        os.replace(tmp, path)
+        write_json(os.path.join(self.dir, f"c{version}.json"), doc)
         log_metric("catalog_snapshot_committed", version=version, op=op, streams=len(pins))
         return version
 
@@ -442,10 +438,7 @@ class CatalogEngine:
                 "stream_states": stream_states,
             },
         }
-        tmp = self.state_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh, indent=1)
-        os.replace(tmp, self.state_path)
+        write_json(self.state_path, doc)
 
     def state(self) -> dict | None:
         if not os.path.exists(self.state_path):

@@ -16,8 +16,9 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 from dataclasses import dataclass, field
+
+from airbyte_spark.durable import write_json
 
 
 @dataclass
@@ -89,9 +90,4 @@ def load_checkpoint(path: str) -> Checkpoint | None:
 
 def save_checkpoint(path: str, ckpt: Checkpoint) -> None:
     """Atomic replace — readers never observe a torn checkpoint."""
-    tmp = path + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(ckpt.to_json(), fh, indent=1)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, path)
+    write_json(path, ckpt.to_json())

@@ -40,6 +40,7 @@ from airbyte_spark.config import (
     EngineConfig,
     StreamConfig,
 )
+from airbyte_spark.durable import write_json
 from airbyte_spark.functions.validate import apply_validation
 from airbyte_spark.lake.table import LakeTable
 from airbyte_spark.lineage import LineageLog, log_metric
@@ -1321,8 +1322,6 @@ class CdcEngine:
         bootstrap and batch commits are idempotent in the staged table via
         the same batch-id mechanism as any sync. Old generations stay on
         disk for time-travel until :meth:`drop_old_generations`."""
-        import json as _json
-
         new_gen = self.generation() + 1
         staged = CdcEngine(
             self.spark, self.root, self.stream, self.cfg,
@@ -1342,13 +1341,7 @@ class CdcEngine:
         stats = staged.replay(source, batch_events)
         # ATOMIC pointer swap: this is the only moment readers change
         # generations, and only after the staged table is complete
-        ptr = os.path.join(self.root, "generation.json")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump({"generation": new_gen}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, ptr)
+        write_json(os.path.join(self.root, "generation.json"), {"generation": new_gen})
         self._table = None  # next read resolves the new generation
         log_metric("generation_swapped", generation=new_gen)
         stats["generation"] = new_gen
@@ -1370,8 +1363,6 @@ class CdcEngine:
         stays in v1 ids (it is the audit trail of what was delivered).
         A crash mid-rebuild leaves the pointer on k — readers unaffected,
         and a re-run rebuilds the staged generation from scratch."""
-        import json as _json
-
         import numpy as np
 
         from airbyte_spark.functions.remap import make_token_remapper, mapping_table
@@ -1446,13 +1437,7 @@ class CdcEngine:
         if ckpt is not None:
             ckpt.table_schema_version = staged.table.snapshot(version).schema_version
             save_checkpoint(staged.checkpoint_path, ckpt)
-        ptr = os.path.join(self.root, "generation.json")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump({"generation": new_gen}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, ptr)
+        write_json(os.path.join(self.root, "generation.json"), {"generation": new_gen})
         self._table = None
         log_metric(
             "vocab_migrated",

@@ -14,6 +14,14 @@ the optimistic CAS Iceberg's Hadoop catalog uses. Losers of a race get
 are written *before* the commit; a failed commit leaves only unreferenced
 orphans (GC'able), never a torn table.
 
+Each of the two steps has one method. Every data-file write goes through
+``_write_files`` (bucket-pure base files or bucket-less delta files,
+pk-sorted within each file, footer cursor ranges harvested into the
+manifest), and every mutation ends in ``_commit``, which builds snapshot
+N+1 over the new file list and CAS-writes it. Appends and maintenance
+rewrites reach ``_commit`` through ``_commit_with_rebase``, which retries
+onto racing appends.
+
 Reference parity:
 - temp-table-then-promote append (IcebergConsumer.java:160-195) -> here every
   commit is the promote step;
@@ -62,6 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructType
 
+from airbyte_spark.durable import write_json
 from airbyte_spark.lineage import log_metric
 
 SNAPSHOT_DIR = "snapshots"
@@ -593,22 +602,15 @@ class LakeTable:
             _files_to_parquet(snap.files, sidecar)
             doc.pop("files")
             doc["files_parquet"] = name
-        path = _snapshot_path(self.root, snap.version)
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
         try:
-            os.link(tmp, path)  # atomic exclusive-create == CAS
+            # atomic exclusive-create == CAS
+            write_json(_snapshot_path(self.root, snap.version), doc, exclusive=True)
         except FileExistsError as e:
             if sidecar is not None:
                 os.unlink(sidecar)  # tidy the orphaned manifest sidecar
             raise CommitConflict(
                 f"snapshot v{snap.version} already committed by another writer"
             ) from e
-        finally:
-            os.unlink(tmp)
         self._snap_cache[snap.version] = snap
 
     # ----------------------------------------------------------------- read
@@ -900,32 +902,75 @@ class LakeTable:
 
     # ---------------------------------------------------------------- write
 
-    def _collect_file_stats(
-        self, staging_dir: str, new_version: int, schema_version: int, cursor_col: str | None
-    ) -> list[DataFile]:
-        """Move staged parquet out of Spark's partitioned output into the
-        data dir with snapshot-scoped names; harvest footer stats. Footer
-        reads go through a thread pool — this is per-commit driver work and
-        must not serialize on file count."""
-        # commit-unique token: two racing writers may both target the same
-        # new_version; version-only names would silently overwrite each
-        # other's data files before the CAS even runs. Identity lives in the
-        # manifest paths, so the name is free to carry the token.
+    def _write_files(
+        self,
+        df: DataFrame,
+        spec: dict,
+        new_version: int,
+        schema_version: int,
+        num_files: int | None = None,
+        delta: bool = False,
+        pre_aligned: bool = False,
+    ) -> tuple[list[DataFile], dict]:
+        """Write ``df`` as data files named for ``new_version`` and harvest
+        their footer stats — the one file writer behind every commit.
+
+        Base files (``delta=False``) are bucket-pure: the bucket column is
+        derived from ``spec``'s primary key (so layout never drifts from the
+        spec), rows hash-repartition on it into ``num_files`` tasks (default
+        parallelism) unless ``pre_aligned`` says ``df`` is already
+        ``hashpartitioning(pk, num_buckets)`` — bucket_expr IS that function,
+        so each task then holds one bucket and the write needs no shuffle.
+        Delta files (``delta=True``) span buckets: ``df`` is spread over
+        ``num_files`` files (default: parallelism capped at 8).
+
+        Sort-order clustering (Iceberg table sort order analog): each task
+        sorts by the primary key (after the bucket, which the dynamic-
+        partition write sorts by anyway), so every file has pk-clustered row
+        groups whose parquet min/max stats skip groups for lookup()'s pushed
+        IN predicates. No extra shuffle: sortWithinPartitions keeps the
+        partitioning, including the pre_aligned guarantee.
+
+        Staged files move under a commit-unique token: two racing writers
+        may target the same ``new_version``, and version-only names would
+        silently overwrite each other's files before the CAS even runs.
+        Identity lives in the manifest paths, so the name is free to carry
+        the token. Returns (files, {write_ms, harvest_ms})."""
+        pk = spec["bucket_by"]
+        cursor_col = spec.get("cursor_col")
+        staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
+        if delta:
+            n = num_files or min(self.spark.sparkContext.defaultParallelism, 8)
+            writer = df.repartition(n).sortWithinPartitions(pk).write
+        else:
+            out = df.withColumn(BUCKET_COL, self._bucket_expr_for(spec))
+            if not pre_aligned:
+                n = num_files or self.spark.sparkContext.defaultParallelism
+                out = out.repartition(n, F.col(BUCKET_COL))
+            # partitionBy strips the bucket column from file contents
+            writer = out.sortWithinPartitions(BUCKET_COL, pk).write.partitionBy(BUCKET_COL)
+        _t0 = time.monotonic()
+        writer.mode("overwrite").option("compression", self.write_codec).parquet(staging)
+        _t1 = time.monotonic()
+
+        if delta:
+            dirs = [(staging, -1)]
+        else:
+            dirs = [
+                (os.path.join(staging, e), int(e.split("=", 1)[1]))
+                for e in sorted(os.listdir(staging))
+                if e.startswith(f"{BUCKET_COL}=")
+            ]
         tok = uuid.uuid4().hex[:8]
         moves: list[tuple[str, int]] = []  # (dst-rel, bucket)
-        for entry in sorted(os.listdir(staging_dir)):
-            if not entry.startswith(f"{BUCKET_COL}="):
-                continue
-            bucket = int(entry.split("=", 1)[1])
-            bdir = os.path.join(staging_dir, entry)
-            seq = 0
-            for part in sorted(os.listdir(bdir)):
-                if not part.endswith(".parquet"):
-                    continue
-                rel = os.path.join(DATA_DIR, f"v{new_version}-{tok}-b{bucket:05d}-{seq}.parquet")
-                os.replace(os.path.join(bdir, part), os.path.join(self.root, rel))
+        for d, bucket in dirs:
+            parts = sorted(p for p in os.listdir(d) if p.endswith(".parquet"))
+            for seq, part in enumerate(parts):
+                name = f"delta-{seq}" if delta else f"b{bucket:05d}-{seq}"
+                rel = os.path.join(DATA_DIR, f"v{new_version}-{tok}-{name}.parquet")
+                os.replace(os.path.join(d, part), os.path.join(self.root, rel))
                 moves.append((rel, bucket))
-                seq += 1
+        _rmtree(staging)
 
         def harvest(move: tuple[str, int]) -> DataFile:
             rel, bucket = move
@@ -947,68 +992,57 @@ class LakeTable:
                 schema_version=schema_version,
                 min_cursor=min_c,
                 max_cursor=max_c,
+                kind="delta" if delta else "base",
             )
 
+        # footer reads are per-commit driver work: thread them so the commit
+        # does not serialize on file count
         if len(moves) <= 4:
-            return [harvest(m) for m in moves]
-        from concurrent.futures import ThreadPoolExecutor
+            files = [harvest(m) for m in moves]
+        else:
+            from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=16) as ex:
-            return list(ex.map(harvest, moves))
+            with ThreadPoolExecutor(max_workers=16) as ex:
+                files = list(ex.map(harvest, moves))
+        return files, {
+            "write_ms": int((_t1 - _t0) * 1000),
+            "harvest_ms": int((time.monotonic() - _t1) * 1000),
+        }
 
-    def _write_delta_files(
+    def _commit(
         self,
-        df: DataFrame,
-        new_version: int,
-        base: "Snapshot",
-        num_files: int | None = None,
-    ) -> tuple[list[DataFile], float]:
-        """Write ``df`` as bucket-less DELTA parquet files named for
-        ``new_version`` and harvest footer stats. Returns (files, wall
-        timestamp after the write) — shared by append_delta and purge_keys."""
-        cursor_col = base.spec.get("cursor_col")
-        staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-        n = num_files or min(self.spark.sparkContext.defaultParallelism, 8)
-        # same pk clustering as base files (tiny local sort, lookup pushdown)
-        df = df.repartition(n).sortWithinPartitions(base.spec["bucket_by"])
-        df.write.mode("overwrite").option("compression", self.write_codec).parquet(staging)
-        _t1 = time.monotonic()
-
-        tok = uuid.uuid4().hex[:8]  # commit-unique: see _collect_file_stats
-        moves: list[str] = []
-        seq = 0
-        for part in sorted(os.listdir(staging)):
-            if not part.endswith(".parquet"):
-                continue
-            rel = os.path.join(DATA_DIR, f"v{new_version}-{tok}-delta-{seq}.parquet")
-            os.replace(os.path.join(staging, part), os.path.join(self.root, rel))
-            moves.append(rel)
-            seq += 1
-        _rmtree(staging)
-
-        def harvest(rel: str) -> DataFile:
-            meta = pq.ParquetFile(os.path.join(self.root, rel)).metadata
-            min_c = max_c = None
-            if cursor_col is not None:
-                idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
-                if cursor_col in idx:
-                    ci = idx[cursor_col]
-                    for rg in range(meta.num_row_groups):
-                        st = meta.row_group(rg).column(ci).statistics
-                        if st is not None and st.has_min_max:
-                            min_c = st.min if min_c is None else min(min_c, st.min)
-                            max_c = st.max if max_c is None else max(max_c, st.max)
-            return DataFile(
-                path=rel,
-                bucket=-1,
-                rows=meta.num_rows,
-                schema_version=base.schema_version,
-                min_cursor=min_c,
-                max_cursor=max_c,
-                kind="delta",
-            )
-
-        return [harvest(m) for m in moves], _t1
+        head: "Snapshot",
+        files: list[DataFile],
+        summary: dict,
+        src: "Snapshot | None" = None,
+        spec: dict | None = None,
+        schema: StructType | None = None,
+    ) -> int:
+        """CAS-commit snapshot ``head.version + 1`` holding ``files`` — the
+        one commit step behind every mutation. Schema history and spec come
+        from ``src`` (default ``head``; a rollback or abandon passes the
+        snapshot whose state it restores); ``spec`` replaces the spec (a
+        rebucket), and a ``schema`` that differs from ``src``'s becomes a
+        new schema version (additive / widening evolution, validated by the
+        caller). Raises :class:`CommitConflict` when ``head`` is no longer
+        current."""
+        src = src or head
+        schemas = dict(src.schemas)
+        schema_version = src.schema_version
+        if schema is not None and schema.jsonValue() != src.schema.jsonValue():
+            schema_version += 1
+            schemas[str(schema_version)] = schema.jsonValue()
+        snap = Snapshot(
+            version=head.version + 1,
+            parent=head.version,
+            schema_version=schema_version,
+            schemas=schemas,
+            spec=src.spec if spec is None else spec,
+            files=files,
+            summary=summary,
+        )
+        self._write_snapshot(snap, parent=head)
+        return snap.version
 
     # Commit ops that make an optimistic append-rebase UNSAFE: a purge
     # deleted keys our files might resurrect; rebucket changed the layout
@@ -1052,18 +1086,8 @@ class LakeTable:
             files = [
                 f for f in attempt.files if f.path not in replaced_paths
             ] + new_files
-            snap = Snapshot(
-                version=attempt.version + 1,
-                parent=attempt.version,
-                schema_version=attempt.schema_version,
-                schemas=dict(attempt.schemas),
-                spec=attempt.spec,
-                files=files,
-                summary=summary,
-            )
             try:
-                self._write_snapshot(snap, parent=attempt)
-                return snap.version
+                return self._commit(attempt, files, summary)
             except CommitConflict:
                 latest = self.snapshot(self.current_version())
                 if (
@@ -1090,51 +1114,33 @@ class LakeTable:
         )
 
     def append_delta(
-        self,
-        df: DataFrame,
-        summary: dict,
-        num_files: int | None = None,
-        expected_version: int | None = None,
+        self, df: DataFrame, summary: dict, num_files: int | None = None
     ) -> int:
         """Merge-on-read commit: append ``df`` (already one row per key for
         its batch) as DELTA files without reading or rewriting ANY existing
         file — per-commit write bytes are proportional to the batch, never
         the table. Readers resolve deltas against base in ``scan()``;
-        ``compact()`` folds them back into bucket-pure base files.
+        ``compact()`` folds them back into bucket-pure base files. Losing a
+        race to a compactor / another stream's maintenance rebases
+        automatically.
 
         ``num_files`` caps the file count (deltas are small; fewer files =
         less read amplification until the next fold)."""
-        base = self.snapshot(expected_version)
-        new_version = base.version + 1
-
-        _t0 = time.monotonic()
-        new_files, _t1 = self._write_delta_files(df, new_version, base, num_files)
+        base = self.snapshot()
+        new_files, ms = self._write_files(
+            df, base.spec, base.version + 1, base.schema_version, num_files, delta=True
+        )
         log_metric(
             "commit_write",
-            version=new_version,
+            version=base.version + 1,
             files=len(new_files),
             mode="delta-append",
             rows=sum(f.rows for f in new_files),
-            write_ms=int((_t1 - _t0) * 1000),
-            harvest_ms=int((time.monotonic() - _t1) * 1000),
+            **ms,
         )
-        if expected_version is None:
-            # no explicit CAS expectation: losing a race to a compactor /
-            # another stream's maintenance rebases automatically
-            return self._commit_with_rebase(
-                base, set(), new_files, summary, "delta-append"
-            )
-        snap = Snapshot(
-            version=new_version,
-            parent=base.version,
-            schema_version=base.schema_version,
-            schemas=dict(base.schemas),
-            spec=base.spec,
-            files=base.files + new_files,
-            summary=summary,
+        return self._commit_with_rebase(
+            base, set(), new_files, summary, "delta-append"
         )
-        self._write_snapshot(snap, parent=base)
-        return new_version
 
     def delta_file_count(self, version: int | None = None) -> int:
         return sum(1 for f in self.snapshot(version).files if f.kind == "delta")
@@ -1144,152 +1150,73 @@ class LakeTable:
         df: DataFrame,
         replace_buckets: Iterable[int] | None,
         summary: dict,
-        new_schema: StructType | None = None,
-        expected_version: int | None = None,
+        plan_version: int | None = None,
         write_partitions: int | None = None,
         pre_aligned: bool = False,
         drop_deltas: bool = False,
         new_spec: dict | None = None,
-        rebase_rewrite: bool = False,
     ) -> int:
-        """Write ``df`` as new data files and commit a snapshot.
+        """Write ``df`` as new base data files and commit a snapshot.
 
-        ``rebase_rewrite=True`` (maintenance rewrites only — folds,
-        compaction) commits through :meth:`_commit_with_rebase`: losing a
-        race to concurrent APPENDS preserves their files instead of
-        conflicting, so a compactor in another process can run beside
-        ingest.
-        Ignored when the commit changes schema/spec or pins a version —
-        those must re-plan on any race.
-
-        - ``replace_buckets=None`` -> pure append (keep all existing files).
-        - ``replace_buckets=[...]`` -> CoW: drop existing files of those
-          buckets, add the new ones (the MERGE commit).
-        - ``replace_buckets=ALL`` (pass the full range) -> overwrite.
-        - ``new_schema`` -> evolve the table schema in the same commit
-          (additive / widening; validated by the caller/engine).
-        - ``pre_aligned=True`` -> caller guarantees ``df`` is physically
-          partitioned as ``hashpartitioning(pk, num_buckets)`` (e.g. it is
-          the output of ``repartition(B, pk)`` + groupBy(pk) agg). Because
-          bucket_expr == the hashpartitioning function, each task then
-          holds exactly one bucket and the write needs NO extra shuffle
-          (the dynamic-partition sort degenerates to a single key).
+        - ``replace_buckets``: ``None`` is a pure append (keep all existing
+          files; a lost race rebases onto the winner). A bucket list is a
+          CoW commit: drop those buckets' existing files and add the new
+          ones (the MERGE commit); the full range is an overwrite. A CoW
+          commit is not retried — its content depends on the snapshot it
+          was planned against, so callers re-plan on ``CommitConflict``.
+        - ``summary``: the snapshot summary (``operation``, ``batch_id``,
+          LSN range, ``staged`` for write-audit-publish).
+        - ``plan_version``: maintenance rewrites only (folds, compaction).
+          Replace only this snapshot's files — the one the caller scanned —
+          and rebase onto appends that race the commit, so a compactor in
+          another process can run beside ingest.
+        - ``write_partitions``: write tasks for the bucket shuffle (default
+          parallelism); ignored when ``pre_aligned``.
+        - ``pre_aligned=True``: the caller guarantees ``df`` is physically
+          partitioned as ``hashpartitioning(pk, num_buckets)`` (e.g. the
+          output of ``repartition(B, pk)`` + groupBy(pk) agg), so the write
+          needs no shuffle (see :meth:`_write_files`).
+        - ``drop_deltas=True``: also drop every delta file (``df`` holds
+          their LWW-resolved rows — a fold).
+        - ``new_spec``: a spec change (rebucket); it must ride a FULL
+          rewrite, so every file in the new snapshot is laid out by the new
+          spec, atomically.
 
         ``df`` must NOT contain the bucket column; it is derived here from
         the primary key so layout can never drift from the spec.
         """
-        base = self.snapshot(expected_version)
-        new_version = (expected_version or base.version) + 1
-        # a spec change (rebucket) must ride a FULL rewrite: every file in
-        # the new snapshot is laid out by the new spec, atomically
+        base = self.snapshot(plan_version)
         spec = new_spec if new_spec is not None else base.spec
-        cursor_col = spec.get("cursor_col")
-
-        schemas = dict(base.schemas)
-        schema_version = base.schema_version
-        if new_schema is not None and new_schema.jsonValue() != base.schema.jsonValue():
-            schema_version = base.schema_version + 1
-            schemas[str(schema_version)] = new_schema.jsonValue()
-
-        staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-        with_bucket = df.withColumn(BUCKET_COL, self._bucket_expr_for(spec))
-        if not pre_aligned:
-            # Hash-repartition on the bucket column: each bucket lands in
-            # exactly one task -> one file per bucket per commit. partitionBy
-            # then strips the bucket column from file contents.
-            n_write = write_partitions or self.spark.sparkContext.defaultParallelism
-            with_bucket = with_bucket.repartition(n_write, F.col(BUCKET_COL))
-        # Sort-order clustering (Iceberg table sort order analog): the
-        # dynamic-partition write sorts each task by BUCKET_COL anyway;
-        # widening that same local sort to the primary key costs one key
-        # comparison and gives every data file pk-clustered row groups —
-        # parquet min/max stats then skip row groups for lookup()'s pushed
-        # IN predicates. No extra shuffle (sortWithinPartitions preserves
-        # partitioning, including the pre_aligned guarantee).
-        with_bucket = with_bucket.sortWithinPartitions(BUCKET_COL, spec["bucket_by"])
-        _t0 = time.monotonic()
-        (
-            with_bucket
-            .write.mode("overwrite")
-            .option("compression", self.write_codec)
-            .partitionBy(BUCKET_COL)
-            .parquet(staging)
+        new_files, ms = self._write_files(
+            df, spec, base.version + 1, base.schema_version, write_partitions,
+            pre_aligned=pre_aligned,
         )
-        _t1 = time.monotonic()
-        new_files = self._collect_file_stats(staging, new_version, schema_version, cursor_col)
-        _rmtree(staging)
-        log_metric(
-            "commit_write",
-            version=new_version,
-            files=len(new_files),
-            write_ms=int((_t1 - _t0) * 1000),
-            harvest_ms=int((time.monotonic() - _t1) * 1000),
-        )
-
-        if (
-            replace_buckets is None
-            and new_schema is None
-            and new_spec is None
-            and not drop_deltas
-            and expected_version is None
-        ):
-            # pure append with no CAS expectation — rebase-retry on races
-            # (CoW merges are NOT retried here: their content depends on the
-            # base they were planned against; callers must re-plan)
-            return self._commit_with_rebase(base, set(), new_files, summary, "append")
+        log_metric("commit_write", version=base.version + 1, files=len(new_files), **ms)
 
         kept = base.files
         if replace_buckets is not None:
             dropped = set(replace_buckets)
-            kept = [f for f in base.files if f.bucket not in dropped]
+            kept = [f for f in kept if f.bucket not in dropped]
         if drop_deltas:
             kept = [f for f in kept if f.kind != "delta"]
-
-        if rebase_rewrite and new_schema is None and new_spec is None:
-            # expected_version here is the PLAN version: base (and hence the
-            # replaced set) is the snapshot the caller scanned, so racers'
-            # files are never replaced; the rebase loop itself supplies the
-            # freshness the strict-CAS path gets from expected_version
+        if new_spec is None and (
+            plan_version is not None or (replace_buckets is None and not drop_deltas)
+        ):
+            # a pure append, or a rewrite of the plan snapshot's files:
+            # racers' files are never in the replaced set, so losing the
+            # race rebases instead of conflicting
             kept_paths = {f.path for f in kept}
-            replaced_paths = {f.path for f in base.files if f.path not in kept_paths}
-            return self._commit_with_rebase(
-                base, replaced_paths, new_files, summary,
-                summary.get("operation", "rewrite"),
-            )
-
-        snap = Snapshot(
-            version=new_version,
-            parent=base.version,
-            schema_version=schema_version,
-            schemas=schemas,
-            spec=spec,
-            files=kept + new_files,
-            summary=summary,
-        )
-        self._write_snapshot(snap, parent=base)
-        return new_version
+            replaced = {f.path for f in base.files if f.path not in kept_paths}
+            mode = "append" if plan_version is None else summary.get("operation", "rewrite")
+            return self._commit_with_rebase(base, replaced, new_files, summary, mode)
+        return self._commit(base, kept + new_files, summary, spec=new_spec)
 
     def commit_metadata_only(
         self, summary: dict, new_schema: StructType | None = None
     ) -> int:
         """Schema-evolution or marker commit with no data files touched."""
         base = self.snapshot()
-        schemas = dict(base.schemas)
-        schema_version = base.schema_version
-        if new_schema is not None and new_schema.jsonValue() != base.schema.jsonValue():
-            schema_version += 1
-            schemas[str(schema_version)] = new_schema.jsonValue()
-        snap = Snapshot(
-            version=base.version + 1,
-            parent=base.version,
-            schema_version=schema_version,
-            schemas=schemas,
-            spec=base.spec,
-            files=base.files,
-            summary=summary,
-        )
-        self._write_snapshot(snap, parent=base)
-        return snap.version
+        return self._commit(base, base.files, summary, schema=new_schema)
 
     # ----------------------------------------------------------- point reads
 
@@ -1439,18 +1366,12 @@ class LakeTable:
         if not staged:
             return self.published_version()
         base = self.snapshot()  # staged head — its files are the new truth
-        out = Snapshot(
-            version=base.version + 1,
-            parent=base.version,
-            schema_version=base.schema_version,
-            schemas=dict(base.schemas),
-            spec=base.spec,
-            files=base.files,
-            summary=dict(summary or {}, operation="publish", published_versions=staged),
+        v = self._commit(
+            base, base.files,
+            dict(summary or {}, operation="publish", published_versions=staged),
         )
-        self._write_snapshot(out, parent=base)
-        log_metric("wap_publish", version=out.version, adopted=len(staged))
-        return out.version
+        log_metric("wap_publish", version=v, adopted=len(staged))
+        return v
 
     def abandon_staged(self) -> int:
         """Write-audit-publish, the reject step: revert the table head to
@@ -1474,22 +1395,17 @@ class LakeTable:
             for v in staged
             if (b := self.snapshot(v).summary.get("batch_id")) is not None
         ]
-        out = Snapshot(
-            version=head.version + 1,
-            parent=head.version,
-            schema_version=pub.schema_version,
-            schemas=dict(pub.schemas),
-            spec=pub.spec,
-            files=pub.files,
-            summary={
+        v = self._commit(
+            head, pub.files,
+            {
                 "operation": "abandon-staged",
                 "abandoned_versions": staged,
                 "abandoned_batch_ids": abandoned_batches,
             },
+            src=pub,
         )
-        self._write_snapshot(out, parent=head)
-        log_metric("wap_abandon", version=out.version, abandoned=len(staged))
-        return out.version
+        log_metric("wap_abandon", version=v, abandoned=len(staged))
+        return v
 
     # ----------------------------------------------------- refs: tags/rollback
 
@@ -1513,18 +1429,11 @@ class LakeTable:
         if v not in self.existing_versions():
             raise FileNotFoundError(f"snapshot v{v} not retained in {self.root}")
         path = os.path.join(self._refs_dir(), f"{name}.json")
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({"name": name, "version": v,
-                       "created_at_ms": int(time.time() * 1000)}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
+        doc = {"name": name, "version": v, "created_at_ms": int(time.time() * 1000)}
         try:
-            os.link(tmp, path)  # same CAS idiom as snapshot commits
+            write_json(path, doc, exclusive=True)  # same CAS as snapshot commits
         except FileExistsError as e:
             raise CommitConflict(f"tag {name!r} already exists") from e
-        finally:
-            os.unlink(tmp)
         log_metric("tag_created", name=name, version=v)
         return v
 
@@ -1576,23 +1485,17 @@ class LakeTable:
             if version < v <= cur
             if (b := self.snapshot(v).summary.get("batch_id")) is not None
         ]
-        out = Snapshot(
-            version=head.version + 1,
-            parent=head.version,
-            schema_version=target.schema_version,
-            schemas=dict(target.schemas),
-            spec=target.spec,
-            files=target.files,
-            summary={
+        v = self._commit(
+            head, target.files,
+            {
                 "operation": "rollback",
                 "rollback_to": version,
                 "rolled_back_batch_ids": freed,
             },
+            src=target,
         )
-        self._write_snapshot(out, parent=head)
-        log_metric("rollback", version=out.version, target=version,
-                   freed_batches=len(freed))
-        return out.version
+        log_metric("rollback", version=v, target=version, freed_batches=len(freed))
+        return v
 
     # ----------------------------------------------------------- maintenance
 
@@ -1645,9 +1548,8 @@ class LakeTable:
                 replace_buckets=range(snap.spec["num_buckets"]),
                 summary={"operation": "compact-fold"},
                 drop_deltas=True,
-                expected_version=plan_version,
                 # maintenance racing ingest appends preserves their files
-                rebase_rewrite=True,
+                plan_version=plan_version,
             )
 
         per_bucket: dict[int, int] = {}
@@ -1661,8 +1563,7 @@ class LakeTable:
             df,
             replace_buckets=frag,
             summary={"operation": "compact", "buckets": len(frag)},
-            expected_version=plan_version,
-            rebase_rewrite=True,
+            plan_version=plan_version,
         )
 
     def rebucket(self, new_num_buckets: int) -> int | None:
@@ -1747,35 +1648,18 @@ class LakeTable:
             if not base_files and not delta_files:
                 return None
 
-            new_version = snap.version + 1
-            cursor_col = snap.spec.get("cursor_col")
+            def rewrite(files: list[DataFile], n: int, delta: bool) -> list[DataFile]:
+                rows = self._read_files(snap, files).join(F.broadcast(kdf), pk, "left_anti")
+                return self._write_files(
+                    rows, snap.spec, snap.version + 1, snap.schema_version, n, delta=delta
+                )[0]
+
             new_files: list[DataFile] = []
             _t0 = time.monotonic()
             if base_files:
-                rows = self._read_files(snap, base_files).join(
-                    F.broadcast(kdf), pk, "left_anti"
-                )
-                staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-                (
-                    rows.withColumn(BUCKET_COL, self.bucket_expr())
-                    .repartition(len(buckets), F.col(BUCKET_COL))
-                    .write.mode("overwrite")
-                    .option("compression", self.write_codec)
-                    .partitionBy(BUCKET_COL)
-                    .parquet(staging)
-                )
-                new_files += self._collect_file_stats(
-                    staging, new_version, snap.schema_version, cursor_col
-                )
-                _rmtree(staging)
+                new_files += rewrite(base_files, len(buckets), delta=False)
             if delta_files:
-                drows = self._read_files(snap, delta_files).join(
-                    F.broadcast(kdf), pk, "left_anti"
-                )
-                dfiles, _ = self._write_delta_files(
-                    drows, new_version, snap, num_files=min(len(delta_files), 8)
-                )
-                new_files += dfiles
+                new_files += rewrite(delta_files, min(len(delta_files), 8), delta=True)
         finally:
             kdf.unpersist()
 
@@ -1787,22 +1671,14 @@ class LakeTable:
         ]
         log_metric(
             "purge_keys",
-            version=new_version,
+            version=snap.version + 1,
             buckets=len(buckets),
             files_rewritten=len(base_files) + len(delta_files),
             write_ms=int((time.monotonic() - _t0) * 1000),
         )
-        out = Snapshot(
-            version=new_version,
-            parent=snap.version,
-            schema_version=snap.schema_version,
-            schemas=dict(snap.schemas),
-            spec=snap.spec,
-            files=kept + new_files,
-            summary={"operation": "purge", "buckets": buckets},
+        return self._commit(
+            snap, kept + new_files, {"operation": "purge", "buckets": buckets}
         )
-        self._write_snapshot(out, parent=snap)
-        return new_version
 
     def expire_snapshots(self, keep_last: int = 10) -> dict:
         """Expire snapshots older than the last ``keep_last``, deleting
@@ -1863,13 +1739,7 @@ class LakeTable:
                     _files_to_parquet(snap.files, sidecar)
                     new_doc.pop("files")
                     new_doc["files_parquet"] = name
-                path = _snapshot_path(self.root, v)
-                tmp = path + f".tmp-{uuid.uuid4().hex}"
-                with open(tmp, "w") as fh:
-                    json.dump(new_doc, fh)
-                    fh.flush()
-                    os.fsync(fh.fileno())
-                os.replace(tmp, path)
+                write_json(_snapshot_path(self.root, v), new_doc)
                 snap.ref_depth = 0
 
         # Phase 2: delete data files referenced ONLY by expired snapshots.

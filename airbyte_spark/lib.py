@@ -37,6 +37,7 @@ from typing import Any, Iterator, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airbyte_spark.durable import write_json
 from airbyte_spark.lake.table import LakeTable
 from airbyte_spark.sources.declarative import ManifestSource
 
@@ -138,10 +139,7 @@ class LakeCache:
             return {}
 
     def set_state(self, key: str, doc: dict[str, Any]) -> None:
-        tmp = self._state_path(key) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, self._state_path(key))
+        write_json(self._state_path(key), doc)
 
     # ------------------------------------------------------------ write
 

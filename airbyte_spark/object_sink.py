@@ -41,6 +41,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from airbyte_spark.durable import write_json
+
 _FORMATS = {"jsonl": "json", "csv": "csv", "parquet": "parquet"}
 _EXT = {"jsonl": ".jsonl", "csv": ".csv", "parquet": ".parquet"}
 
@@ -160,10 +162,7 @@ class ObjectSink:
         }
         mdir = self._manifest_dir(stream)
         os.makedirs(mdir, exist_ok=True)
-        tmp = os.path.join(mdir, f".{prefix}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(mdir, f"{prefix}.json"))  # atomic publish
+        write_json(os.path.join(mdir, f"{prefix}.json"), manifest)  # atomic publish
         return manifest
 
     # -------------------------------------------------------------- read

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from airbyte_spark.durable import write_json
 from airbyte_spark.lake.table import LakeTable
 from airbyte_spark.lineage import log_metric
 from airbyte_spark.operators.dedup import lww_dedup
@@ -92,10 +93,7 @@ class ApiIngestJob:
             return json.load(fh)
 
     def _save_state(self, state: dict) -> None:
-        tmp = self.state_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.replace(tmp, self.state_path)
+        write_json(self.state_path, state)
 
     # ------------------------------------------------------------ sync
 

@@ -230,7 +230,9 @@ def test_append_rebase_on_commit_race(spark, table):
         summary={"operation": "append"},
     )
     # loser: files written against the stale base, then rebase-commit
-    files, _ = table._write_delta_files(_df(spark, [("b", 2, 2)]), base.version + 1, base)
+    files, _ = table._write_files(
+        _df(spark, [("b", 2, 2)]), base.spec, base.version + 1, base.schema_version, delta=True
+    )
     v = table._commit_with_rebase(
         base, set(), files, {"operation": "merge-delta", "batch_id": "race-loser"},
         "delta-append",
@@ -250,7 +252,9 @@ def test_append_rebase_refused_across_purge(spark, table):
     )
     base = table.snapshot()
     table.purge_keys(["a"])
-    files, _ = table._write_delta_files(_df(spark, [("c", 3, 3)]), base.version + 1, base)
+    files, _ = table._write_files(
+        _df(spark, [("c", 3, 3)]), base.spec, base.version + 1, base.schema_version, delta=True
+    )
     with pytest.raises(CommitConflict):
         table._commit_with_rebase(
             base, set(), files, {"operation": "merge-delta", "batch_id": "x"},
@@ -333,3 +337,55 @@ def test_data_files_pk_clustered(spark, table, workdir):
             os.path.join(table.root, f.path), columns=["doc_id"]
         )["doc_id"].to_pylist()
         assert col == sorted(col), f.path
+
+
+# every writer that ends in _write_files + _commit
+_FAILED_CAS_WRITERS = {
+    "cow": lambda t, spark: t.write_and_commit(
+        _df(spark, [("a", 9, 9)]), [0], {"operation": "merge"}
+    ),
+    "append": lambda t, spark: t.write_and_commit(
+        _df(spark, [("c", 9, 9)]), None, {"operation": "append"}
+    ),
+    "append_delta": lambda t, spark: t.append_delta(
+        _df(spark, [("a", 9, 9)]), {"operation": "merge-delta"}
+    ),
+    "purge": lambda t, spark: t.purge_keys(["a"]),
+    "compact": lambda t, spark: t.compact(),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_FAILED_CAS_WRITERS))
+def test_failed_cas_leaves_table_unchanged(spark, workdir, monkeypatch, writer):
+    """A commit that fails after its data files moved (the CAS write
+    raises) leaves the table exactly as it was: same head, same rows, no
+    staging directory, and only the call's own files as orphans. The
+    retried call then commits."""
+    table = LakeTable.create(
+        spark, os.path.join(workdir, "t1"), SCHEMA, primary_key="doc_id",
+        num_buckets=1, cursor_col="_ab_lsn",
+    )
+    table.write_and_commit(_df(spark, [("a", 1, 1), ("b", 2, 2)]), None, {"operation": "append"})
+    # a second file in the one bucket gives compact something to rewrite
+    table.write_and_commit(_df(spark, [("a", 3, 3)]), None, {"operation": "append"})
+    call = _FAILED_CAS_WRITERS[writer]
+    head = table.current_version()
+    rows = sorted(table.scan().collect())
+    data_dir = os.path.join(table.root, "data")
+    files_before = set(os.listdir(data_dir))
+
+    def failing_write(self, snap, parent=None):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(LakeTable, "_write_snapshot", failing_write)
+    with pytest.raises(OSError):
+        call(table, spark)
+    monkeypatch.undo()
+
+    assert table.current_version() == head
+    assert sorted(table.scan().collect()) == rows
+    assert not [e for e in os.listdir(table.root) if e.startswith("_staging-")]
+    moved = set(os.listdir(data_dir)) - files_before
+    assert moved
+    assert table.expire_orphans() == len(moved)
+    assert call(table, spark) == head + 1

@@ -173,3 +173,29 @@ def test_replay_resumes_across_purge(spark, workdir):
     eng2.replay(ch)
     expected = golden[golden["doc_id"] != victim].reset_index(drop=True)
     assert_frames_equal(final_as_pandas(eng2.read_final()), expected)
+
+
+def test_purge_rewrite_is_pk_sorted(spark, workdir):
+    """The purge rewrite keeps the table sort order: a bucket whose two
+    files each hold interleaved keys is rewritten as ONE pk-sorted file, so
+    lookup's pushed IN predicate can still skip row groups."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from airbyte_spark.lake.table import LakeTable
+
+    schema = StructType(
+        [StructField("doc_id", StringType(), False), StructField("lsn", LongType(), False)]
+    )
+    t = LakeTable.create(
+        spark, os.path.join(workdir, "t"), schema, primary_key="doc_id",
+        num_buckets=1, cursor_col="lsn",
+    )
+    for keys in ("aceg", "bdfh"):
+        t.write_and_commit(
+            spark.createDataFrame([(k, i) for i, k in enumerate(keys)], schema),
+            None, {"operation": "append"},
+        )
+    t.purge_keys(["h"])
+    (f,) = t.snapshot().files
+    col = pq.read_table(os.path.join(t.root, f.path), columns=["doc_id"])["doc_id"]
+    assert col.to_pylist() == list("abcdefg")
