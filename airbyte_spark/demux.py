@@ -18,10 +18,16 @@ then does the shared offset advance. Routing values with no configured
 stream are counted and surfaced — never silently dropped
 (``on_unrouted="error"|"skip"``).
 
+One front door with the single-stream engine: the same changelog reader,
+the lead engine's window planner over the shared offset, and each slice
+admitted by ``CdcEngine.apply_range`` exactly as ``CdcEngine.replay``
+admits its rows (mappers, bootstrap check, schema evolution). The router
+(:meth:`DemuxEngine._route`) also serves the Structured-Streaming demux.
+
 Scale notes: the per-window persisted slice is the same memory budget as
 the single-stream engine's prefetched batch; the routing groupBy-count is
 one tiny aggregate (≤ streams rows) reusing the cached slice. Each table's
-merge then proceeds exactly as the single-stream engine (bucket-pruned CoW
+merge then takes the single-stream engine's batch path (bucket-pruned CoW
 / MoR delta dispatch), so demux adds zero extra exchanges over syncing the
 tables separately — it removes N-1 WAL scans per window.
 """
@@ -30,13 +36,21 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from airbyte_spark.catalog import (
+    CatalogSnapshotStore,
+    _descriptor,
+    _published_pins,
+    _stream_root,
+)
 from airbyte_spark.checkpoint import Checkpoint, load_checkpoint, save_checkpoint
 from airbyte_spark.config import EngineConfig, StreamConfig
-from airbyte_spark.engine import CdcEngine, OffsetLossError
+from airbyte_spark.engine import CdcEngine, OffsetLossError, read_changelog  # noqa: F401 (re-export)
+from airbyte_spark.lake.table import LakeTable
 from airbyte_spark.lineage import log_metric
 
 
@@ -64,8 +78,6 @@ class DemuxEngine:
         self.stream_col = stream_col
         self.streams = list(streams)
         self.on_unrouted = on_unrouted
-        from airbyte_spark.catalog import _stream_root
-
         self.engines: dict[str, CdcEngine] = {
             s.name: CdcEngine(spark, _stream_root(root, s), s, cfg)
             for s in streams
@@ -80,16 +92,12 @@ class DemuxEngine:
         # window barrier (bootstrap / replay end), where every table has
         # durably applied the same WAL prefix, so read() can never observe
         # table A ahead of table B inside a window.
-        from airbyte_spark.catalog import CatalogSnapshotStore
-
         self.snapshots = CatalogSnapshotStore(os.path.join(root, "catalog_snapshots"))
 
     def engine(self, name: str) -> CdcEngine:
         return self.engines[name]
 
     def create_tables(self) -> None:
-        from airbyte_spark.lake.table import LakeTable
-
         for eng in self.engines.values():
             if not LakeTable.exists(eng.table_root):
                 eng.create_table()
@@ -113,99 +121,42 @@ class DemuxEngine:
         window; per-table batch-id idempotence makes mid-window crashes
         resume without loss or duplication.
         """
-        source = (
-            self.spark.read.parquet(changelog)
-            if isinstance(changelog, str)
-            else changelog
-        )
+        source = read_changelog(self.spark, changelog)
         if self.stream_col not in source.columns:
             raise ValueError(f"changelog lacks routing column {self.stream_col!r}")
-        sub_schema = source.drop(self.stream_col).schema
+        # admit every table before any window commits; apply_range
+        # re-admits each slice, a no-op by then
+        sub = source.drop(self.stream_col)
         for eng in self.engines.values():
-            eng._assert_bootstrap_complete()
-            eng._maybe_evolve_schema(sub_schema)
-        batch_events = batch_events or next(
-            iter(self.engines.values())
-        ).cfg.batch_events
+            eng._admit(sub)
+        lead = next(iter(self.engines.values()))
+        batch_events = batch_events or lead.cfg.batch_events
 
         shared = load_checkpoint(self.state_path) or Checkpoint()
         last = shared.max_committed_lsn
-        mn, target = source.agg(F.min("lsn"), F.max("lsn")).first()
-        # Offset-loss detection must be encoding-aware: packed LSNs
-        # (canal id<<16, wal2json commit<<16) are SPARSE, so the oldest
-        # retained event after normal retention sits at (commit+1)<<bits —
-        # far above last+1 with nothing lost. With lsn_align_bits set the
-        # comparison runs on commit components; dense encodings keep the
-        # strict last+1 rule.
-        bits = next(iter(self.engines.values())).cfg.lsn_align_bits or 0
-        lost = (
-            last > 0
-            and mn is not None
-            and ((mn >> bits) > (last >> bits) + 1 if bits else mn > last + 1)
-        )
-        if lost:
-            log_metric("demux_offset_lost", last_committed_lsn=last, min_lsn=mn)
-            raise OffsetLossError(
-                f"shared offset {last} predates oldest retained event {mn}"
-            )
-        if target is None or target <= last:
-            log_metric("demux_noop", last_committed_lsn=last, target_lsn=target)
+        # the lead engine's planner over the SHARED offset; any ascending
+        # bounds ending at target are correct, and resume recomputes over
+        # remaining events only
+        bounds, _, _ = lead._plan_windows(source, shared, self.state_path, batch_events)
+        if not bounds:
             return {"batches": 0, "events": 0, "last_committed_lsn": last}
-        shared.target_lsn = target
-        save_checkpoint(self.state_path, shared)
 
-        known = list(self.engines)
         t0 = time.monotonic()
-        per_stream = {n: 0 for n in known}
+        per_stream = {n: 0 for n in self.engines}
         unrouted_total = 0
         n_windows = 0
-        # window bounds via the engine's dense/sparse-aware splitter: a
-        # sparse LSN encoding (Postgres byte offsets, canal/wal2json
-        # commit<<bits packings) would turn the arithmetic lo+batch_events
-        # loop into millions of empty windows — the same fix the
-        # single-engine replay carries (CdcEngine._lsn_windows: event-count
-        # quantile boundaries past engine._MAX_ARITHMETIC_WINDOWS). Any
-        # ascending bounds ending at target are correct; resume recomputes
-        # over remaining events only.
-        bounds, _ = next(iter(self.engines.values()))._lsn_windows(
-            source, last, target, batch_events
-        )
         lo = last
         for hi in bounds:
-            window = source.filter(
-                (F.col("lsn") > lo) & (F.col("lsn") <= hi)
-            ).persist()
-            try:
-                counts = {
-                    r[0]: r[1]
-                    for r in window.groupBy(self.stream_col).count().collect()
-                }
-                unrouted = {
-                    k: v for k, v in counts.items() if k not in self.engines
-                }
-                if unrouted:
-                    log_metric(
-                        "demux_unrouted",
-                        start_lsn=lo,
-                        end_lsn=hi,
-                        streams={str(k): int(v) for k, v in unrouted.items()},
-                    )
-                    if self.on_unrouted == "error":
-                        raise UnroutedRecordsError(
-                            f"window ({lo},{hi}] has records for unconfigured "
-                            f"table(s) {sorted(map(str, unrouted))}"
-                        )
-                    unrouted_total += sum(unrouted.values())
-                for name in known:  # deterministic catalog order
-                    if counts.get(name, 0) == 0:
-                        continue
-                    sub = window.filter(
-                        F.col(self.stream_col) == name
-                    ).drop(self.stream_col)
-                    applied = self.engines[name].apply_range(sub, lo, hi)
-                    per_stream[name] += applied
-            finally:
-                window.unpersist()
+            applied, unrouted = self._route(
+                source.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi)),
+                lambda eng, rows: eng.apply_range(rows, lo, hi),
+                f"window ({lo},{hi}]",
+                start_lsn=lo,
+                end_lsn=hi,
+            )
+            for name, n in applied.items():
+                per_stream[name] += n
+            unrouted_total += unrouted
             # every table durably committed (or skipped idempotently):
             # NOW the shared WAL position may advance.
             shared.max_committed_lsn = hi
@@ -234,11 +185,50 @@ class DemuxEngine:
         log_metric("demux_done", **stats)
         return stats
 
+    def _route(
+        self,
+        batch: DataFrame,
+        apply: Callable[[CdcEngine, DataFrame], int],
+        label: str,
+        **where,
+    ) -> tuple[dict[str, int], int]:
+        """The one router for a demux window or stream epoch: route counts
+        over the persisted ``batch``, unrouted values raised or counted per
+        ``on_unrouted``, then each table's slice handed to ``apply(engine,
+        rows)`` in catalog order. ``label``/``where`` name the batch in the
+        error and metric. Returns (rows applied per table, unrouted rows)."""
+        batch = batch.persist()
+        try:
+            counts = {
+                r[0]: r[1] for r in batch.groupBy(self.stream_col).count().collect()
+            }
+            unrouted = {k: v for k, v in counts.items() if k not in self.engines}
+            if unrouted:
+                log_metric(
+                    "demux_unrouted",
+                    **where,
+                    streams={str(k): int(v) for k, v in unrouted.items()},
+                )
+                if self.on_unrouted == "error":
+                    raise UnroutedRecordsError(
+                        f"{label} has records for unconfigured "
+                        f"table(s) {sorted(map(str, unrouted))}"
+                    )
+            applied = {}
+            for name, eng in self.engines.items():
+                if counts.get(name, 0) == 0:
+                    continue
+                rows = batch.filter(F.col(self.stream_col) == name).drop(
+                    self.stream_col
+                )
+                applied[name] = apply(eng, rows)
+            return applied, sum(unrouted.values())
+        finally:
+            batch.unpersist()
+
     # ----------------------------------------------- consistent reads
 
     def _commit_catalog_snapshot(self, op: str) -> int:
-        from airbyte_spark.catalog import _published_pins
-
         return self.snapshots.commit(_published_pins(self.streams, self.engines), op)
 
     def read(self, stream: str, catalog_version: int | None = None, buckets=None) -> DataFrame:
@@ -251,19 +241,16 @@ class DemuxEngine:
         ckpt = load_checkpoint(self.state_path)
         if ckpt is None:
             return None
-        from airbyte_spark.catalog import _descriptor as _desc
-        from airbyte_spark.checkpoint import load_checkpoint as _lc
-
         return {
             "type": "GLOBAL",
             "global": {
                 "shared_state": ckpt.to_json()["shared_state"],
                 "stream_states": [
                     {
-                        "stream_descriptor": _desc(s),
+                        "stream_descriptor": _descriptor(s),
                         "stream_state": (
                             c.to_json()
-                            if (c := _lc(self.engines[s.name].checkpoint_path))
+                            if (c := load_checkpoint(self.engines[s.name].checkpoint_path))
                             else None
                         ),
                     }

@@ -23,13 +23,14 @@ from __future__ import annotations
 
 import dataclasses
 import hashlib
+import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, FloatType, IntegerType, LongType, StructType
+from pyspark.sql.types import StructType
 
 from airbyte_spark import schemas as S
 from airbyte_spark.checkpoint import Checkpoint, load_checkpoint, save_checkpoint
@@ -106,6 +107,18 @@ def _batch_id(stream: str, lo: int, hi: int) -> str:
     return hashlib.sha256(f"{stream}:{lo}:{hi}".encode()).hexdigest()[:20]
 
 
+def read_changelog(spark: SparkSession, changelog: DataFrame | str) -> DataFrame:
+    """The one changelog reader for every ingest leg (replay, demux windows,
+    streaming schema inference): a path reads through ``open_changelog``,
+    whose ``mergeSchema`` keeps a column added in a later changelog file;
+    a DataFrame passes through."""
+    if isinstance(changelog, str):
+        from airbyte_spark.sources.files import open_changelog
+
+        return open_changelog(spark, changelog)
+    return changelog
+
+
 _WIDENINGS = {  # keys are DataType.simpleString() pairs (current -> incoming)
     ("int", "bigint"): True,
     ("smallint", "int"): True,
@@ -143,8 +156,9 @@ class CdcEngine:
         # dedup, merge, purge, lookup, checkpoints) keys on a single 32-char
         # column instead of N-column comparisons — the same idiom as the
         # destination's COMPOSITE_KEY_COL. The hash is injected in
-        # _map_records, so every ingest leg (bootstrap seed, snapshot
-        # chunks, replay batches) gets it from the same place.
+        # _map_records, so every ingest leg (seeds and snapshot chunks via
+        # _prepare_seed; replay, demux windows and stream epochs via
+        # _admit) gets it from the same place.
         pk = self.stream.primary_key
         self._pk_source_cols: tuple[str, ...] | None = None
         if isinstance(pk, (list, tuple)):
@@ -180,23 +194,24 @@ class CdcEngine:
             return self._pinned_gen
         p = os.path.join(self.root, "generation.json")
         if os.path.exists(p):
-            import json as _json
-
             with open(p) as fh:
-                return int(_json.load(fh).get("generation", 0))
+                return int(json.load(fh).get("generation", 0))
         return 0
+
+    def _gen_paths(self, g: int) -> tuple[str, str]:
+        """(table root, checkpoint path) of generation ``g``."""
+        base = os.path.join(self.root, self.stream.name)
+        if g == 0:
+            return base, os.path.join(self.root, "checkpoint.json")
+        return f"{base}@gen{g}", os.path.join(self.root, f"checkpoint@gen{g}.json")
 
     @property
     def table_root(self) -> str:
-        base = os.path.join(self.root, self.stream.name)
-        g = self.generation()
-        return base if g == 0 else f"{base}@gen{g}"
+        return self._gen_paths(self.generation())[0]
 
     @property
     def checkpoint_path(self) -> str:
-        g = self.generation()
-        name = "checkpoint.json" if g == 0 else f"checkpoint@gen{g}.json"
-        return os.path.join(self.root, name)
+        return self._gen_paths(self.generation())[1]
 
     @property
     def table(self) -> LakeTable:
@@ -265,18 +280,8 @@ class CdcEngine:
         if table.find_batch(done_bid) is not None:
             return None
         t0 = time.monotonic()
-        seed = self._map_records(seed)
-        df = seed.withColumn("op", F.lit(S.OP_INSERT))
-        if "source_partition" not in df.columns:
-            df = df.withColumn("source_partition", F.lit(0))
-        if self.cfg.validate_tokens:
-            df = apply_validation(df, self.cfg.vocab_size)
-        else:
-            df = df.withColumn(S.COL_META, F.lit(None).cast(S.META_TYPE))
-        df = inject_cdc_metadata(df, key=self.stream.primary_key)
         snap = table.snapshot()
-        cols = snap.schema.fieldNames()
-        out = df.select(*cols)
+        out = self._prepare_seed(seed, table).select(*snap.schema.fieldNames())
         # bucket count from the TABLE spec (it may have been rebucketed
         # since creation; stream config only seeds the initial count)
         n_buckets = snap.spec["num_buckets"]
@@ -391,13 +396,10 @@ class CdcEngine:
         )
         bid = done_bid if others_done else chunk_bid(idx)
 
-        df = self._map_records(chunk).withColumn("op", F.lit(S.OP_INSERT))
-        if "source_partition" not in df.columns:
-            df = df.withColumn("source_partition", F.lit(0))
         # full-row LWW regardless of update_mode: a snapshot row is a whole
         # image, never a patch
         winners = lww_dedup(
-            self._prepare_batch(df, table), key=self.stream.primary_key
+            self._prepare_seed(chunk, table), key=self.stream.primary_key
         ).persist()
         try:
             n = winners.count()
@@ -561,8 +563,9 @@ class CdcEngine:
         applies mappings per record between source and destination; here the
         chain compiles to Catalyst expressions once and fuses into whatever
         the sync plan already does (plans/mappers.py, zero added shuffles).
-        Both the bootstrap seed and every replay batch pass through, so the
-        destination only ever stores mapped values. Composite-PK streams get
+        Every leg passes through — seeds and snapshot chunks via
+        _prepare_seed, change rows via _admit — so the destination only
+        ever stores mapped values. Composite-PK streams get
         their synthesized key column injected here too — after the mappers,
         so the key always hashes the values the table actually stores."""
         if not self.stream.mappers:
@@ -613,10 +616,23 @@ class CdcEngine:
             F.md5(F.to_json(F.struct(*[F.col(c) for c in self._pk_source_cols]))),
         )
 
-    def _open_source(self, changelog: DataFrame | str) -> DataFrame:
-        if isinstance(changelog, str):
-            changelog = self.spark.read.option("mergeSchema", "true").parquet(changelog)
-        return self._map_records(changelog)
+    def _admit(self, rows: DataFrame) -> DataFrame:
+        """The one admission step for raw change rows (replay, apply_range,
+        apply_stream_epoch): map once, refuse a half-loaded table, evolve
+        the schema from the MAPPED shape the table will store."""
+        rows = self._map_records(rows)
+        self._assert_bootstrap_complete()
+        self._maybe_evolve_schema(rows.schema)
+        return rows
+
+    def _prepare_seed(self, seed: DataFrame, table: LakeTable) -> DataFrame:
+        """A snapshot image (bootstrap/resync seed, snapshot chunk) as
+        prepared insert events: mapped, ``op='I'``, ``source_partition``
+        defaulted to 0, then :meth:`_prepare_batch`."""
+        df = self._map_records(seed).withColumn("op", F.lit(S.OP_INSERT))
+        if "source_partition" not in df.columns:
+            df = df.withColumn("source_partition", F.lit(0))
+        return self._prepare_batch(df, table)
 
     def replay(
         self,
@@ -629,9 +645,7 @@ class CdcEngine:
         Resumable: progress below the checkpoint (or any batch id already in
         snapshot summaries) is skipped. Returns summary stats.
         """
-        source = self._open_source(changelog)
-        self._assert_bootstrap_complete()
-        self._maybe_evolve_schema(source.schema)
+        source = self._admit(read_changelog(self.spark, changelog))
         batch_events = batch_events or self.cfg.batch_events
 
         ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
@@ -651,26 +665,12 @@ class CdcEngine:
             )
         ckpt.cursor_field = self.stream.cursor_field
         last = ckpt.max_committed_lsn
-        mn, target = source.agg(F.min("lsn"), F.max("lsn")).first()
-        if last > 0 and mn is not None and mn > last + 1:
-            # Gap between our offset and the oldest retained event: the
-            # changelog was truncated past the checkpoint. Refuse to skip
-            # silently — caller must resync() (reference forces re-snapshot,
-            # MySqlInitialReadUtil.java:105-114).
-            log_metric("offset_lost", last_committed_lsn=last, min_available_lsn=mn)
-            raise OffsetLossError(
-                f"checkpoint lsn {last} predates oldest retained event {mn}; "
-                "run resync(seed, changelog) to re-snapshot"
-            )
-        if target is None or target <= last:
-            # "future state": nothing to do, checkpoint echoed unchanged
-            # (connector-acceptance test_incremental.py:238-305).
-            log_metric("replay_noop", last_committed_lsn=last, target_lsn=target)
+        bounds, n_exact, mn = self._plan_windows(
+            source, ckpt, self.checkpoint_path, batch_events
+        )
+        if not bounds:
             return {"batches": 0, "events": 0, "last_committed_lsn": last}
-        ckpt.target_lsn = target
-        save_checkpoint(self.checkpoint_path, ckpt)
-
-        bounds, n_exact = self._lsn_windows(source, last, target, batch_events)
+        target = bounds[-1]
 
         # Sync-size estimate up front (AirbyteEstimateTraceMessage shape:
         # name/type/row_estimate/byte_estimate — the reference's sources
@@ -708,9 +708,7 @@ class CdcEngine:
         inflight: DataFrame | None = None  # nxt df whose stats job is running
         prefetch_pool = ThreadPoolExecutor(max_workers=1)
         try:
-            idx = 0
-            while idx < len(bounds):
-                hi = bounds[idx]
+            for idx, hi in enumerate(bounds):
                 # Read-ahead: validate+enrich batch k+1 CONCURRENTLY with
                 # batch k's merge — the Spark shape of the reference's
                 # source-reads-ahead-while-destination-flushes queue pipeline
@@ -742,7 +740,6 @@ class CdcEngine:
                     prefetched = next_f.result()
                     inflight = None
                 lo = hi
-                idx += 1
                 n_batches += 1
                 if max_batches is not None and n_batches >= max_batches:
                     break
@@ -789,6 +786,43 @@ class CdcEngine:
         stats["total_wall_s"] = round(wall + stats["compact_s"], 3)
         log_metric("replay_done", **stats)
         return stats
+
+    def _plan_windows(
+        self, source: DataFrame, ckpt: Checkpoint, state_path: str, batch_events: int
+    ) -> tuple[list[int], int | None, int | None]:
+        """The one window planner for a bounded replay of ``source`` from
+        ``ckpt`` (this engine's checkpoint, or the demux shared offset):
+        min/max LSN probe, offset-loss check, and the target LSN saved to
+        ``state_path``. Returns (window bounds ending at the target, exact
+        remaining count if windowing paid for one, min LSN); no bounds =
+        nothing to replay."""
+        last = ckpt.max_committed_lsn
+        mn, target = source.agg(F.min("lsn"), F.max("lsn")).first()
+        # Gap between our offset and the oldest retained event: the
+        # changelog was truncated past the checkpoint. Refuse to skip
+        # silently — caller must resync() (reference forces re-snapshot,
+        # MySqlInitialReadUtil.java:105-114). The rule is encoding-aware:
+        # packed LSNs (canal id<<16, wal2json commit<<16) are SPARSE, so
+        # the oldest retained event after normal retention sits at
+        # (commit+1)<<bits — far above last+1 with nothing lost. With
+        # lsn_align_bits set the comparison runs on commit components;
+        # dense encodings (bits 0) keep the strict last+1 rule.
+        bits = self.cfg.lsn_align_bits or 0
+        if last > 0 and mn is not None and (mn >> bits) > (last >> bits) + 1:
+            log_metric("offset_lost", last_committed_lsn=last, min_available_lsn=mn)
+            raise OffsetLossError(
+                f"checkpoint lsn {last} predates oldest retained event {mn}; "
+                "run resync(seed, changelog) to re-snapshot"
+            )
+        if target is None or target <= last:
+            # "future state": nothing to do, checkpoint echoed unchanged
+            # (connector-acceptance test_incremental.py:238-305).
+            log_metric("replay_noop", last_committed_lsn=last, target_lsn=target)
+            return [], None, mn
+        ckpt.target_lsn = target
+        save_checkpoint(state_path, ckpt)
+        bounds, n_exact = self._lsn_windows(source, last, target, batch_events)
+        return bounds, n_exact, mn
 
     def _lsn_windows(
         self, source: DataFrame, last: int, target: int, batch_events: int
@@ -864,9 +898,10 @@ class CdcEngine:
         """Apply one externally-driven (lo, hi] LSN window as an atomic,
         idempotent commit — the per-table leg of a shared-WAL demux
         (demux.py), where the WINDOW loop and the shared offset live above
-        this engine. Returns events applied (0 when the batch id is already
-        in a snapshot summary)."""
-        return self._apply_batch(source, lo, hi)
+        this engine. Raw rows pass the same admission step as replay's.
+        Returns events applied (0 when the batch id is already in a
+        snapshot summary)."""
+        return self._apply_batch(self._admit(source), lo, hi)
 
     def _align_to_table(self, batch: DataFrame, table_schema: StructType) -> DataFrame:
         """Project the batch to source cols + the table's payload columns
@@ -1280,20 +1315,11 @@ class CdcEngine:
         self.soft_reset()
         # fresh bootstrap id: the soft reset invalidated the old one's data,
         # so bypass the bootstrap idempotence check by seeding progress first
-        source = self._open_source(changelog)
+        source = read_changelog(self.spark, changelog)
         mn = source.agg(F.min("lsn")).first()[0]
         table = self.table
-        df = seed.withColumn("op", F.lit(S.OP_INSERT))
-        if "source_partition" not in df.columns:
-            df = df.withColumn("source_partition", F.lit(0))
-        if self.cfg.validate_tokens:
-            df = apply_validation(df, self.cfg.vocab_size)
-        else:
-            df = df.withColumn(S.COL_META, F.lit(None).cast(S.META_TYPE))
-        df = inject_cdc_metadata(df, key=self.stream.primary_key)
-        cols = table.snapshot().schema.fieldNames()
         version = table.write_and_commit(
-            df.select(*cols),
+            self._prepare_seed(seed, table).select(*table.snapshot().schema.fieldNames()),
             replace_buckets=range(table.snapshot().spec["num_buckets"]),
             summary={"operation": "resync-bootstrap"},
             write_partitions=self.cfg.write_partitions,
@@ -1322,15 +1348,11 @@ class CdcEngine:
         bootstrap and batch commits are idempotent in the staged table via
         the same batch-id mechanism as any sync. Old generations stay on
         disk for time-travel until :meth:`drop_old_generations`."""
-        new_gen = self.generation() + 1
-        staged = CdcEngine(
-            self.spark, self.root, self.stream, self.cfg,
-            _pinned_generation=new_gen,
-        )
+        staged = self._next_generation()
         if not LakeTable.exists(staged.table_root):
             staged.create_table(self.table.snapshot().schema)
         staged.bootstrap(seed)
-        source = staged._open_source(changelog)
+        source = read_changelog(self.spark, changelog)
         ckpt = load_checkpoint(staged.checkpoint_path) or Checkpoint()
         if ckpt.max_committed_lsn == 0:
             # the fresh seed reflects source state just below the oldest
@@ -1339,13 +1361,29 @@ class CdcEngine:
             ckpt.max_committed_lsn = max(0, (mn or 1) - 1)
             save_checkpoint(staged.checkpoint_path, ckpt)
         stats = staged.replay(source, batch_events)
-        # ATOMIC pointer swap: this is the only moment readers change
-        # generations, and only after the staged table is complete
-        write_json(os.path.join(self.root, "generation.json"), {"generation": new_gen})
-        self._table = None  # next read resolves the new generation
-        log_metric("generation_swapped", generation=new_gen)
-        stats["generation"] = new_gen
+        stats["generation"] = self._swap_generation(staged)
         return stats
+
+    def _next_generation(self) -> CdcEngine:
+        """An engine pinned at generation k+1, beside the serving k."""
+        staged = CdcEngine(
+            self.spark, self.root, self.stream, self.cfg,
+            _pinned_generation=self.generation() + 1,
+        )
+        # self.stream already names the synthesized key column; the
+        # components it hashes carry over
+        staged._pk_source_cols = self._pk_source_cols
+        return staged
+
+    def _swap_generation(self, staged: CdcEngine) -> int:
+        """ATOMIC pointer swap to ``staged``'s generation: the only moment
+        readers change generations, and only once the staged table is
+        complete. Returns the new serving generation."""
+        gen = staged.generation()
+        write_json(os.path.join(self.root, "generation.json"), {"generation": gen})
+        self._table = None  # next read resolves the new generation
+        log_metric("generation_swapped", generation=gen)
+        return gen
 
     def migrate_vocab(self, mapping, unk_id: int, size: int | None = None) -> dict:
         """Tokenizer-swap migration (vocab v1 -> v2): rebuild the table in
@@ -1368,11 +1406,7 @@ class CdcEngine:
         from airbyte_spark.functions.remap import make_token_remapper, mapping_table
 
         lut = mapping if isinstance(mapping, np.ndarray) else mapping_table(mapping, size)
-        new_gen = self.generation() + 1
-        staged = CdcEngine(
-            self.spark, self.root, self.stream, self.cfg,
-            _pinned_generation=new_gen,
-        )
+        staged = self._next_generation()
         # a v2 id domain past 2^31 (or an unk past it) needs array<bigint>
         # tokens: the staged generation is created WIDENED (the same
         # promotion _WIDENINGS allows mid-replay), so the remap can never
@@ -1437,40 +1471,26 @@ class CdcEngine:
         if ckpt is not None:
             ckpt.table_schema_version = staged.table.snapshot(version).schema_version
             save_checkpoint(staged.checkpoint_path, ckpt)
-        write_json(os.path.join(self.root, "generation.json"), {"generation": new_gen})
-        self._table = None
-        log_metric(
-            "vocab_migrated",
-            generation=new_gen,
-            rows=int(totals["rows"]),
-            ids_remapped=int(totals["ids_remapped"] or 0),
-            ids_unk=int(totals["ids_unk"] or 0),
-        )
-        return {
-            "generation": new_gen,
+        out = {
+            "generation": self._swap_generation(staged),
             "rows": int(totals["rows"]),
             "ids_remapped": int(totals["ids_remapped"] or 0),
             "ids_unk": int(totals["ids_unk"] or 0),
-            "snapshot": version,
         }
+        log_metric("vocab_migrated", **out)
+        return dict(out, snapshot=version)
 
     def drop_old_generations(self) -> list[int]:
         """Delete superseded generations' tables + checkpoints (run after
         downstream readers have moved past time-traveling into them)."""
         import shutil
 
-        cur = self.generation()
-        base = os.path.join(self.root, self.stream.name)
         dropped = []
-        for g in range(cur):
-            root = base if g == 0 else f"{base}@gen{g}"
+        for g in range(self.generation()):
+            root, ck = self._gen_paths(g)
             for suffix in ("", "_raw", "_history"):
                 if os.path.isdir(root + suffix):
                     shutil.rmtree(root + suffix, ignore_errors=True)
-            ck = os.path.join(
-                self.root,
-                "checkpoint.json" if g == 0 else f"checkpoint@gen{g}.json",
-            )
             if os.path.exists(ck):
                 os.unlink(ck)
             dropped.append(g)
@@ -1485,15 +1505,16 @@ class CdcEngine:
         epoch-stamped batch id makes a re-delivered epoch (crash between
         commit and SS offset write) a no-op — the same two-sided idempotence
         the batch path gets from LSN-range batch ids. Past that check an
-        epoch commits like any batch; its LSN range is the one its events
-        carry. Returns rows applied."""
+        epoch's raw rows pass replay's admission step and commit like any
+        batch; its LSN range is the one its events carry. Returns rows
+        applied."""
         table = self.table
         eid = int(epoch_id)
         bid = _batch_id(f"{self.stream.name}:stream", eid, eid)
         if table.find_batch(bid) is not None:
             log_metric("stream_epoch_skipped_already_applied", batch_id=bid, epoch=eid)
             return 0
-        self._maybe_evolve_schema(batch_df.schema)
+        batch_df = self._admit(batch_df)
         t0 = time.monotonic()
         enriched = self._prepare_batch(batch_df, table)
         stats = self._batch_stats(enriched, table)
@@ -1773,26 +1794,7 @@ class CdcEngine:
         hist_root = self.table_root + "_history"
         if self.cfg.scd2_history and LakeTable.exists(hist_root):
             LakeTable.load(self.spark, hist_root).abandon_staged()
-        # Checkpoint rollback: recompute replay progress from the commits
-        # that remain published. per_partition stats are advisory lineage
-        # (the JSONL log is authoritative) and reset with the range.
-        ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
-        max_lsn = 0
-        keep: set[str] = set()
-        for s in self.table.history():
-            if s.version in staged or s.version == v:
-                continue
-            b = s.summary.get("batch_id")
-            if b is not None:
-                keep.add(b)
-                end = s.summary.get("end_lsn")
-                if end is not None:
-                    max_lsn = max(max_lsn, int(end))
-        ckpt.max_committed_lsn = max_lsn
-        ckpt.batches = [b for b in ckpt.batches if b in keep]
-        ckpt.per_partition = {}
-        ckpt.table_schema_version = self.table.snapshot().schema_version
-        save_checkpoint(self.checkpoint_path, ckpt)
+        max_lsn = self._rewind_checkpoint(staged | {v})
         log_metric(
             "sync_abandoned",
             version=v,
@@ -1824,11 +1826,25 @@ class CdcEngine:
         new_head = self.table.rollback_to(version)
         if version == new_head:
             return new_head
+        max_lsn = self._rewind_checkpoint(rolled | {new_head})
+        log_metric(
+            "sync_rolled_back",
+            version=new_head,
+            target=version,
+            rolled_back_to_lsn=max_lsn,
+        )
+        return new_head
+
+    def _rewind_checkpoint(self, reverted: set[int]) -> int:
+        """Checkpoint rollback: recompute replay progress from the commits
+        outside ``reverted`` (the undone versions plus the revert commit).
+        per_partition stats are advisory lineage (the JSONL log is
+        authoritative) and reset with the range. Returns the rewound LSN."""
         ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
         max_lsn = 0
         keep: set[str] = set()
         for s in self.table.history():
-            if s.version in rolled or s.version == new_head:
+            if s.version in reverted:
                 continue
             b = s.summary.get("batch_id")
             if b is not None:
@@ -1841,13 +1857,7 @@ class CdcEngine:
         ckpt.per_partition = {}
         ckpt.table_schema_version = self.table.snapshot().schema_version
         save_checkpoint(self.checkpoint_path, ckpt)
-        log_metric(
-            "sync_rolled_back",
-            version=new_head,
-            target=version,
-            rolled_back_to_lsn=max_lsn,
-        )
-        return new_head
+        return max_lsn
 
     def read_final_as_of(self, ts_ms: int) -> DataFrame:
         """Time travel by wall-clock timestamp (Iceberg TIMESTAMP AS OF):

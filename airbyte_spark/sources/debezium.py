@@ -428,3 +428,20 @@ def split_complete_transactions(
         tagged.filter(ok).select(*cols),
         tagged.filter(~ok).select(*cols),
     )
+
+
+def gate_on_transaction_markers(
+    events: DataFrame, marker_lines: DataFrame, **scope
+) -> tuple[DataFrame, int]:
+    """The wire jobs' transaction gate: decode the raw marker topic, split
+    ``events`` by :func:`split_complete_transactions` (``scope``: its
+    ``collection`` or ``collection_col``) and drop the txn columns. The
+    verdict is cached: a batched replay re-scans the complete side once per
+    LSN window. Returns (complete events, pending event count) — pending
+    transactions are not errors; they stay in the topic and replay once a
+    fuller dump arrives (batch-id idempotence absorbs the overlap)."""
+    markers = decode_transaction_markers(marker_lines).filter("status IS NOT NULL")
+    complete, pending = split_complete_transactions(
+        events, markers, cache_verdict=True, **scope
+    )
+    return complete.drop("_txn_id", "_txn_order"), pending.count()

@@ -3,11 +3,16 @@
 Maps the reference's Debezium engine-thread -> BlockingQueue -> iterator
 pipeline (AirbyteDebeziumHandler.java:113-164, queue cap 10,000) onto
 ``spark.readStream`` with ``maxFilesPerTrigger`` as the backpressure knob.
-Each micro-batch flows through the exact same validate -> batch stats ->
-LWW dedup -> merge path and finish step (lineage, checkpoint, NULL-key
-quarantine) as bounded replay (CdcEngine.apply_stream_epoch), so batch and
-streaming modes are semantically interchangeable; out-of-order arrival
-across micro-batches is absorbed by LWW + retained tombstones.
+Every file stream is built by one function (:func:`_file_stream`), whose
+static schema comes from the same changelog reader as bounded replay
+(``engine.read_changelog``, with ``mergeSchema``). Each micro-batch enters
+the engine through ``CdcEngine.apply_stream_epoch``: the same admission
+step as bounded replay (mappers, composite key, bootstrap check, schema
+evolution), then the same validate -> batch stats -> LWW dedup -> merge
+path and finish step (lineage, checkpoint, NULL-key quarantine), so batch
+and streaming modes are semantically interchangeable; out-of-order arrival
+across micro-batches is absorbed by LWW + retained tombstones. The demux
+form routes each epoch through the same router as ``DemuxEngine.replay``.
 
 Exactly-once composition:
 - Spark's checkpointLocation tracks which source files each epoch consumed
@@ -20,10 +25,37 @@ Exactly-once composition:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import time
 
-from airbyte_spark.engine import CdcEngine
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from airbyte_spark.engine import CdcEngine, read_changelog
+
+
+def _file_stream(
+    spark: SparkSession, changelog_path: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """The one changelog file stream. Streams cannot infer a schema, so it
+    is read statically through the batch changelog reader first."""
+    reader = spark.readStream.schema(read_changelog(spark, changelog_path).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(changelog_path)
+
+
+def _start(stream: DataFrame, sink, checkpoint_dir: str, **trigger) -> StreamingQuery:
+    """Start ``sink`` as the foreachBatch of ``stream``. The bounded
+    entry points trigger ``availableNow`` — a bounded run of the unbounded
+    pipeline, the moral equivalent of the reference's
+    reached-target-position stop."""
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**trigger)
+        .start()
+    )
 
 
 def stream_replay(
@@ -33,32 +65,11 @@ def stream_replay(
     max_files_per_trigger: int | None = None,
     timeout_s: float | None = None,
 ) -> dict:
-    """Drain all currently-available changelog files through the engine
-    (Trigger.AvailableNow — bounded run of the unbounded pipeline, the moral
-    equivalent of the reference's reached-target-position stop). Re-running
-    with the same checkpoint_dir resumes from the recorded offsets and
-    processes only new files. Returns progress stats."""
-    spark = engine.spark
-    schema = spark.read.parquet(changelog_path).schema  # static inference
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(changelog_path)
-
-    applied = {"epochs": 0, "rows_applied": 0}
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        applied["epochs"] += 1
-        applied["rows_applied"] += engine.apply_stream_epoch(batch_df, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return applied
+    """Drain all currently-available changelog files through the engine.
+    Re-running with the same checkpoint_dir resumes from the recorded
+    offsets and processes only new files. Returns progress stats."""
+    stream = _file_stream(engine.spark, changelog_path, max_files_per_trigger)
+    return stream_replay_df(engine, stream, checkpoint_dir, timeout_s)
 
 
 def stream_replay_df(
@@ -82,8 +93,6 @@ def stream_replay_df(
         applied["epochs"] += 1
         good = batch_df
         if quarantine is not None:
-            from pyspark.sql import functions as F
-
             bad = batch_df.filter(F.col("op").isNull())
             n_bad = bad.count()
             if n_bad:
@@ -94,13 +103,7 @@ def stream_replay_df(
             good = batch_df.filter(F.col("op").isNotNull())
         applied["rows_applied"] += engine.apply_stream_epoch(good, epoch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
+    _start(stream, sink, checkpoint_dir, availableNow=True).awaitTermination(timeout_s)
     return applied
 
 
@@ -124,18 +127,11 @@ def stream_replay_continuous(
     does not advance batchId on no-data triggers. ``max_wall_s`` is the
     hard deadline backstop. Returns progress stats + the stop reason
     ("idle" | "deadline")."""
-    import time as _time
-
-    spark = engine.spark
-    schema = spark.read.parquet(changelog_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(changelog_path)
+    stream = _file_stream(engine.spark, changelog_path, max_files_per_trigger)
 
     applied = {
         "epochs": 0, "rows_applied": 0,
-        "last_data_at": _time.monotonic(), "busy": False,
+        "last_data_at": time.monotonic(), "busy": False,
     }
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
@@ -146,32 +142,27 @@ def stream_replay_continuous(
         # guard likewise only fires between records, never during a poll:
         # DebeziumRecordIterator.java:78-140 computeNext blocks per record).
         applied["busy"] = True
-        applied["last_data_at"] = _time.monotonic()
+        applied["last_data_at"] = time.monotonic()
         try:
             applied["epochs"] += 1
             applied["rows_applied"] += engine.apply_stream_epoch(batch_df, epoch_id)
         finally:
             applied["busy"] = False
-            applied["last_data_at"] = _time.monotonic()
+            applied["last_data_at"] = time.monotonic()
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=trigger_interval)
-        .start()
-    )
+    q = _start(stream, sink, checkpoint_dir, processingTime=trigger_interval)
     reason = "deadline"
-    deadline = _time.monotonic() + max_wall_s
+    deadline = time.monotonic() + max_wall_s
     try:
-        while _time.monotonic() < deadline:
-            _time.sleep(poll_s)
+        while time.monotonic() < deadline:
+            time.sleep(poll_s)
             if not q.isActive or applied["busy"]:
                 continue
             # isDataAvailable covers the startup race: files discovered but
             # the first trigger not yet fired under load is NOT idleness
             if q.status.get("isDataAvailable"):
                 continue
-            if _time.monotonic() - applied["last_data_at"] > idle_timeout_s:
+            if time.monotonic() - applied["last_data_at"] > idle_timeout_s:
                 reason = "idle"
                 break
     finally:
@@ -193,64 +184,30 @@ def stream_demux_replay(
 ) -> dict:
     """Structured-Streaming form of the shared-WAL demux (demux.py): ONE
     stream tails the interleaved changelog, each epoch fans out to every
-    configured table. The GLOBAL shared offset is Spark's
-    checkpointLocation (one stream = one offset log); per-table epoch-
-    stamped batch ids make a crash BETWEEN table commits inside an epoch
-    resume exactly — the re-delivered epoch skips committed tables and
-    applies the rest, the streaming analog of DemuxEngine.replay's window
-    invariant. Unrouted records follow demux.on_unrouted."""
-    from airbyte_spark.demux import UnroutedRecordsError
-    from airbyte_spark.lineage import log_metric
-
-    spark = demux.spark
-    schema = spark.read.parquet(changelog_path).schema
-    if demux.stream_col not in schema.fieldNames():
+    configured table through the same router as ``DemuxEngine.replay``.
+    The GLOBAL shared offset is Spark's checkpointLocation (one stream =
+    one offset log); per-table epoch-stamped batch ids make a crash
+    BETWEEN table commits inside an epoch resume exactly — the re-delivered
+    epoch skips committed tables and applies the rest, the streaming analog
+    of DemuxEngine.replay's window invariant. Unrouted records follow
+    demux.on_unrouted."""
+    stream = _file_stream(demux.spark, changelog_path, max_files_per_trigger)
+    if demux.stream_col not in stream.columns:
         raise ValueError(f"changelog lacks routing column {demux.stream_col!r}")
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(changelog_path)
-
     applied = {"epochs": 0, "rows_applied": 0, "unrouted": 0}
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         applied["epochs"] += 1
-        batch_df = batch_df.persist()
-        try:
-            counts = {
-                r[0]: r[1]
-                for r in batch_df.groupBy(demux.stream_col).count().collect()
-            }
-            unrouted = {k: v for k, v in counts.items() if k not in demux.engines}
-            if unrouted:
-                log_metric(
-                    "demux_unrouted",
-                    epoch=int(epoch_id),
-                    streams={str(k): int(v) for k, v in unrouted.items()},
-                )
-                if demux.on_unrouted == "error":
-                    raise UnroutedRecordsError(
-                        f"epoch {epoch_id} has records for unconfigured "
-                        f"table(s) {sorted(map(str, unrouted))}"
-                    )
-                applied["unrouted"] += sum(unrouted.values())
-            for name, eng in demux.engines.items():  # deterministic order
-                if counts.get(name, 0) == 0:
-                    continue
-                sub = batch_df.filter(
-                    F.col(demux.stream_col) == name
-                ).drop(demux.stream_col)
-                applied["rows_applied"] += eng.apply_stream_epoch(sub, epoch_id)
-        finally:
-            batch_df.unpersist()
+        per_table, unrouted = demux._route(
+            batch_df,
+            lambda eng, rows: eng.apply_stream_epoch(rows, epoch_id),
+            f"epoch {epoch_id}",
+            epoch=int(epoch_id),
+        )
+        applied["rows_applied"] += sum(per_table.values())
+        applied["unrouted"] += unrouted
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
+    _start(stream, sink, checkpoint_dir, availableNow=True).awaitTermination(timeout_s)
     return applied
 
 

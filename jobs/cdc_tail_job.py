@@ -147,12 +147,11 @@ def run(spark, args) -> dict:
         ]
     )
     streaming = getattr(args, "streaming", False)
+    wire = batch_wire = spark.read.schema(wire_schema).json(args.wire)
     if streaming:
         if not args.ss_checkpoint:
             raise SystemExit("--streaming requires --ss-checkpoint")
         wire = spark.readStream.schema(wire_schema).json(args.wire)
-    else:
-        wire = spark.read.schema(wire_schema).json(args.wire)
 
     # In-stream DDL: Debezium schema-change envelopes (tableChanges) evolve
     # the table BEFORE the data decode, so the DML from_json uses the final
@@ -161,51 +160,20 @@ def run(spark, args) -> dict:
     # parse old narrower values exactly). Streaming uses a bounded batch
     # pre-pass over the same dump for the (metadata-scale) DDL side and
     # filters those lines out of the stream.
-    n_ddl = 0
+    split_ddl = decode_ddl = None
     if args.connector in ("postgres", "mysql"):
         from airbyte_spark.sources.schema_change import (
             decode_schema_changes,
-            split_schema_changes,
+            split_schema_changes as split_ddl,
         )
 
-        if streaming:
-            sc_lines, _ = split_schema_changes(
-                spark.read.schema(wire_schema).json(args.wire)
-            )
-            _, wire = split_schema_changes(wire)
-        else:
-            sc_lines, wire = split_schema_changes(wire)
-        changes = decode_schema_changes(sc_lines, connector=args.connector)
-        n_bad_ddl = changes.filter(F.col("change_type").isNull()).count()
-        if n_bad_ddl:
-            from airbyte_spark.lineage import log_metric
-
-            log_metric("ddl_quarantined", rows=n_bad_ddl)
-        n_ddl = eng.apply_schema_changes(
-            changes.filter(F.col("change_type").isNotNull())
-        )
+        def decode_ddl(lines):
+            return decode_schema_changes(lines, connector=args.connector)
     elif args.connector == "maxwell":
         # Maxwell output_ddl: table-create/alter envelopes carry the full
         # post-change column list under def.columns — same fold, same
         # early-apply soundness argument as the Debezium branch
         from airbyte_spark.sources.maxwell import decode_ddl, split_ddl
-
-        if streaming:
-            ddl_lines, _ = split_ddl(
-                spark.read.schema(wire_schema).json(args.wire)
-            )
-            _, wire = split_ddl(wire)
-        else:
-            ddl_lines, wire = split_ddl(wire)
-        changes = decode_ddl(ddl_lines)
-        n_bad_ddl = changes.filter(F.col("change_type").isNull()).count()
-        if n_bad_ddl:
-            from airbyte_spark.lineage import log_metric
-
-            log_metric("ddl_quarantined", rows=n_bad_ddl)
-        n_ddl = eng.apply_schema_changes(
-            changes.filter(F.col("change_type").isNotNull())
-        )
     elif args.connector == "canal":
         # Canal DDL envelopes carry only the raw SQL text (no structured
         # post-change column list), so they cannot drive the additive-
@@ -213,33 +181,32 @@ def run(spark, args) -> dict:
         # count — operators re-discover the schema (or pass --payload-ddl)
         # after a DDL point. decode_canal would quarantine them anyway;
         # splitting keeps the malformed count meaningful.
-        from airbyte_spark.sources.canal import split_ddl as _canal_split
+        from airbyte_spark.sources.canal import split_ddl
+    n_ddl = 0
+    if split_ddl is not None:
+        from airbyte_spark.lineage import log_metric
 
-        if streaming:
-            ddl_lines, _ = _canal_split(
-                spark.read.schema(wire_schema).json(args.wire)
-            )
-            _, wire = _canal_split(wire)
+        ddl_lines, _ = split_ddl(batch_wire)
+        _, wire = split_ddl(wire)
+        if decode_ddl is None:
+            n_canal_ddl = ddl_lines.count()
+            if n_canal_ddl:
+                log_metric("ddl_requires_rediscover", rows=n_canal_ddl)
         else:
-            ddl_lines, wire = _canal_split(wire)
-        n_canal_ddl = ddl_lines.count()
-        if n_canal_ddl:
-            from airbyte_spark.lineage import log_metric
+            changes = decode_ddl(ddl_lines)
+            n_bad_ddl = changes.filter(F.col("change_type").isNull()).count()
+            if n_bad_ddl:
+                log_metric("ddl_quarantined", rows=n_bad_ddl)
+            n_ddl = eng.apply_schema_changes(
+                changes.filter(F.col("change_type").isNotNull())
+            )
 
-            log_metric("ddl_requires_rediscover", rows=n_canal_ddl)
-
-    if n_ddl:
-        # DDL happened: the table snapshot now carries the final shape —
-        # decode with IT, not the (stale) --payload-ddl bootstrap schema.
-        from airbyte_spark import schemas as S
-
-        snap = eng.table.snapshot()
-        payload = StructType(
-            [f for f in S.payload_fields(snap.schema) if f.name != "op"]
-        )
-    elif args.payload_ddl is not None:
+    if args.payload_ddl is not None and not n_ddl:
         payload = StructType.fromDDL(args.payload_ddl)
     else:
+        # no DDL given, or DDL happened: the table snapshot carries the
+        # final shape — decode with IT, not the (stale) --payload-ddl
+        # bootstrap schema
         from airbyte_spark import schemas as S
 
         snap = eng.table.snapshot()
@@ -311,26 +278,13 @@ def run(spark, args) -> dict:
                 "--txn-markers needs the bounded replay path (the gate "
                 "aggregates per-transaction counts over the window)"
             )
-        from airbyte_spark.sources.debezium import (
-            decode_transaction_markers,
-            split_complete_transactions,
-        )
+        from airbyte_spark.sources.debezium import gate_on_transaction_markers
 
-        markers = decode_transaction_markers(
-            spark.read.schema(wire_schema).json(args.txn_markers)
-        ).filter("status IS NOT NULL")
-        # cache_verdict: the replay re-scans `complete` once per LSN
-        # window — materialize the txn-id verdict once, not per batch
-        complete, txn_pending = split_complete_transactions(
-            decoded, markers,
+        decoded, n_txn_pending = gate_on_transaction_markers(
+            decoded,
+            spark.read.schema(wire_schema).json(args.txn_markers),
             collection=args.txn_collection,
-            cache_verdict=True,
         )
-        # pending = not-yet-complete source transactions, NOT errors: they
-        # stay in the topic and replay once a fuller dump arrives (batch-id
-        # idempotence absorbs the overlap); only count + log them here
-        n_txn_pending = txn_pending.count()
-        decoded = complete.drop("_txn_id", "_txn_order")
     quarantine = args.quarantine or f"{args.lake.rstrip('/')}/_quarantine"
     if streaming:
         from airbyte_spark.streaming import stream_replay_df

@@ -110,9 +110,7 @@ def run(spark, args) -> dict:
     if (args.changelog is None) == (args.wire is None):
         raise SystemExit("exactly one of --changelog / --wire is required")
     if args.changelog is not None:
-        source = args.changelog
-        stats = demux.replay(source, max_batches=args.max_batches)
-        return stats
+        return demux.replay(args.changelog, max_batches=args.max_batches)
 
     # --wire: ONE Debezium topic for every table -> decode once, route by
     # source.table, optional transaction-completeness gate, then the same
@@ -163,22 +161,13 @@ def run(spark, args) -> dict:
         )
     n_txn_pending = 0
     if args.txn_markers is not None:
-        from airbyte_spark.sources.debezium import (
-            decode_transaction_markers,
-            split_complete_transactions,
-        )
+        from airbyte_spark.sources.debezium import gate_on_transaction_markers
 
-        markers = decode_transaction_markers(
-            spark.read.schema(wire_schema).json(args.txn_markers)
-        ).filter("status IS NOT NULL")
-        decoded, txn_pending = split_complete_transactions(
+        decoded, n_txn_pending = gate_on_transaction_markers(
             decoded,
-            markers,
+            spark.read.schema(wire_schema).json(args.txn_markers),
             collection_col=args.stream_col,
-            cache_verdict=True,
         )
-        n_txn_pending = txn_pending.count()
-        decoded = decoded.drop("_txn_id", "_txn_order")
     good, bad = split_malformed(decoded)
     n_bad = bad.count()
     if n_bad:

@@ -73,10 +73,14 @@ def test_resume_skips_committed_slices(spark, workdir, monkeypatch):
         eng.bootstrap(seed, slices=4)
     monkeypatch.undo()
 
-    # replay over the half-loaded table is refused
+    # every raw-row entry over the half-loaded table is refused
     cl = changelog_df(spark, CFG)
     with pytest.raises(BootstrapIncompleteError):
         eng.replay(cl)
+    with pytest.raises(BootstrapIncompleteError):
+        eng.apply_range(cl, 0, 200)
+    with pytest.raises(BootstrapIncompleteError):
+        eng.apply_stream_epoch(cl, 0)
 
     # fresh engine resumes: only the 2 missing slices commit
     eng2 = CdcEngine(

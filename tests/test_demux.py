@@ -173,11 +173,13 @@ def test_streaming_demux_golden_and_idempotent(spark, workdir):
         )
 
 
-def test_sparse_lsn_offset_loss_check(spark, workdir):
-    """With a packed LSN encoding (lsn_align_bits set) the shared-offset
-    loss check compares COMMIT components: normal retention of a sparse
-    dump (next envelope at (id+1)<<16, far above last+1) must not raise;
-    a genuinely skipped commit id must."""
+@pytest.mark.parametrize("leg", ["engine", "demux"])
+def test_sparse_lsn_offset_loss_check(spark, workdir, leg):
+    """With a packed LSN encoding (lsn_align_bits set) the offset-loss
+    check compares COMMIT components, on the demux shared offset and on a
+    single stream's checkpoint alike: normal retention of a sparse dump
+    (next envelope at (id+1)<<16, far above last+1) must not raise; a
+    genuinely skipped commit id must."""
     import os as _os
 
     import pytest as _pytest
@@ -198,21 +200,23 @@ def test_sparse_lsn_offset_loss_check(spark, workdir):
     e.table.commit_metadata_only(summary={"operation": "bootstrap-done"})
     ck = Checkpoint()
     ck.max_committed_lsn = (5 << 16) | 3  # applied through batch id 5
-    save_checkpoint(dx.state_path, ck)
+    save_checkpoint(dx.state_path if leg == "demux" else e.checkpoint_path, ck)
 
     def feed(first_id):
-        return spark.createDataFrame(
+        df = spark.createDataFrame(
             [("I", f"d{i}", (i << 16), 1000 + i, 0, [1], 1, "s", "t0")
              for i in range(first_id, first_id + 3)],
             "op string, doc_id string, lsn long, ts_ms long,"
             " source_partition int, tokens array<int>, n_tok int,"
             " source string, _ab_stream string",
         )
+        return df if leg == "demux" else df.drop("_ab_stream")
 
+    replay = dx.replay if leg == "demux" else e.replay
     # next commit id (6): retention trimmed below it — fine, applies
-    stats = dx.replay(feed(6))
+    stats = replay(feed(6))
     assert stats["events"] == 3
 
     # a HOLE in commit ids (11 when 9-10 were never applied): loss
     with _pytest.raises(OffsetLossError):
-        dx.replay(feed(11))
+        replay(feed(11))

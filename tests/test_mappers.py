@@ -109,10 +109,13 @@ def _mask2(s):
     return None if s is None else s[:2] + "*" * max(len(s) - 2, 0)
 
 
-def test_engine_sync_with_mappers(spark, workdir):
+@pytest.mark.parametrize("leg", ["replay", "stream_replay", "demux", "resync"])
+def test_engine_sync_with_mappers(spark, workdir, leg):
     """Connection-level mappers applied DURING sync (StreamConfig.mappers):
-    bootstrap seed and every replay batch pass the chain, so the final
-    table equals the golden applier run over mapper-transformed records."""
+    the seed and every change row pass the chain on every ingest leg —
+    bounded replay, Structured Streaming epochs, a demux window and a
+    resync seed — so the final table equals the golden applier run over
+    mapper-transformed records."""
     import os
 
     from airbyte_spark.changelog import (
@@ -123,7 +126,9 @@ def test_engine_sync_with_mappers(spark, workdir):
         write_changelog,
     )
     from airbyte_spark.config import EngineConfig, StreamConfig
+    from airbyte_spark.demux import DemuxEngine
     from airbyte_spark.engine import CdcEngine
+    from airbyte_spark.streaming import stream_replay
     from tests.util import assert_frames_equal, final_as_pandas, golden_normalize
 
     cfg = ChangelogConfig(n_events=600, n_seed_docs=150, dup_pct=2.0, seed=11)
@@ -131,14 +136,26 @@ def test_engine_sync_with_mappers(spark, workdir):
         num_buckets=4,
         mappers=({"op": "mask_field", "name": "source", "keep_prefix": 2},),
     )
-    eng = CdcEngine(
-        spark, os.path.join(workdir, "m"), stream, EngineConfig(batch_events=200)
-    )
+    root = os.path.join(workdir, "m")
+    ecfg = EngineConfig(batch_events=200)
+    if leg == "demux":
+        dx = DemuxEngine(spark, root, [stream], cfg=ecfg)
+        eng = dx.engine(stream.name)
+    else:
+        eng = CdcEngine(spark, root, stream, ecfg)
     eng.create_table()
-    eng.bootstrap(seed_df(spark, cfg))
     cl = os.path.join(workdir, "cl")
     write_changelog(spark, cfg, cl)
-    eng.replay(cl)
+    if leg == "resync":
+        eng.resync(seed_df(spark, cfg), cl)
+    else:
+        eng.bootstrap(seed_df(spark, cfg))
+    if leg == "replay":
+        eng.replay(cl)
+    elif leg == "stream_replay":
+        stream_replay(eng, cl, os.path.join(workdir, "ss"))
+    elif leg == "demux":
+        dx.replay(changelog_df(spark, cfg).withColumn("_ab_stream", F.lit(stream.name)))
 
     # EXACT golden over the mapper-transformed records: expected = golden
     # applier run as usual, then the same mask applied to the winners'
