@@ -10,10 +10,16 @@ raw id deterministically (md5 of key+position) so replays are bit-identical
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from airbyte_spark import schemas as S
+
+
+def deleted_at(op: Column, at: Column) -> Column:
+    """The ``_ab_cdc_deleted_at`` rule: ``at`` on deletes, NULL otherwise
+    (shared with the wire decoders' tail, sources/wire.py)."""
+    return F.when(op == S.OP_DELETE, at)
 
 
 def inject_cdc_metadata(df: DataFrame, key: str = "doc_id") -> DataFrame:
@@ -33,6 +39,6 @@ def inject_cdc_metadata(df: DataFrame, key: str = "doc_id") -> DataFrame:
         )
         .withColumn(
             S.COL_DELETED_AT,
-            F.when(F.col("op") == S.OP_DELETE, F.timestamp_millis(F.col("ts_ms"))),
+            deleted_at(F.col("op"), F.timestamp_millis(F.col("ts_ms"))),
         )
     )

@@ -40,13 +40,13 @@ target compares carry over unchanged.
 Rows that fail envelope parse, carry a DDL/unknown ``type``
 (``isDdl: true`` envelopes have no row image), overflow the index budget,
 or miss their batch id decode to ``op IS NULL`` for the caller's
-quarantine split (``sources/debezium.py:split_malformed`` contract) —
+quarantine split (``sources/wire.py:split_malformed`` contract) —
 never silently dropped.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -57,6 +57,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from airbyte_spark.sources import wire
+from airbyte_spark.sources.wire import split_lines
 
 # Canal row-change types -> engine ops. "INIT" is canal-adapter's ETL
 # full-load row (the Debezium ``r`` / Maxwell ``bootstrap-insert`` analog).
@@ -122,13 +125,10 @@ def decode_canal(
 
     ``include_old=True`` appends an ``_old`` map column (changed columns'
     previous raw-text values, null except on updates — the parallel-array
-    element at this row's index). ``include_metadata=True`` appends
-    ``_ab_cdc_updated_at`` / ``_ab_cdc_deleted_at``
-    (DebeziumEventUtils.java:168-188 parity). ``include_table=True``
-    appends ``_ab_stream`` (the bare source table name — the Debezium
-    decoder's include_table contract, which DemuxEngine routes on; a
-    canal instance routes MANY tables to one topic by default, so this is
-    the normal canal deployment shape).
+    element at this row's index). ``include_metadata=True`` appends the
+    ``_ab_cdc_*`` tail and ``include_table=True`` the ``_ab_stream``
+    routing column (``sources/wire.py``) — a canal instance routes MANY
+    tables to one topic by default, the normal canal deployment shape.
 
     An envelope with more than ``2**seq_bits`` rows cannot be totally
     ordered inside the packed LSN; its overflow rows decode to ``op IS
@@ -138,19 +138,10 @@ def decode_canal(
     """
     if not 1 <= seq_bits <= 24:
         raise ValueError(f"seq_bits must be in [1, 24], got {seq_bits}")
-    # Materialize the envelope parse ONCE behind a one-element Generate
-    # (plans/transforms.py project_once rationale): without it the data
-    # array's posexplode input collapses to its own pruned from_json while
-    # every envelope-level column keeps a second full parse.
     env = F.from_json(F.col(json_col), envelope_schema())
-    keep = [F.col(partition_col)] if partition_col is not None else []
-    d = df.select(*keep, F.explode(F.array(env)).alias("_env")).select(
-        "*",
-        F.posexplode_outer("_env.data").alias("_idx", "_row"),
-    )
+    d = wire.explode_once(df, env, "data", ("_idx", "_row"), partition_col)
 
-    type_map = F.create_map(*[F.lit(x) for pair in _TYPE_MAP for x in pair])
-    op = F.try_element_at(type_map, F.col("_env.type"))
+    op = wire.op_code(_TYPE_MAP, F.col("_env.type"))
     # DDL envelopes sometimes reuse a DML-looking type string; isDdl is
     # authoritative. Overflow of the row-index budget and a missing batch id
     # (no orderable position) also quarantine, never mis-order.
@@ -163,42 +154,19 @@ def decode_canal(
 
     lsn = F.shiftleft(F.col("_env.id"), seq_bits) + F.col("_idx")
     ts_ms = F.coalesce(F.col("_env.es"), F.col("_env.ts"))
-    part = (
-        F.coalesce(F.col(partition_col).cast("int"), F.lit(0))
-        if partition_col is not None
-        else F.lit(0)
+
+    cols = wire.head(op, lsn, ts_ms, partition_col) + wire.text_payload(
+        F.col("_row"), payload_schema
     )
-
-    def _typed(f: StructField) -> Column:
-        raw = F.try_element_at(F.col("_row"), F.lit(f.name))
-        # Nested values (array/struct/map payload columns, e.g. token
-        # arrays) arrive as their raw JSON text — re-parse, don't cast.
-        if (
-            isinstance(f.dataType, (ArrayType, StructType))
-            or f.dataType.typeName() == "map"
-        ):
-            return F.from_json(raw, f.dataType).alias(f.name)
-        return raw.cast(f.dataType).alias(f.name)
-
-    cols = [
-        op.alias("op"),
-        lsn.cast("long").alias("lsn"),
-        ts_ms.cast("long").alias("ts_ms"),
-        part.alias("source_partition"),
-    ] + [_typed(f) for f in payload_schema.fields]
     if include_old:
         old_at = F.try_element_at(F.col("_env.old"), F.col("_idx") + 1)
         cols.append(
             F.when(F.col("_env.type") == "UPDATE", old_at).alias("_old")
         )
     if include_metadata:
-        updated = F.timestamp_millis(ts_ms)
-        cols += [
-            updated.alias("_ab_cdc_updated_at"),
-            F.when(op == "D", updated).alias("_ab_cdc_deleted_at"),
-        ]
+        cols += wire.cdc_metadata(op, ts_ms)
     if include_table:
-        cols.append(F.col("_env.table").alias("_ab_stream"))
+        cols.append(F.col("_env.table").alias(wire.STREAM))
     return d.select(*cols)
 
 
@@ -210,14 +178,10 @@ def decode_canal(
 DDL_MARKER_RE = r'"isDdl"\s*:\s*true'
 
 
-def split_ddl(
-    wire: DataFrame, json_col: str = "value"
-) -> tuple[DataFrame, DataFrame]:
-    """(ddl_lines, other_lines) — Canal DDL envelopes split off the data
-    stream with one cheap string filter each way (same contract as
-    ``sources/schema_change.py:split_schema_changes``)."""
-    is_ddl = F.col(json_col).rlike(DDL_MARKER_RE)
-    return wire.filter(is_ddl), wire.filter(~is_ddl | F.col(json_col).isNull())
+def split_ddl(wire: DataFrame, json_col: str = "value") -> tuple[DataFrame, DataFrame]:
+    """(ddl_lines, other_lines): Canal DDL envelopes split off the data
+    stream (``sources/wire.py:split_lines``)."""
+    return split_lines(wire, F.col(json_col).rlike(DDL_MARKER_RE), json_col)
 
 
 def decode_ddl(df: DataFrame, json_col: str = "value", seq_bits: int = 16) -> DataFrame:
@@ -238,15 +202,6 @@ def decode_ddl(df: DataFrame, json_col: str = "value", seq_bits: int = 16) -> Da
         raise ValueError(f"seq_bits must be in [1, 24], got {seq_bits}")
     env = F.from_json(F.col(json_col), envelope_schema())
     d = df.withColumn("_env", env)
-    col_t = ArrayType(
-        StructType(
-            [
-                StructField("name", StringType(), True),
-                StructField("type_name", StringType(), True),
-                StructField("optional", BooleanType(), True),
-            ]
-        )
-    )
     return d.select(
         F.shiftleft(F.coalesce(F.col("_env.id"), F.lit(0)), seq_bits)
         .cast("long")
@@ -261,5 +216,7 @@ def decode_ddl(df: DataFrame, json_col: str = "value", seq_bits: int = 16) -> Da
             "table_id"
         ),
         F.col("_env.sql").alias("ddl"),
-        F.lit(None).cast(col_t).alias("columns"),
+        F.lit(None)
+        .cast("array<struct<name:string,type_name:string,optional:boolean>>")
+        .alias("columns"),
     )

@@ -34,6 +34,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from airbyte_spark.sources import wire
+from airbyte_spark.sources.wire import split_malformed  # noqa: F401  (re-exported)
+
 # Debezium op codes (io.debezium.data.Envelope.Operation):
 #   c=create, u=update, d=delete, r=read (snapshot) -> engine I/U/D
 _OP_MAP = [("c", "I"), ("r", "I"), ("u", "U"), ("d", "D")]
@@ -41,7 +44,7 @@ _OP_MAP = [("c", "I"), ("r", "I"), ("u", "U"), ("d", "D")]
 #: fields every Debezium ``source`` block carries that we use; unknown extras
 #: are ignored by from_json (airbyte-protocol.md:444-449 — unknown fields
 #: ignored, never fatal).
-def _source_schema() -> StructType:
+def source_schema() -> StructType:
     return StructType(
         [
             StructField("ts_ms", LongType(), True),
@@ -62,7 +65,7 @@ def envelope_schema(payload_schema: StructType) -> StructType:
         [
             StructField("before", payload_schema, True),
             StructField("after", payload_schema, True),
-            StructField("source", _source_schema(), True),
+            StructField("source", source_schema(), True),
             StructField("op", StringType(), True),
             StructField("ts_ms", LongType(), True),
             # present when the connector runs with provide.transaction.metadata
@@ -160,89 +163,34 @@ def decode_debezium(
         env = F.from_json(F.col(json_col), schema)
     d = df.withColumn("_env", env)
 
-    # ONE map lookup, not a CASE chain: a downstream quarantine filter on
-    # ``op`` gets predicate-pushed below this projection by Catalyst, and a
-    # CASE chain re-evaluates the whole from_json once PER BRANCH inside the
-    # (interpreted, no-subexpr-elimination) Filter — measured 4x decode cost.
-    # try_element_at yields NULL for unknown op codes even under ANSI mode.
-    op_map = F.create_map(*[F.lit(x) for pair in _OP_MAP for x in pair])
-    op = F.try_element_at(op_map, F.col("_env.op"))
-
+    op = wire.op_code(_OP_MAP, F.col("_env.op"))
     # after-image, before-image fallback (formatRelationalDbEvent :98-109)
     image = F.coalesce(F.col("_env.after"), F.col("_env.before"))
-
     if connector == "postgres":
         lsn = F.col("_env.source.lsn")
     else:
         lsn = mysql_packed_lsn(F.col("_env.source.file"), F.col("_env.source.pos"))
-
     ts_ms = F.coalesce(F.col("_env.source.ts_ms"), F.col("_env.ts_ms"))
-    # a wire line without a partition value must not poison lineage: the
-    # engine's per-partition stats require a non-null int (unknown -> 0)
-    part = (
-        F.coalesce(F.col(partition_col).cast("int"), F.lit(0))
-        if partition_col is not None
-        else F.lit(0)
-    )
 
-    # One-shot carrier (plans/transforms.py project_once): the envelope
-    # from_json evaluates exactly once per row. Without the barrier,
-    # CollapseProject inlines ``_env`` into every output column and
-    # OptimizeJsonExprs splits the single typed parse into one pruned
-    # from_json per payload field (each re-scanning the JSON text), and the
-    # quarantine filter (split_malformed) re-derives ``op`` with its own
-    # envelope parse per row.
-    fields = [
-        op.alias("op"),
-        lsn.cast("long").alias("lsn"),
-        ts_ms.cast("long").alias("ts_ms"),
-        part.alias("source_partition"),
-        image.alias("_img"),
-    ]
+    carrier = wire.head(op, lsn, ts_ms, partition_col) + [image.alias("_img")]
     if include_table:
-        fields.append(F.col("_env.source.table").alias("_tbl"))
+        carrier.append(F.col("_env.source.table").alias("_tbl"))
     if include_txn:
-        fields.append(F.col("_env.transaction.id").alias("_txid"))
-        fields.append(F.col("_env.transaction.total_order").alias("_txord"))
-    carrier = F.struct(*fields)
+        carrier.append(F.col("_env.transaction.id").alias("_txid"))
+        carrier.append(F.col("_env.transaction.total_order").alias("_txord"))
 
-    def _out(once: Column) -> list[Column]:
-        o = once.getField("op")
-        t = once.getField("ts_ms")
-        cols = [
-            o.alias("op"),
-            once.getField("lsn").alias("lsn"),
-            t.alias("ts_ms"),
-            once.getField("source_partition").alias("source_partition"),
-        ] + [
-            once.getField("_img").getField(f.name).alias(f.name)
-            for f in payload_schema.fields
-        ]
+    def _rest(once: Column) -> list[Column]:
+        cols = wire.payload(once.getField("_img"), payload_schema)
         if include_table:
-            cols.append(once.getField("_tbl").alias("_ab_stream"))
+            cols.append(once.getField("_tbl").alias(wire.STREAM))
         if include_txn:
             cols.append(once.getField("_txid").alias("_txn_id"))
             cols.append(once.getField("_txord").alias("_txn_order"))
         if include_metadata:
-            updated = F.timestamp_millis(t)
-            cols += [
-                updated.alias("_ab_cdc_updated_at"),
-                F.when(o == "D", updated).alias("_ab_cdc_deleted_at"),
-            ]
+            cols += wire.cdc_metadata(once.getField("op"), once.getField("ts_ms"))
         return cols
 
-    from airbyte_spark.plans.transforms import project_once
-
-    return project_once(d, carrier, _out)
-
-
-def split_malformed(decoded: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good, quarantine): rows with null op failed envelope parse or carried
-    an unknown op code. The reference fails the sync on undecodable events;
-    at lake scale quarantining beats poisoning a 10^10-event replay."""
-    return decoded.filter(F.col("op").isNotNull()), decoded.filter(
-        F.col("op").isNull()
-    )
+    return wire.emit_once(d, carrier, _rest)
 
 
 # --------------------------------------------------- transaction metadata
@@ -428,20 +376,3 @@ def split_complete_transactions(
         tagged.filter(ok).select(*cols),
         tagged.filter(~ok).select(*cols),
     )
-
-
-def gate_on_transaction_markers(
-    events: DataFrame, marker_lines: DataFrame, **scope
-) -> tuple[DataFrame, int]:
-    """The wire jobs' transaction gate: decode the raw marker topic, split
-    ``events`` by :func:`split_complete_transactions` (``scope``: its
-    ``collection`` or ``collection_col``) and drop the txn columns. The
-    verdict is cached: a batched replay re-scans the complete side once per
-    LSN window. Returns (complete events, pending event count) — pending
-    transactions are not errors; they stay in the topic and replay once a
-    fuller dump arrives (batch-id idempotence absorbs the overlap)."""
-    markers = decode_transaction_markers(marker_lines).filter("status IS NOT NULL")
-    complete, pending = split_complete_transactions(
-        events, markers, cache_verdict=True, **scope
-    )
-    return complete.drop("_txn_id", "_txn_order"), pending.count()

@@ -41,14 +41,12 @@ explicitly:
    table-level events) that carry no row image -> quarantine/route.
 
 Spark-first decode, zero Python on the data path: ONE typed ``from_json``
-behind the ``project_once`` Generate barrier (same plan contract as the
-other five decoders, gated in tests/test_plans.py), a map-lookup op
-translation, and a narrow projection — all whole-stage codegen.
+read into the shared changelog row once per row (``sources/wire.py``).
 
 Rows that fail envelope parse, carry ``record-type`` other than
 ``data``, an unknown ``operation``, an unparseable timestamp, or a
 ``seq`` past the budget decode to ``op IS NULL`` for the caller's
-quarantine split (``sources/debezium.py:split_malformed`` contract) —
+quarantine split (``sources/wire.py:split_malformed`` contract) —
 never silently dropped.
 """
 
@@ -62,6 +60,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from airbyte_spark.sources import wire
 
 # DMS operations -> engine ops. "load" is the full-load phase (Debezium
 # "r" / Maxwell "bootstrap-insert" analog).
@@ -118,11 +118,9 @@ def decode_dms(
     carry the key columns in ``data`` (non-key payload NULL), matching the
     reference's delete handling (docs/understanding-airbyte/cdc.md:29).
 
-    ``include_metadata=True`` appends ``_ab_cdc_updated_at`` /
-    ``_ab_cdc_deleted_at`` (DebeziumEventUtils.java:168-188 parity).
-    ``include_table=True`` appends ``_ab_stream``
-    (the bare ``table-name`` — the Debezium decoder's include_table
-    contract, which DemuxEngine routes on).
+    ``include_metadata=True`` appends the ``_ab_cdc_*`` tail and
+    ``include_table=True`` the ``_ab_stream`` routing column (the bare
+    ``table-name``), both from ``sources/wire.py``.
 
     Commit-time packing budget: epoch micros need 51 bits for current
     dates (2^51 us = year 2041), so the default ``seq_bits=12`` (4096
@@ -136,8 +134,8 @@ def decode_dms(
     env = F.from_json(F.col(json_col), envelope_schema(payload_schema))
     d = df.withColumn("_env", env)
 
-    op_map = F.create_map(*[F.lit(x) for pair in _OP_MAP for x in pair])
-    op = F.try_element_at(op_map, F.lower(F.col("_env.metadata.operation")))
+    meta = F.col("_env").getField("metadata")  # hyphenated keys: getField
+    op = wire.op_code(_OP_MAP, F.lower(F.col("_env.metadata.operation")))
 
     # ISO-8601 with Z suffix casts directly (try_cast: malformed -> NULL
     # under ANSI mode, not a throw) -> no orderable position -> quarantine
@@ -150,7 +148,7 @@ def decode_dms(
     )
     max_base = (1 << (63 - seq_bits)) - 1
     bad = (
-        (F.coalesce(F.col("_env").getField("metadata").getField("record-type"), F.lit("data")) != "data")
+        (F.coalesce(meta.getField("record-type"), F.lit("data")) != "data")
         | micros.isNull()
         | (micros > F.lit(max_base))
         | (seq >= F.lit(1 << seq_bits))
@@ -159,56 +157,22 @@ def decode_dms(
     op = F.when(~bad, op)
     lsn = F.shiftleft(micros, seq_bits) + seq
 
-    part = (
-        F.coalesce(F.col(partition_col).cast("int"), F.lit(0))
-        if partition_col is not None
-        else F.lit(0)
-    )
-
-    # One-shot carrier (plans/transforms.py project_once): the envelope
-    # from_json evaluates exactly once per row — without the barrier,
-    # CollapseProject + OptimizeJsonExprs split the typed parse into one
-    # pruned from_json per output field (see sources/debezium.py:142).
-    fields = [
-        op.alias("op"),
-        lsn.cast("long").alias("lsn"),
-        # floor of the double division is exact here: micros < 2^53 so
-        # the quotient rounds within 1 ulp (~2^-12), never across an integer
-        F.floor(micros / 1000).cast("long").alias("ts_ms"),
-        F.col("_env").getField("metadata").getField("transaction-id").alias("txn_id"),
-        part.alias("source_partition"),
-        F.col("_env.data").alias("_img"),
-    ]
+    # floor of the double division is exact here: micros < 2^53 so the
+    # quotient rounds within 1 ulp (~2^-12), never across an integer
+    carrier = wire.head(op, lsn, F.floor(micros / 1000), partition_col)
+    carrier[3:3] = [meta.getField("transaction-id").alias("txn_id")]
+    carrier.append(F.col("_env.data").alias("_img"))
     if include_table:
-        fields.append(
-            F.col("_env").getField("metadata").getField("table-name")
-            .alias("_tbl")
-        )
-    carrier = F.struct(*fields)
+        carrier.append(meta.getField("table-name").alias("_tbl"))
 
-    def _out(once: Column) -> list[Column]:
-        o = once.getField("op")
-        t = once.getField("ts_ms")
-        cols = [
-            o.alias("op"),
-            once.getField("lsn").alias("lsn"),
-            t.alias("ts_ms"),
-            once.getField("txn_id").alias("txn_id"),
-            once.getField("source_partition").alias("source_partition"),
-        ] + [
-            once.getField("_img").getField(f.name).alias(f.name)
-            for f in payload_schema.fields
-        ]
+    def _rest(once: Column) -> list[Column]:
+        cols = wire.payload(once.getField("_img"), payload_schema)
         if include_metadata:
-            updated = F.timestamp_millis(t)
-            cols += [
-                updated.alias("_ab_cdc_updated_at"),
-                F.when(o == "D", updated).alias("_ab_cdc_deleted_at"),
-            ]
+            cols += wire.cdc_metadata(once.getField("op"), once.getField("ts_ms"))
         if include_table:
-            cols.append(once.getField("_tbl").alias("_ab_stream"))
+            cols.append(once.getField("_tbl").alias(wire.STREAM))
         return cols
 
-    from airbyte_spark.plans.transforms import project_once
-
-    return project_once(d, carrier, _out)
+    # the envelope parses once per row: sources/wire.py emit_once
+    names = ("op", "lsn", "ts_ms", "txn_id", "source_partition")
+    return wire.emit_once(d, carrier, _rest, names)

@@ -26,10 +26,8 @@ Debezium's in four ways this module models explicitly:
    back to the monotonic ``xid``.
 
 Spark-first decode, zero Python on the data path: ONE typed ``from_json``
-(the caller's payload schema typed directly under ``data``), a map-lookup op
-translation, and a single projection behind the ``project_once`` barrier so
-the envelope parse evaluates exactly once per row (same plan-hygiene contract
-as the other wire decoders, gated in tests/test_plans.py).
+(the caller's payload schema typed directly under ``data``) read into the
+shared changelog row once per row (``sources/wire.py``).
 
 LSN packing: total order = (transaction position, within-transaction order),
 as one orderable long:
@@ -46,7 +44,7 @@ as one orderable long:
 The commit row is the LAST change of its transaction, so its suborder is the
 max (2^seq_bits - 1); explicit ``xoffset`` values must stay below that —
 rows that overflow the budget decode to ``op IS NULL`` for the caller's
-quarantine split (``sources/debezium.py:split_malformed`` contract), as do
+quarantine split (``sources/wire.py:split_malformed`` contract), as do
 parse failures, non-row types (``bootstrap-start``/``bootstrap-complete``
 framing, DDL events), binlog rotation indexes past the
 ``2^(63-32-seq_bits)`` packing budget (a wrapped LSN would silently
@@ -69,6 +67,10 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from airbyte_spark.sources import wire
+from airbyte_spark.sources.debezium import mysql_packed_lsn
+from airbyte_spark.sources.wire import split_lines
 
 # Maxwell row-change types -> engine ops. ``bootstrap-insert`` is Maxwell's
 # initial-snapshot row (the Debezium ``r`` analog) -> I. Framing rows
@@ -106,8 +108,6 @@ def envelope_schema(payload_schema: StructType) -> StructType:
     )
 
 
-
-
 def decode_maxwell(
     df: DataFrame,
     payload_schema: StructType,
@@ -130,20 +130,18 @@ def decode_maxwell(
 
     ``include_old=True`` appends an ``_old`` struct column (changed columns'
     previous values, null except on updates). ``include_metadata=True``
-    appends ``_ab_cdc_updated_at`` / ``_ab_cdc_deleted_at``
-    (DebeziumEventUtils.java:168-188 parity, same as the Debezium decoder).
+    appends the ``_ab_cdc_*`` tail (``sources/wire.py:cdc_metadata``).
 
     Rows that fail envelope parse, carry a non-row ``type``, or overflow the
     suborder budget decode to ``op IS NULL`` — route with
-    :func:`airbyte_spark.sources.debezium.split_malformed`.
+    :func:`airbyte_spark.sources.wire.split_malformed`.
     """
     if not 1 <= seq_bits <= 24:
         raise ValueError(f"seq_bits must be in [1, 24], got {seq_bits}")
     env = F.from_json(F.col(json_col), envelope_schema(payload_schema))
     d = df.withColumn("_env", env)
 
-    type_map = F.create_map(*[F.lit(x) for pair in _TYPE_MAP for x in pair])
-    op = F.try_element_at(type_map, F.col("_env.type"))
+    op = wire.op_code(_TYPE_MAP, F.col("_env.type"))
 
     commit_sub = F.lit((1 << seq_bits) - 1).cast("long")
     # commit row (commit:true, no xoffset) is last in its txn -> max suborder;
@@ -169,8 +167,6 @@ def decode_maxwell(
         file_part = F.substring_index(pos, ":", 1)
         off = F.substring_index(pos, ":", -1).cast("long")
         idx = F.regexp_extract(file_part, r"(\d+)$", 1).cast("long")
-        from airbyte_spark.sources.debezium import mysql_packed_lsn
-
         base = F.when(pos.isNull() & is_bootstrap, zero).otherwise(
             F.shiftleft(mysql_packed_lsn(file_part, off), seq_bits)
         )
@@ -193,52 +189,20 @@ def decode_maxwell(
     lsn = base + sub
 
     ts_ms = F.col("_env.ts") * F.lit(1000)
-    part = (
-        F.coalesce(F.col(partition_col).cast("int"), F.lit(0))
-        if partition_col is not None
-        else F.lit(0)
-    )
-
-    # One-shot carrier (plans/transforms.py project_once): the envelope
-    # from_json evaluates exactly once per row — without the barrier,
-    # CollapseProject + OptimizeJsonExprs split the typed parse into one
-    # pruned from_json per output field (see sources/debezium.py:142).
-    fields = [
-        op.alias("op"),
-        lsn.cast("long").alias("lsn"),
-        ts_ms.cast("long").alias("ts_ms"),
-        part.alias("source_partition"),
-        F.col("_env.data").alias("_img"),
-    ]
+    carrier = wire.head(op, lsn, ts_ms, partition_col) + [F.col("_env.data").alias("_img")]
     if include_old:
-        fields.append(F.col("_env.old").alias("_old"))
-    carrier = F.struct(*fields)
+        carrier.append(F.col("_env.old").alias("_old"))
 
-    def _out(once: Column) -> list[Column]:
-        o = once.getField("op")
-        t = once.getField("ts_ms")
-        cols = [
-            o.alias("op"),
-            once.getField("lsn").alias("lsn"),
-            t.alias("ts_ms"),
-            once.getField("source_partition").alias("source_partition"),
-        ] + [
-            once.getField("_img").getField(f.name).alias(f.name)
-            for f in payload_schema.fields
-        ]
+    def _rest(once: Column) -> list[Column]:
+        cols = wire.payload(once.getField("_img"), payload_schema)
         if include_old:
             cols.append(once.getField("_old").alias("_old"))
         if include_metadata:
-            updated = F.timestamp_millis(t)
-            cols += [
-                updated.alias("_ab_cdc_updated_at"),
-                F.when(o == "D", updated).alias("_ab_cdc_deleted_at"),
-            ]
+            cols += wire.cdc_metadata(once.getField("op"), once.getField("ts_ms"))
         return cols
 
-    from airbyte_spark.plans.transforms import project_once
-
-    return project_once(d, carrier, _out)
+    # the envelope parses once per row: sources/wire.py emit_once
+    return wire.emit_once(d, carrier, _rest)
 
 
 # --------------------------------------------------------------- DDL events
@@ -251,11 +215,9 @@ DDL_MARKER_RE = r'"type"\s*:\s*"table-'
 
 
 def split_ddl(wire: DataFrame, json_col: str = "value") -> tuple[DataFrame, DataFrame]:
-    """(ddl_lines, other_lines) — Maxwell ``output_ddl`` envelopes split off
-    the data stream with one cheap string filter each way (same contract as
-    ``sources/schema_change.py:split_schema_changes``)."""
-    is_ddl = F.col(json_col).rlike(DDL_MARKER_RE)
-    return wire.filter(is_ddl), wire.filter(~is_ddl | F.col(json_col).isNull())
+    """(ddl_lines, other_lines): Maxwell ``output_ddl`` envelopes split off
+    the data stream (``sources/wire.py:split_lines``)."""
+    return split_lines(wire, F.col(json_col).rlike(DDL_MARKER_RE), json_col)
 
 
 def _ddl_envelope() -> StructType:

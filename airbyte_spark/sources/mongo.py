@@ -42,7 +42,7 @@ patch mode.
 Spark-first: the whole decode is two typed ``from_json`` calls (envelope,
 then image) plus string-level ``$oid`` normalization — all inside
 whole-stage codegen, no Python on the data path. Undecodable rows yield
-``op IS NULL`` for :func:`airbyte_spark.sources.debezium.split_malformed`
+``op IS NULL`` for :func:`airbyte_spark.sources.wire.split_malformed`
 quarantine routing.
 """
 
@@ -57,6 +57,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from airbyte_spark.sources import wire
 
 # Debezium-Mongo op codes -> engine ops (DebeziumEventUtils.java:87-90).
 _OP_MAP = [("c", "I"), ("i", "I"), ("r", "I"), ("u", "U"), ("d", "D")]
@@ -156,13 +158,12 @@ def decode_mongo(
     payloads (caller is expected to run full-document capture).
 
     Parse failures / unknown ops decode to ``op IS NULL`` — route with
-    :func:`airbyte_spark.sources.debezium.split_malformed`.
+    :func:`airbyte_spark.sources.wire.split_malformed`.
     """
     env = F.from_json(F.col(json_col), envelope_schema())
     d = df.withColumn("_env", env)
 
-    op_map = F.create_map(*[F.lit(x) for pair in _OP_MAP for x in pair])
-    op_raw = F.try_element_at(op_map, F.col("_env.op"))
+    op_raw = wire.op_code(_OP_MAP, F.col("_env.op"))
 
     after_txt = _normalize_oid(F.col("_env.after"))
     before_txt = _normalize_oid(F.col("_env.before"))
@@ -185,13 +186,6 @@ def decode_mongo(
 
     lsn = bson_timestamp_lsn(F.col("_env.source.sec"), F.col("_env.source.ord"))
     ts_ms = F.coalesce(F.col("_env.source.ts_ms"), F.col("_env.ts_ms"))
-    # a wire line without a partition value must not poison lineage: the
-    # engine's per-partition stats require a non-null int (unknown -> 0)
-    part = (
-        F.coalesce(F.col(partition_col).cast("int"), F.lit(0))
-        if partition_col is not None
-        else F.lit(0)
-    )
     key_id = (
         _key_id(F.col(key_col)) if key_col is not None else F.lit(None).cast("string")
     )
@@ -202,16 +196,12 @@ def decode_mongo(
     # parse into one PRUNED from_json per payload field (each re-scanning
     # the full JSON text — measured 4x) and the quarantine filter re-derives
     # ``op`` with its own envelope parse (another 2x on the split path).
-    carrier_fields = [
-        op.alias("op"),
-        lsn.alias("lsn"),
-        ts_ms.cast("long").alias("ts_ms"),
-        part.alias("source_partition"),
+    carrier = wire.head(op, lsn, ts_ms, partition_col) + [
         image.alias("_img"),
         key_id.alias("_kid"),
     ]
     if emit_patch:
-        carrier_fields += [
+        carrier += [
             F.when(is_patch_u, patch_img).alias("_pimg"),
             is_patch_u.alias("_isp"),
             F.when(
@@ -226,7 +216,7 @@ def decode_mongo(
             .alias("_ab_null_fields"),
         ]
 
-    def _out(once: Column) -> list[Column]:
+    def _rest(once: Column) -> list[Column]:
         def payload_col(f) -> Column:
             base = once.getField("_img").getField(f.name)
             if emit_patch:
@@ -239,16 +229,9 @@ def decode_mongo(
                 base = F.coalesce(base, once.getField("_kid"))
             return base.alias(f.name)
 
-        cols = [
-            once.getField("op").alias("op"),
-            once.getField("lsn").alias("lsn"),
-            once.getField("ts_ms").alias("ts_ms"),
-            once.getField("source_partition").alias("source_partition"),
-        ] + [payload_col(f) for f in payload_schema.fields]
+        cols = [payload_col(f) for f in payload_schema.fields]
         if emit_patch:
             cols.append(once.getField("_ab_null_fields").alias("_ab_null_fields"))
         return cols
 
-    from airbyte_spark.plans.transforms import project_once
-
-    return project_once(d, F.struct(*carrier_fields), _out)
+    return wire.emit_once(d, carrier, _rest)

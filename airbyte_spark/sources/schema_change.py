@@ -51,6 +51,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from airbyte_spark.sources.debezium import mysql_packed_lsn, source_schema
+from airbyte_spark.sources.wire import split_lines
+
 #: the cheap wire-side marker: every Debezium schema-change envelope carries
 #: ``tableChanges`` (HistoryRecord.Fields.TABLE_CHANGES); no data envelope
 #: does. A plain string-contains filter pushes to the scan on both sides.
@@ -101,20 +104,6 @@ def spark_type(type_name: str) -> DataType | None:
     return _TYPE_MAP.get(t)
 
 
-def _source_schema() -> StructType:
-    return StructType(
-        [
-            StructField("ts_ms", LongType(), True),
-            StructField("lsn", LongType(), True),      # postgres
-            StructField("file", StringType(), True),   # mysql
-            StructField("pos", LongType(), True),      # mysql
-            StructField("db", StringType(), True),
-            StructField("schema", StringType(), True),
-            StructField("table", StringType(), True),
-        ]
-    )
-
-
 def schema_change_envelope() -> StructType:
     """The typed Debezium schema-change envelope (SchemaChangeEvent JSON:
     databaseName/schemaName/ddl/tableChanges[{type,id,table.columns[]}])."""
@@ -145,7 +134,12 @@ def schema_change_envelope() -> StructType:
     )
     return StructType(
         [
-            StructField("source", _source_schema(), True),
+            # the data envelopes' source block minus ``snapshot``
+            StructField(
+                "source",
+                StructType([f for f in source_schema().fields if f.name != "snapshot"]),
+                True,
+            ),
             StructField("ts_ms", LongType(), True),
             StructField("databaseName", StringType(), True),
             StructField("schemaName", StringType(), True),
@@ -156,10 +150,9 @@ def schema_change_envelope() -> StructType:
 
 
 def split_schema_changes(wire: DataFrame, json_col: str = "value") -> tuple[DataFrame, DataFrame]:
-    """(schema_change_lines, other_lines) — one pushed contains-filter each
-    way; works on batch and streaming DataFrames alike."""
-    is_sc = F.col(json_col).contains(SCHEMA_CHANGE_MARKER)
-    return wire.filter(is_sc), wire.filter(~is_sc | F.col(json_col).isNull())
+    """(schema_change_lines, other_lines): one pushed contains-filter each
+    way (``sources/wire.py:split_lines``)."""
+    return split_lines(wire, F.col(json_col).contains(SCHEMA_CHANGE_MARKER), json_col)
 
 
 def decode_schema_changes(
@@ -184,8 +177,6 @@ def decode_schema_changes(
     if connector == "postgres":
         lsn: Column = F.col("_env.source.lsn")
     else:
-        from airbyte_spark.sources.debezium import mysql_packed_lsn
-
         lsn = mysql_packed_lsn(F.col("_env.source.file"), F.col("_env.source.pos"))
     exploded = d.select(
         lsn.cast("long").alias("lsn"),

@@ -39,7 +39,7 @@ Spark-first decode, zero Python on the data path:
 
 Rows that fail envelope parse, carry an unknown ``kind``, or overflow the
 statement-index budget decode to ``op IS NULL`` for the caller's quarantine
-split (same contract as ``sources/debezium.py:split_malformed``) — never
+split (same contract as ``sources/wire.py:split_malformed``) — never
 silently dropped.
 """
 
@@ -54,6 +54,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from airbyte_spark.sources import wire
 
 # wal2json change kinds -> engine ops. "message" (pg_logical_emit_message) and
 # "truncate" have no per-row image; they map to NULL -> quarantine/route.
@@ -133,19 +135,10 @@ def decode_wal2json(
     NULL`` so the caller's quarantine split surfaces them instead of silently
     corrupting replay order.
     """
-    # Materialize the envelope parse ONCE behind a one-element Generate
-    # (plans/transforms.py project_once rationale): without it the change
-    # array's posexplode input collapses to its own pruned from_json while
-    # the _env passthrough column keeps a second full parse.
     env = F.from_json(F.col(json_col), envelope_schema())
-    keep = [F.col(partition_col)] if partition_col is not None else []
-    d = df.select(*keep, F.explode(F.array(env)).alias("_env")).select(
-        "*",
-        F.posexplode_outer("_env.change").alias("_seq", "_ch"),
-    )
+    d = wire.explode_once(df, env, "change", ("_seq", "_ch"), partition_col)
 
-    kind_map = F.create_map(*[F.lit(x) for pair in _KIND_MAP for x in pair])
-    op = F.try_element_at(kind_map, F.col("_ch.kind"))
+    op = wire.op_code(_KIND_MAP, F.col("_ch.kind"))
     # overflow of the statement-index budget -> quarantine, never mis-order
     op = F.when(F.col("_seq") < F.lit(1 << seq_bits), op)
 
@@ -159,31 +152,13 @@ def decode_wal2json(
     commit_lsn = pack_pg_lsn(F.col("_env.nextlsn"))
     lsn = F.shiftleft(commit_lsn, seq_bits) + F.col("_seq")
     ts_ms = F.unix_millis(F.to_timestamp(F.col("_env.timestamp")))
-    # a wire line without a partition value must not poison lineage: the
-    # engine's per-partition stats require a non-null int (unknown -> 0)
-    part = (
-        F.coalesce(F.col(partition_col).cast("int"), F.lit(0))
-        if partition_col is not None
-        else F.lit(0)
-    )
 
-    def _typed(f: StructField) -> Column:
-        raw = F.try_element_at(image, F.lit(f.name))
-        # Nested values (array/struct/map payload columns, e.g. token arrays)
-        # arrive as their raw JSON text — re-parse, don't cast.
-        if isinstance(f.dataType, (ArrayType, StructType)) or f.dataType.typeName() == "map":
-            return F.from_json(raw, f.dataType).alias(f.name)
-        return raw.cast(f.dataType).alias(f.name)
-
-    cols = [
-        op.alias("op"),
-        lsn.cast("long").alias("lsn"),
+    cols = wire.head(op, lsn, ts_ms, partition_col)
+    cols[2:2] = [  # xid, txn_seq sit between lsn and ts_ms
         F.col("_env.xid").cast("long").alias("xid"),
         F.col("_seq").cast("int").alias("txn_seq"),
-        ts_ms.cast("long").alias("ts_ms"),
-        part.alias("source_partition"),
-    ] + [_typed(f) for f in payload_schema.fields]
-    return d.select(*cols)
+    ]
+    return d.select(*cols, *wire.text_payload(image, payload_schema))
 
 
 def txn_stats(decoded: DataFrame) -> DataFrame:

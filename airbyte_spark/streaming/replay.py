@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from airbyte_spark.engine import CdcEngine, read_changelog
+from airbyte_spark.sources.wire import quarantine_malformed
 
 
 def _file_stream(
@@ -93,14 +94,10 @@ def stream_replay_df(
         applied["epochs"] += 1
         good = batch_df
         if quarantine is not None:
-            bad = batch_df.filter(F.col("op").isNull())
-            n_bad = bad.count()
-            if n_bad:
-                bad.write.mode("overwrite").parquet(
-                    f"{quarantine}/epoch={int(epoch_id)}"
-                )
+            good, n_bad = quarantine_malformed(
+                batch_df, f"{quarantine}/epoch={int(epoch_id)}", mode="overwrite"
+            )
             applied["quarantined"] += n_bad
-            good = batch_df.filter(F.col("op").isNotNull())
         applied["rows_applied"] += engine.apply_stream_epoch(good, epoch_id)
 
     _start(stream, sink, checkpoint_dir, availableNow=True).awaitTermination(timeout_s)

@@ -3,17 +3,15 @@
 
 The missing first mile of ``replay_job.py``: that job replays an
 already-typed changelog; THIS one starts from the raw wire — a directory
-of JSON-lines files holding Debezium/Mongo change-event envelopes exactly
-as a Kafka-topic dump lands them (one object per line: ``value`` = the
-envelope JSON, optional ``key`` = the event key JSON, optional
-``partition`` = the Kafka partition) — decodes them connector-appropriately
-(``sources/debezium.py`` for postgres/mysql, ``sources/mongo.py`` for
-mongo, incl. ``--update-mode patch`` for change streams without
-full-document lookup, ``sources/wal2json.py`` for transaction-grouped
-wal2json output with commit-aligned replay windows by default),
-quarantines undecodable lines to a parquet side
-path (never silently dropped, never poisoning the replay), and replays the
-good rows through the engine with the usual exactly-once checkpointing:
+of JSON-lines files holding change-event envelopes of any of the six wire
+formats (Debezium postgres/mysql, Debezium-Mongo, wal2json, Maxwell,
+Canal, AWS DMS) exactly as a Kafka-topic dump lands them (one object per
+line, ``sources/connectors.py:WIRE_SCHEMA``) — decodes them through the
+``--connector`` row of ``sources/connectors.py`` (decoder, commit-aligned
+replay windows, in-stream DDL), quarantines undecodable lines to a parquet
+side path (never silently dropped, never poisoning the replay), and
+replays the good rows through the engine with the usual exactly-once
+checkpointing:
 
     python -m zipfile -c /tmp/airbyte_spark.zip airbyte_spark
     spark-submit --master local[8] --py-files /tmp/airbyte_spark.zip \\
@@ -35,14 +33,14 @@ import sys
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from airbyte_spark.sources.connectors import CONNECTORS
+
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--lake", required=True, help="lake root (table + checkpoint)")
     p.add_argument("--wire", required=True,
                    help="directory of JSON-lines Kafka-dump files "
                         "({value, key?, partition?} per line)")
-    p.add_argument("--connector", required=True,
-                   choices=["postgres", "mysql", "mongo", "wal2json",
-                            "maxwell", "canal", "dms"])
+    p.add_argument("--connector", required=True, choices=list(CONNECTORS))
     p.add_argument("--lsn-align-bits", type=int, default=None,
                    help="LSN packs (commit_lsn << bits | statement_index) "
                         "(wal2json/maxwell/canal: 16): align replay-window "
@@ -102,12 +100,27 @@ def run(spark, args) -> dict:
     Split from ``main`` so tests (and notebook users) can drive the job
     in-process without the session lifecycle."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+    from pyspark.sql.types import StructField, StructType
 
     from airbyte_spark.config import EngineConfig, StreamConfig
     from airbyte_spark.engine import CdcEngine
     from airbyte_spark.lake.table import LakeTable
-    from airbyte_spark.sources.debezium import decode_debezium, split_malformed
+    from airbyte_spark.lineage import log_metric
+    from airbyte_spark.sources.connectors import CONNECTORS, admit, read_wire
+
+    conn = CONNECTORS[args.connector]
+    streaming = getattr(args, "streaming", False)
+    # every flag combination is checked before the engine, the table or a
+    # DDL commit touches the lake: a rejected run leaves it as it was
+    if streaming and not args.ss_checkpoint:
+        raise SystemExit("--streaming requires --ss-checkpoint")
+    if args.txn_markers is not None and not conn.txn_markers:
+        raise SystemExit("--txn-markers requires a Debezium connector")
+    if args.txn_markers is not None and streaming:
+        raise SystemExit(
+            "--txn-markers needs the bounded replay path (the gate "
+            "aggregates per-transaction counts over the window)"
+        )
 
     eng = CdcEngine(
         spark,
@@ -122,78 +135,34 @@ def run(spark, args) -> dict:
             validate_tokens=args.validate_tokens,
             vocab_size=args.vocab_size,
             lsn_align_bits=(
-                args.lsn_align_bits
-                if args.lsn_align_bits is not None
-                else (
-                    16
-                    if args.connector in ("wal2json", "maxwell", "canal")
-                    else None
-                )
+                conn.align_bits if args.lsn_align_bits is None else args.lsn_align_bits
             ),
         ),
     )
     if not LakeTable.exists(eng.table_root):
         eng.create_table(_table_schema_from_ddl(args))
 
-    wire_schema = StructType(
-        [
-            StructField("value", StringType(), True),
-            StructField("key", StringType(), True),
-            StructField("partition", LongType(), True),
-            # optional wire sequence (e.g. Kinesis sequence number / dump
-            # line number) — DMS needs it to break same-microsecond ties;
-            # absent in the dump -> NULL -> seq 0
-            StructField("seq", LongType(), True),
-        ]
-    )
-    streaming = getattr(args, "streaming", False)
-    wire = batch_wire = spark.read.schema(wire_schema).json(args.wire)
+    wire = batch_wire = read_wire(spark, args.wire)
     if streaming:
-        if not args.ss_checkpoint:
-            raise SystemExit("--streaming requires --ss-checkpoint")
-        wire = spark.readStream.schema(wire_schema).json(args.wire)
+        wire = read_wire(spark, args.wire, streaming=True)
 
-    # In-stream DDL: Debezium schema-change envelopes (tableChanges) evolve
-    # the table BEFORE the data decode, so the DML from_json uses the final
-    # (widest) payload schema — additive evolution makes early-apply sound
-    # (pre-DDL envelopes parse to NULL for the new column; widened columns
-    # parse old narrower values exactly). Streaming uses a bounded batch
-    # pre-pass over the same dump for the (metadata-scale) DDL side and
-    # filters those lines out of the stream.
-    split_ddl = decode_ddl = None
-    if args.connector in ("postgres", "mysql"):
-        from airbyte_spark.sources.schema_change import (
-            decode_schema_changes,
-            split_schema_changes as split_ddl,
-        )
-
-        def decode_ddl(lines):
-            return decode_schema_changes(lines, connector=args.connector)
-    elif args.connector == "maxwell":
-        # Maxwell output_ddl: table-create/alter envelopes carry the full
-        # post-change column list under def.columns — same fold, same
-        # early-apply soundness argument as the Debezium branch
-        from airbyte_spark.sources.maxwell import decode_ddl, split_ddl
-    elif args.connector == "canal":
-        # Canal DDL envelopes carry only the raw SQL text (no structured
-        # post-change column list), so they cannot drive the additive-
-        # evolution fold; split them off the data stream and surface the
-        # count — operators re-discover the schema (or pass --payload-ddl)
-        # after a DDL point. decode_canal would quarantine them anyway;
-        # splitting keeps the malformed count meaningful.
-        from airbyte_spark.sources.canal import split_ddl
+    # In-stream DDL: schema-change envelopes evolve the table BEFORE the
+    # data decode, so the DML from_json uses the final (widest) payload
+    # schema — additive evolution makes early-apply sound (pre-DDL
+    # envelopes parse to NULL for the new column; widened columns parse old
+    # narrower values exactly). Streaming uses a bounded batch pre-pass
+    # over the same dump for the (metadata-scale) DDL side and filters
+    # those lines out of the stream.
     n_ddl = 0
-    if split_ddl is not None:
-        from airbyte_spark.lineage import log_metric
-
-        ddl_lines, _ = split_ddl(batch_wire)
-        _, wire = split_ddl(wire)
-        if decode_ddl is None:
-            n_canal_ddl = ddl_lines.count()
-            if n_canal_ddl:
-                log_metric("ddl_requires_rediscover", rows=n_canal_ddl)
+    if conn.split_ddl is not None:
+        ddl_lines, _ = conn.split_ddl(batch_wire)
+        _, wire = conn.split_ddl(wire)
+        if conn.decode_ddl is None:
+            n_raw_ddl = ddl_lines.count()
+            if n_raw_ddl:
+                log_metric("ddl_requires_rediscover", rows=n_raw_ddl)
         else:
-            changes = decode_ddl(ddl_lines)
+            changes = conn.decode_ddl(ddl_lines)
             n_bad_ddl = changes.filter(F.col("change_type").isNull()).count()
             if n_bad_ddl:
                 log_metric("ddl_quarantined", rows=n_bad_ddl)
@@ -213,99 +182,40 @@ def run(spark, args) -> dict:
         payload = StructType(
             [f for f in S.payload_fields(snap.schema) if f.name != "op"]
         )
-    if args.connector == "mongo" and args.mongo_id_field != args.pk:
-        payload = StructType(
-            [
-                StructField(args.mongo_id_field, f.dataType, f.nullable)
-                if f.name == args.pk
-                else f
-                for f in payload.fields
-            ]
-        )
+    id_field = args.mongo_id_field if args.connector == "mongo" else args.pk
+    if id_field != args.pk:
+        payload = StructType([
+            StructField(id_field, f.dataType, f.nullable) if f.name == args.pk else f
+            for f in payload.fields
+        ])
 
-    if args.connector == "mongo":
-        from airbyte_spark.sources.mongo import decode_mongo
-
-        decoded = decode_mongo(
-            wire,
-            payload,
-            key_col="key",
-            partition_col="partition",
-            pk_field=args.mongo_id_field,
-            emit_patch=args.update_mode == "patch",
-        )
-        if args.mongo_id_field != args.pk:
-            decoded = decoded.withColumnRenamed(args.mongo_id_field, args.pk)
-    elif args.connector == "wal2json":
-        from airbyte_spark.sources.wal2json import decode_wal2json
-
-        decoded = decode_wal2json(
-            wire, payload, json_col="value", partition_col="partition"
-        ).drop("xid", "txn_seq")
-    elif args.connector == "maxwell":
-        from airbyte_spark.sources.maxwell import decode_maxwell
-
-        decoded = decode_maxwell(
-            wire, payload, json_col="value", partition_col="partition",
-            use_position=args.maxwell_use_position,
-        )
-    elif args.connector == "canal":
-        from airbyte_spark.sources.canal import decode_canal
-
-        decoded = decode_canal(
-            wire, payload, json_col="value", partition_col="partition"
-        )
-    elif args.connector == "dms":
-        from airbyte_spark.sources.dms import decode_dms
-
-        decoded = decode_dms(
-            wire, payload, json_col="value", partition_col="partition",
-            seq_col="seq",
-        ).drop("txn_id")
-    else:
-        decoded = decode_debezium(
-            wire, payload, connector=args.connector,
-            json_col="value", partition_col="partition",
-            connect_wrapper=args.connect_wrapper,
-            include_txn=args.txn_markers is not None,
-        )
-    n_txn_pending = 0
-    if args.txn_markers is not None:
-        if args.connector not in ("postgres", "mysql"):
-            raise SystemExit("--txn-markers requires a Debezium connector")
-        if streaming:
-            raise SystemExit(
-                "--txn-markers needs the bounded replay path (the gate "
-                "aggregates per-transaction counts over the window)"
-            )
-        from airbyte_spark.sources.debezium import gate_on_transaction_markers
-
-        decoded, n_txn_pending = gate_on_transaction_markers(
-            decoded,
-            spark.read.schema(wire_schema).json(args.txn_markers),
-            collection=args.txn_collection,
-        )
-    quarantine = args.quarantine or f"{args.lake.rstrip('/')}/_quarantine"
+    # connector-specific CLI options on top of the table's decoder
+    debezium = {"connect_wrapper": args.connect_wrapper,
+                "include_txn": args.txn_markers is not None}
+    options = {
+        "postgres": debezium,
+        "mysql": debezium,
+        "mongo": {"key_col": "key", "pk_field": id_field,
+                  "emit_patch": args.update_mode == "patch"},
+        "maxwell": {"use_position": args.maxwell_use_position},
+        "dms": {"seq_col": "seq"},
+    }.get(args.connector, {})
+    decoded = conn.decode(wire, payload, **options)
+    if id_field != args.pk:
+        decoded = decoded.withColumnRenamed(id_field, args.pk)
+    quarantine_path = args.quarantine or f"{args.lake.rstrip('/')}/_quarantine"
     if streaming:
         from airbyte_spark.streaming import stream_replay_df
 
         stats = stream_replay_df(
-            eng, decoded, args.ss_checkpoint, quarantine=quarantine
+            eng, decoded, args.ss_checkpoint, quarantine=quarantine_path
         )
-        stats["final_rows"] = eng.read_final().count()
-        return stats
-
-    good, bad = split_malformed(decoded)
-    # one pass over the bad side only; good rows are consumed lazily by the
-    # replay's own batched scans
-    n_bad = bad.count()
-    if n_bad:
-        bad.write.mode("append").parquet(quarantine)
-
-    stats = eng.replay(good)
-    stats["quarantined"] = n_bad
-    if args.txn_markers is not None:
-        stats["txn_pending"] = n_txn_pending
+    else:
+        good, admitted = admit(
+            spark, decoded, quarantine_path, args.txn_markers,
+            collection=args.txn_collection,
+        )
+        stats = {**eng.replay(good), **admitted}
     stats["final_rows"] = eng.read_final().count()
     return stats
 

@@ -86,6 +86,19 @@ def run(spark, args) -> dict:
     from airbyte_spark.config import EngineConfig
     from airbyte_spark.demux import DemuxEngine
     from airbyte_spark.lake.table import LakeTable
+    from airbyte_spark.sources.connectors import CONNECTORS, admit, read_wire
+
+    conn = CONNECTORS[args.connector]
+    # flag combinations are checked before DemuxEngine makes directories
+    if (args.changelog is None) == (args.wire is None):
+        raise SystemExit("exactly one of --changelog / --wire is required")
+    if args.wire is not None and args.payload_ddl is None:
+        raise SystemExit("--payload-ddl is required with --wire")
+    if args.txn_markers is not None and not conn.txn_markers:
+        raise SystemExit(
+            f"--txn-markers is Debezium transaction metadata; {args.connector} "
+            "envelopes carry no marker topic"
+        )
 
     demux = DemuxEngine(
         spark,
@@ -97,7 +110,7 @@ def run(spark, args) -> dict:
             # canal packs lsn = batch_id<<16|row_index: align windows to
             # envelope boundaries and make the shared-offset loss check
             # compare commit components (sparse-LSN safe)
-            lsn_align_bits=16 if args.connector == "canal" and args.wire else None,
+            lsn_align_bits=conn.align_bits if args.wire else None,
         ),
         on_unrouted=args.on_unrouted,
     )
@@ -107,78 +120,25 @@ def run(spark, args) -> dict:
                 f"table for stream {eng.stream.name!r} does not exist — "
                 "bootstrap the demux catalog first (DemuxEngine.bootstrap)"
             )
-    if (args.changelog is None) == (args.wire is None):
-        raise SystemExit("exactly one of --changelog / --wire is required")
     if args.changelog is not None:
         return demux.replay(args.changelog, max_batches=args.max_batches)
 
-    # --wire: ONE Debezium topic for every table -> decode once, route by
-    # source.table, optional transaction-completeness gate, then the same
+    # --wire: ONE topic for every table -> decode once, route by the source
+    # table, optional transaction-completeness gate, then the same
     # shared-offset windowed replay
-    if args.payload_ddl is None:
-        raise SystemExit("--payload-ddl is required with --wire")
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    from pyspark.sql.types import StructType
+
+    decoded = conn.decode(
+        read_wire(spark, args.wire),
+        StructType.fromDDL(args.payload_ddl),
+        include_table=True,
+        **({"include_txn": True} if args.txn_markers is not None else {}),
     )
-
-    from airbyte_spark.sources.debezium import decode_debezium, split_malformed
-
-    if args.connector == "canal" and args.txn_markers is not None:
-        raise SystemExit(
-            "--txn-markers is Debezium transaction metadata; canal "
-            "envelopes carry no marker topic"
-        )
-    wire_schema = StructType(
-        [
-            StructField("value", StringType(), True),
-            StructField("key", StringType(), True),
-            StructField("partition", LongType(), True),
-        ]
+    good, admitted = admit(
+        spark, decoded, args.quarantine or f"{args.root.rstrip('/')}/_quarantine",
+        args.txn_markers, collection_col=args.stream_col,
     )
-    wire = spark.read.schema(wire_schema).json(args.wire)
-    if args.connector == "canal":
-        from airbyte_spark.sources.canal import decode_canal
-
-        decoded = decode_canal(
-            wire,
-            StructType.fromDDL(args.payload_ddl),
-            json_col="value",
-            partition_col="partition",
-            include_table=True,
-        )
-    else:
-        decoded = decode_debezium(
-            wire,
-            StructType.fromDDL(args.payload_ddl),
-            connector=args.connector,
-            json_col="value",
-            partition_col="partition",
-            include_table=True,
-            include_txn=args.txn_markers is not None,
-        )
-    n_txn_pending = 0
-    if args.txn_markers is not None:
-        from airbyte_spark.sources.debezium import gate_on_transaction_markers
-
-        decoded, n_txn_pending = gate_on_transaction_markers(
-            decoded,
-            spark.read.schema(wire_schema).json(args.txn_markers),
-            collection_col=args.stream_col,
-        )
-    good, bad = split_malformed(decoded)
-    n_bad = bad.count()
-    if n_bad:
-        bad.write.mode("append").parquet(
-            args.quarantine or f"{args.root.rstrip('/')}/_quarantine"
-        )
-    stats = demux.replay(good, max_batches=args.max_batches)
-    stats["quarantined"] = n_bad
-    if args.txn_markers is not None:
-        stats["txn_pending"] = n_txn_pending
-    return stats
+    return {**demux.replay(good, max_batches=args.max_batches), **admitted}
 
 
 def main(argv: list[str] | None = None) -> int:

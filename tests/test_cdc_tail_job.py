@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from airbyte_spark.changelog import ChangelogConfig, changelog_df
@@ -723,3 +724,25 @@ def test_tail_job_token_append_mode(spark, workdir):
     got = {r["doc_id"]: (tuple(r["tokens"]), r["source"])
            for r in job_eng.read_final().collect()}
     assert got == ref and len(got) > 0
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [
+        {"streaming": True},  # no --ss-checkpoint
+        {"connector": "wal2json", "txn_markers": "markers"},  # Debezium-only gate
+    ],
+    ids=["streaming-without-ss-checkpoint", "txn-markers-non-debezium"],
+)
+def test_tail_job_rejects_bad_flags_before_creating_the_table(spark, workdir, flags):
+    """An impossible flag combination must fail before the job creates a
+    table or commits DDL: a rejected run leaves a fresh lake fresh."""
+    from airbyte_spark.lake.table import LakeTable
+
+    os.makedirs(os.path.join(workdir, "wire"))
+    open(os.path.join(workdir, "wire", "empty.json"), "w").close()
+    args = _args(workdir, **flags)
+    with pytest.raises(SystemExit):
+        run(spark, args)
+    lake = CdcEngine(spark, args.lake)
+    assert not LakeTable.exists(lake.table_root)

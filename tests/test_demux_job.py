@@ -318,3 +318,21 @@ def test_demux_job_canal_wire_mode(spark, workdir):
         a = got[keep].sort_values("doc_id").reset_index(drop=True)
         b = exp[keep].sort_values("doc_id").reset_index(drop=True)
         pd.testing.assert_frame_equal(a, b)
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [
+        {"wire": "wire"},  # --changelog and --wire together
+        {"changelog": None, "wire": "wire"},  # --wire without --payload-ddl
+        {"changelog": None, "wire": "wire", "payload_ddl": "doc_id string",
+         "connector": "canal", "txn_markers": "markers"},
+    ],
+    ids=["changelog-and-wire", "wire-without-payload-ddl", "canal-txn-markers"],
+)
+def test_demux_job_rejects_bad_flags_before_touching_the_root(spark, workdir, flags):
+    """Flag checks run before DemuxEngine makes the root's directories."""
+    args = _args(workdir, **flags)
+    with pytest.raises(SystemExit):
+        run(spark, args)
+    assert not os.path.exists(args.root)

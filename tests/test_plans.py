@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from airbyte_spark.changelog import ChangelogConfig, changelog_df, write_changelog
@@ -333,34 +334,140 @@ def test_patch_fold_single_exchange(spark):
     assert "partial_max_by" in plan
 
 
-def test_wire_decoders_parse_json_exactly_once(spark):
-    """The project_once Generate barrier (plans/transforms.py) must hold:
-    each decoder's optimized plan carries exactly ONE envelope from_json for
-    Debezium (plus one per-image parse for Mongo's string images and the
-    patch branch), and the quarantine split must not re-derive op below the
-    barrier. Regression gate for the measured 2-4x decode cost of
-    CollapseProject + OptimizeJsonExprs re-splitting the parse per field."""
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+# Every CDC wire decoder x option set the wire jobs and the query suite use.
+# Each case: (decoder, kwargs, expected output schema as
+# [(name, type.simpleString(), nullable)]). The schemas are the changelog-row
+# contract downstream code reads by name AND position; the plan test below
+# reuses the same option sets.
+_HEAD = [("op", "string", True), ("lsn", "bigint", True), ("ts_ms", "bigint", True)]
+_PART = [("source_partition", "int", False)]
+_PAYLOAD = [
+    ("doc_id", "string", True),
+    ("tokens", "array<int>", True),
+    ("n_tok", "int", True),
+    ("source", "string", True),
+]
+_MONGO_PAYLOAD = [("_id", "string", True)] + _PAYLOAD[1:]
+_ROW = _HEAD + _PART + _PAYLOAD
+_META = [("_ab_cdc_updated_at", "timestamp", True), ("_ab_cdc_deleted_at", "timestamp", True)]
+_STREAM = [("_ab_stream", "string", True)]
+_TXN = [("_txn_id", "string", True), ("_txn_order", "bigint", True)]
+_MAXWELL_OLD = [("_old", "struct<doc_id:string,tokens:array<int>,n_tok:int,source:string>", True)]
+_CANAL_OLD = [("_old", "map<string,string>", True)]
+_DMS_ROW = _HEAD + [("txn_id", "bigint", True)] + _PART + _PAYLOAD
+_WAL2JSON_ROW = (
+    _HEAD[:2] + [("xid", "bigint", True), ("txn_seq", "int", True)]
+    + _HEAD[2:] + _PART + _PAYLOAD
+)
+_P = {"partition_col": "partition"}
 
-    from airbyte_spark.sources.debezium import decode_debezium, split_malformed
-    from airbyte_spark.sources.mongo import decode_mongo
-    from airbyte_spark.sources.wal2json import decode_wal2json
-
-    payload = StructType(
-        [
-            StructField("doc_id", StringType(), True),
-            StructField("tokens", ArrayType(IntegerType()), True),
-            StructField("n_tok", IntegerType(), True),
-            StructField("source", StringType(), True),
+DECODER_CASES = [
+    *[
+        ("debezium", {"connector": c, **kw}, want)
+        for c in ("postgres", "mysql")
+        for kw, want in [
+            ({}, _ROW),
+            ({"include_metadata": True}, _ROW + _META),
+            ({"include_table": True}, _ROW + _STREAM),
+            ({"include_txn": True}, _ROW + _TXN),
+            ({"connect_wrapper": True}, _ROW),
+            (
+                {"include_metadata": True, "include_table": True,
+                 "include_txn": True, "connect_wrapper": True, **_P},
+                _ROW + _STREAM + _TXN + _META,
+            ),
         ]
+    ],
+    ("maxwell", {}, _ROW),
+    ("maxwell", {"use_position": True}, _ROW),
+    ("maxwell", {"include_old": True}, _ROW + _MAXWELL_OLD),
+    ("maxwell", {"include_metadata": True}, _ROW + _META),
+    (
+        "maxwell",
+        {"use_position": True, "include_old": True, "include_metadata": True, **_P},
+        _ROW + _MAXWELL_OLD + _META,
+    ),
+    ("canal", {}, _ROW),
+    ("canal", {"include_old": True}, _ROW + _CANAL_OLD),
+    ("canal", {"include_metadata": True}, _ROW + _META),
+    ("canal", {"include_table": True}, _ROW + _STREAM),
+    (
+        "canal",
+        {"include_old": True, "include_metadata": True, "include_table": True, **_P},
+        _ROW + _CANAL_OLD + _META + _STREAM,
+    ),
+    ("dms", {}, _DMS_ROW),
+    ("dms", {"seq_col": "seq"}, _DMS_ROW),
+    ("dms", {"include_metadata": True}, _DMS_ROW + _META),
+    ("dms", {"include_table": True}, _DMS_ROW + _STREAM),
+    (
+        "dms",
+        {"seq_col": "seq", "include_metadata": True, "include_table": True, **_P},
+        _DMS_ROW + _META + _STREAM,
+    ),
+    ("wal2json", {}, _WAL2JSON_ROW),
+    ("wal2json", _P, _WAL2JSON_ROW),
+    ("mongo", {}, _HEAD + _PART + _MONGO_PAYLOAD),
+    ("mongo", {"key_col": "key"}, _HEAD + _PART + _MONGO_PAYLOAD),
+    (
+        "mongo",
+        {"emit_patch": True},
+        _HEAD + _PART + _MONGO_PAYLOAD + [("_ab_null_fields", "array<string>", True)],
+    ),
+    (
+        "mongo",
+        {"key_col": "key", "emit_patch": True, **_P},
+        _HEAD + _PART + _MONGO_PAYLOAD + [("_ab_null_fields", "array<string>", True)],
+    ),
+]
+
+
+@pytest.fixture(scope="module")
+def wire_feed(spark):
+    """A one-row driver-side wire frame and the two payload schemas, shared
+    by every decoder case."""
+    from pyspark.sql.types import StructType
+
+    feed = spark.createDataFrame(
+        [("{}", "{}", 0, 0)], "value string, key string, partition long, seq long"
     )
-    feed = spark.createDataFrame([("{}", "{}")], "value string, key string")
+    tail = " string, tokens array<int>, n_tok int, source string"
+    return feed, {n: StructType.fromDDL(n + tail) for n in ("doc_id", "_id")}
+
+
+def _decode_case(wire_feed, decoder: str, kwargs: dict):
+    """Build (never run) one decoder over the shared wire frame."""
+    import importlib
+
+    feed, payloads = wire_feed
+    fn = getattr(importlib.import_module(f"airbyte_spark.sources.{decoder}"), f"decode_{decoder}")
+    return fn(feed, payloads["_id" if decoder == "mongo" else "doc_id"], **kwargs)
+
+
+def _case_id(case) -> str:
+    decoder, kwargs, _ = case
+    return "-".join([decoder] + [f"{k}={v}" for k, v in kwargs.items()])
+
+
+@pytest.mark.parametrize("case", DECODER_CASES, ids=_case_id)
+def test_wire_decoder_output_schema_pinned(wire_feed, case):
+    """Names, order, types and nullability of every decoder's output — the
+    changelog-row contract the engine, the demux router and the wire jobs
+    read. Analysis only: no Spark job runs."""
+    decoder, kwargs, want = case
+    got = _decode_case(wire_feed, decoder, kwargs).schema
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in got.fields] == want
+
+
+def test_wire_decoders_parse_json_exactly_once(wire_feed):
+    """The project_once Generate barrier (plans/transforms.py) must hold:
+    each decoder's optimized plan carries exactly ONE envelope from_json
+    (Mongo's string images and patch branch parse other inputs), and the
+    quarantine split must not re-derive op below the barrier — for every
+    option set in DECODER_CASES. Regression gate for the measured 2-4x
+    decode cost of CollapseProject + OptimizeJsonExprs re-splitting the
+    parse per field."""
+    from airbyte_spark.sources.debezium import split_malformed
 
     def n_envelope_parses(df) -> int:
         # from_json over the RAW wire column prints as
@@ -369,26 +476,6 @@ def test_wire_decoders_parse_json_exactly_once(spark):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         return plan.count(", value#")
 
-    dbz, _ = split_malformed(decode_debezium(feed, payload))
-    assert n_envelope_parses(dbz) == 1, "debezium: envelope must parse once"
-
-    w2j, _ = split_malformed(decode_wal2json(feed, payload))
-    assert n_envelope_parses(w2j) == 1, "wal2json: envelope must parse once"
-
-    mgo, _ = split_malformed(decode_mongo(feed, payload, key_col="key", emit_patch=True))
-    assert n_envelope_parses(mgo) == 1, "mongo: envelope must parse once"
-
-    from airbyte_spark.sources.maxwell import decode_maxwell
-
-    mxw, _ = split_malformed(decode_maxwell(feed, payload))
-    assert n_envelope_parses(mxw) == 1, "maxwell: envelope must parse once"
-
-    from airbyte_spark.sources.canal import decode_canal
-
-    cnl, _ = split_malformed(decode_canal(feed, payload))
-    assert n_envelope_parses(cnl) == 1, "canal: envelope must parse once"
-
-    from airbyte_spark.sources.dms import decode_dms
-
-    dms, _ = split_malformed(decode_dms(feed, payload))
-    assert n_envelope_parses(dms) == 1, "dms: envelope must parse once"
+    for case in DECODER_CASES:
+        good, _ = split_malformed(_decode_case(wire_feed, case[0], case[1]))
+        assert n_envelope_parses(good) == 1, f"{_case_id(case)}: envelope must parse once"
