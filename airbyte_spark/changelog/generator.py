@@ -24,8 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 BASE_TS_MS = 1_700_000_000_000  # fixed epoch base; no wall clock in data path
 _M31 = 2_147_483_648  # 2^31
@@ -56,30 +55,34 @@ class ChangelogConfig:
     patch_updates: bool = False
 
 
-def _lcg(c: Column) -> Column:
-    return (c * F.lit(1103515245) + F.lit(12345)) % F.lit(_M31)
+def _lcg(x: str) -> str:
+    return f"(({x}) * 1103515245 + 12345) % {_M31}"
 
 
-def _h(c: Column, salt: int, seed: int) -> Column:
+def _h(c: str, salt: int, seed: int) -> str:
     """Two-round LCG hash of a non-negative int64 column; result in [0, 2^31)."""
-    mixed = (c + F.lit(salt * 7919 + seed * 104729)) % F.lit(_M31)
-    return _lcg(_lcg(mixed))
+    return _lcg(_lcg(f"({c} + {salt * 7919 + seed * 104729}) % {_M31}"))
 
 
-def _tokens_expr(doc_idx: Column, lsn: Column, length: Column, vocab: int) -> Column:
+def _tokens_expr(doc_idx: str, lsn: str, length: str, vocab: int) -> str:
     """tokens[t] = (doc_idx*1009 + lsn*31 + t*7) % vocab — pure, versioned by lsn."""
-    return F.transform(
-        F.sequence(F.lit(0), length - F.lit(1)),
-        lambda t: ((doc_idx * F.lit(1009) + lsn * F.lit(31) + t * F.lit(7)) % F.lit(vocab)).cast("int"),
+    return (
+        f"transform(sequence(0, {length} - 1), "
+        f"t -> CAST(({doc_idx} * 1009 + {lsn} * 31 + t * 7) % {vocab} AS INT))"
     )
 
 
-def _doc_id_expr(doc_idx: Column) -> Column:
-    return F.format_string("doc%09d", doc_idx)
+def _doc_id_expr(doc_idx: str) -> str:
+    return f"format_string('doc%09d', {doc_idx})"
 
 
-def _source_expr(doc_idx: Column) -> Column:
-    return F.element_at(F.array(F.lit("web"), F.lit("books"), F.lit("code")), (doc_idx % 3 + 1).cast("int"))
+def _source_expr(doc_idx: str) -> str:
+    return f"element_at(array('web', 'books', 'code'), CAST({doc_idx} % 3 + 1 AS INT))"
+
+
+# The formulas are SQL text, one selectExpr per stage: a Column-built tree
+# costs one driver->JVM call per operator (~600 for the changelog), and
+# inlining j / doc_idx into every use multiplies the analyzed tree.
 
 
 def seed_df(spark: SparkSession, cfg: ChangelogConfig) -> DataFrame:
@@ -88,18 +91,19 @@ def seed_df(spark: SparkSession, cfg: ChangelogConfig) -> DataFrame:
     Analog of the reference's PK-chunked initial load
     (MySqlInitialLoadRecordIterator.java:30-45) — here a parallel range scan.
     """
-    df = spark.range(cfg.n_seed_docs).withColumnRenamed("id", "doc_idx")
-    idx = F.col("doc_idx")
-    length = (F.lit(1) + _h(idx, 11, cfg.seed) % F.lit(cfg.max_tokens)).cast("int")
-    tokens = _tokens_expr(idx, F.lit(0), length, cfg.vocab_size)
-    return df.select(
-        _doc_id_expr(idx).alias("doc_id"),
-        tokens.alias("tokens"),
-        F.size(tokens).cast("int").alias("n_tok"),
-        _source_expr(idx).alias("source"),
-        F.lit(0).cast("long").alias("lsn"),
-        F.lit(BASE_TS_MS - 1).alias("ts_ms"),
-        (idx % cfg.n_source_partitions).cast("int").alias("source_partition"),
+    length = f"CAST(1 + {_h('id', 11, cfg.seed)} % {cfg.max_tokens} AS INT)"
+    return (
+        spark.range(cfg.n_seed_docs)
+        .selectExpr("id AS doc_idx", f"{_tokens_expr('id', '0', length, cfg.vocab_size)} AS tokens")
+        .selectExpr(
+            f"{_doc_id_expr('doc_idx')} AS doc_id",
+            "tokens",
+            "CAST(size(tokens) AS INT) AS n_tok",
+            f"{_source_expr('doc_idx')} AS source",
+            "CAST(0 AS BIGINT) AS lsn",
+            f"{BASE_TS_MS - 1} AS ts_ms",
+            f"CAST(doc_idx % {cfg.n_source_partitions} AS INT) AS source_partition",
+        )
     )
 
 
@@ -107,69 +111,68 @@ def changelog_df(spark: SparkSession, cfg: ChangelogConfig) -> DataFrame:
     """The bounded change stream: n_events rows, strictly increasing event
     position; dup events repeat an earlier event verbatim (same LSN)."""
     s = cfg.seed
-    df = spark.range(cfg.n_events)
-    i = F.col("id")
-
     dup_bp = int(cfg.dup_pct * 100)  # basis points
-    is_dup = (_h(i, 1, s) % F.lit(10_000) < F.lit(dup_bp)) & (i >= F.lit(cfg.dup_lag))
-    j = F.when(is_dup, i - F.lit(cfg.dup_lag)).otherwise(i)
-
-    lsn = (j + F.lit(1)).cast("long")
-    ts_ms = (F.lit(BASE_TS_MS) + j * F.lit(1000)).cast("long")
-
-    r_op = _h(j, 2, s) % F.lit(100)
-    op = (
-        F.when(r_op < F.lit(cfg.insert_pct), F.lit("I"))
-        .when(r_op < F.lit(cfg.insert_pct + cfg.update_pct), F.lit("U"))
-        .otherwise(F.lit("D"))
-    )
-
-    is_hot = _h(j, 3, s) % F.lit(100) < F.lit(cfg.hot_pct)
-    existing_idx = F.when(is_hot, _h(j, 4, s) % F.lit(max(cfg.hot_keys, 1))).otherwise(
-        _h(j, 5, s) % F.lit(cfg.n_seed_docs)
-    )
-    doc_idx = F.when(op == "I", F.lit(cfg.n_seed_docs) + j).otherwise(existing_idx)
-
-    length = (F.lit(1) + _h(j, 6, s) % F.lit(cfg.max_tokens)).cast("int")
-    tokens = _tokens_expr(doc_idx, lsn, length, cfg.vocab_size)
-
     corrupt_bp = int(cfg.corrupt_pct * 100)
-    is_corrupt = _h(j, 7, s) % F.lit(10_000) < F.lit(corrupt_bp)
-    n_tok = F.when(is_corrupt, length + F.lit(1) + (_h(j, 8, s) % F.lit(5)).cast("int")).otherwise(length)
-
-    is_delete = op == "D"
+    r_op = f"{_h('j', 2, s)} % 100"
+    is_hot = f"{_h('j', 3, s)} % 100 < {cfg.hot_pct}"
+    hot_idx = f"{_h('j', 4, s)} % {max(cfg.hot_keys, 1)}"
+    is_corrupt = f"{_h('j', 7, s)} % 10000 < {corrupt_bp}"
+    tokens = _tokens_expr("doc_idx", "lsn", "length", cfg.vocab_size)
+    df = (
+        spark.range(cfg.n_events)
+        .selectExpr(
+            f"CASE WHEN {_h('id', 1, s)} % 10000 < {dup_bp} AND id >= {cfg.dup_lag} "
+            f"THEN id - {cfg.dup_lag} ELSE id END AS j"
+        )
+        .selectExpr(
+            "j",
+            f"CASE WHEN {r_op} < {cfg.insert_pct} THEN 'I' "
+            f"WHEN {r_op} < {cfg.insert_pct + cfg.update_pct} THEN 'U' ELSE 'D' END AS op",
+            f"CASE WHEN {is_hot} THEN {hot_idx} "
+            f"ELSE {_h('j', 5, s)} % {cfg.n_seed_docs} END AS existing_idx",
+            "CAST(j + 1 AS BIGINT) AS lsn",
+            f"CAST({BASE_TS_MS} + j * 1000 AS BIGINT) AS ts_ms",
+            f"CAST(1 + {_h('j', 6, s)} % {cfg.max_tokens} AS INT) AS length",
+        )
+        .selectExpr(
+            "*",
+            f"CASE WHEN op = 'I' THEN {cfg.n_seed_docs} + j ELSE existing_idx END AS doc_idx",
+            f"CASE WHEN {is_corrupt} THEN length + 1 + CAST({_h('j', 8, s)} % 5 AS INT) "
+            "ELSE length END AS n_tok_raw",
+        )
+    )
     cols = [
-        op.alias("op"),
-        _doc_id_expr(doc_idx).alias("doc_id"),
-        lsn.alias("lsn"),
-        ts_ms.alias("ts_ms"),
-        (doc_idx % cfg.n_source_partitions).cast("int").alias("source_partition"),
+        "op",
+        f"{_doc_id_expr('doc_idx')} AS doc_id",
+        "lsn",
+        "ts_ms",
+        f"CAST(doc_idx % {cfg.n_source_partitions} AS INT) AS source_partition",
     ]
     if not cfg.patch_updates:
-        return df.select(
+        return df.selectExpr(
             *cols,
-            F.when(is_delete, F.lit(None)).otherwise(tokens).alias("tokens"),
-            F.when(is_delete, F.lit(None)).otherwise(n_tok).cast("int").alias("n_tok"),
-            F.when(is_delete, F.lit(None)).otherwise(_source_expr(doc_idx)).alias("source"),
+            f"CASE WHEN op = 'D' THEN NULL ELSE {tokens} END AS tokens",
+            "CAST(CASE WHEN op = 'D' THEN NULL ELSE n_tok_raw END AS INT) AS n_tok",
+            f"CASE WHEN op = 'D' THEN NULL ELSE {_source_expr('doc_idx')} END AS source",
         )
 
     # patch envelopes: mask m in [0,4) -> 0: tokens-group only, 1: source
     # only, 2/3: both; explicit source null on ~20% of source-bearing Us
-    is_update = op == "U"
-    m = _h(j, 21, s) % F.lit(4)
-    tok_present = (~is_update) | (m != F.lit(1))
-    src_present = (~is_update) | (m != F.lit(0))
-    src_null = is_update & src_present & (_h(j, 22, s) % F.lit(5) == F.lit(0))
-    return df.select(
+    df = df.selectExpr("*", f"{_h('j', 21, s)} % 4 AS m").selectExpr(
+        "*",
+        "(op != 'U' OR m != 1) AS tok_present",
+        "(op != 'U' OR m != 0) AS src_present",
+    ).selectExpr(
+        "*", f"op = 'U' AND src_present AND {_h('j', 22, s)} % 5 = 0 AS src_null"
+    )
+    return df.selectExpr(
         *cols,
-        F.when(is_delete | ~tok_present, F.lit(None)).otherwise(tokens).alias("tokens"),
-        F.when(is_delete | ~tok_present, F.lit(None)).otherwise(n_tok).cast("int").alias("n_tok"),
-        F.when(is_delete | ~src_present | src_null, F.lit(None))
-        .otherwise(_source_expr(doc_idx))
-        .alias("source"),
-        F.when(src_null, F.array(F.lit("source")))
-        .otherwise(F.array().cast("array<string>"))
-        .alias("_ab_null_fields"),
+        f"CASE WHEN op = 'D' OR NOT tok_present THEN NULL ELSE {tokens} END AS tokens",
+        "CAST(CASE WHEN op = 'D' OR NOT tok_present THEN NULL ELSE n_tok_raw END AS INT) AS n_tok",
+        f"CASE WHEN op = 'D' OR NOT src_present OR src_null THEN NULL "
+        f"ELSE {_source_expr('doc_idx')} END AS source",
+        "CASE WHEN src_null THEN array('source') "
+        "ELSE CAST(array() AS ARRAY<STRING>) END AS _ab_null_fields",
     )
 
 

@@ -33,11 +33,12 @@ import os
 from dataclasses import dataclass, field
 from typing import Any, Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
 from airbyte_spark.lake.table import LakeTable
+from airbyte_spark.operators.dedup import lww_dedup
 from airbyte_spark.plans.transforms import schema_extract
 
 SPEC = {
@@ -277,36 +278,27 @@ class LakeDestination:
         buckets the batch touches, keep the winner per key by (cursor DESC
         NULLS LAST, extracted_at DESC, raw_id DESC) — the incremental
         append-dedup final-table contract
-        (docs/.../incremental-append-deduped.md:14-20). Composite keys
-        partition the window by the synthesized hash column — one 32-char
-        key, same plan shape as a single-column pk."""
+        (docs/.../incremental-append-deduped.md:14-20). ``lww_dedup``'s
+        order struct puts a NULL cursor lowest, and ``_airbyte_raw_id`` is
+        unique, so its max is exactly that window's first row. Composite
+        keys dedup on the synthesized hash column — one 32-char key, same
+        plan shape as a single-column pk."""
         pk = scfg.key_col
         batch = batch.persist()
         try:
-            affected = sorted(
-                int(r[0])
-                for r in batch.select(table.bucket_expr(pk).alias("b")).distinct().collect()
-            )
+            affected = table.key_buckets(batch)
             if not affected:
                 return
             cols = table.snapshot().schema.fieldNames()
             combined = table.scan(buckets=affected).select(*cols).unionByName(
                 batch.select(*cols)
             )
-            order = []
-            if scfg.cursor_field:
-                order.append(F.col(scfg.cursor_field).desc_nulls_last())
-            order += [
-                F.col("_airbyte_extracted_at").desc(),
-                F.col("_airbyte_raw_id").desc(),
-            ]
-            w = Window.partitionBy(pk).orderBy(*order)
-            winners = (
-                combined.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
+            order = (scfg.cursor_field,) if scfg.cursor_field else ()
+            order += ("_airbyte_extracted_at", "_airbyte_raw_id")
+            winners = lww_dedup(combined, key=pk, order_cols=order)
+            table.write_and_commit(
+                winners.select(*cols), replace_buckets=affected, summary=summary
             )
-            table.write_and_commit(winners, replace_buckets=affected, summary=summary)
         finally:
             batch.unpersist()
 

@@ -1302,7 +1302,6 @@ class CdcEngine:
             empty,
             replace_buckets=range(table.snapshot().spec["num_buckets"]),
             summary={"operation": "soft-reset"},
-            drop_deltas=True,
         )
         save_checkpoint(self.checkpoint_path, Checkpoint())
         log_metric("soft_reset", snapshot=version)
@@ -1323,7 +1322,6 @@ class CdcEngine:
             replace_buckets=range(table.snapshot().spec["num_buckets"]),
             summary={"operation": "resync-bootstrap"},
             write_partitions=self.cfg.write_partitions,
-            drop_deltas=True,
         )
         ckpt = Checkpoint()
         # resume incremental replay just below the oldest retained event
@@ -1463,7 +1461,6 @@ class CdcEngine:
                     "ids_unk": int(totals["ids_unk"] or 0),
                 },
                 write_partitions=self.cfg.write_partitions,
-                drop_deltas=True,
             )
         finally:
             with_r.unpersist()

@@ -61,6 +61,7 @@ import re
 import struct
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Iterable
 
 import time
@@ -637,6 +638,16 @@ class LakeTable:
         h = F.hash(F.col(pk)) if fn == "murmur3" else F.xxhash64(F.col(pk))
         return F.pmod(h, F.lit(spec["num_buckets"])).cast("int")
 
+    def key_buckets(self, keys, key_col: str | None = None) -> list[int]:
+        """Sorted buckets a key set hashes to at the current snapshot — the
+        one key→bucket map. ``keys``: a list (hashed on the driver) or a
+        DataFrame (one Spark job over ``key_col``, default the table pk)."""
+        snap = self.snapshot()
+        pk = snap.spec["bucket_by"]
+        if isinstance(keys, DataFrame):
+            keys = keys.select(F.col(key_col or pk).alias(pk))
+        return self._key_buckets(snap.spec, snap.schema[pk], keys)
+
     def _key_buckets(self, spec: dict, field, keys) -> list[int]:
         """Sorted buckets a key set hashes to. ``keys`` is a list or a
         one-column DataFrame named ``field.name``. A list hashes on the
@@ -1153,7 +1164,6 @@ class LakeTable:
         plan_version: int | None = None,
         write_partitions: int | None = None,
         pre_aligned: bool = False,
-        drop_deltas: bool = False,
         new_spec: dict | None = None,
     ) -> int:
         """Write ``df`` as new base data files and commit a snapshot.
@@ -1161,7 +1171,10 @@ class LakeTable:
         - ``replace_buckets``: ``None`` is a pure append (keep all existing
           files; a lost race rebases onto the winner). A bucket list is a
           CoW commit: drop those buckets' existing files and add the new
-          ones (the MERGE commit); the full range is an overwrite. A CoW
+          ones (the MERGE commit). A list covering every bucket of the base
+          spec is a whole-table rewrite and also retires every delta file
+          (``df`` is the table's new content — a fold, a rebucket or an
+          overwrite); no other commit drops deltas. A CoW
           commit is not retried — its content depends on the snapshot it
           was planned against, so callers re-plan on ``CommitConflict``.
         - ``summary``: the snapshot summary (``operation``, ``batch_id``,
@@ -1176,8 +1189,6 @@ class LakeTable:
           partitioned as ``hashpartitioning(pk, num_buckets)`` (e.g. the
           output of ``repartition(B, pk)`` + groupBy(pk) agg), so the write
           needs no shuffle (see :meth:`_write_files`).
-        - ``drop_deltas=True``: also drop every delta file (``df`` holds
-          their LWW-resolved rows — a fold).
         - ``new_spec``: a spec change (rebucket); it must ride a FULL
           rewrite, so every file in the new snapshot is laid out by the new
           spec, atomically.
@@ -1196,12 +1207,10 @@ class LakeTable:
         kept = base.files
         if replace_buckets is not None:
             dropped = set(replace_buckets)
+            if dropped.issuperset(range(base.spec["num_buckets"])):
+                dropped.add(-1)  # a whole-table rewrite retires the delta files
             kept = [f for f in kept if f.bucket not in dropped]
-        if drop_deltas:
-            kept = [f for f in kept if f.kind != "delta"]
-        if new_spec is None and (
-            plan_version is not None or (replace_buckets is None and not drop_deltas)
-        ):
+        if new_spec is None and (plan_version is not None or replace_buckets is None):
             # a pure append, or a rewrite of the plan snapshot's files:
             # racers' files are never in the replaced set, so losing the
             # race rebases instead of conflicting
@@ -1227,7 +1236,7 @@ class LakeTable:
 
         The CDC-consumer "fetch these documents" read: at 100 TB a full
         ``scan()`` for a handful of keys is absurd — here the key set hashes
-        to its buckets (``_key_buckets``, shared with ``purge_keys``: on the
+        to its buckets (``_key_buckets``, shared with ``replace_keys``: on the
         driver for a key list, a Spark job for a DataFrame), the manifest
         prunes the file list to those buckets, and the key predicate lands
         in the parquet scan (literal IN → PushedFilters; DataFrame key sets
@@ -1547,7 +1556,6 @@ class LakeTable:
                 df,
                 replace_buckets=range(snap.spec["num_buckets"]),
                 summary={"operation": "compact-fold"},
-                drop_deltas=True,
                 # maintenance racing ingest appends preserves their files
                 plan_version=plan_version,
             )
@@ -1600,35 +1608,30 @@ class LakeTable:
                 "from_buckets": snap.spec["num_buckets"],
                 "to_buckets": new_num_buckets,
             },
-            drop_deltas=True,
             new_spec=dict(snap.spec, num_buckets=new_num_buckets),
         )
 
-    def purge_keys(self, keys, key_col: str | None = None) -> int | None:
-        """Physical row-level delete of a key set — the GDPR /
-        right-to-be-forgotten operation, the copy-on-write analog of
-        Iceberg ``DELETE FROM t WHERE pk IN (...)`` (reference semantics:
-        Airbyte has no purge primitive; users re-sync or mutate the
-        destination directly — this closes that gap at the lake layer).
-
-        ``keys`` is a list of key values or a one-column DataFrame
-        (``key_col`` names the column when it differs from the table pk).
+    def replace_keys(
+        self, keys, rows: DataFrame | None, summary: dict, key_col: str | None = None
+    ) -> int | None:
+        """Replace every row of a key set with ``rows`` in ONE commit — the
+        keyed MERGE/DELETE (BigQuerySqlGenerator.java:510-531; the vector
+        writer's delete-ids-then-index). ``keys``: a list or a DataFrame
+        (``key_col`` names its column when it differs from the table pk);
+        each row of ``rows`` carries a key of ``keys``. None for an empty
+        key set, or a purge (``rows=None``) no file could hold.
 
         Write cost is ∝ the AFFECTED BUCKETS plus total delta bytes, never
-        the table: the key set hashes to its buckets (on the driver for a
-        key list, as in ``lookup``), only those buckets' base files are
-        rewritten (broadcast anti-join — the purge set is always the small
-        side), and delta files are rewritten
-        in the same pass because a purged key's delta row would otherwise
-        win scan-time LWW resolution as its only surviving version. Base
-        and delta replacement land in ONE atomic snapshot commit. Multi-
-        version structure (tombstones, raw appends) is preserved — this is
-        a physical row filter, not an LWW resolve.
-
-        The purged values still exist in PRIOR snapshots' files until
-        ``expire_snapshots`` + ``expire_orphans`` run — full physical
-        erasure is purge + expire, same as Iceberg's delete + snapshot
-        expiration (tests/test_purge.py pins bytes-on-disk absence)."""
+        the table: only the key set's buckets (:meth:`key_buckets`) have
+        their base files rewritten, minus ``keys`` plus ``rows`` (broadcast
+        anti-join: the key set is the small side, and unhinted Spark plans
+        a sort-merge join that shuffles the table), and delta files are
+        rewritten minus ``keys`` in the same pass — a replaced key's delta
+        row would otherwise win scan-time LWW over its new row, or survive
+        a purge as its only version. The read is the physical file set, not
+        ``scan()``: multi-version structure (tombstones, raw appends, a
+        JoinView's 1:N rows per key) is kept — a row filter, not an LWW
+        resolve. ``buckets`` is stamped into ``summary``."""
         snap = self.snapshot()
         pk = snap.spec["bucket_by"]
         field = snap.schema[pk]
@@ -1645,40 +1648,54 @@ class LakeTable:
             idx = self._file_index(snap)
             base_files = idx.base(buckets)
             delta_files = idx.delta()
-            if not base_files and not delta_files:
+            if not buckets or (rows is None and not base_files and not delta_files):
                 return None
 
-            def rewrite(files: list[DataFile], n: int, delta: bool) -> list[DataFile]:
-                rows = self._read_files(snap, files).join(F.broadcast(kdf), pk, "left_anti")
+            def survivors(files: list[DataFile]) -> DataFrame:
+                return self._read_files(snap, files).join(F.broadcast(kdf), pk, "left_anti")
+
+            def write(df: DataFrame, n: int, delta: bool) -> list[DataFile]:
                 return self._write_files(
-                    rows, snap.spec, snap.version + 1, snap.schema_version, n, delta=delta
+                    df, snap.spec, snap.version + 1, snap.schema_version, n, delta=delta
                 )[0]
 
+            parts = [survivors(base_files)] if base_files else []
+            if rows is not None:
+                parts.append(rows.select(*snap.schema.fieldNames()))
             new_files: list[DataFile] = []
             _t0 = time.monotonic()
-            if base_files:
-                new_files += rewrite(base_files, len(buckets), delta=False)
+            if parts:
+                new_files += write(reduce(DataFrame.unionByName, parts), len(buckets), False)
             if delta_files:
-                new_files += rewrite(delta_files, min(len(delta_files), 8), delta=True)
+                new_files += write(survivors(delta_files), min(len(delta_files), 8), True)
         finally:
             kdf.unpersist()
 
         bset = set(buckets)
-        kept = [
-            f
-            for f in snap.files
-            if f.kind != "delta" and f.bucket not in bset
-        ]
+        kept = [f for f in snap.files if f.kind != "delta" and f.bucket not in bset]
         log_metric(
-            "purge_keys",
+            "replace_keys",
+            operation=summary.get("operation"),
             version=snap.version + 1,
             buckets=len(buckets),
             files_rewritten=len(base_files) + len(delta_files),
             write_ms=int((time.monotonic() - _t0) * 1000),
         )
-        return self._commit(
-            snap, kept + new_files, {"operation": "purge", "buckets": buckets}
-        )
+        return self._commit(snap, kept + new_files, dict(summary, buckets=buckets))
+
+    def purge_keys(self, keys, key_col: str | None = None) -> int | None:
+        """Physical row-level delete of a key set — the GDPR /
+        right-to-be-forgotten operation, the copy-on-write analog of
+        Iceberg ``DELETE FROM t WHERE pk IN (...)`` (reference semantics:
+        Airbyte has no purge primitive; users re-sync or mutate the
+        destination directly — this closes that gap at the lake layer):
+        :meth:`replace_keys` with no new rows.
+
+        The purged values still exist in PRIOR snapshots' files until
+        ``expire_snapshots`` + ``expire_orphans`` run — full physical
+        erasure is purge + expire, same as Iceberg's delete + snapshot
+        expiration (tests/test_purge.py pins bytes-on-disk absence)."""
+        return self.replace_keys(keys, None, {"operation": "purge"}, key_col)
 
     def expire_snapshots(self, keep_last: int = 10) -> dict:
         """Expire snapshots older than the last ``keep_last``, deleting

@@ -192,27 +192,12 @@ class LakeCache:
                 os.replace(table.root, root)
             return batch.count()
 
-        # steady state: bucket-scoped replace-by-key (the ChunkIndex shape)
+        # steady state: bucket-scoped replace of the batch keys
         table = LakeTable.load(self.spark, root)
-        keys = batch.select(primary_key)
-        affected = sorted(
-            int(r[0])
-            for r in keys.select(table.bucket_expr(primary_key).alias("b"))
-            .distinct()
-            .collect()
+        v = table.replace_keys(
+            batch.select(primary_key), batch, summary={"operation": "lib-upsert"}
         )
-        if not affected:
-            return 0
-        cols = table.snapshot().schema.fieldNames()
-        survivors = table.scan(buckets=affected).join(
-            F.broadcast(keys), primary_key, "left_anti"
-        )
-        table.write_and_commit(
-            survivors.select(*cols).unionByName(batch.select(*cols)),
-            replace_buckets=affected,
-            summary={"operation": "lib-upsert"},
-        )
-        return batch.count()
+        return 0 if v is None else batch.count()
 
     # ------------------------------------------------------------- read
 

@@ -167,29 +167,16 @@ class JoinView:
         b_state = b_state.select(on, *b_cols)
         keys = touched_keys.select(on).distinct().persist()
         try:
-            buckets = sorted(
-                r["b"]
-                for r in keys.select(table.bucket_expr(on).alias("b"))
-                .distinct()
-                .collect()
-            )
-            if not buckets:
-                log_metric("join_view_noop", batch_id=batch_id)
-                return None
-            new_rows = join_view_delta(a_state, b_state, keys, on, how=self.how)
-            survivors = table.scan(buckets=buckets).join(
-                keys, on=on, how="left_anti"
-            )
-            merged = survivors.select(*cols).unionByName(new_rows.select(*cols))
-            return table.write_and_commit(
-                merged,
-                replace_buckets=buckets,
-                summary=dict(
-                    summary_extra or {}, operation=self.OP, batch_id=batch_id
-                ),
+            v = table.replace_keys(
+                keys,
+                join_view_delta(a_state, b_state, keys, on, how=self.how),
+                summary=dict(summary_extra or {}, operation=self.OP, batch_id=batch_id),
             )
         finally:
             keys.unpersist()
+        if v is None:
+            log_metric("join_view_noop", batch_id=batch_id)
+        return v
 
     def maintain(
         self,

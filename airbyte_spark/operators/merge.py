@@ -78,12 +78,7 @@ def merge_upsert(
     batch = winners.select(*cols, F.col("ts_ms").alias(_TS_TMP))
 
     pk = snap.spec["bucket_by"]
-    affected = affected_buckets
-    if affected is None:
-        affected = [
-            r[0]
-            for r in winners.select(table.bucket_expr(pk).alias("b")).distinct().collect()
-        ]
+    affected = table.key_buckets(winners) if affected_buckets is None else affected_buckets
     if not affected:
         return None
 
@@ -165,11 +160,11 @@ def merge_upsert_full(
         ).drop(_TS_TMP)
         return table.write_and_commit(
             merged.select(*cols),
+            # the full scan above already folded any merge-on-read deltas,
+            # so the whole-range replace retires them
             replace_buckets=range(num_buckets),
             summary=summary,
             pre_aligned=True,
-            # the full scan above already folded any merge-on-read deltas
-            drop_deltas=True,
         )
 
 

@@ -118,12 +118,7 @@ def apply_rollup(
     ]
     deltas = deltas.persist()
     try:
-        buckets = sorted(
-            r["b"]
-            for r in deltas.select(rollup.bucket_expr(GROUP_KEY).alias("b"))
-            .distinct()
-            .collect()
-        )
+        buckets = rollup.key_buckets(deltas)
         if not buckets:
             log_metric("rollup_noop", batch_id=batch_id)
             return None

@@ -104,12 +104,7 @@ def scd2_apply(
     closers = (
         rows.groupBy("doc_id").agg(F.min("valid_from_ms").alias("close_ms")).persist()
     )
-    affected = sorted(
-        int(r["b"])
-        for r in closers.select(history.bucket_expr("doc_id").alias("b"))
-        .distinct()
-        .collect()
-    )
+    affected = history.key_buckets(closers)
     if not affected:
         closers.unpersist()
         return None

@@ -25,7 +25,7 @@ Spark-first re-expression:
 - :class:`ChunkIndex` maintains the chunk table on a LakeTable BUCKETED BY
   RECORD ID (not chunk id): "delete all chunks of record X" then touches
   exactly one bucket, so a batch rewrites only its affected buckets
-  (bucket-scoped CoW, same shape as LakeTable.purge_keys) instead of the
+  (bucket-scoped CoW through LakeTable.replace_keys) instead of the
   table. Idempotent via the batch-id snapshot summary like every other
   commit path. At 100 TB: work per batch ∝ touched buckets, the anti-join
   broadcasts the (small) batch key set, and nothing ever scans untouched
@@ -186,24 +186,9 @@ class ChunkIndex:
         table = self.table
         if table.find_batch(batch_id) is not None:
             return None
-        ids = record_ids.select(META_RECORD_ID).distinct()
-        bucket_of = table.bucket_expr(META_RECORD_ID)
-        affected = sorted(
-            int(r[0])
-            for r in ids.select(bucket_of.alias("b")).distinct().collect()
-        )
-        if not affected:
-            return None
-        survivors = table.scan(buckets=affected).join(
-            F.broadcast(ids), on=META_RECORD_ID, how="left_anti"
-        )
-        cols = table.snapshot().schema.fieldNames()
-        new_base = survivors.select(*cols).unionByName(
-            chunks.select(*cols)
-        )
-        return table.write_and_commit(
-            new_base,
-            replace_buckets=affected,
+        return table.replace_keys(
+            record_ids,
+            chunks,
             summary={"operation": "vector-upsert", "batch_id": batch_id},
         )
 

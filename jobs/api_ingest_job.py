@@ -155,10 +155,11 @@ class ApiIngestJob:
             )
             version = merge_upsert(table, winners, summary)
         else:
-            # full refresh: atomic whole-table overwrite (one commit)
+            # full refresh: atomic overwrite of every bucket the TABLE has
+            # (created at another bucket count, or rebucketed since)
             version = table.write_and_commit(
                 env.select(*cols),
-                replace_buckets=list(range(self.num_buckets)),
+                replace_buckets=range(table.snapshot().spec["num_buckets"]),
                 summary=summary,
             )
         applied = env.count()

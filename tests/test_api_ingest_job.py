@@ -100,3 +100,23 @@ def _table(job, name):
     from airbyte_spark.lake.table import LakeTable
 
     return LakeTable.load(job.spark, os.path.join(job.root, "tables", name))
+
+
+def test_full_refresh_replaces_every_bucket_of_the_table(spark, tmp_path):
+    """A full refresh replaces the TABLE's buckets, not the job's count: a
+    table created at 8 buckets keeps no row in buckets >= 2 when a job
+    configured for 2 buckets refreshes it."""
+    root = str(tmp_path / "lake")
+    big = (200, {"data": [{"code": f"c{i:02d}", "label": "old"} for i in range(40)]})
+    first = ApiIngestJob(
+        spark, MANIFEST, {}, root, RoutedTransport({"https://api.test/dims": [big]}),
+        num_buckets=8,
+    )
+    first.sync(streams=["dims"])
+    assert max(f.bucket for f in _table(first, "dims").snapshot().files) >= 2
+    job = ApiIngestJob(
+        spark, MANIFEST, {}, root, RoutedTransport({"https://api.test/dims": [DIMS2]}),
+        num_buckets=2,
+    )
+    job.sync(streams=["dims"])
+    assert {r.code: r.label for r in job.read_final("dims").collect()} == {"x": "X2"}

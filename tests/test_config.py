@@ -42,6 +42,6 @@ def test_lake_commit_api_is_pinned():
 
     assert params(LakeTable.write_and_commit) == [
         "df", "replace_buckets", "summary", "plan_version", "write_partitions",
-        "pre_aligned", "drop_deltas", "new_spec",
+        "pre_aligned", "new_spec",
     ]
     assert params(LakeTable.append_delta) == ["df", "summary", "num_files"]

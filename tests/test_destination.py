@@ -114,6 +114,76 @@ def test_append_dedup_lww_by_cursor(spark, workdir):
     list(dest.write({}, CATALOG, msgs))
     assert _users(dest) == {1: ("new", 2.0), 2: ("x", 9.0)}
 
+    # The winner rule, case by case, against the row_number reference:
+    # NULL vs non-NULL cursors, equal cursors broken by extracted_at then
+    # by raw id, updates spanning two flushes, and a composite key.
+    def u(i, name, score, ts):
+        return "users", {"id": i, "name": name, "score": score, "active": True}, ts
+
+    def p(a, b, v, label, ts):
+        return "pairs", {"a": a, "b": b, "v": v, "label": label}, ts
+
+    flush1 = [
+        u(1, "null-late", None, 3000), u(1, "one-early", 1.0, 1000),
+        u(2, "n1", None, 1000), u(2, "n2", None, 2000),
+        u(3, "five", 5.0, 1000),
+        u(4, "t1", 2.0, 1000), u(4, "t2", 2.0, 2000),
+        u(5, "r1", 2.0, 1000), u(5, "r2", 2.0, 1000), u(5, "r3", 2.0, 1000),
+        u(6, "a", 1.0, 1000), u(7, "c", 4.0, 1000),
+        p(1, 1, 1, "p", 1000), p(1, 2, 5, "q", 1000), p(1, 1, 3, "r", 1000),
+    ]
+    flush2 = [
+        u(3, "null-after", None, 9000), u(6, "b", 3.0, 1000), u(7, "d", 3.0, 1000),
+        u(5, "r4", 2.0, 1000), u(2, "n3", None, 1500),
+        p(1, 2, 2, "s", 1000), p(2, 1, None, "t", 1000), p(1, 1, 3, "u", 1000),
+    ]
+    catalog = {"streams": CATALOG["streams"][:1] + [{
+        "stream": {"name": "pairs", "json_schema": {"properties": {
+            "a": {"type": "integer"}, "b": {"type": "integer"},
+            "v": {"type": ["null", "integer"]}, "label": {"type": "string"},
+        }}},
+        "destination_sync_mode": "append_dedup",
+        "primary_key": [["a"], ["b"]],
+        "cursor_field": ["v"],
+    }]}
+    rule = _dest(spark, workdir, sub="rule")
+    msgs = [_rec(s, d, ts) for s, d, ts in flush1] + [_state(1)]
+    msgs += [_rec(s, d, ts) for s, d, ts in flush2] + [_state(2)]
+    list(rule.write({}, catalog, msgs))
+    streams = parse_catalog(catalog)
+    for name, key, cursor in (("users", ("id",), "score"), ("pairs", ("a", "b"), "v")):
+        expected = _row_number_winners(name, [(1, flush1), (2, flush2)], key, cursor)
+        cols = list(streams[name].columns)
+        got = {
+            tuple(r[k] for k in key): {c: r[c] for c in cols}
+            for r in rule._table(streams[name]).scan().collect()
+        }
+        assert got == expected, name
+    assert got[(1, 1)]["label"] in ("r", "u")  # equal (v, ts): raw id decides
+
+
+def _row_number_winners(stream, flushes, key, cursor):
+    """The destination's dedup rule written as its row_number window: per
+    key, the first row by (cursor DESC NULLS LAST, _airbyte_extracted_at
+    DESC, _airbyte_raw_id DESC). ``flushes`` is [(state n, [(stream, data,
+    emitted_at)])]; raw ids are derived the way ``LakeDestination`` derives
+    them (md5 of "<batch id>:<row index within the flush>")."""
+    import hashlib
+
+    best = {}
+    for n, recs in flushes:
+        sid = hashlib.md5(json.dumps({"data": {"cursor": n}}, sort_keys=True).encode()).hexdigest()
+        bid = hashlib.md5(f"{stream}:{sid}".encode()).hexdigest()[:20]
+        rows = [(d, ts) for s, d, ts in recs if s == stream]
+        for i, (data, ts) in enumerate(rows):
+            raw_id = hashlib.md5(f"{bid}:{i}".encode()).hexdigest()
+            c = data[cursor]
+            rank = (c is not None, 0 if c is None else c, ts, raw_id)
+            k = tuple(data[p] for p in key)
+            if k not in best or rank > best[k][0]:
+                best[k] = (rank, data)
+    return {k: data for k, (_, data) in best.items()}
+
 
 def test_resume_from_last_acked_state(spark, workdir):
     """Kill after state 1; the platform restarts sending the suffix."""

@@ -179,3 +179,30 @@ def test_tombstone_retention_gc(spark, workdir):
     assert "b" in ids
     final_ids = {r["doc_id"] for r in eng.read_final().select("doc_id").collect()}
     assert final_ids == {"c"}
+
+
+def test_overwrite_retires_delta_rows(spark, workdir):
+    """sync_mode="overwrite" replaces the WHOLE table, delta files
+    included: a key whose only row sits in a merge-on-read delta file must
+    not survive an overwrite window that lacks it."""
+    eng = _mk_engine(spark, workdir)
+    eng.create_table()
+    eng.bootstrap(seed_df(spark, CFG))
+    schema = changelog_schema()
+    eng.replay(spark.createDataFrame([("I", "k", 1, 1000, 0, [1, 2], 2, "s")], schema))
+    assert eng.table.delta_file_count() > 0, "the batch must take the MoR path"
+
+    over = CdcEngine(
+        spark,
+        os.path.join(workdir, "lake"),
+        StreamConfig(num_buckets=8, sync_mode="overwrite"),
+        EngineConfig(**ENG),
+    )
+    over.replay(
+        spark.createDataFrame(
+            [("I", "x", 2, 2000, 0, [3], 1, "s"), ("I", "y", 3, 3000, 0, [4], 1, "s")],
+            schema,
+        )
+    )
+    ids = {r["doc_id"] for r in over.read_final().select("doc_id").collect()}
+    assert ids == {"x", "y"}

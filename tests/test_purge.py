@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
@@ -50,6 +51,11 @@ def _golden(spark, cfg=CFG):
             cfg.vocab_size,
         )
     )
+
+
+def _doc_ids(table, f) -> list:
+    """doc_id column of one data file, read physically (no LWW resolve)."""
+    return pq.read_table(os.path.join(table.root, f.path), columns=["doc_id"])["doc_id"].to_pylist()
 
 
 def _replayed(spark, workdir, cfg=CFG, **eng_kw) -> CdcEngine:
@@ -88,6 +94,31 @@ def test_purge_removes_keys_and_scopes_writes(spark, workdir):
     expected = golden[~golden["doc_id"].isin(victims)].reset_index(drop=True)
     assert_frames_equal(final_as_pandas(eng.read_final()), expected)
 
+    # replace with new rows: empty one untouched bucket by purging every
+    # key stored there, then replace a live key of another bucket and add a
+    # fresh key of the emptied bucket in ONE commit
+    b = next(x for x in range(snap.spec["num_buckets"]) if x not in touched)
+    stored = {k for f in snap.files if f.bucket == b for k in _doc_ids(table, f)}
+    table.purge_keys(sorted(stored))
+    assert not [f for f in table.snapshot().files if f.bucket == b]
+    gone = set(victims) | stored
+    kept_key = next(k for k in live if k not in gone)
+    fresh = next(k for k in (f"fresh-{i}" for i in range(10_000)) if table.key_buckets([k]) == [b])
+    row = table.lookup([kept_key]).withColumn("source", F.lit("replaced"))
+    rows = row.unionByName(row.withColumn("doc_id", F.lit(fresh)))
+    before = {f.path for f in table.snapshot().files}
+    table.replace_keys([kept_key, fresh], rows, {"operation": "replace"})
+    snap = table.snapshot()
+    assert snap.summary["buckets"] == sorted({b, *table.key_buckets([kept_key])})
+    for f in snap.files:
+        if f.bucket not in snap.summary["buckets"]:
+            assert f.path in before, f"untouched bucket {f.bucket} rewritten"
+    expected = golden[~golden["doc_id"].isin(gone)].copy()
+    expected.loc[expected["doc_id"] == kept_key, "source"] = "replaced"
+    new = expected[expected["doc_id"] == kept_key].assign(doc_id=fresh)
+    expected = golden_normalize(pd.concat([expected, new]))
+    assert_frames_equal(final_as_pandas(eng.read_final()), expected)
+
 
 def test_purge_rewrites_delta_rows(spark, workdir):
     """MoR regime: purge with deltas outstanding must not let a delta row
@@ -116,6 +147,18 @@ def test_purge_rewrites_delta_rows(spark, workdir):
     assert table.delta_file_count() > 0, "deltas preserved (rewritten, not folded)"
     expected = golden[~golden["doc_id"].isin(victims)].reset_index(drop=True)
     assert_frames_equal(final_as_pandas(eng.read_final()), expected)
+
+    # replace with new rows: a key with a delta row shows only its new row,
+    # even one whose lsn is LOWER than the delta row's (the delta row is
+    # rewritten away, not out-resolved)
+    k = delta_ids[5]
+    new = table.lookup([k]).withColumn("source", F.lit("replaced"))
+    new = new.withColumn("_ab_lsn", F.lit(0).cast("long"))
+    table.replace_keys([k], new, {"operation": "replace"})
+    assert table.delta_file_count() > 0
+    assert [(r["source"], r["_ab_lsn"]) for r in table.lookup([k]).collect()] == [("replaced", 0)]
+    physical = [r for f in table.snapshot().files for r in _doc_ids(table, f) if r == k]
+    assert physical == [k]
 
 
 def test_purge_then_expire_is_physically_erased(spark, workdir):

@@ -274,10 +274,7 @@ def test_commit_aligned_windows_never_split_a_transaction(spark, workdir):
     cfg = ChangelogConfig(n_events=600, n_seed_docs=150, insert_pct=50, update_pct=35)
     seed = seed_df(spark, cfg)
     native = changelog_df(spark, cfg)
-    feed, _ = _encode_changelog_as_wal2json(native)
-    decoded = decode_wal2json(feed, PAYLOAD, partition_col="part").drop(
-        "xid", "txn_seq"
-    )
+    decoded, _ = _decoded_feed(native, workdir)
 
     def run(sub, align):
         eng = CdcEngine(
@@ -315,6 +312,19 @@ def test_commit_aligned_windows_never_split_a_transaction(spark, workdir):
     )
 
 
+def _decoded_feed(native, workdir):
+    """Encode ``native`` as wal2json, decode it, and write the decoded feed
+    under ``workdir`` once. Returns (feed path, lsn_map): replaying the
+    path reads files, while replaying the unpersisted encode+decode plan
+    re-derived it on every replay scan (LSN probe, batch stats, merge)."""
+    feed, lsn_map = _encode_changelog_as_wal2json(native)
+    path = os.path.join(workdir, "wal2json_decoded")
+    decode_wal2json(feed, PAYLOAD, partition_col="part").drop(
+        "xid", "txn_seq"
+    ).write.parquet(path)
+    return path, lsn_map
+
+
 def test_wal2json_feed_replays_to_identical_table(spark, workdir):
     """Golden end-to-end: encode the synthetic changelog as wal2json txn
     envelopes, decode, replay — same winners as the native replay, with
@@ -322,10 +332,7 @@ def test_wal2json_feed_replays_to_identical_table(spark, workdir):
     cfg = ChangelogConfig(n_events=600, n_seed_docs=150, insert_pct=50, update_pct=35)
     seed = seed_df(spark, cfg)
     native = changelog_df(spark, cfg)
-    feed, lsn_map = _encode_changelog_as_wal2json(native)
-    decoded = decode_wal2json(feed, PAYLOAD, partition_col="part").drop(
-        "xid", "txn_seq"
-    )
+    decoded, lsn_map = _decoded_feed(native, workdir)
 
     def run(cl, sub):
         eng = CdcEngine(
