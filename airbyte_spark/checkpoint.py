@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 from airbyte_spark.durable import write_json
@@ -34,11 +35,14 @@ class Checkpoint:
     per_partition: dict[str, dict] = field(default_factory=dict)
     batches: list[str] = field(default_factory=list)
 
-    # The batches list is a FAST-PATH window, not the durable idempotence
-    # record (that is the batch_id stamped in each snapshot summary,
-    # consulted via LakeTable.find_batch). Keeping every id forever makes
-    # the checkpoint doc the largest state artifact on a long tail and its
-    # rewrite O(n^2) cumulative; ids behind max_committed_lsn are redundant.
+    # The batches list is a bounded record of the most recent committed
+    # batch ids, not the idempotence record: replay's skip decision reads
+    # the batch_id stamped in each snapshot summary (LakeTable.find_batch).
+    # In the engine only a checkpoint rewind (_rewind_checkpoint) reads it,
+    # to drop the ids of reverted commits; it also travels in the emitted
+    # state document (to_json). Keeping every id forever would make the
+    # checkpoint doc the largest state artifact on a long tail and its
+    # rewrite O(n^2) cumulative.
     BATCH_WINDOW = 64  # class constant (unannotated: not a dataclass field)
 
     def note_batch(self, batch_id: str) -> None:
@@ -91,3 +95,28 @@ def load_checkpoint(path: str) -> Checkpoint | None:
 def save_checkpoint(path: str, ckpt: Checkpoint) -> None:
     """Atomic replace — readers never observe a torn checkpoint."""
     write_json(path, ckpt.to_json())
+
+
+def advance_checkpoint(
+    path: str,
+    lsn: int = 0,
+    batch_id: str | None = None,
+    schema_version: int | None = None,
+    progress: Iterable[tuple[int, int, int]] = (),
+) -> None:
+    """The one load -> advance -> save step, run strictly after the commit
+    it describes. ``max_committed_lsn`` only moves forward (stream epochs
+    are file-ordered, not LSN-windowed); ``batch_id`` joins the recent-id
+    list; ``progress`` rows ``(source_partition, last_lsn, rows_applied)``
+    accumulate into ``per_partition``."""
+    ckpt = load_checkpoint(path) or Checkpoint()
+    ckpt.max_committed_lsn = max(ckpt.max_committed_lsn, lsn)
+    if schema_version is not None:
+        ckpt.table_schema_version = schema_version
+    if batch_id is not None:
+        ckpt.note_batch(batch_id)
+    for p, last_lsn, rows in progress:
+        cur = ckpt.per_partition.setdefault(str(p), {"last_lsn": 0, "rows_applied": 0})
+        cur["last_lsn"] = max(cur["last_lsn"], last_lsn)
+        cur["rows_applied"] += rows
+    save_checkpoint(path, ckpt)

@@ -81,7 +81,8 @@ class EngineConfig:
     Every field is set by a non-test caller or serves a behavioural
     contract, named in its comment; ``tests/test_config.py`` pins the set.
 
-    ``batch_events`` is the micro-batch size — the analog of the reference's
+    ``batch_events`` is the micro-batch size in events, whatever the LSN
+    spacing (``CdcEngine._plan_windows``) — the analog of the reference's
     checkpoint cadence (state every 10,000 records, DebeziumIteratorConstants
     .java:11-15) and flush batch (FormatConfig.java:22). We checkpoint once
     per committed batch: commit and checkpoint are one atomic unit. Every

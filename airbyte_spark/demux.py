@@ -25,7 +25,7 @@ admits its rows (mappers, bootstrap check, schema evolution). The router
 (:meth:`DemuxEngine._route`) also serves the Structured-Streaming demux.
 
 Scale notes: the per-window persisted slice is the same memory budget as
-the single-stream engine's prefetched batch; the routing groupBy-count is
+the single-stream engine's read-ahead window; the routing groupBy-count is
 one tiny aggregate (≤ streams rows) reusing the cached slice. Each table's
 merge then takes the single-stream engine's batch path (bucket-pruned CoW
 / MoR delta dispatch), so demux adds zero extra exchanges over syncing the
@@ -47,9 +47,14 @@ from airbyte_spark.catalog import (
     _published_pins,
     _stream_root,
 )
-from airbyte_spark.checkpoint import Checkpoint, load_checkpoint, save_checkpoint
+from airbyte_spark.checkpoint import Checkpoint, advance_checkpoint, load_checkpoint
 from airbyte_spark.config import EngineConfig, StreamConfig
-from airbyte_spark.engine import CdcEngine, OffsetLossError, read_changelog  # noqa: F401 (re-export)
+from airbyte_spark.engine import (  # noqa: F401 (OffsetLossError re-export)
+    CdcEngine,
+    OffsetLossError,
+    _lsn_range,
+    read_changelog,
+)
 from airbyte_spark.lake.table import LakeTable
 from airbyte_spark.lineage import log_metric
 
@@ -148,7 +153,7 @@ class DemuxEngine:
         lo = last
         for hi in bounds:
             applied, unrouted = self._route(
-                source.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi)),
+                _lsn_range(source, lo, hi),
                 lambda eng, rows: eng.apply_range(rows, lo, hi),
                 f"window ({lo},{hi}]",
                 start_lsn=lo,
@@ -159,9 +164,7 @@ class DemuxEngine:
             unrouted_total += unrouted
             # every table durably committed (or skipped idempotently):
             # NOW the shared WAL position may advance.
-            shared.max_committed_lsn = hi
-            shared.note_batch(f"demux-{lo}-{hi}")
-            save_checkpoint(self.state_path, shared)
+            advance_checkpoint(self.state_path, hi, f"demux-{lo}-{hi}")
             lo = hi
             n_windows += 1
             if max_batches is not None and n_windows >= max_batches:
@@ -174,7 +177,7 @@ class DemuxEngine:
             "per_stream": per_stream,
             "unrouted": unrouted_total,
             "wall_s": round(wall, 3),
-            "last_committed_lsn": shared.max_committed_lsn,
+            "last_committed_lsn": lo,
         }
         # all tables are at the same WAL prefix here (window barrier):
         # publish ONE pin for consistent cross-table reads. A crashed replay

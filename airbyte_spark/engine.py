@@ -26,14 +26,21 @@ import hashlib
 import json
 import os
 import time
+from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from airbyte_spark import schemas as S
-from airbyte_spark.checkpoint import Checkpoint, load_checkpoint, save_checkpoint
+from airbyte_spark.checkpoint import (
+    Checkpoint,
+    advance_checkpoint,
+    load_checkpoint,
+    save_checkpoint,
+)
 from airbyte_spark.config import (
     SYNC_APPEND,
     SYNC_APPEND_DEDUP,
@@ -62,11 +69,6 @@ _MERGE_OPERATION = {
     "append": "merge",
     "overwrite": "merge",
 }
-# Replay windows are arithmetic LSN ranges (lo, lo+batch_events] — correct
-# and action-free when LSNs are dense (event ids). Past this many windows
-# (sparse LSN spaces: Postgres byte offsets, Mongo BsonTimestamps) replay
-# switches to event-count quantile windows instead (_lsn_windows).
-_MAX_ARITHMETIC_WINDOWS = 4096
 # A batch whose event count reaches this fraction of the table's rows takes
 # the single-action whole-table merge (merge_upsert_full) instead of the
 # bucket-pruned paths (_use_full_merge).
@@ -105,6 +107,14 @@ class BootstrapIncompleteError(RuntimeError):
 
 def _batch_id(stream: str, lo: int, hi: int) -> str:
     return hashlib.sha256(f"{stream}:{lo}:{hi}".encode()).hexdigest()[:20]
+
+
+def _lsn_range(source: DataFrame, lo: int, hi: int) -> DataFrame:
+    """The (lo, hi] window of ``source``. The filter is on the cursor, so
+    Catalyst pushes it into the parquet scan (PushedFilters) and
+    already-applied files are pruned — the analog of the reference's
+    ``_airbyte_loaded_at IS NULL`` work marker (SURVEY.md §4)."""
+    return source.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
 
 
 def read_changelog(spark: SparkSession, changelog: DataFrame | str) -> DataFrame:
@@ -336,10 +346,7 @@ class CdcEngine:
                     snapshot=version,
                 )
         version = version if version is not None else table.current_version()
-        ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
-        ckpt.table_schema_version = table.snapshot(version).schema_version
-        ckpt.note_batch(done_bid)
-        save_checkpoint(self.checkpoint_path, ckpt)
+        self._advance_checkpoint(bid=done_bid)
         log_metric(
             "bootstrap_committed",
             rows=rows,
@@ -420,9 +427,7 @@ class CdcEngine:
             winners.unpersist()
             self._drop_scratch()
         if bid == done_bid:
-            ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
-            ckpt.note_batch(done_bid)
-            save_checkpoint(self.checkpoint_path, ckpt)
+            self._advance_checkpoint(bid=done_bid)
         log_metric(
             "bootstrap_chunk_committed",
             chunk=idx,
@@ -665,20 +670,17 @@ class CdcEngine:
             )
         ckpt.cursor_field = self.stream.cursor_field
         last = ckpt.max_committed_lsn
-        bounds, n_exact, mn = self._plan_windows(
+        bounds, n_events, n_total = self._plan_windows(
             source, ckpt, self.checkpoint_path, batch_events
         )
         if not bounds:
             return {"batches": 0, "events": 0, "last_committed_lsn": last}
-        target = bounds[-1]
 
         # Sync-size estimate up front (AirbyteEstimateTraceMessage shape:
         # name/type/row_estimate/byte_estimate — the reference's sources
-        # emit it so platforms can show progress; ours derives rows from
-        # the LSN span (or the exact count when sparse windowing already
-        # paid for one) and bytes from the input files' on-disk size scaled
-        # by the un-replayed fraction).
-        est_rows = n_exact if n_exact is not None else target - last
+        # emit it so platforms can show progress): the exact count of events
+        # past the checkpoint, from the planner's probe, and the input
+        # files' on-disk size scaled by that share of all events.
         byte_estimate = None
         if isinstance(changelog, str) and os.path.isdir(changelog):
             total_b = sum(
@@ -687,13 +689,12 @@ class CdcEngine:
                 for f in fs
                 if f.endswith(".parquet")
             )
-            span = max(target - (mn or 1) + 1, 1)
-            byte_estimate = int(total_b * min(1.0, est_rows / span))
+            byte_estimate = int(total_b * n_events / n_total)
         log_metric(
             "sync_estimate",
             name=self.stream.name,
             estimate_type="STREAM",
-            row_estimate=est_rows,
+            row_estimate=n_events,
             byte_estimate=byte_estimate,
         )
 
@@ -701,54 +702,39 @@ class CdcEngine:
         total_events = 0
         n_batches = 0
         lo = last
-        # prefetched = (enriched persisted DataFrame, its _batch_stats) —
-        # the stats action materializes the cache, and its rows are all the
-        # numbers the batch needs, so no extra action is spent on it.
-        prefetched: tuple[DataFrame, list] | None = None
-        inflight: DataFrame | None = None  # nxt df whose stats job is running
-        prefetch_pool = ThreadPoolExecutor(max_workers=1)
+        # Read-ahead: prepare window k+1 CONCURRENTLY with window k's merge —
+        # the Spark shape of the reference's source-reads-ahead-while-
+        # destination-flushes queue pipeline (AirbyteDebeziumHandler.java
+        # BlockingQueue, cap 10,000). The merge itself cannot pipeline (it
+        # needs k's commit), but the prepare step is table-independent.
+        pool = ThreadPoolExecutor(max_workers=1)
+        window = ahead = None  # ahead: the next window, prepared on ``pool``
         try:
             for idx, hi in enumerate(bounds):
-                # Read-ahead: validate+enrich batch k+1 CONCURRENTLY with
-                # batch k's merge — the Spark shape of the reference's
-                # source-reads-ahead-while-destination-flushes queue pipeline
-                # (AirbyteDebeziumHandler.java BlockingQueue, cap 10,000).
-                # The merge itself cannot pipeline (it needs k's commit),
-                # but the scan+validate leg is table-independent.
-                next_f = None
-                nxt_lo = hi
-                nxt_hi = bounds[idx + 1] if idx + 1 < len(bounds) else hi
-                if nxt_lo < nxt_hi and (
-                    max_batches is None or n_batches + 1 < max_batches
+                window, ahead = ahead, None
+                nxt = bounds[idx + 1] if idx + 1 < len(bounds) else None
+                if (
+                    nxt is not None
+                    and (max_batches is None or n_batches + 1 < max_batches)
+                    # an already-applied window is skipped: reading it ahead
+                    # would cache and aggregate rows nobody reads
+                    and self.table.find_batch(_batch_id(self.stream.name, hi, nxt)) is None
                 ):
-                    table = self.table
-                    nxt = self._prepare_batch(
-                        source.filter((F.col("lsn") > nxt_lo) & (F.col("lsn") <= nxt_hi)),
-                        table,
-                    ).persist()
-                    inflight = nxt
-                    next_f = prefetch_pool.submit(
-                        lambda df=nxt: (df, self._batch_stats(df, table))
-                    )
-                try:
-                    total_events += self._apply_batch(source, lo, hi, prefetched=prefetched)
-                finally:
-                    if prefetched is not None:
-                        prefetched[0].unpersist()
-                        prefetched = None
-                if next_f is not None:
-                    prefetched = next_f.result()
-                    inflight = None
+                    ahead = self._prepare_window(_lsn_range(source, hi, nxt), pool)
+                window = window or self._prepare_window(_lsn_range(source, lo, hi))
+                total_events += self._apply_window(
+                    _batch_id(self.stream.name, lo, hi), window, lo, hi
+                )
                 lo = hi
                 n_batches += 1
                 if max_batches is not None and n_batches >= max_batches:
                     break
         finally:
-            if prefetched is not None:
-                prefetched[0].unpersist()
-            if inflight is not None:
-                inflight.unpersist()
-            prefetch_pool.shutdown(wait=False)
+            pool.shutdown(wait=False)
+            # a failed window, or the one read ahead of it, leaves its cache
+            for w in (window, ahead):
+                if w is not None and w[0].is_cached:
+                    w[0].unpersist()
         wall = time.monotonic() - t0
         stats = {
             "batches": n_batches,
@@ -789,15 +775,33 @@ class CdcEngine:
 
     def _plan_windows(
         self, source: DataFrame, ckpt: Checkpoint, state_path: str, batch_events: int
-    ) -> tuple[list[int], int | None, int | None]:
+    ) -> tuple[list[int], int, int]:
         """The one window planner for a bounded replay of ``source`` from
-        ``ckpt`` (this engine's checkpoint, or the demux shared offset):
-        min/max LSN probe, offset-loss check, and the target LSN saved to
-        ``state_path``. Returns (window bounds ending at the target, exact
-        remaining count if windowing paid for one, min LSN); no bounds =
-        nothing to replay."""
+        ``ckpt`` (this engine's checkpoint, or the demux shared offset). One
+        probe aggregate reads the min/max LSN, the event count and the count
+        past the checkpoint; then the offset-loss check, and the target LSN
+        saved to ``state_path``. Windows are sized by EVENTS, as the
+        reference's checkpoint cadence counts records
+        (DebeziumIteratorConstants.java:11-15):
+
+        - one window when the remaining events fit in ``batch_events``;
+        - arithmetic LSN ranges ``(lo, lo + batch_events]`` when the space is
+          dense — the split's window count is within 2x of the windows the
+          events need (event-id LSNs; no extra Spark job);
+        - event-count quantile bounds otherwise (packed or sparse LSNs:
+          wal2json/canal ``commit<<16|seq``, Postgres byte offsets, Mongo
+          BsonTimestamps), one approxQuantile pass over the remaining LSNs.
+
+        Correctness does not depend on the bounds: any ascending bounds
+        ending at the target partition (last, target], resume recomputes
+        them over the REMAINING events only, and committed (lo, hi] ranges
+        are never revisited (checkpoint + batch ids). Returns (bounds, events
+        past the checkpoint, total events); no bounds = nothing to replay."""
         last = ckpt.max_committed_lsn
-        mn, target = source.agg(F.min("lsn"), F.max("lsn")).first()
+        lsn = F.col("lsn")
+        mn, target, n_total, n = source.agg(
+            F.min(lsn), F.max(lsn), F.count("*"), F.count_if(lsn > last)
+        ).first()
         # Gap between our offset and the oldest retained event: the
         # changelog was truncated past the checkpoint. Refuse to skip
         # silently — caller must resync() (reference forces re-snapshot,
@@ -818,62 +822,30 @@ class CdcEngine:
             # "future state": nothing to do, checkpoint echoed unchanged
             # (connector-acceptance test_incremental.py:238-305).
             log_metric("replay_noop", last_committed_lsn=last, target_lsn=target)
-            return [], None, mn
+            return [], 0, n_total
         ckpt.target_lsn = target
         save_checkpoint(state_path, ckpt)
-        bounds, n_exact = self._lsn_windows(source, last, target, batch_events)
-        return bounds, n_exact, mn
-
-    def _lsn_windows(
-        self, source: DataFrame, last: int, target: int, batch_events: int
-    ) -> tuple[list[int], int | None]:
-        """Batch-window upper bounds over (last, target] and (when computed)
-        the exact remaining event count.
-
-        Dense LSNs (event ids): arithmetic ranges — zero extra actions, the
-        historical behavior. Sparse LSN spaces (Postgres byte-offset LSNs,
-        Mongo BsonTimestamp ``sec*2^32+ord`` — sources/mongo.py) would turn
-        that into billions of empty windows, so when the arithmetic split
-        exceeds ``_MAX_ARITHMETIC_WINDOWS`` the boundaries come from
-        event-count quantiles instead: one count + one approxQuantile pass
-        over the column-pruned lsn scan, then every batch carries
-        ~batch_events EVENTS regardless of position spacing. Correctness
-        does not depend on the boundary choice — any ascending bounds ending
-        at ``target`` partition (last, target]; resume after a crash
-        recomputes bounds over the REMAINING events only, and committed
-        (lo, hi] ranges are never revisited (checkpoint + batch ids)."""
-        span = target - last
-        n_windows = -(-span // batch_events)
-        if n_windows <= _MAX_ARITHMETIC_WINDOWS:
-            return (
-                self._align_bounds(
-                    [
-                        min(last + i * batch_events, target)
-                        for i in range(1, n_windows + 1)
-                    ],
-                    last,
-                    target,
-                ),
-                None,
-            )
-        remaining = source.filter(F.col("lsn") > last).select("lsn")
-        n = remaining.count()
-        k = max(1, -(-n // batch_events))
+        k = -(-n // batch_events)  # windows the events need
+        span_windows = -(-(target - last) // batch_events)
         if k == 1:
-            return [target], n
-        qs = remaining.approxQuantile(
-            "lsn", [i / k for i in range(1, k)], max(0.0001, 1.0 / (4 * k))
-        )
-        inner = sorted({int(q) for q in qs if last < int(q) < target})
-        bounds = self._align_bounds(inner + [target], last, target)
-        log_metric(
-            "sparse_lsn_windows",
-            windows=len(bounds),
-            events=n,
-            lsn_span=span,
-            arithmetic_windows_avoided=n_windows,
-        )
-        return bounds, n
+            bounds = [target]
+        elif span_windows <= 2 * k:
+            bounds = [
+                min(last + i * batch_events, target) for i in range(1, span_windows + 1)
+            ]
+        else:
+            qs = source.filter(lsn > last).approxQuantile(
+                "lsn", [i / k for i in range(1, k)], max(0.0001, 1.0 / (4 * k))
+            )
+            bounds = sorted({int(q) for q in qs if last < int(q) < target}) + [target]
+            log_metric(
+                "sparse_lsn_windows",
+                windows=len(bounds),
+                events=n,
+                lsn_span=target - last,
+                arithmetic_windows_avoided=span_windows,
+            )
+        return self._align_bounds(bounds, last, target), n, n_total
 
     def _align_bounds(self, bounds: list[int], last: int, target: int) -> list[int]:
         """Snap every non-final window bound DOWN to a commit boundary when
@@ -898,10 +870,11 @@ class CdcEngine:
         """Apply one externally-driven (lo, hi] LSN window as an atomic,
         idempotent commit — the per-table leg of a shared-WAL demux
         (demux.py), where the WINDOW loop and the shared offset live above
-        this engine. Raw rows pass the same admission step as replay's.
-        Returns events applied (0 when the batch id is already in a
-        snapshot summary)."""
-        return self._apply_batch(self._admit(source), lo, hi)
+        this engine. Raw rows pass the same admission step, and the window
+        the same apply step, as replay's. Returns rows applied (0 when the
+        batch id is already in a snapshot summary)."""
+        window = self._prepare_window(_lsn_range(self._admit(source), lo, hi))
+        return self._apply_window(_batch_id(self.stream.name, lo, hi), window, lo, hi)
 
     def _align_to_table(self, batch: DataFrame, table_schema: StructType) -> DataFrame:
         """Project the batch to source cols + the table's payload columns
@@ -930,6 +903,28 @@ class CdcEngine:
             else:
                 out.append(F.lit(None).cast(f.dataType).alias(f.name))
         return batch.select(*out)
+
+    def _prepare_window(
+        self, rows: DataFrame, read_ahead: ThreadPoolExecutor | None = None
+    ) -> tuple[DataFrame, Callable[[], list]]:
+        """The one prepare step of a window — replay window, read-ahead
+        window, demux slice or stream epoch: align, validate and inject
+        metadata (:meth:`_prepare_batch`); its one :meth:`_batch_stats`
+        aggregate runs when the apply step asks for it. A read-ahead window
+        is persisted and its stats start now on the ``read_ahead`` pool,
+        beside the previous window's merge; a window that feeds the raw
+        table is persisted too. Both read the batch twice, and the stats
+        action materializes the cache. The plan and the cache are built on
+        the calling thread; only the stats action runs on the pool. Returns
+        (enriched rows, stats call)."""
+        table = self.table
+        enriched = self._prepare_batch(rows, table)
+        if read_ahead is not None or self.cfg.keep_raw_table:
+            enriched = enriched.persist()
+        stats = partial(self._batch_stats, enriched, table)
+        if read_ahead is not None:
+            stats = read_ahead.submit(stats).result
+        return enriched, stats
 
     def _prepare_batch(self, batch: DataFrame, table: LakeTable) -> DataFrame:
         """Align to table schema -> validate (native projection) -> inject CDC
@@ -985,7 +980,7 @@ class CdcEngine:
         present when EngineConfig.keep_raw_table is on."""
         return LakeTable.load(self.spark, self.table_root + "_raw").scan()
 
-    def _append_scd2(self, batch: DataFrame, bid: str, lo: int, hi: int) -> None:
+    def _append_scd2(self, enriched: DataFrame, bid: str, lo: int, hi: int) -> None:
         """SCD2 history write mode (operators/scd2.py): maintain
         `<stream>_history` incrementally — this batch's version rows appended
         with in-batch validity intervals, previously-open rows of touched
@@ -1003,7 +998,7 @@ class CdcEngine:
             return
         scd2_apply(
             hist,
-            batch,
+            enriched,
             summary=self._summary({
                 "operation": "scd2",
                 "batch_id": hbid,
@@ -1323,12 +1318,11 @@ class CdcEngine:
             summary={"operation": "resync-bootstrap"},
             write_partitions=self.cfg.write_partitions,
         )
-        ckpt = Checkpoint()
         # resume incremental replay just below the oldest retained event
-        ckpt.max_committed_lsn = max(0, (mn or 1) - 1)
-        ckpt.table_schema_version = table.snapshot(version).schema_version
-        save_checkpoint(self.checkpoint_path, ckpt)
-        log_metric("resync_bootstrapped", snapshot=version, resume_lsn=ckpt.max_committed_lsn)
+        # (soft_reset left a fresh checkpoint)
+        resume_lsn = max(0, (mn or 1) - 1)
+        self._advance_checkpoint(resume_lsn)
+        log_metric("resync_bootstrapped", snapshot=version, resume_lsn=resume_lsn)
         return self.replay(source)
 
     def resync_staged(
@@ -1356,8 +1350,7 @@ class CdcEngine:
             # the fresh seed reflects source state just below the oldest
             # retained event — replay only the tail past it
             mn = source.agg(F.min("lsn")).first()[0]
-            ckpt.max_committed_lsn = max(0, (mn or 1) - 1)
-            save_checkpoint(staged.checkpoint_path, ckpt)
+            staged._advance_checkpoint(max(0, (mn or 1) - 1))
         stats = staged.replay(source, batch_events)
         stats["generation"] = self._swap_generation(staged)
         return stats
@@ -1501,85 +1494,74 @@ class CdcEngine:
         Streaming checkpointLocation tracks source offsets, and the
         epoch-stamped batch id makes a re-delivered epoch (crash between
         commit and SS offset write) a no-op — the same two-sided idempotence
-        the batch path gets from LSN-range batch ids. Past that check an
-        epoch's raw rows pass replay's admission step and commit like any
-        batch; its LSN range is the one its events carry. Returns rows
-        applied."""
-        table = self.table
+        the batch path gets from LSN-range batch ids. An epoch's raw rows
+        pass replay's admission step and take replay's apply step (raw and
+        SCD2 side tables included); its LSN range is the one its events
+        carry. Returns rows applied."""
         eid = int(epoch_id)
-        bid = _batch_id(f"{self.stream.name}:stream", eid, eid)
-        if table.find_batch(bid) is not None:
-            log_metric("stream_epoch_skipped_already_applied", batch_id=bid, epoch=eid)
-            return 0
-        batch_df = self._admit(batch_df)
-        t0 = time.monotonic()
-        enriched = self._prepare_batch(batch_df, table)
-        stats = self._batch_stats(enriched, table)
-        if not stats:
-            log_metric("batch_empty", batch_id=bid, epoch=eid)
-            return 0
-        lo = min(int(r["min_lsn"]) for r in stats)
-        hi = max(int(r["max_lsn"]) for r in stats)
-        return self._finish_batch(enriched, stats, table, bid, lo, hi, t0, epoch=eid)
+        window = self._prepare_window(self._admit(batch_df))
+        return self._apply_window(
+            _batch_id(f"{self.stream.name}:stream", eid, eid), window, epoch=eid
+        )
 
-    def _apply_batch(
+    def _apply_window(
         self,
-        source: DataFrame,
-        lo: int,
-        hi: int,
-        prefetched: tuple[DataFrame, list] | None = None,
+        bid: str,
+        window: tuple[DataFrame, Callable[[], list]],
+        lo: int = 0,
+        hi: int = 0,
+        epoch: int | None = None,
     ) -> int:
-        """Apply the (lo, hi] LSN range as one atomic commit. Returns events
-        read. ``prefetched``: (already-validated+enriched persisted batch,
-        its _batch_stats rows) from the replay loop's read-ahead."""
+        """The one apply step of a window, for replay windows (inline or
+        read ahead), demux slices and stream epochs: batch-id skip, empty
+        check, raw and SCD2 side tables, then :meth:`_finish_batch`.
+        ``window`` is the :meth:`_prepare_window` result; its stats run only
+        past the skip. A stream epoch's (lo, hi] comes from its events.
+        Returns rows applied: delivered events minus quarantined NULL-key
+        events, 0 for a skipped or empty window — never the LSN span, which
+        sparse LSN spaces make meaningless."""
         table = self.table
-        bid = _batch_id(self.stream.name, lo, hi)
-        existing = table.find_batch(bid)
-        if existing is not None:
-            # crash happened between commit and checkpoint — reconcile only.
-            ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
-            if hi > ckpt.max_committed_lsn:
-                ckpt.max_committed_lsn = hi
-                ckpt.note_batch(bid)
-                save_checkpoint(self.checkpoint_path, ckpt)
-            log_metric("batch_skipped_already_applied", batch_id=bid, snapshot=existing)
-            return 0
-
-    # NOTE: filter on the cursor — Catalyst pushes it into the parquet scan
-    # (PushedFilters), so already-applied files are pruned, the analog of the
-    # reference's `_airbyte_loaded_at IS NULL` work marker (SURVEY.md §4).
-        t0 = time.monotonic()
-        batch = source.filter((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        enriched, stats = prefetched or (self._prepare_batch(batch, table), None)
-        # the raw append and the commit both read the batch: persist it
-        # unless the read-ahead already did
-        own_enriched = prefetched is None and self.cfg.keep_raw_table
-        if own_enriched:
-            enriched = enriched.persist()
+        enriched, compute_stats = window
         try:
-            if stats is None:
-                stats = self._batch_stats(enriched, table)
-            n_events = sum(int(r["rows"]) for r in stats)
-            if n_events == 0:
-                # a sparse/empty LSN range never commits (least of all a
-                # whole-table rewrite); only the checkpoint moves
-                log_metric("batch_empty", batch_id=bid, start_lsn=lo, end_lsn=hi)
-                ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
-                ckpt.max_committed_lsn = max(ckpt.max_committed_lsn, hi)
-                ckpt.table_schema_version = table.snapshot().schema_version
-                save_checkpoint(self.checkpoint_path, ckpt)
+            existing = table.find_batch(bid)
+            if existing is not None:
+                # crash between commit and checkpoint: reconcile only
+                self._advance_checkpoint(hi, bid)
+                log_metric(
+                    "batch_skipped_already_applied",
+                    batch_id=bid,
+                    epoch=epoch,
+                    snapshot=existing,
+                )
                 return 0
+            t0 = time.monotonic()
+            stats = compute_stats()
+            if not stats:
+                # an empty window never commits (least of all a whole-table
+                # rewrite); only the checkpoint moves
+                log_metric("batch_empty", batch_id=bid, epoch=epoch, start_lsn=lo, end_lsn=hi)
+                self._advance_checkpoint(hi)
+                return 0
+            if epoch is not None:
+                lo = min(int(r["min_lsn"]) for r in stats)
+                hi = max(int(r["max_lsn"]) for r in stats)
             if self.cfg.keep_raw_table:
                 self._append_raw(enriched, bid, lo, hi)
             if self.cfg.scd2_history:
-                self._append_scd2(batch, bid, lo, hi)
-            self._finish_batch(enriched, stats, table, bid, lo, hi, t0)
+                self._append_scd2(enriched, bid, lo, hi)
+            return self._finish_batch(enriched, stats, table, bid, lo, hi, t0, epoch)
         finally:
-            if own_enriched:
+            if enriched.is_cached:
                 enriched.unpersist()
-        # exact delivered-event count, NOT the LSN span — sparse LSN spaces
-        # (Mongo BsonTimestamps, PG byte offsets) make hi - lo meaningless
-        return n_events
+
+    def _advance_checkpoint(
+        self, hi: int = 0, bid: str | None = None, progress: Iterable = ()
+    ) -> None:
+        """The one engine checkpoint advance (``advance_checkpoint`` at the
+        serving table's schema version), after the commit it describes."""
+        advance_checkpoint(
+            self.checkpoint_path, hi, bid, self.table.snapshot().schema_version, progress
+        )
 
     def _batch_stats(self, enriched: DataFrame, table: LakeTable) -> list:
         """The batch's numbers from ONE aggregate over its DELIVERED events,
@@ -1589,8 +1571,8 @@ class CdcEngine:
         the checkpoint, the CoW rewrite set and the patch/append resolve
         scans (buckets — the winners' keys are a subset of the delivered
         keys; a NULL key only adds the bucket of hash(NULL), a no-op
-        rewrite). On the replay read-ahead's persisted batch this action is
-        also the one that materializes the cache."""
+        rewrite). On a persisted window (:meth:`_prepare_window`) this
+        action is also the one that materializes the cache."""
         pk = self.stream.primary_key
         return (
             enriched.groupBy("source_partition")
@@ -1683,18 +1665,14 @@ class CdcEngine:
                 for r in stats
             ]
         )
-        ckpt = load_checkpoint(self.checkpoint_path) or Checkpoint()
-        # forward only: stream epochs are file-ordered, not LSN-windowed
-        ckpt.max_committed_lsn = max(ckpt.max_committed_lsn, hi)
-        ckpt.table_schema_version = self.table.snapshot().schema_version
-        ckpt.note_batch(bid)
-        for r in stats:
-            p = str(int(r["source_partition"]))
-            cur = ckpt.per_partition.get(p, {"last_lsn": 0, "rows_applied": 0})
-            cur["last_lsn"] = max(cur["last_lsn"], int(r["max_lsn"]))
-            cur["rows_applied"] = cur["rows_applied"] + int(r["rows"]) - _nulls(r)
-            ckpt.per_partition[p] = cur
-        save_checkpoint(self.checkpoint_path, ckpt)
+        self._advance_checkpoint(
+            hi,
+            bid,
+            [
+                (int(r["source_partition"]), int(r["max_lsn"]), int(r["rows"]) - _nulls(r))
+                for r in stats
+            ],
+        )
 
         rows_applied = n_events - n_null
         log_metric(

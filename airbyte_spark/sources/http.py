@@ -23,7 +23,7 @@ from __future__ import annotations
 import json
 import threading
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -518,24 +518,7 @@ class HttpStreamSource:
             params = dict(self.params)
             params[slicer.start_param] = slicer.fmt(s)
             params[slicer.end_param] = slicer.fmt(e)
-            src = HttpStreamSource(
-                transport=self.transport,
-                url=self.url,
-                params=params,
-                headers=self.headers,
-                records_field=self.records_field,
-                paginator=self.paginator,
-                max_retries=self.max_retries,
-                backoff_base_s=self.backoff_base_s,
-                min_call_interval_s=self.min_call_interval_s,
-                sleep=self.sleep,
-                authenticator=self.authenticator,
-                prefetch_pages=self.prefetch_pages,
-                error_handler=self.error_handler,
-                http_method=self.http_method,
-                body_json=self.body_json,
-                decoder=self.decoder,
-            )
+            src = replace(self, params=params)
             records = list(src.read_records(max_pages=max_pages_per_slice))
             log_metric(
                 "http_slice_done",
@@ -667,24 +650,7 @@ class HttpStreamSource:
         params = dict(self.params)
         if state is not None:
             params[cursor_param] = state
-        src = HttpStreamSource(
-            transport=self.transport,
-            url=self.url,
-            params=params,
-            headers=self.headers,
-            records_field=self.records_field,
-            paginator=self.paginator,
-            max_retries=self.max_retries,
-            backoff_base_s=self.backoff_base_s,
-            min_call_interval_s=self.min_call_interval_s,
-            sleep=self.sleep,
-            authenticator=self.authenticator,
-            prefetch_pages=self.prefetch_pages,
-            error_handler=self.error_handler,
-            http_method=self.http_method,
-            body_json=self.body_json,
-            decoder=self.decoder,
-        )
+        src = replace(self, params=params)
         records = []
         new_state = state
         for rec in src.read_records(max_pages=max_pages):

@@ -8,11 +8,13 @@ static schema comes from the same changelog reader as bounded replay
 (``engine.read_changelog``, with ``mergeSchema``). Each micro-batch enters
 the engine through ``CdcEngine.apply_stream_epoch``: the same admission
 step as bounded replay (mappers, composite key, bootstrap check, schema
-evolution), then the same validate -> batch stats -> LWW dedup -> merge
-path and finish step (lineage, checkpoint, NULL-key quarantine), so batch
-and streaming modes are semantically interchangeable; out-of-order arrival
-across micro-batches is absorbed by LWW + retained tombstones. The demux
-form routes each epoch through the same router as ``DemuxEngine.replay``.
+evolution), then the one prepare step (validate, batch stats) and the one
+apply step every replay window takes (batch-id skip, raw and SCD2 side
+tables, LWW dedup -> merge, lineage, checkpoint, NULL-key quarantine), so
+batch and streaming modes are semantically interchangeable; out-of-order
+arrival across micro-batches is absorbed by LWW + retained tombstones. The
+demux form routes each epoch through the same router as
+``DemuxEngine.replay``.
 
 Exactly-once composition:
 - Spark's checkpointLocation tracks which source files each epoch consumed
@@ -66,9 +68,13 @@ def stream_replay(
     max_files_per_trigger: int | None = None,
     timeout_s: float | None = None,
 ) -> dict:
-    """Drain all currently-available changelog files through the engine.
-    Re-running with the same checkpoint_dir resumes from the recorded
-    offsets and processes only new files. Returns progress stats."""
+    """Drain all currently-available changelog files through the engine,
+    one epoch per trigger, each applied like one replay window (with the
+    raw table and SCD2 history when the engine keeps them). SCD2 history
+    needs epochs in LSN order, as replay windows are: files are consumed in
+    modification-time order. Re-running with the same checkpoint_dir
+    resumes from the recorded offsets and processes only new files.
+    Returns progress stats."""
     stream = _file_stream(engine.spark, changelog_path, max_files_per_trigger)
     return stream_replay_df(engine, stream, checkpoint_dir, timeout_s)
 

@@ -118,6 +118,45 @@ def test_mor_tail_batch_job_count(spark, workdir):
     assert len(jobs) == JOBS_PER_MOR_TAIL_BATCH, len(jobs)
 
 
+def _jobs_during(sc, fn) -> int:
+    """Spark jobs started while ``fn`` runs, from every thread: the job
+    group covers the calling thread, and jobs of other threads (the replay
+    read-ahead) run without one."""
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("measured", "jobs during one call")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(tracker.getJobIdsForGroup("measured")) + len(
+        set(tracker.getJobIdsForGroup(None)) - ungrouped
+    )
+
+
+def test_read_ahead_replay_job_count(spark, workdir):
+    """Pins the Spark jobs of a dense three-window replay, whose second and
+    third windows are prepared ahead, beside the previous window's merge.
+    Every window takes the same prepare step; one more job in it, or a
+    read-ahead window prepared twice, fails this."""
+    eng = _engine(
+        spark,
+        os.path.join(workdir, "lake"),
+        compact_after_replay_max_files=None,
+    )
+    cl = os.path.join(workdir, "cl")
+    changelog_df(spark, CFG).repartitionByRange(3, "lsn").write.parquet(cl)
+    stats = {}
+    n_jobs = _jobs_during(
+        spark.sparkContext, lambda: stats.update(eng.replay(cl, batch_events=200))
+    )
+    assert stats["batches"] == 3
+    assert n_jobs == JOBS_PER_READ_AHEAD_REPLAY, n_jobs
+
+
 # schema read, LSN probe, batch stats and the delta write, as measured at
 # local[4]; a separate count or winners aggregate per batch adds 1-2 jobs
 JOBS_PER_MOR_TAIL_BATCH = 8
+# the 600-event, three-window replay above, all threads, as measured at
+# local[4]: 13 on the calling thread and 6 on the read-ahead thread
+JOBS_PER_READ_AHEAD_REPLAY = 19

@@ -134,18 +134,25 @@ def test_unlimited_policy_shields_matched_endpoints():
 
 def test_manifest_declared_budget_spaces_calls(spark):
     """Source-level api_budget in the manifest: the hot stream's second
-    page waits out the window while the free stream is untouched."""
+    page waits out the window while the free stream is untouched, and the
+    cursor- and datetime-incremental streams, which read through per-slice
+    copies of their source, are budgeted too: their calls are spaced by
+    their policy's window."""
+    import time
+
     from airbyte_spark.sources.declarative import ManifestSource
 
-    calls: list[str] = []
+    calls: list[tuple[str, float]] = []
 
     def transport(method, url, params=None, headers=None, body=None):
-        calls.append(url)
+        calls.append((url, time.monotonic()))
         page = int((params or {}).get("page", 1))
         if page > 2:
             return 200, {"data": []}
         return 200, {"data": [{"id": page}], "next_page": page + 1}
 
+    paged = {"kind": "cursor", "param": "page", "token_field": "next_page"}
+    spaced = {"type": "moving_window", "rates": [{"limit": 1, "interval_s": 0.1}]}
     manifest = {
         "api_budget": {
             "type": "http",
@@ -153,17 +160,32 @@ def test_manifest_declared_budget_spaces_calls(spark):
                 {"type": "moving_window",
                  "rates": [{"limit": 100, "interval_s": 0.05}],
                  "match": [{"url": "https://api.test/hot"}]},
+                dict(spaced, match=[{"url": "https://api.test/inc"}]),
+                dict(spaced, match=[{"url": "https://api.test/sliced"}]),
             ],
         },
         "streams": [
             {"name": "hot", "url": "https://api.test/hot",
-             "records_field": "data",
-             "paginator": {"kind": "cursor", "param": "page",
-                           "token_field": "next_page"},
+             "records_field": "data", "paginator": paged,
+             "schema": {"id": "int"}},
+            {"name": "inc", "url": "https://api.test/inc",
+             "records_field": "data", "paginator": paged,
+             "incremental": {"type": "cursor", "cursor_field": "id"},
+             "schema": {"id": "int"}},
+            {"name": "sliced", "url": "https://api.test/sliced",
+             "records_field": "data", "paginator": paged,
+             "incremental": {"type": "datetime", "start": 0, "step_s": 100,
+                             "end": 200},
              "schema": {"id": "int"}},
         ],
     }
     src = ManifestSource(manifest, transport)
-    df, _ = src.read(spark, {})["hot"]
-    assert sorted(r["id"] for r in df.collect()) == [1, 2]
-    assert len([u for u in calls if u.endswith("/hot")]) == 3
+    out = src.read(spark, {})
+    assert sorted(r["id"] for r in out["hot"][0].collect()) == [1, 2]
+    assert len([u for u, _ in calls if u.endswith("/hot")]) == 3
+    assert out["inc"][1] == 2
+    for url, n_calls in (("https://api.test/inc", 3), ("https://api.test/sliced", 6)):
+        at = [t for u, t in calls if u == url]
+        assert len(at) == n_calls, url
+        # one call per 0.1 s window: the budget slept out each wait
+        assert min(b - a for a, b in zip(at, at[1:])) >= 0.09, url

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from airbyte_spark.changelog import ChangelogConfig, changelog_df
+from airbyte_spark.checkpoint import Checkpoint
 from airbyte_spark.config import EngineConfig, StreamConfig
 from airbyte_spark.engine import CdcEngine
 
@@ -425,9 +426,10 @@ def test_tail_job_mongo_patch_wire(spark, workdir):
 
 
 def test_sparse_lsn_windows_quantile_batching(spark, workdir):
-    """BsonTimestamp-style sparse LSNs (sec*2^32+ord): replay must window by
-    event-count quantiles — bounded batches, exact golden-by-construction
-    final state, resume across the sparse space."""
+    """BsonTimestamp-style sparse LSNs (sec*2^32+ord): the window planner
+    must window by event-count quantiles — bounded batches, exact
+    golden-by-construction final state, resume across the sparse space —
+    while dense LSNs keep the arithmetic split at no extra Spark job."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -473,7 +475,8 @@ def test_sparse_lsn_windows_quantile_batching(spark, workdir):
     )
     eng.create_table(table_schema)
 
-    bounds, n = eng._lsn_windows(cl, 0, rows[-1][2], 100)
+    state = os.path.join(workdir, "plan_state.json")
+    bounds, n, _ = eng._plan_windows(cl, Checkpoint(), state, 100)
     assert n == 300 and 2 <= len(bounds) <= 5
     assert bounds[-1] == rows[-1][2] and bounds == sorted(bounds)
 
@@ -496,9 +499,24 @@ def test_sparse_lsn_windows_quantile_batching(spark, workdir):
         i = 250 + kid  # last i with i % 50 == kid
         assert final[f"d{kid}"]["score"] == float(i)
 
-    # dense LSNs keep the action-free arithmetic split
-    dense_bounds, dense_n = eng._lsn_windows(cl.limit(0), 0, 1000, 100)
-    assert dense_n is None and dense_bounds == [100 * i for i in range(1, 11)]
+    # dense LSNs keep the arithmetic split: no Spark job past the probe,
+    # the same jobs as planning all 1000 events as one window
+    dense = spark.range(1, 1001).select(F.col("id").alias("lsn"))
+    sc = spark.sparkContext
+
+    def plan_jobs(batch_events):
+        group = f"plan-{batch_events}"
+        sc.setJobGroup(group, "window planning")
+        try:
+            planned = eng._plan_windows(dense, Checkpoint(), state, batch_events)
+        finally:
+            sc.setJobGroup(None, None)
+        return planned, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    (dense_bounds, dense_n, _), split_jobs = plan_jobs(100)
+    (one_window, _, _), probe_jobs = plan_jobs(1000)
+    assert dense_n == 1000 and dense_bounds == [100 * i for i in range(1, 11)]
+    assert one_window == [1000] and split_jobs == probe_jobs
 
 
 def test_tail_job_streaming_wal2json(spark, workdir):

@@ -1,6 +1,6 @@
 """Sync-size estimate trace (AirbyteEstimateTraceMessage analog): emitted
-once per replay with the un-replayed row span and a byte estimate scaled
-to the remaining fraction of the input."""
+once per replay with the exact count of events past the checkpoint and a
+byte estimate scaled to that share of the input's events."""
 
 from __future__ import annotations
 
@@ -42,8 +42,12 @@ def test_estimate_full_then_partial(spark, workdir, capfd):
     assert est[0]["byte_estimate"] and est[0]["byte_estimate"] > 0
     full_bytes = est[0]["byte_estimate"]
 
-    eng.replay(cl)  # resume: only 300 events remain
+    eng.replay(cl)  # resume from lsn 100
     est2 = _estimates(capfd)
     assert len(est2) == 1
-    assert est2[0]["row_estimate"] == 300
+    # events past the checkpoint, not the LSN span 300: an at-least-once
+    # duplicate re-delivers an LSN <= 100, which the first batch applied
+    remaining = spark.read.parquet(cl).filter("lsn > 100").count()
+    assert remaining == 299
+    assert est2[0]["row_estimate"] == remaining
     assert 0 < est2[0]["byte_estimate"] < full_bytes  # scaled to the rest

@@ -328,7 +328,8 @@ def _decoded_feed(native, workdir):
 def test_wal2json_feed_replays_to_identical_table(spark, workdir):
     """Golden end-to-end: encode the synthetic changelog as wal2json txn
     envelopes, decode, replay — same winners as the native replay, with
-    engine LSNs remapped through the documented packing."""
+    engine LSNs remapped through the documented packing. Windows are sized
+    by events, not by the packed LSN span: 600 events replay as one merge."""
     cfg = ChangelogConfig(n_events=600, n_seed_docs=150, insert_pct=50, update_pct=35)
     seed = seed_df(spark, cfg)
     native = changelog_df(spark, cfg)
@@ -344,6 +345,10 @@ def test_wal2json_feed_replays_to_identical_table(spark, workdir):
         eng.create_table()
         eng.bootstrap(seed)
         eng.replay(cl)
+        merges = [
+            s for s in eng.table.history() if s.summary.get("operation", "").startswith("merge")
+        ]
+        assert len(merges) == 1, sub
         return final_as_pandas(eng.read_final())
 
     got = run(decoded, "w2j")
