@@ -50,7 +50,7 @@ from airbyte_spark.config import (
 )
 from airbyte_spark.durable import write_json
 from airbyte_spark.functions.validate import apply_validation
-from airbyte_spark.lake.table import LakeTable
+from airbyte_spark.lake.table import LakeTable, conform
 from airbyte_spark.lineage import LineageLog, log_metric
 from airbyte_spark.operators.dedup import lww_dedup
 from airbyte_spark.operators.merge import (
@@ -877,32 +877,16 @@ class CdcEngine:
         return self._apply_window(_batch_id(self.stream.name, lo, hi), window, lo, hi)
 
     def _align_to_table(self, batch: DataFrame, table_schema: StructType) -> DataFrame:
-        """Project the batch to source cols + the table's payload columns
-        (missing -> NULL, narrower types upcast, union-fallback string
-        columns JSON-serialized when the incoming value is complex)."""
-        from pyspark.sql.types import ArrayType, MapType, StringType
-        from pyspark.sql.types import StructType as _Struct
-
-        batch_types = {f.name: f.dataType for f in batch.schema.fields}
+        """Project the batch to source cols + the table's payload columns,
+        read the way a file written under the batch's schema would be
+        (:func:`conform`)."""
         out = [F.col(c) for c in ("op", "lsn", "ts_ms", "source_partition")]
-        if self.stream.update_mode == "patch" and "_ab_null_fields" in batch_types:
+        if self.stream.update_mode == "patch" and "_ab_null_fields" in batch.columns:
             # the explicit-null list is envelope metadata, consumed by the
             # patch fold and never stored
             out.append(F.col("_ab_null_fields"))
-        for f in table_schema.fields:
-            if f.name in S.ENGINE_COLS or f.name == "op":
-                continue
-            if f.name in batch_types:
-                src = batch_types[f.name]
-                if isinstance(f.dataType, StringType) and isinstance(
-                    src, (ArrayType, MapType, _Struct)
-                ):
-                    out.append(F.to_json(F.col(f.name)).alias(f.name))
-                else:
-                    out.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                out.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return batch.select(*out)
+        skip = (*S.ENGINE_COLS, "op")
+        return batch.select(*out, *conform(table_schema, batch.schema, skip))
 
     def _prepare_window(
         self, rows: DataFrame, read_ahead: ThreadPoolExecutor | None = None

@@ -32,7 +32,8 @@ Reference parity:
 - schema evolution (AlterTableReport.java:10-25; DefaultTyperDeduper
   .java:144-165) -> additive columns + int->long widening are metadata-only:
   each data file records the schema_version it was written under, and scans
-  cast per file-group to the current schema.
+  read each file group through one projection (``conform``) to the current
+  schema — the same rule the engine aligns incoming batches with.
 
 Scale notes (100 TB): data files are plain parquet readable by any engine;
 file pruning is manifest-driven (bucket + min/max cursor per file). Commit
@@ -41,9 +42,13 @@ serialize a parent reference + additions only (O(batch), not O(table) —
 the manifest-list reuse idea), and parsed snapshots are memoized per
 version so idempotence walks re-read nothing. Past MANIFEST_SPILL_MIN
 files, inline manifests spill the file list to a columnar sidecar
-(``snapshots/files-v{N}.parquet`` — Iceberg's manifest-file design) so
-commit serialization and cold-load parse stay columnar-fast at 10^4-10^6
-files; the CAS commit protocol and scan logic are unchanged. Scan planning
+(``snapshots/files-v{N}-{token}.parquet`` — Iceberg's manifest-file design;
+the token is unique per commit attempt, like a data file's, so two writers
+racing for version N never share a sidecar) so commit serialization and
+cold-load parse stay columnar-fast at 10^4-10^6 files; the CAS commit
+protocol and scan logic are unchanged. One encoder (``_encode``) picks the
+manifest form and one arrow schema (``MANIFEST_SCHEMA``) carries the
+``DataFile`` fields to the sidecar and to ``files_df``. Scan planning
 is columnar too: a per-snapshot ``_FileIndex`` (numpy bucket/max-cursor
 arrays + a bucket->positions map, built once per version and memoized like
 the snapshot itself) serves every prune vectorized — point lookups touch
@@ -60,16 +65,20 @@ import os
 import re
 import struct
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce
 from typing import Iterable
 
 import time
 
+import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType, StructType
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import (
+    ArrayType, IntegerType, LongType, MapType, StringType, StructType,
+)
 
 from airbyte_spark.durable import write_json
 from airbyte_spark.lineage import log_metric
@@ -93,10 +102,12 @@ MANIFEST_REF_MIN = 64
 # MANIFEST_REF_CHAIN_MAX manifests before hitting an inline one.
 MANIFEST_REF_CHAIN_MAX = 128
 # Inline manifests at or above this file count spill the file list to a
-# columnar sidecar (snapshots/files-v{N}.parquet) instead of JSON —
+# columnar sidecar (snapshots/files-v{N}-{token}.parquet) instead of JSON —
 # Iceberg's manifest-file design. The commit CAS is unchanged (still the
-# exclusive-create of the JSON doc; the sidecar is written FIRST and a lost
-# race leaves only an unreferenced orphan, like data files). Keeps commit
+# exclusive-create of the JSON doc; the sidecar is written FIRST under a
+# commit-unique token, so a racing writer for the same version can never
+# overwrite it, and a lost race leaves only the loser's own sidecar, which
+# it unlinks; a crash leaves an orphan expire_orphans reclaims). Keeps commit
 # serialization and cold-load parse O(columnar-ms) instead of O(json-rows)
 # once tables reach ~10^4-10^6 files.
 MANIFEST_SPILL_MIN = 10_000
@@ -166,27 +177,30 @@ class DataFile:
     kind: str = "base"
 
     def to_json(self) -> dict:
-        return {
-            "path": self.path,
-            "bucket": self.bucket,
-            "rows": self.rows,
-            "schema_version": self.schema_version,
-            "min_cursor": self.min_cursor,
-            "max_cursor": self.max_cursor,
-            "kind": self.kind,
-        }
+        # the flat scalar fields as a dict; dataclasses.asdict gives the
+        # same dict but deep-copies recursively, ~25x the cost per file —
+        # tripling the encode of a near-spill inline manifest
+        return dict(vars(self))
 
     @staticmethod
     def from_json(d: dict) -> "DataFile":
-        return DataFile(
-            path=d["path"],
-            bucket=d["bucket"],
-            rows=d["rows"],
-            schema_version=d["schema_version"],
-            min_cursor=d.get("min_cursor"),
-            max_cursor=d.get("max_cursor"),
-            kind=d.get("kind", "base"),
-        )
+        return DataFile(**d)
+
+
+# The manifest's columnar form: a spilled sidecar's parquet schema and, via
+# from_arrow_schema, the files_df metadata table's Spark schema. Column
+# order and names are DataFile's.
+MANIFEST_SCHEMA = pa.schema(
+    [
+        pa.field("path", pa.string(), nullable=False),
+        pa.field("bucket", pa.int32(), nullable=False),
+        pa.field("rows", pa.int64(), nullable=False),
+        pa.field("schema_version", pa.int32(), nullable=False),
+        pa.field("min_cursor", pa.int64()),
+        pa.field("max_cursor", pa.int64()),
+        pa.field("kind", pa.string(), nullable=False),
+    ]
+)
 
 
 @dataclass
@@ -216,13 +230,14 @@ class Snapshot:
         return StructType.fromJson(self.schemas[str(schema_version)])
 
     def to_json(self) -> dict:
+        """The manifest header: everything but the file list, whose form
+        (inline, parent reference or sidecar) ``LakeTable._encode`` picks."""
         out = {
             "version": self.version,
             "parent": self.parent,
             "schema_version": self.schema_version,
             "schemas": self.schemas,
             "spec": self.spec,
-            "files": [f.to_json() for f in self.files],
             "summary": self.summary,
         }
         if self.committed_at_ms is not None:
@@ -230,14 +245,14 @@ class Snapshot:
         return out
 
     @staticmethod
-    def from_json(d: dict) -> "Snapshot":
+    def from_json(d: dict, files: list[DataFile]) -> "Snapshot":
         return Snapshot(
             version=d["version"],
             parent=d["parent"],
             schema_version=d["schema_version"],
             schemas=d["schemas"],
             spec=d["spec"],
-            files=[DataFile.from_json(f) for f in d["files"]],
+            files=files,
             summary=d["summary"],
             committed_at_ms=d.get("committed_at_ms"),
         )
@@ -247,63 +262,38 @@ def _snapshot_path(root: str, version: int) -> str:
     return os.path.join(root, SNAPSHOT_DIR, f"v{version:08d}.json")
 
 
-_MANIFEST_ARROW_SCHEMA = None
-
-
-def _manifest_schema():
-    global _MANIFEST_ARROW_SCHEMA
-    if _MANIFEST_ARROW_SCHEMA is None:
-        import pyarrow as pa
-
-        _MANIFEST_ARROW_SCHEMA = pa.schema(
-            [
-                ("path", pa.string()),
-                ("bucket", pa.int32()),
-                ("rows", pa.int64()),
-                ("schema_version", pa.int32()),
-                ("min_cursor", pa.int64()),
-                ("max_cursor", pa.int64()),
-                ("kind", pa.string()),
-            ]
-        )
-    return _MANIFEST_ARROW_SCHEMA
-
-
-def _files_to_parquet(files: list["DataFile"], path: str) -> None:
-    import pyarrow as pa
-
-    table = pa.table(
-        {
-            "path": [f.path for f in files],
-            "bucket": [f.bucket for f in files],
-            "rows": [f.rows for f in files],
-            "schema_version": [f.schema_version for f in files],
-            "min_cursor": [f.min_cursor for f in files],
-            "max_cursor": [f.max_cursor for f in files],
-            "kind": [f.kind for f in files],
-        },
-        schema=_manifest_schema(),
+def _versions(root: str) -> list[int]:
+    """Sorted versions of the ``snapshots/v*.json`` docs under ``root``."""
+    d = os.path.join(root, SNAPSHOT_DIR)
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        int(f[1:-5]) for f in os.listdir(d) if f.startswith("v") and f.endswith(".json")
     )
-    pq.write_table(table, path)
 
 
-def _files_from_parquet(path: str) -> list["DataFile"]:
-    cols = pq.read_table(path).to_pydict()
-    return [
-        DataFile(
-            path=p,
-            bucket=b,
-            rows=r,
-            schema_version=sv,
-            min_cursor=mn,
-            max_cursor=mx,
-            kind=k,
-        )
-        for p, b, r, sv, mn, mx, k in zip(
-            cols["path"], cols["bucket"], cols["rows"], cols["schema_version"],
-            cols["min_cursor"], cols["max_cursor"], cols["kind"],
-        )
-    ]
+def conform(schema: StructType, have: StructType, skip=()) -> list[Column]:
+    """Project rows stored or arriving under ``have`` onto ``schema`` — the
+    one additive-evolution read rule. A column ``have`` lacks reads as a
+    typed NULL; a complex value under a union-fallback string column reads
+    as its JSON (``to_json``, not Spark's display-format cast); anything
+    else is cast (int->long widening; a no-op when the types already agree,
+    which the optimizer drops). Fields named in ``skip`` are left out.
+    Returns the projection in ``schema``'s column order."""
+    src = {f.name: f.dataType for f in have.fields}
+    out = []
+    for f in schema.fields:
+        if f.name in skip:
+            continue
+        if f.name not in src:
+            out.append(F.lit(None).cast(f.dataType).alias(f.name))
+        elif isinstance(f.dataType, StringType) and isinstance(
+            src[f.name], (ArrayType, MapType, StructType)
+        ):
+            out.append(F.to_json(F.col(f.name)).alias(f.name))
+        else:
+            out.append(F.col(f.name).cast(f.dataType).alias(f.name))
+    return out
 
 
 class _FileIndex:
@@ -368,14 +358,12 @@ class LakeTable:
     #: parquet codec for every data-file write. lz4 measures ~35% faster
     #: encode than Spark's snappy default at IDENTICAL size on this
     #: engine's token-array-heavy tables (the merge write is the hot
-    #: path's bottleneck — commit_write dominates batch wall); storage-
-    #: economy deployments can set zstd per table instance.
+    #: path's bottleneck — commit_write dominates batch wall).
     WRITE_CODEC = "lz4"
 
-    def __init__(self, spark: SparkSession, root: str, write_codec: str | None = None):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.write_codec = write_codec or self.WRITE_CODEC
         # Committed snapshots are immutable, so parsed manifests are cached
         # by version: find_batch / history walk O(1) amortized file reads
         # per new snapshot instead of re-reading the whole chain per batch.
@@ -431,10 +419,7 @@ class LakeTable:
 
     @staticmethod
     def exists(root: str) -> bool:
-        d = os.path.join(root, SNAPSHOT_DIR)
-        return os.path.isdir(d) and any(
-            f.startswith("v") and f.endswith(".json") for f in os.listdir(d)
-        )
+        return bool(_versions(root))
 
     @staticmethod
     def load(spark: SparkSession, root: str) -> "LakeTable":
@@ -448,12 +433,7 @@ class LakeTable:
         """Sorted snapshot versions present on disk. Contiguous from 1 on a
         young table; expire_snapshots removes a prefix, leaving a gap-free
         suffix [oldest_retained .. current]."""
-        d = os.path.join(self.root, SNAPSHOT_DIR)
-        return sorted(
-            int(f[1:-5])
-            for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        return _versions(self.root)
 
     def current_version(self) -> int:
         versions = self.existing_versions()
@@ -500,17 +480,13 @@ class LakeTable:
             if hit is not None:
                 base_files, base_depth = hit.files, hit.ref_depth
                 break
-            with open(_snapshot_path(self.root, cur)) as fh:
-                d = json.load(fh)
+            d = self._doc(cur)
             if "files_parent" not in d:
                 if "files_parquet" in d:
-                    spilled = _files_from_parquet(
-                        os.path.join(self.root, SNAPSHOT_DIR, d["files_parquet"])
-                    )
-                    snap = Snapshot.from_json(dict(d, files=[]))
-                    snap.files = spilled
+                    rows = pq.read_table(self._sidecar(d["files_parquet"])).to_pylist()
                 else:
-                    snap = Snapshot.from_json(d)
+                    rows = d["files"]
+                snap = Snapshot.from_json(d, [DataFile.from_json(r) for r in rows])
                 self._snap_cache[cur] = snap
                 base_files, base_depth = snap.files, 0
                 break
@@ -519,8 +495,7 @@ class LakeTable:
         files = list(base_files)
         for i, d in enumerate(reversed(chain), start=1):
             files.extend(DataFile.from_json(x) for x in d.get("files_add", []))
-            snap = Snapshot.from_json(dict(d, files=[]))
-            snap.files = list(files)
+            snap = Snapshot.from_json(d, list(files))
             snap.ref_depth = base_depth + i
             self._snap_cache[snap.version] = snap
         return self._snap_cache[v]
@@ -577,38 +552,58 @@ class LakeTable:
                     self._batch_index[b] = v
         self._batch_index_version = max(self._batch_index_version, cur)
 
-    def _write_snapshot(self, snap: Snapshot, parent: Snapshot | None = None) -> None:
-        snap.committed_at_ms = int(time.time() * 1000)
+    def _doc(self, version: int) -> dict:
+        with open(_snapshot_path(self.root, version)) as fh:
+            return json.load(fh)
+
+    def _sidecar(self, name: str) -> str:
+        return os.path.join(self.root, SNAPSHOT_DIR, name)
+
+    def _encode(self, snap: Snapshot, parent: Snapshot | None = None) -> dict:
+        """The one manifest encoder: ``snap``'s doc with its file list in
+        one of three forms. A pure append onto a parent of at least
+        MANIFEST_REF_MIN files whose ref chain is below
+        MANIFEST_REF_CHAIN_MAX stores a parent reference plus the added
+        files; otherwise a list of at least MANIFEST_SPILL_MIN files is
+        written to a sidecar under a commit-unique name (before the CAS,
+        like data files) and the doc names it; otherwise the list is
+        inline. Sets ``snap.ref_depth`` to match the chosen form."""
         doc = snap.to_json()
+        pf = [] if parent is None else parent.files
         if (
-            parent is not None
-            and len(parent.files) >= MANIFEST_REF_MIN
+            len(pf) >= MANIFEST_REF_MIN
             # bound the ref chain: once the parent sits at the cap, pay one
             # inline rewrite (amortized O(files/CHAIN_MAX) per append) so
             # cold readers never resolve unbounded chains
             and parent.ref_depth < MANIFEST_REF_CHAIN_MAX
+            and snap.files[: len(pf)] == pf
         ):
-            pf = parent.files
-            if len(snap.files) >= len(pf) and snap.files[: len(pf)] == pf:
-                doc.pop("files")
-                doc["files_parent"] = parent.version
-                doc["files_add"] = [f.to_json() for f in snap.files[len(pf):]]
-                snap.ref_depth = parent.ref_depth + 1
-        sidecar = None
-        if "files" in doc and len(snap.files) >= MANIFEST_SPILL_MIN:
-            # spill the inline list to a columnar sidecar BEFORE the CAS;
-            # a lost commit race leaves it as an unreferenced orphan
-            name = f"files-v{snap.version:08d}.parquet"
-            sidecar = os.path.join(self.root, SNAPSHOT_DIR, name)
-            _files_to_parquet(snap.files, sidecar)
-            doc.pop("files")
-            doc["files_parquet"] = name
+            doc["files_parent"] = parent.version
+            doc["files_add"] = [f.to_json() for f in snap.files[len(pf):]]
+            snap.ref_depth = parent.ref_depth + 1
+            return doc
+        snap.ref_depth = 0
+        rows = [f.to_json() for f in snap.files]
+        if len(rows) < MANIFEST_SPILL_MIN:
+            doc["files"] = rows
+            return doc
+        name = f"files-v{snap.version:08d}-{uuid.uuid4().hex[:8]}.parquet"
+        pq.write_table(
+            pa.Table.from_pylist(rows, schema=MANIFEST_SCHEMA), self._sidecar(name)
+        )
+        doc["files_parquet"] = name
+        return doc
+
+    def _write_snapshot(self, snap: Snapshot, parent: Snapshot | None = None) -> None:
+        snap.committed_at_ms = int(time.time() * 1000)
+        doc = self._encode(snap, parent)
         try:
             # atomic exclusive-create == CAS
             write_json(_snapshot_path(self.root, snap.version), doc, exclusive=True)
         except FileExistsError as e:
-            if sidecar is not None:
-                os.unlink(sidecar)  # tidy the orphaned manifest sidecar
+            if "files_parquet" in doc:
+                # the sidecar's name is ours alone: tidy it
+                os.unlink(self._sidecar(doc["files_parquet"]))
             raise CommitConflict(
                 f"snapshot v{snap.version} already committed by another writer"
             ) from e
@@ -662,35 +657,21 @@ class LakeTable:
         return sorted(r["b"] for r in keys.select(bexpr.alias("b")).distinct().collect())
 
     def _read_files(self, snap: Snapshot, files: list[DataFile]) -> DataFrame:
-        """Read a file list at ``snap``'s current schema (per-write-schema
-        groups cast/padded to current — additive evolution)."""
+        """Read a file list at ``snap``'s current schema: files group by the
+        schema version they were written under, and each older group reads
+        through :func:`conform`."""
         current = snap.schema
         by_sv: dict[int, list[str]] = {}
         for f in files:
             by_sv.setdefault(f.schema_version, []).append(
                 os.path.join(self.root, f.path)
             )
-        from pyspark.sql.types import ArrayType, MapType, StringType
-        from pyspark.sql.types import StructType as _Struct
-
-        def project(fld, write_schema):
-            if fld.name not in write_schema.fieldNames():
-                return F.lit(None).cast(fld.dataType).alias(fld.name)
-            src = write_schema[fld.name].dataType
-            # union-fallback column (evolved to string): old complex values
-            # serialize as JSON, not Spark's display-format cast
-            if isinstance(fld.dataType, StringType) and isinstance(
-                src, (ArrayType, MapType, _Struct)
-            ):
-                return F.to_json(F.col(fld.name)).alias(fld.name)
-            return F.col(fld.name).cast(fld.dataType).alias(fld.name)
-
         parts: list[DataFrame] = []
         for sv, paths in sorted(by_sv.items()):
             write_schema = snap.schema_for(sv)
             df = self.spark.read.schema(write_schema).parquet(*paths)
             if write_schema != current:
-                df = df.select(*[project(f, write_schema) for f in current.fields])
+                df = df.select(*conform(current, write_schema))
             parts.append(df)
         out = parts[0]
         for p in parts[1:]:
@@ -837,16 +818,9 @@ class LakeTable:
             return df
 
         def align(df: DataFrame) -> DataFrame:
-            # schema may have evolved between the snapshots (additive):
-            # project the old side to the new schema, missing cols -> null
-            have = set(df.columns)
-            return df.select(
-                *[
-                    F.col(c) if c in have
-                    else F.lit(None).cast(snap_to.schema[c].dataType).alias(c)
-                    for c in cols
-                ]
-            )
+            # the schema may have evolved between the snapshots: read the
+            # old side as the new schema, so equal rows fingerprint equal
+            return df.select(*conform(snap_to.schema, df.schema))
 
         fp = lambda df: df.withColumn("_fp", F.xxhash64(*[F.col(c) for c in cols]))
         new_live = fp(align(live(self.scan(version=snap_to.version, buckets=buckets))))
@@ -961,7 +935,7 @@ class LakeTable:
             # partitionBy strips the bucket column from file contents
             writer = out.sortWithinPartitions(BUCKET_COL, pk).write.partitionBy(BUCKET_COL)
         _t0 = time.monotonic()
-        writer.mode("overwrite").option("compression", self.write_codec).parquet(staging)
+        writer.mode("overwrite").option("compression", self.WRITE_CODEC).parquet(staging)
         _t1 = time.monotonic()
 
         if delta:
@@ -1278,28 +1252,10 @@ class LakeTable:
         table: one row per live data file at the snapshot (path, bucket,
         rows, schema_version, cursor min/max, kind). Driver-side manifest →
         createDataFrame; the manifest is already bounded metadata."""
-        from pyspark.sql.types import (
-            IntegerType, LongType as _Long, StringType as _Str, StructField,
+        return self.spark.createDataFrame(
+            [f.to_json() for f in self.snapshot(version).files],
+            from_arrow_schema(MANIFEST_SCHEMA),
         )
-
-        snap = self.snapshot(version)
-        schema = StructType(
-            [
-                StructField("path", _Str(), False),
-                StructField("bucket", IntegerType(), False),
-                StructField("rows", _Long(), False),
-                StructField("schema_version", IntegerType(), False),
-                StructField("min_cursor", _Long(), True),
-                StructField("max_cursor", _Long(), True),
-                StructField("kind", _Str(), False),
-            ]
-        )
-        rows = [
-            (f.path, f.bucket, f.rows, f.schema_version, f.min_cursor,
-             f.max_cursor, f.kind)
-            for f in snap.files
-        ]
-        return self.spark.createDataFrame(rows, schema)
 
     def snapshots_df(self) -> DataFrame:
         """Commit history as a DataFrame — Iceberg's ``table$snapshots``:
@@ -1744,20 +1700,8 @@ class LakeTable:
         }
         for v in kept:
             snap = self.snapshot(v)  # resolves + caches
-            with open(_snapshot_path(self.root, v)) as fh:
-                doc = json.load(fh)
-            fp = doc.get("files_parent")
-            if fp is not None and fp in expired_paths:
-                new_doc = snap.to_json()
-                sidecar = None
-                if len(snap.files) >= MANIFEST_SPILL_MIN:
-                    name = f"files-v{v:08d}-reinline.parquet"
-                    sidecar = os.path.join(self.root, SNAPSHOT_DIR, name)
-                    _files_to_parquet(snap.files, sidecar)
-                    new_doc.pop("files")
-                    new_doc["files_parquet"] = name
-                write_json(_snapshot_path(self.root, v), new_doc)
-                snap.ref_depth = 0
+            if self._doc(v).get("files_parent") in expired_paths:
+                write_json(_snapshot_path(self.root, v), self._encode(snap))
 
         # Phase 2: delete data files referenced ONLY by expired snapshots.
         referenced = {f.path for v in kept for f in self.snapshot(v).files}
@@ -1772,13 +1716,9 @@ class LakeTable:
 
         # Phase 3: delete expired snapshot docs + their manifest sidecars.
         for v in expired:
-            with open(_snapshot_path(self.root, v)) as fh:
-                doc = json.load(fh)
-            side = doc.get("files_parquet")
-            if side is not None:
-                sp = os.path.join(self.root, SNAPSHOT_DIR, side)
-                if os.path.exists(sp):
-                    os.unlink(sp)
+            side = self._doc(v).get("files_parquet")
+            if side is not None and os.path.exists(self._sidecar(side)):
+                os.unlink(self._sidecar(side))
             os.unlink(_snapshot_path(self.root, v))
             self._snap_cache.pop(v, None)
         log_metric(
@@ -1790,17 +1730,30 @@ class LakeTable:
         return {"expired_snapshots": len(expired), "removed_files": removed}
 
     def expire_orphans(self) -> int:
-        """Delete data files not referenced by any snapshot (failed-commit
-        leftovers). Returns count removed."""
-        referenced = {
-            f.path for snap in self.history() for f in snap.files
+        """Delete data files and manifest sidecars no retained snapshot
+        references — the leftovers of a failed commit, or of a crash between
+        a sidecar write and its CAS or inside ``expire_snapshots``' re-inline
+        step. Like Iceberg's remove_orphan_files it must not race a writer:
+        an in-flight commit's files are unreferenced until its CAS. Returns
+        the count removed."""
+        versions = self.existing_versions()
+        referenced = {f.path for v in versions for f in self.snapshot(v).files}
+        referenced |= {
+            os.path.join(SNAPSHOT_DIR, d["files_parquet"])
+            for d in map(self._doc, versions)
+            if "files_parquet" in d
         }
+        candidates = [
+            os.path.join(DATA_DIR, e) for e in os.listdir(os.path.join(self.root, DATA_DIR))
+        ] + [
+            os.path.join(SNAPSHOT_DIR, e)
+            for e in os.listdir(os.path.join(self.root, SNAPSHOT_DIR))
+            if e.startswith("files-") and e.endswith(".parquet")
+        ]
         removed = 0
-        ddir = os.path.join(self.root, DATA_DIR)
-        for entry in os.listdir(ddir):
-            rel = os.path.join(DATA_DIR, entry)
+        for rel in candidates:
             if rel not in referenced:
-                os.unlink(os.path.join(ddir, entry))
+                os.unlink(os.path.join(self.root, rel))
                 removed += 1
         return removed
 

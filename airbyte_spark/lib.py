@@ -35,10 +35,9 @@ import os
 from typing import Any, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from airbyte_spark.durable import write_json
-from airbyte_spark.lake.table import LakeTable
+from airbyte_spark.lake.table import LakeTable, conform
 from airbyte_spark.sources.declarative import ManifestSource
 
 
@@ -175,11 +174,7 @@ class LakeCache:
             )
             base = batch
             if prior is not None:
-                aligned = prior
-                for c in df.columns:
-                    if c not in prior.columns:
-                        aligned = aligned.withColumn(c, F.lit(None).cast(df.schema[c].dataType))
-                base = aligned.select(*df.columns).join(
+                base = prior.select(*conform(df.schema, prior.schema)).join(
                     batch.select(primary_key), primary_key, "left_anti"
                 ).unionByName(batch)
             table.write_and_commit(

@@ -141,11 +141,17 @@ def merge_upsert_full(
             "merge_upsert_full requires bucket_fn='murmur3' "
             f"(table spec has {snap.spec.get('bucket_fn', 'xxhash64')!r})"
         )
-    # NOTE: _conf mutates session-wide confs for the duration of this
-    # action; a concurrent job on a sibling thread (the replay read-ahead's
-    # batch-stats aggregate) sees them too. It is a small aggregation for
-    # which the pinned shuffle-partition count is harmless; revisit if
-    # that changes.
+    # NOTE: _conf sets both confs session-wide, so a job planned on a
+    # sibling thread while this block runs sees them too — the replay
+    # read-ahead's _batch_stats aggregate (engine._prepare_window) is one.
+    # Planned inside the block, its reduce stage runs num_buckets tasks
+    # instead of AQE's coalesced 1; planned between the two restores in
+    # _conf's finally (shuffle partitions back, coalescing still off), it
+    # runs spark.sql.shuffle.partitions tasks. Its result is unchanged;
+    # only the task count moves (+31 or +3 on a 4-core perfbench
+    # catchup_tail: 32 buckets, 4 shuffle partitions). The pins stay: they
+    # make the one exchange land partition index == bucket after the
+    # map-side partial max_by has combined hot keys.
 
     batch = enriched_batch.select(*cols, F.col("ts_ms").alias(_TS_TMP))
     target = table.scan().withColumn(_TS_TMP, F.unix_millis(F.col(S.COL_EXTRACTED_AT)))

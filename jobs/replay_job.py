@@ -55,6 +55,11 @@ def main(argv: list[str] | None = None) -> int:
                    help="Structured Streaming checkpointLocation (required with --streaming)")
     p.add_argument("--max-files-per-trigger", type=int, default=None)
     args = p.parse_args(argv)
+    # reject impossible flag combinations before the job touches the lake
+    if args.streaming and not args.ss_checkpoint:
+        p.error("--streaming requires --ss-checkpoint")
+    if args.streaming and args.format != "parquet":
+        p.error("--streaming supports parquet changelogs")
 
     # spark-submit owns master/deploy conf; just pick up the session.
     from pyspark.sql import SparkSession
@@ -87,10 +92,6 @@ def main(argv: list[str] | None = None) -> int:
         eng.bootstrap(seed)
 
     if args.streaming:
-        if not args.ss_checkpoint:
-            p.error("--streaming requires --ss-checkpoint")
-        if args.format != "parquet":
-            p.error("--streaming supports parquet changelogs")
         from airbyte_spark.streaming import stream_replay
 
         stats = stream_replay(

@@ -115,6 +115,27 @@ def test_read_changes_same_version_empty(spark, table):
     assert table.read_changes(v, v).count() == 0
 
 
+def test_read_changes_across_int_to_bigint_widening(spark, table):
+    """A widening is metadata-only, so a row it did not change is not a
+    change: the old side reads as the new schema before fingerprinting,
+    and only the rewritten key diffs — not its bucket neighbours."""
+    table.write_and_commit(
+        _df(spark, [(f"k{i}", i, i + 1) for i in range(10)]), None, {"operation": "append"}
+    )
+    v1 = table.current_version()
+    wide = StructType(
+        [SCHEMA["doc_id"], StructField("v", LongType(), True), SCHEMA["_ab_lsn"]]
+    )
+    table.commit_metadata_only({"operation": "evolve-schema"}, new_schema=wide)
+    table.replace_keys(
+        ["k3"], spark.createDataFrame([("k3", 33, 20)], wide), {"operation": "merge"}
+    )
+    touched = table.snapshot().summary["buckets"]
+    assert len(table.scan(buckets=touched).collect()) > 1  # k3 has neighbours
+    ch = table.read_changes(v1).collect()
+    assert [(r.doc_id, r.v, r._change_type) for r in ch] == [("k3", 33, "update")]
+
+
 def _engine(spark, workdir, **kw) -> tuple[CdcEngine, ChangelogConfig, str]:
     cfg = ChangelogConfig(n_events=900, n_seed_docs=400, dup_pct=2.0, corrupt_pct=1.0)
     eng = CdcEngine(

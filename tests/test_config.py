@@ -32,7 +32,8 @@ def test_engine_config_fields_are_pinned():
 
 def test_lake_commit_api_is_pinned():
     """The lake commit API is an option surface too: a new parameter on
-    ``write_and_commit`` or ``append_delta`` must edit these lists."""
+    ``LakeTable.__init__``, ``write_and_commit`` or ``append_delta`` must
+    edit these lists."""
     import inspect
 
     from airbyte_spark.lake.table import LakeTable
@@ -45,3 +46,4 @@ def test_lake_commit_api_is_pinned():
         "pre_aligned", "new_spec",
     ]
     assert params(LakeTable.append_delta) == ["df", "summary", "num_files"]
+    assert params(LakeTable.__init__) == ["spark", "root"]

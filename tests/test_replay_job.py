@@ -11,6 +11,7 @@ import sys
 import zipfile
 
 import pyspark
+import pytest
 
 from airbyte_spark.changelog import ChangelogConfig, changelog_df, seed_df, write_changelog, apply_golden
 from tests.util import assert_frames_equal, final_as_pandas, golden_normalize
@@ -132,3 +133,22 @@ def test_spark_submit_job_streaming_mode(spark, workdir):
     assert proc2.returncode == 0, proc2.stderr[-3000:]
     stats2 = json.loads([ln for ln in proc2.stdout.splitlines() if ln.startswith("{")][-1])
     assert stats2["rows_applied"] == 0
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [
+        ["--streaming"],  # no --ss-checkpoint
+        ["--streaming", "--ss-checkpoint", "ss_ckpt", "--format", "jsonl"],
+    ],
+    ids=["streaming-without-ss-checkpoint", "streaming-non-parquet"],
+)
+def test_replay_job_rejects_bad_flags_before_creating_the_table(spark, workdir, flags):
+    """An impossible flag combination must fail before the job creates the
+    table or bootstraps the seed: a rejected run leaves no lake behind."""
+    from jobs.replay_job import main
+
+    lake = os.path.join(workdir, "lake")
+    with pytest.raises(SystemExit):
+        main(["--lake", lake, "--changelog", os.path.join(workdir, "changelog"), *flags])
+    assert not os.path.exists(lake)

@@ -244,7 +244,7 @@ def test_manifest_spills_to_parquet_past_threshold(spark, tmp_path):
     # on-disk shape: tiny JSON doc + parquet sidecar
     with open(_snapshot_path(root, 2)) as fh:
         doc = json.load(fh)
-    assert "files" not in doc and doc["files_parquet"] == "files-v00000002.parquet"
+    assert "files" not in doc and doc["files_parquet"].startswith("files-v00000002-")
     assert os.path.exists(os.path.join(root, "snapshots", doc["files_parquet"]))
     assert os.path.getsize(_snapshot_path(root, 2)) < 10_000
 
@@ -264,18 +264,52 @@ def test_manifest_spills_to_parquet_past_threshold(spark, tmp_path):
 
 
 def test_manifest_spill_conflict_removes_sidecar(spark, tmp_path):
-    """A lost CAS race must not leave the loser's sidecar behind."""
+    """A lost CAS race must not leave the loser's sidecar behind — and when
+    the winner spilled too, must not touch the winner's: the committed
+    snapshot still reads back every one of its files."""
     from airbyte_spark.lake.table import CommitConflict, MANIFEST_SPILL_MIN
 
-    root = str(tmp_path / "race")
+    files = [_fake_file(i) for i in range(MANIFEST_SPILL_MIN + 1)]
+    for winner_spills in (False, True):
+        root = str(tmp_path / f"race-{winner_spills}")
+        t = _mk_table(spark, root)
+        base = t.snapshot()
+        won = files if winner_spills else files[:1]
+        s2 = Snapshot(version=2, parent=1, schema_version=1, schemas=base.schemas,
+                      spec=base.spec, files=won, summary={"operation": "append"})
+        t._write_snapshot(s2)  # winner
+        loser = Snapshot(version=2, parent=1, schema_version=1, schemas=base.schemas,
+                         spec=base.spec, files=files[::-1], summary={"operation": "merge"})
+        with pytest.raises(CommitConflict):
+            t._write_snapshot(loser)
+        cold = LakeTable.load(spark, root).snapshot(2)
+        assert cold.summary["operation"] == "append" and cold.files == won
+        sidecars = [e for e in os.listdir(os.path.join(root, "snapshots"))
+                    if e.startswith("files-v00000002-")]
+        with open(_snapshot_path(root, 2)) as fh:
+            doc = json.load(fh)
+        assert sidecars == ([doc["files_parquet"]] if winner_spills else [])
+
+
+def test_expire_orphans_reclaims_leaked_manifest_sidecars(spark, tmp_path):
+    """A sidecar no snapshot doc names (a crash between its write and the
+    CAS, or inside expire_snapshots' re-inline) is an orphan like a data
+    file: expire_orphans deletes it and keeps the one a doc references."""
+    import shutil
+
+    from airbyte_spark.lake.table import MANIFEST_SPILL_MIN
+
+    root = str(tmp_path / "leak")
     t = _mk_table(spark, root)
     base = t.snapshot()
-    files = [_fake_file(i) for i in range(MANIFEST_SPILL_MIN + 1)]
-    s2 = Snapshot(version=2, parent=1, schema_version=1, schemas=base.schemas,
-                  spec=base.spec, files=files[:1], summary={"operation": "append"})
-    t._write_snapshot(s2)  # winner (inline — small)
-    loser = Snapshot(version=2, parent=1, schema_version=1, schemas=base.schemas,
-                     spec=base.spec, files=files, summary={"operation": "merge"})
-    with pytest.raises(CommitConflict):
-        t._write_snapshot(loser)
-    assert not os.path.exists(os.path.join(root, "snapshots", "files-v00000002.parquet"))
+    files = [_fake_file(i) for i in range(MANIFEST_SPILL_MIN)]
+    t._write_snapshot(Snapshot(version=2, parent=1, schema_version=1, schemas=base.schemas,
+                               spec=base.spec, files=files, summary={"operation": "append"}))
+    sdir = os.path.join(root, "snapshots")
+    (live,) = [e for e in os.listdir(sdir) if e.startswith("files-")]
+    stray = "files-v00000003-0badc0de.parquet"
+    shutil.copy(os.path.join(sdir, live), os.path.join(sdir, stray))
+
+    assert t.expire_orphans() == 1
+    assert [e for e in os.listdir(sdir) if e.startswith("files-")] == [live]
+    assert LakeTable.load(spark, root).snapshot(2).files == files
